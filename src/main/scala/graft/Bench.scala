@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
   /** One timed repetition with its trust metadata (r11 verdict item 1:
     * BENCH_r11's headline was 2.3x inflated by box contention and the
@@ -81,13 +82,15 @@ object Bench {
     // the final sort AND prune aggregate-backed left joins (the right
     // side is provably unique on the join key and contributes no
     // columns to a count), so count-based timings skip real work —
-    // measured at sf1: x27 11.2s noop-write vs 0.16s count()
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    // measured at sf1: x27 11.2s noop-write vs 0.16s count().
+    // A failing gate ends the run: a swallowed failure would be timed
+    // as a fast rep.
+    def run(name: String, fn: (SparkSession, String) => DataFrame): Unit =
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case NonFatal(e) => throw new RuntimeException(s"gate $name failed", e) }
     Seq("q15_multijoin", "q03_regex", "q01_project", "x02_textstats",
         "x08_cosine_topk", "q31_window").foreach { q =>
-      try { run(SparkEntry.queries(q)(spark, sfDir)) }
-      catch { case _: Throwable => () }
+      run(q, SparkEntry.queries(q))
     }
     // k=3 timed runs per query, report the MEDIAN: single-shot numbers
     // are sub-second-noisy enough to fake 2x regressions on unchanged
@@ -98,7 +101,7 @@ object Bench {
     // while iterating (the driver never sets it → full set)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def measure(name: String, fn: (SparkSession, String) => DataFrame,
                 n: Int): Seq[Rep] =
       (0 until n).map { _ =>
         // x19/x30 persist their shared tokenization internally; drop it
@@ -111,7 +114,7 @@ object Bench {
         val io0 = iowaitCs()
         val at = System.currentTimeMillis()
         val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) } catch { case _: Throwable => () }
+        run(name, fn)
         Rep((System.nanoTime() - t0) / 1e9, at, gcTime() - gc0, l1,
           if (st0 < 0) -1L else stealCs() - st0,
           if (io0 < 0) -1L else iowaitCs() - io0)
@@ -125,15 +128,15 @@ object Bench {
     // clearCache() still runs before every TIMED rep, so data-level
     // caching stays priced in; only the JIT/codegen cache persists —
     // which is exactly what the warmup is for.
-    def measureWarm(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def measureWarm(name: String, fn: (SparkSession, String) => DataFrame,
                     n: Int): Seq[Rep] = {
       spark.catalog.clearCache()
-      try { run(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      measure(fn, n)
+      run(name, fn)
+      measure(name, fn, n)
     }
     val queryFns = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val firstPass = queryFns.map { case (name, fn) => name -> measureWarm(fn, reps) }
+    val firstPass = queryFns.map { case (name, fn) => name -> measureWarm(name, fn, reps) }
     // the worst-10 by first-pass median get 2 extra reps (r8 verdict:
     // their spreads reach ~50% of median at 3 reps, too wide for
     // regression calls — 5 samples + the raw arrays below let the
@@ -144,7 +147,7 @@ object Bench {
       .take(10).map(_._1).toSet
     val fnByName = queryFns.toMap
     val allReps = firstPass.map { case (name, rs0) =>
-      name -> (if (worst10(name)) rs0 ++ measure(fnByName(name), 2) else rs0)
+      name -> (if (worst10(name)) rs0 ++ measure(name, fnByName(name), 2) else rs0)
     }
     val allTimes = allReps.map { case (name, rs) => name -> rs.map(_.sec).sorted }
     val results = allTimes.map { case (name, ts) =>

@@ -50,6 +50,8 @@ object Ingest {
 
   def run(spark: SparkSession, config: Config): Result = {
     import spark.implicits._
+    // the doublet kNN (Snn) calls the native graft_dot/graft_dist2
+    graft.functions.GraftExtensions.register(spark)
 
     // P1: read samples, union expr + annotations
     val perSample = config.samples.map { case (name, dir) =>

@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Round-13 optimization-phase profiler (guide §1: measure first).
   *
@@ -59,8 +60,10 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    // a failing gate ends the run instead of being profiled as fast
+    def run(name: String, fn: (SparkSession, String) => DataFrame): Unit =
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case NonFatal(e) => throw new RuntimeException(s"gate $name failed", e) }
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val queryFns = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -69,12 +72,12 @@ object Profile {
     queryFns.foreach { case (name, fn) =>
       spark.catalog.clearCache()
       // warm: codegen compile + footer reads priced out, like Bench
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
+      run(name, fn)
       spark.catalog.clearCache()
       val l = new QueryListener
       spark.sparkContext.addSparkListener(l)
       val t0 = System.nanoTime()
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
+      run(name, fn)
       val wall = (System.nanoTime() - t0) / 1e9
       // listener bus is async (and its drain API is private[spark]):
       // poll until the task counter stabilizes, max 2 s

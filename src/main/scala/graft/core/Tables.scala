@@ -15,8 +15,14 @@ import org.apache.spark.sql.functions._
   *    vectorized reader rejects; we read it via the documented
   *    `spark.sql.legacy.parquet.nanosAsLong` escape hatch and convert
   *    ns → a proper TimestampType column (µs precision, UTC session).
+  *  - Every query over these tables may call the native `graft_*`
+  *    functions, so the session gets them registered here
+  *    ([[graft.functions.GraftExtensions.register]]) whatever way it
+  *    was built.
   */
 final case class Tables(spark: SparkSession, dir: String) {
+
+  graft.functions.GraftExtensions.register(spark)
 
   private def table(name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")

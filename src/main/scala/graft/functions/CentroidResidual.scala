@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   *
   * Semantics: out(i) = (float)(x(i) − c(i)) over i < min(|x|, |cents
   * (cell)|) — double subtraction, one float rounding, matching the
-  * `(x.cast("double") − c).cast("float")` fallback bit-for-bit. A
+  * `(x.cast("double") − c).cast("float")` composition bit-for-bit. A
   * `cell` outside the matrix fails loudly (an unchecked read would be
   * a wrong-centroid silent corruption). */
 case class CentroidResidual(left: Expression,

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * scratch volume at 5M (SOAK_corpus.md round 9). The shingle SET of
   * a document is row-local, so the signature is too: this expression
   * computes all 16 mins in one flat loop inside whole-stage codegen —
-  * zero shuffle, zero interpreted-lambda evals (the HOF fallback pays
+  * zero shuffle, zero interpreted-lambda evals (a composed HOF form pays
   * k·|hma| lambda dispatches per row; cf. the x37 lesson).
   *
   * Returns array<long> of length k; an EMPTY input array yields an

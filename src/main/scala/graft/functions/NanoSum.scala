@@ -55,8 +55,7 @@ object NanoSum {
     * input instead of reading out of range: on UnsafeArrayData an
     * unchecked getLong past the array end reads adjacent row memory
     * and returns garbage (ADVICE r10), where the composed element_at
-    * fallback would error — the two deployments must fail the same
-    * way. The PQ invariant (|table| == |codes|, every code in
+    * form errors — this fails the same way. The PQ invariant (|table| == |codes|, every code in
     * [0, |subtable|), i.e. [0, PqKsub)) holds for all graft-built
     * code tables; this guard is for foreign input. */
   def compute(table: ArrayData, codes: ArrayData): Long = {

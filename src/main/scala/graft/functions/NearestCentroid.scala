@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * Returns the argmax over centroids j of `2·(x·c_j) − ‖c_j‖²`
   * (equivalent to nearest-by-L2), the dot in sequential double
   * accumulation over the common prefix, ties keeping the FIRST max —
-  * bit-identical to the composed fallback
+  * bit-identical to the composed form
   * `array_position(scores, array_max(scores)) − 1` over per-centroid
   * `graft_dot` columns (NaN scores aside: the composed form would
   * select a NaN as the max, this one never does; quantizer scores are
@@ -45,7 +45,7 @@ case class NearestCentroid(child: Expression,
   /** Null in → null out, so Catalyst rewrites a join's
     * `isnotnull(cell)` key filter to `isnotnull(embedding)` instead of
     * duplicating the whole argmax below the exchange (the composed
-    * fallback's duplicated-filter cost was half the x14 straggler). */
+    * form's duplicated-filter cost was half the x14 straggler). */
   override val nullIntolerant: Boolean = true
 
   private def isFloat: Boolean =

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Column-level text/hash primitives for the training-data-pipeline
   * operators (dedup, similarity, quality, language-ID).
   *
-  * Everything here is built from `org.apache.spark.sql.functions` and
-  * higher-order array functions — fully codegen'd Catalyst expressions,
-  * no UDFs, so the hot path stays inside whole-stage codegen and the
+  * The per-token primitives are the native `graft_*` expressions
+  * ([[GraftExtensions]]); the rest is `org.apache.spark.sql.functions`.
+  * No UDFs, so the hot path stays inside whole-stage codegen and the
   * same plan scales from local[32] to a 1000-executor cluster.
   *
   * Cross-engine determinism: the only hash primitive is [[hash60]]
@@ -36,25 +36,17 @@ object TextFunctions {
 
   /** Whitespace tokens (single-space split, empties dropped) — matches
     * `list_filter(string_split(text,' '), x -> x <> '')` in the oracle.
-    * Native [[Tokens]] (one codegen byte scan) when the extensions are
-    * injected; the wiring-free fallback composes the identical result,
-    * paying one interpreted filter-lambda dispatch per token. */
-  def tokens(text: Column): Column =
-    if (GraftExtensions.active) call_function("graft_tokens", text)
-    else filter(split(text, " "), t => t =!= "")
+    * Native [[Tokens]]: one codegen byte scan per row. */
+  def tokens(text: Column): Column = call_function("graft_tokens", text)
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
   /** Deterministic 60-bit hash: first 15 hex digits of md5. Positive,
     * fits BIGINT; DuckDB equivalent `CAST('0x'||substr(md5(s),1,15) AS BIGINT)`.
-    * With [[GraftExtensions]] injected, the native [[Hash60]] computes
-    * the same value straight from the digest bytes (no hex render /
-    * decimal re-parse per call — the MinHash/SimHash/KMV hot paths hash
-    * every token instance); the composed form is the wiring-free
-    * fallback, bit-identical by spec. */
-  def hash60(c: Column): Column =
-    if (GraftExtensions.active) call_function("graft_h60", c)
-    else conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+    * Native [[Hash60]] computes it straight from the digest bytes (no
+    * hex render / decimal re-parse per call — the MinHash/SimHash/KMV
+    * hot paths hash every token instance). */
+  def hash60(c: Column): Column = call_function("graft_h60", c)
 
   /** hash60 folded into the MinHash modulus. */
   def hashP(c: Column): Column = hash60(c) % MinHashP
@@ -67,27 +59,16 @@ object TextFunctions {
 
   /** The k=16 MinHash signature (array<long>) of a pre-folded
     * hashed-shingle array — row-local, no explode/aggregate. Native
-    * [[MinHashSig]] (one flat codegen loop) when the extensions are
-    * injected; the wiring-free fallback computes the identical integer
-    * math through k interpreted `array_min(transform(...))` passes. */
-  def minhashSigArr(hma: Column): Column =
-    if (GraftExtensions.active) call_function("graft_minhash_sig", hma)
-    else when(size(hma) === 0, array().cast("array<long>"))
-      .otherwise(array(MinHashCoeffs.indices.map(j =>
-        array_min(transform(hma, h => minHashJ(h, j)))): _*))
+    * [[MinHashSig]]: the k affine transforms and their minima in one
+    * flat codegen loop. */
+  def minhashSigArr(hma: Column): Column = call_function("graft_minhash_sig", hma)
 
   /** Multiset intersection size Σ_h mult_a(h)·mult_b(h) of two long
     * arrays — the row count of a `JOIN ON hm` between the exploded
-    * relations, as a row-local expression. Native [[MultisetIntersect]]
-    * when injected; fallback is the equivalent (quadratic, interpreted)
-    * HOF — fine for bounded verification arrays. */
+    * relations, as a row-local expression (native [[MultisetIntersect]]). */
   def multisetIntersect(a: Column, b: Column): Column =
-    if (GraftExtensions.active) call_function("graft_minter", a, b)
-    else aggregate(a, lit(0L),
-      (acc, h) => acc + size(filter(b, x => x === h)).cast("long"))
+    call_function("graft_minter", a, b)
 
-  /** Word n-gram shingles of the token array; empty array when the doc
-    * has fewer than n tokens (guards Spark's descending `sequence`). */
   /** Fixed-width token chunks (c tokens each, last chunk partial),
     * space-joined — the span-dedup grain shared by the batch x35
     * operator and its streaming form. Empty token lists yield an
@@ -101,47 +82,21 @@ object TextFunctions {
 
   /** Distinct hashed word-shingles of a token array, row-local — the
     * whole shingle → md5-fold → distinct pipeline as one codegen call
-    * (native [[HashedShingles]]) when the extensions are injected; the
-    * wiring-free fallback composes the identical math from HOFs
-    * (interpreted — the round-10 x06 regression shape; register the
-    * extensions in any real deployment).
+    * (native [[HashedShingles]]). NULL tokens → NULL; fewer than n
+    * tokens → empty array.
     *  - `mod > 0`: distinct on shingle STRINGS, then `hash60 % mod`
     *    (post-hash duplicates stay) — the MinHash feed.
     *  - `mod == 0`: `hash60` per occurrence, distinct on VALUES — the
-    *    decontamination feed. */
+    *    decontamination feed.
+    *  - `distinct = false`: every occurrence, multiplicity preserved —
+    *    the bag-of-ngrams feed. */
   def hashedShingles(toks: Column, n: Int, mod: Long,
                      distinct: Boolean = true): Column =
-    if (GraftExtensions.active)
-      call_function("graft_hashed_shingles", toks, lit(n), lit(mod),
-        lit(distinct))
-    else hashedShinglesFallback(toks, n, mod, distinct)
+    call_function("graft_hashed_shingles", toks, lit(n), lit(mod),
+      lit(distinct))
 
-  /** The wiring-free composed form of [[hashedShingles]] — interpreted
-    * HOFs (the round-10 x06 regression shape; register the extensions
-    * in any real deployment). Package-visible so the parity spec can
-    * pin it against the native path on EVERY input class: the two
-    * deployments must agree even where current call sites don't look
-    * (ADVICE r10 — a future size()/isNull consumer would silently
-    * diverge). Contract, both paths: NULL tokens → NULL; fewer than n
-    * tokens → empty array. */
-  private[graft] def hashedShinglesFallback(toks: Column, n: Int, mod: Long,
-                                            distinct: Boolean): Column = {
-    val res =
-      if (!distinct)
-        // every occurrence, multiplicity preserved — the bag-of-ngrams feed
-        transform(wordShingles(toks, n),
-          s => if (mod > 0L) hash60(s) % mod else hash60(s))
-      else if (mod > 0L)
-        transform(array_distinct(wordShingles(toks, n)),
-          s => coalesce(hash60(s) % mod, lit(0L)))
-      else array_distinct(transform(wordShingles(toks, n), s => hash60(s)))
-    // the native expression is a null-intolerant UnaryExpression
-    // (NULL in → NULL out); wordShingles' when() would instead fall
-    // through to its empty-array otherwise on a NULL input — pin the
-    // fallback to the native contract
-    when(toks.isNull, lit(null).cast("array<bigint>")).otherwise(res)
-  }
-
+  /** Word n-gram shingles of the token array; empty array when the doc
+    * has fewer than n tokens (guards Spark's descending `sequence`). */
   def wordShingles(toks: Column, n: Int): Column =
     when(size(toks) >= n,
       transform(sequence(lit(1), size(toks) - (n - 1)),
@@ -149,25 +104,10 @@ object TextFunctions {
       .otherwise(array().cast("array<string>"))
 
   /** 60-bit SimHash over all token occurrences of a token-array
-    * column, as a per-row projection — no explode, no shuffle. With
-    * [[GraftExtensions]] injected this is the native [[SimHash60]]
-    * (one md5 per token inside whole-stage codegen); the wiring-free
-    * fallback is the equivalent higher-order fold, bit-identical but
-    * interpreted per token × bit (~40x slower — register the
-    * extensions in any real deployment).
+    * column, as a per-row projection — no explode, no shuffle. Native
+    * [[SimHash60]]: one md5 per token inside whole-stage codegen.
     * Bit rule: majority vote, ties (sum >= 0) set the bit. */
-  def simhashToks(toks: Column): Column =
-    if (GraftExtensions.active) call_function("graft_simhash", toks)
-    else aggregate(
-      transform(toks, t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")),
-      array_repeat(lit(0L), 60),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(59)),
-        (x, b) => x + when(call_function("shiftright", h, b)
-          .bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)),
-      acc => aggregate(zip_with(acc, sequence(lit(0), lit(59)),
-        (s, b) => when(s >= 0, call_function("shiftleft", lit(1L), b))
-          .otherwise(0L)),
-        lit(0L), (x, y) => x + y))
+  def simhashToks(toks: Column): Column = call_function("graft_simhash", toks)
 
   /** [[simhashToks]] over the whitespace tokens of a text column. */
   def simhash60(textCol: String): Column =

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -96,15 +93,15 @@ case class VectorDot(left: Expression, right: Expression)
   *    ~16 cores for 20+ minutes with every worker inside
   *    `ZipWith.eval` under the join's `SpecificPredicate` (the same
   *    interpreted-lambda-per-pair failure SOAK_domain.md finding 3
-  *    records for sessions without the extensions).
+  *    records).
   * The difference form in a single flat codegen loop is both exact to
   * the inputs' precision and allocation-free.
   *
   * Semantics: Σ (a(i)−b(i))² over i < min(|a|, |b|); elements are
   * assumed non-null (embedding/PC vectors), same contract as
-  * [[VectorDot]]. A null element reads as 0.0 here, whereas the
-  * `zip_with` HOF fallback would yield NULL for the whole distance —
-  * callers must not feed nullable-element arrays. */
+  * [[VectorDot]]. A null element reads as 0.0 here (a `zip_with`
+  * composition would yield NULL for the whole distance) — callers
+  * must not feed nullable-element arrays. */
 case class VectorDist2(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -166,174 +163,4 @@ case class VectorDist2(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session extensions registering the engine's native expressions
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`, or
-  * `.withExtensions(new GraftExtensions)` on the builder). Queries call
-  * them via `call_function`; builders that may run in a session without
-  * the extensions fall back to equivalent HOF expressions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "graft_dot"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => VectorDot(a, b)
-        case other => throw new IllegalArgumentException(
-          s"graft_dot expects exactly 2 arguments, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dist2"),
-      new ExpressionInfo(classOf[VectorDist2].getName, "graft_dist2"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => VectorDist2(a, b)
-        case other => throw new IllegalArgumentException(
-          s"graft_dist2 expects exactly 2 arguments, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_h60"),
-      new ExpressionInfo(classOf[Hash60].getName, "graft_h60"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => Hash60(c)
-        case other => throw new IllegalArgumentException(
-          s"graft_h60 expects exactly 1 argument, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_gram_stats"),
-      new ExpressionInfo(classOf[GramRepetition].getName, "graft_gram_stats"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a,
-            org.apache.spark.sql.catalyst.expressions.Literal(nn: Int, IntegerType)) =>
-          GramRepetition(a, nn)
-        case _ => throw new IllegalArgumentException(
-          "graft_gram_stats expects (array<string>, n literal)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => SimHash60(c)
-        case other => throw new IllegalArgumentException(
-          s"graft_simhash expects exactly 1 argument, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains"),
-      (children: Seq[Expression]) => children match {
-        case Seq(k, f) => BloomContains(k, f)
-        case other => throw new IllegalArgumentException(
-          s"graft_bloom_contains expects exactly 2 arguments, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_centroid"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, org.apache.spark.sql.catalyst.expressions.Literal(
-            m: org.apache.spark.sql.catalyst.util.ArrayData,
-            ArrayType(ArrayType(DoubleType, _), _))) =>
-          val mat = Array.tabulate(m.numElements())(r => m.getArray(r).toDoubleArray())
-          NearestCentroid(a, mat)
-        case _ => throw new IllegalArgumentException(
-          "graft_nearest_centroid expects (array, centroid-matrix literal)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a) => MinHashSig(a)
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash_sig expects exactly 1 argument, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minter"),
-      new ExpressionInfo(classOf[MultisetIntersect].getName, "graft_minter"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => MultisetIntersect(a, b)
-        case other => throw new IllegalArgumentException(
-          s"graft_minter expects exactly 2 arguments, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nano_sum"),
-      new ExpressionInfo(classOf[NanoSum].getName, "graft_nano_sum"),
-      (children: Seq[Expression]) => children match {
-        case Seq(t, c) => NanoSum(t, c)
-        case other => throw new IllegalArgumentException(
-          s"graft_nano_sum expects exactly 2 arguments, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nano_sum_packed"),
-      new ExpressionInfo(classOf[NanoSumPacked].getName, "graft_nano_sum_packed"),
-      (children: Seq[Expression]) => children match {
-        case Seq(t, p) => NanoSumPacked(t, p)
-        case other => throw new IllegalArgumentException(
-          s"graft_nano_sum_packed expects exactly 2 arguments, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_tokens"),
-      new ExpressionInfo(classOf[Tokens].getName, "graft_tokens"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => Tokens(c)
-        case other => throw new IllegalArgumentException(
-          s"graft_tokens expects exactly 1 argument, got ${other.length}")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hashed_shingles"),
-      new ExpressionInfo(classOf[HashedShingles].getName, "graft_hashed_shingles"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a,
-            org.apache.spark.sql.catalyst.expressions.Literal(nn: Int, IntegerType),
-            org.apache.spark.sql.catalyst.expressions.Literal(md: Long, LongType)) =>
-          HashedShingles(a, nn, md)
-        case Seq(a,
-            org.apache.spark.sql.catalyst.expressions.Literal(nn: Int, IntegerType),
-            org.apache.spark.sql.catalyst.expressions.Literal(md: Long, LongType),
-            org.apache.spark.sql.catalyst.expressions.Literal(d: Boolean, BooleanType)) =>
-          HashedShingles(a, nn, md, d)
-        case _ => throw new IllegalArgumentException(
-          "graft_hashed_shingles expects (array<string>, n literal, mod literal[, distinct literal])")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_centroid_residual"),
-      new ExpressionInfo(classOf[CentroidResidual].getName, "graft_centroid_residual"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, org.apache.spark.sql.catalyst.expressions.Literal(
-            m: org.apache.spark.sql.catalyst.util.ArrayData,
-            ArrayType(ArrayType(DoubleType, _), _)), cell) =>
-          val mat = Array.tabulate(m.numElements())(r => m.getArray(r).toDoubleArray())
-          CentroidResidual(a, mat, cell)
-        case _ => throw new IllegalArgumentException(
-          "graft_centroid_residual expects (array<float>, centroid-matrix literal, cell)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_band_keys"),
-      new ExpressionInfo(classOf[BandKeys].getName, "graft_band_keys"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a,
-            org.apache.spark.sql.catalyst.expressions.Literal(nb: Int, IntegerType),
-            org.apache.spark.sql.catalyst.expressions.Literal(bb: Int, IntegerType)) =>
-          BandKeys(a, nb, bb)
-        case _ => throw new IllegalArgumentException(
-          "graft_band_keys expects (array, numBands literal, bandBits literal)")
-      }))
-  }
-}
-
-object GraftExtensions {
-  private val probed = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** True when the active session has the native functions injected.
-    * Extension-injected builtins are invisible to the public Catalog
-    * API, so this probes actual resolution once per session. */
-  def active: Boolean = {
-    val s = try SparkSession.active catch { case _: Throwable => return false }
-    probed.computeIfAbsent(s, _ => try {
-      import org.apache.spark.sql.functions.{array, call_function, lit}
-      s.emptyDataFrame
-        .select(call_function("graft_dot", array(lit(1.0)), array(lit(1.0))))
-        .schema
-      java.lang.Boolean.TRUE
-    } catch { case _: Throwable => java.lang.Boolean.FALSE })
-  }
 }

@@ -26,8 +26,7 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Features are L1-normalized term frequencies (count / doc length)
   * over `hash60(token) % buckets` — the same md5-derived hash column
-  * (native or fallback) on the train and score paths, so a model
-  * trained under one wiring scores identically under the other.
+  * on the train and score paths.
   * Determinism: the sample is value-hash-ordered, per-doc features are
   * bucket-sorted before the driver fold, and the fit has no random
   * state (w₀ = 0) — train twice, get bitwise-equal weights.

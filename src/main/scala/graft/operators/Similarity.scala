@@ -9,53 +9,28 @@ import org.apache.spark.sql.types.DecimalType
 /** Approximate-nearest-neighbor / similarity search over the
   * `embeddings` table (`vec_id, embedding: array<float>, label`).
   *
-  * Cosine is computed with higher-order array functions in DOUBLE with
+  * Cosine is computed by the native `graft_dot` in DOUBLE with
   * sequential accumulation — bit-identical to the DuckDB oracle's
   * `list_sum(list_transform(range(...)))` formula (verified to 17
   * significant digits), which is what lets top-k rankings hash-match.
   */
 object Similarity {
 
-  /** Sequential-order double dot product of two float-array columns.
-    * Uses the codegen'd native [[graft.functions.VectorDot]] when the
-    * session has [[graft.functions.GraftExtensions]] injected (same
-    * index-order double accumulation, so results are bit-identical),
-    * else the interpreted higher-order fallback. */
+  /** Sequential-order double dot product of two float-array columns. */
   def dot(a: String, b: String): Column = dotCols(col(a), col(b))
 
-  /** Column-form dot. The fallback slices both sides to the common
-    * length so its unequal-length behavior matches graft_dot's
-    * min-length sum (zip_with would otherwise NULL-pad and poison the
-    * aggregate) — results cannot depend on session wiring. */
-  def dotCols(a: Column, b: Column): Column =
-    if (graft.functions.GraftExtensions.active)
-      call_function("graft_dot", a, b)
-    else {
-      val n = least(size(a), size(b))
-      aggregate(zip_with(slice(a, lit(1), n), slice(b, lit(1), n),
-        (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, v) => acc + v)
-    }
+  /** Column-form dot: the codegen'd native
+    * [[graft.functions.VectorDot]] — index-order double accumulation
+    * over the common prefix (min-length sum). */
+  def dotCols(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** Squared Euclidean distance Σ (a(i)−b(i))² over the common prefix,
     * in the numerically exact elementwise-difference form (NOT
     * ‖a‖²+‖b‖²−2a·b, which cancels catastrophically near coincident
-    * points). Native codegen'd [[graft.functions.VectorDist2]] when the
-    * extensions are injected — mandatory for join-condition use, where
-    * the interpreted zip_with fallback evaluates per candidate pair
-    * (see the expression's scaladoc for the measured blowup) — else
-    * the equivalent higher-order fallback, same min-length semantics
-    * and accumulation order. */
-  def dist2Cols(a: Column, b: Column): Column =
-    if (graft.functions.GraftExtensions.active)
-      call_function("graft_dist2", a, b)
-    else {
-      val n = least(size(a), size(b))
-      aggregate(zip_with(slice(a, lit(1), n), slice(b, lit(1), n),
-        (x, y) => (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-        lit(0.0), (acc, v) => acc + v)
-    }
+    * points): the codegen'd native [[graft.functions.VectorDist2]],
+    * cheap enough for join-condition use, where it runs once per
+    * candidate pair (see the expression's scaladoc). */
+  def dist2Cols(a: Column, b: Column): Column = call_function("graft_dist2", a, b)
 
   def norm(a: String): Column = sqrt(dotCols(col(a), col(a)))
 
@@ -114,69 +89,26 @@ object Similarity {
   /** Max embedding dimension covered by the precomputed hyperplanes. */
   val MaxDim: Int = graft.functions.Hyperplanes.MaxDim
 
-  /** Hyperplane coefficients g(i, j) = (h60(md5("i_j")) mod 1000)/500 −
-    * 1 — EXACTLY the oracle's SQL formula ([[projSql]]), precomputed on
-    * the driver ([[graft.functions.Hyperplanes]], shared with the
-    * fused `graft_band_keys` expression) so the Spark plan multiplies
-    * against literal arrays instead of running dim × bits md5 calls
-    * per row. */
-  private def hyperplanes: IndexedSeq[Array[Double]] =
-    graft.functions.Hyperplanes.rows
-
-  /** Signed projection of `embedding` onto deterministic hyperplane j.
-    * The "hyperplanes" are pseudo-gaussians derived from the shared md5
-    * hash primitive: g(i, j) = (h60(md5("i_j")) mod 1000) / 500 - 1 ∈
-    * [-1, 1), so the sketch is reproducible bit-for-bit in the DuckDB
-    * oracle. The per-row md5 cost is folded away by materializing g as
-    * a literal array per bit (one-time driver compute). */
-  private def proj(j: Int): Column =
-    if (graft.functions.GraftExtensions.active)
-      // min-length semantics of graft_dot == the slice() below for
-      // any embedding dim <= MaxDim (all of them, by contract)
-      call_function("graft_dot", col("embedding"), lit(hyperplanes(j)))
-    else {
-      val litSql = hyperplanes(j).map(v => s"${v}D").mkString("array(", ",", ")")
-      expr(
-        s"""aggregate(zip_with(embedding, slice($litSql, 1, size(embedding)),
-           |  (x, gv) -> CAST(x AS DOUBLE) * gv),
-           |  0D, (acc, v) -> acc + v)""".stripMargin)
-    }
-
-  /** One band key: sign bits j ∈ [b·bits, (b+1)·bits). */
-  private def bandKey(b: Int, bits: Int = BandBits): Column =
-    (0 until bits).map { i =>
-      when(proj(b * bits + i) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Banded LSH candidate pairs: vectors agreeing on ≥1 full band.
     * Each vector explodes into NumBands (band, key) rows; the self-join
     * is per-band equi on (b, key) — never all-pairs — and a pair
     * agreeing in several bands is deduped before the (expensive) exact
-    * cosine verify. With the extensions injected, all 64 sign bits come
-    * from ONE fused `graft_band_keys` pass (the 64-separate-dots form
-    * was codegen-size bound, not arithmetic bound); the HOF fallback
-    * composes [[bandKey]] per band with bit-identical results. Exposed
-    * for the scale spec, which asserts candidate count stays
-    * near-linear on a synthetic 10× blowup. */
+    * cosine verify. All 64 sign bits come from ONE fused
+    * `graft_band_keys` pass over the deterministic hyperplanes
+    * ([[graft.functions.Hyperplanes]], the oracle's [[projSql]]
+    * formula precomputed on the driver). Exposed for the scale spec,
+    * which asserts candidate count stays near-linear on a synthetic 10×
+    * blowup. */
   private[graft] def bandedCandidates(emb0: DataFrame,
                                       numBands: Int = NumBands,
                                       bandBits: Int = BandBits): DataFrame = {
     // sketching is numBands*bandBits*dim multiplies per vector — widen
     // an under-split scan before the fan-out (identity at scale)
     val emb = graft.core.Fanout.widen(emb0)
-    val banded = (
-      if (graft.functions.GraftExtensions.active)
-        emb.select(col("vec_id"), col("embedding"),
-          posexplode(call_function("graft_band_keys",
-            col("embedding"), lit(numBands), lit(bandBits)))
-            .as(Seq("b", "key")))
-      else
-        emb.select(col("vec_id"), col("embedding"),
-          explode(array((0 until numBands).map(b =>
-            struct(lit(b).as("b"), bandKey(b, bandBits).as("key"))): _*)).as("band"))
-          .select(col("vec_id"), col("embedding"),
-            col("band.b").as("b"), col("band.key").as("key"))
-      )
+    val banded = emb.select(col("vec_id"), col("embedding"),
+      posexplode(call_function("graft_band_keys",
+        col("embedding"), lit(numBands), lit(bandBits)))
+        .as(Seq("b", "key")))
     banded.as("x")
       .join(banded.as("y"),
         col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
@@ -351,22 +283,13 @@ object Similarity {
                           centroids: Array[Array[Double]]): DataFrame = {
     // Centroid argmax is nlist x dim multiplies per vector — the
     // amplifying step a single-split scan would serialize (hence the
-    // widen). With the extensions the whole argmax is ONE native
-    // expression holding the centroid matrix as a codegen reference
-    // object; the composed per-centroid-literal form grows generated
-    // code linearly in nlist and collapsed to ~11 MFLOP/s at nlist=256
-    // on 1M vectors (ANN soak straggler). Both paths are bit-identical
-    // (same sequential dot, same 2*dot − |c|² score, first max wins).
-    val cellCol =
-      if (graft.functions.GraftExtensions.active)
-        call_function("graft_nearest_centroid", col("embedding"),
-          typedLit(centroids.map(_.toSeq).toSeq))
-      else {
-        val scoreArr = array(centroids.toIndexedSeq.map { c =>
-          dotCols(col("embedding"), lit(c)) * 2.0 - lit(c.map(x => x * x).sum)
-        }: _*)
-        (array_position(scoreArr, array_max(scoreArr)) - 1).cast("int")
-      }
+    // widen). The whole argmax is ONE native expression holding the
+    // centroid matrix as a codegen reference object (sequential dot,
+    // 2*dot − |c|² score, first max wins); a composed
+    // per-centroid-literal form grows generated code linearly in nlist
+    // and collapsed to ~11 MFLOP/s at nlist=256 on 1M vectors.
+    val cellCol = call_function("graft_nearest_centroid", col("embedding"),
+      typedLit(centroids.map(_.toSeq).toSeq))
     // coalesce marks the join key non-nullable (embeddings are non-null
     // by contract), so downstream equi-joins on `cell` don't inject an
     // `isnotnull(cell)` filter that would re-evaluate the whole argmax
@@ -785,18 +708,10 @@ object Similarity {
     * `sub`-th 8-dim slice — the same argmax of 2·x·c − |c|² (first
     * index wins ties) as coarse assignment, so the native expression
     * and the [[assignCtes]]-style SQL mirror both apply unchanged. */
-  private def pqCodeCol(sub: Int, cents: Array[Array[Double]]): Column = {
-    val s = slice(col("embedding"), sub * PqDsub + 1, PqDsub)
-    if (graft.functions.GraftExtensions.active)
-      call_function("graft_nearest_centroid", s,
-        typedLit(cents.map(_.toSeq).toSeq))
-    else {
-      val scoreArr = array(cents.toIndexedSeq.map { c =>
-        dotCols(s, lit(c)) * 2.0 - lit(c.map(x => x * x).sum)
-      }: _*)
-      (array_position(scoreArr, array_max(scoreArr)) - 1).cast("int")
-    }
-  }
+  private def pqCodeCol(sub: Int, cents: Array[Array[Double]]): Column =
+    call_function("graft_nearest_centroid",
+      slice(col("embedding"), sub * PqDsub + 1, PqDsub),
+      typedLit(cents.map(_.toSeq).toSeq))
 
   /** x60 exhaustive PQ-ADC top-k (the faiss `IndexPQ` shape; IVF-PQ is
     * this composed with [[buildIvfIndexFrom]]'s cell filter). The
@@ -980,20 +895,13 @@ object Similarity {
     typedLit(
       books.map(_.map(c => roundNano(c.map(x => x * x).sum)).toSeq).toSeq)
 
-  /** Σ_i table(i)(nibble_i(packed)) — the ADC fold as ONE expression
-    * over the packed codes int. Native
-    * [[graft.functions.NanoSumPacked]] when injected (a must at scale:
-    * the composed 8-term chains pushed the fused stage past the JVM's
-    * 8,000-bytecode JIT limit and the whole scan ran interpreted —
-    * see NanoSum's scaladoc); the wiring-free fallback composes the
-    * identical sum from shift+mask+element_at. */
+  /** Σ_i table(i)(nibble_i(packed)) — the ADC fold as ONE native
+    * expression over the packed codes int
+    * ([[graft.functions.NanoSumPacked]]; a composed 8-term chain pushed
+    * the fused stage past the JVM's 8,000-bytecode JIT limit and the
+    * whole scan ran interpreted — see NanoSum's scaladoc). */
   private def nanoSum(table: Column): Column =
-    if (graft.functions.GraftExtensions.active)
-      call_function("graft_nano_sum_packed", table, col("packed"))
-    else (0 until PqM).map(i =>
-      element_at(element_at(table, i + 1),
-        shiftrightunsigned(col("packed"), 4 * i).bitwiseAND(lit(15)) + 1))
-      .reduce(_ + _)
+    call_function("graft_nano_sum_packed", table, col("packed"))
 
   /** The ADC cosine of a (packed, lut, qn2) row: the query-side
     * numerator fold — 8 pre-rounded nano-unit LUT lookups summed as
@@ -1190,29 +1098,16 @@ object Similarity {
   /** `(vec_id, cell, embedding)` with embedding replaced by the
     * vector's residual from its cell centroid (float — the 1-ulp cast
     * loss is three orders under the 16-centroid quantization error).
-    * Native [[graft.functions.CentroidResidual]] when injected: the
-    * centroid matrix rides as a codegen reference object and the
-    * subtraction is a flat float loop — the fallback's broadcast join
-    * + `zip_with` runs the per-element lambda INTERPRETED (ZipWith has
-    * no codegen), the r7 defect class, measured as most of the 1M
-    * residual build's 12→109 s delta before this expression landed. */
+    * Native [[graft.functions.CentroidResidual]]: the centroid matrix
+    * rides as a codegen reference object and the subtraction is a flat
+    * float loop — a broadcast join + `zip_with` would run the
+    * per-element lambda INTERPRETED (ZipWith has no codegen), measured
+    * as most of a 12→109 s slowdown of the 1M residual build. */
   private def residualFrame(assigned: DataFrame,
                             centroids: Array[Array[Double]]): DataFrame =
-    if (graft.functions.GraftExtensions.active)
-      assigned.select(col("vec_id"), col("cell"),
-        call_function("graft_centroid_residual", col("embedding"),
-          typedLit(centroids.map(_.toSeq).toSeq), col("cell")).as("embedding"))
-    else {
-      val spark = assigned.sparkSession
-      import spark.implicits._
-      val cents = centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toIndexedSeq
-        .toDF("cell", "cent")
-      assigned.join(broadcast(cents), "cell")
-        .select(col("vec_id"), col("cell"),
-          zip_with(col("embedding"), col("cent"),
-            (x, c) => (x.cast("double") - c).cast("float")).as("embedding"))
-    }
+    assigned.select(col("vec_id"), col("cell"),
+      call_function("graft_centroid_residual", col("embedding"),
+        typedLit(centroids.map(_.toSeq).toSeq), col("cell")).as("embedding"))
 
   /** Residual reconstruction norm²: |ĉ + r̂|² = |c|² + Σ_i (2·⟨c_i,
     * b_ik⟩ + |b_ik|²) — per (cell, packed), folded from a bounded
@@ -1697,7 +1592,7 @@ object Similarity {
   private def projSql(j: Int): String =
     s"list_sum(list_transform(range(0, len(embedding)), i -> CAST(embedding[i + 1] AS DOUBLE) * (CAST(CAST('0x' || substr(md5(CAST(i AS VARCHAR) || '_' || '$j'), 1, 15) AS BIGINT) % 1000 AS DOUBLE) / 500.0 - 1.0)))"
 
-  /** DuckDB 16-bit band key b — same sign-bit layout as [[bandKey]]. */
+  /** DuckDB 16-bit band key b — same sign-bit layout as `graft_band_keys`. */
   private def bandSql(b: Int): String =
     (0 until BandBits).map { i =>
       s"(CASE WHEN ${projSql(b * BandBits + i)} >= 0 THEN ${1L << i} ELSE 0 END)"

@@ -376,14 +376,12 @@ object TextQueries {
       .orderBy("doc_id")
 
   /** 60-bit SimHash per document — ONE row-local projection
-    * ([[graft.functions.SimHash60]] under the extensions): no explode,
-    * no exchange, the entire fingerprint build rides the document
-    * scan. (History: round ≤5 used explode → 60-column HashAggregate,
-    * which kept codegen but shuffled every token hash; the native
-    * expression removes that exchange entirely — at 100 TB the
-    * fingerprint pass becomes scan-bound, the ideal. The interpreted
-    * HOF fold remains the no-extensions fallback inside
-    * [[TextFunctions.simhashToks]].) Zero-token docs get the all-ones
+    * ([[graft.functions.SimHash60]]): no explode, no exchange, the
+    * entire fingerprint build rides the document scan. (History: round
+    * ≤5 used explode → 60-column HashAggregate, which kept codegen but
+    * shuffled every token hash; the native expression removes that
+    * exchange entirely — at 100 TB the fingerprint pass becomes
+    * scan-bound, the ideal.) Zero-token docs get the all-ones
     * fingerprint (every vote ties at 0); the coalesce (same value, and
     * unreachable for non-null text) marks `sim` non-nullable so
     * downstream equi-joins on band keys don't push an
@@ -451,88 +449,36 @@ object TextQueries {
     * n-gram" / "fraction of characters in duplicate n-grams", here over
     * token instances): per document, the share of n-gram instances
     * claimed by the single most frequent n-gram and the share that are
-    * repeats, for n = 2, 3. Both gram sizes ride ONE tokens scan
-    * (tagged union before the explode); the two groupBys are map-side
-    * combinable, so the shape is the wordcount shuffle — linear at
-    * corpus scale. Docs too short for an n-gram get NULLs. */
+    * repeats, for n = 2, 3. Shuffle-free: n-grams never leave their
+    * document, so the native [[graft.functions.GramRepetition]]
+    * computes both signals row-locally — one count map per row, zero
+    * exchanges at any corpus size (an exploded + grouped wordcount form
+    * shuffles ~2x the corpus token volume). Same Hash60 gram fold as
+    * the oracle (collisions cancel). Docs too short for an n-gram get
+    * NULLs. */
   def repetition(t: Tables): DataFrame =
     repetitionFrom(withToks(graft.core.Fanout.widen(t.documents)))
 
   private def repetitionFrom(td: DataFrame): DataFrame =
-    if (graft.functions.GraftExtensions.active) {
-      // SHUFFLE-FREE form (round 6): n-grams never leave their
-      // document, so the native GramRepetition expression computes both
-      // signals row-locally — one count map per row, zero exchanges at
-      // any corpus size. The exploded + grouped form below (the
-      // no-extensions fallback) shuffles ~2x the corpus token volume;
-      // at 100 TB that exchange simply disappears. Bit-identical: same
-      // Hash60 gram fold (oracle collisions cancel), same long→double
-      // casts and division, NULL for docs with no grams either way.
-      td.select(col("doc_id"),
-          call_function("graft_gram_stats", col("toks"), lit(2)).as("g2"),
-          call_function("graft_gram_stats", col("toks"), lit(3)).as("g3"))
-        .select(col("doc_id"),
-          round(col("g2.top_frac"), 6).as("top2gram_frac"),
-          round(col("g2.dup_frac"), 6).as("dup2gram_frac"),
-          round(col("g3.top_frac"), 6).as("top3gram_frac"),
-          round(col("g3.dup_frac"), 6).as("dup3gram_frac"))
-        .orderBy("doc_id")
-    } else repetitionShuffled(td)
+    td.select(col("doc_id"),
+        call_function("graft_gram_stats", col("toks"), lit(2)).as("g2"),
+        call_function("graft_gram_stats", col("toks"), lit(3)).as("g3"))
+      .select(col("doc_id"),
+        round(col("g2.top_frac"), 6).as("top2gram_frac"),
+        round(col("g2.dup_frac"), 6).as("dup2gram_frac"),
+        round(col("g3.top_frac"), 6).as("top3gram_frac"),
+        round(col("g3.dup_frac"), 6).as("dup3gram_frac"))
+      .orderBy("doc_id")
 
   /** Row-local 2-gram duplicate-instance fraction — the x16/x30
-    * "repetitive" signal as ONE column, shared with the streaming
-    * curation ([[graft.streaming.DocStream.curationStream]]) so batch
-    * and stream cannot drift. Native gram-stats when injected; the
-    * fallback recomputes the same hashed-gram multiset math through
-    * row-local HOFs (quadratic in the row's gram count — fine for
-    * bounded documents, and stream-safe: no shuffle). NULL for docs
-    * with no 2-grams, like [[repetition]]. */
+    * "repetitive" signal as ONE column (native gram stats), shared
+    * with the streaming curation
+    * ([[graft.streaming.DocStream.curationStream]]) so batch and
+    * stream cannot drift. NULL for docs with no 2-grams, like
+    * [[repetition]]. */
   private[graft] def dup2GramFrac(toks: Column): Column =
-    if (graft.functions.GraftExtensions.active)
-      round(call_function("graft_gram_stats", toks, lit(2))
-        .getField("dup_frac"), 6)
-    else {
-      val grams = transform(wordShingles(toks, 2), g => hash60(g))
-      val dups = aggregate(grams, lit(0L),
-        (acc, g) => acc +
-          when(size(filter(grams, h => h === g)) > 1, 1L).otherwise(0L))
-      when(size(grams) > 0,
-        round(dups.cast("double") / size(grams).cast("double"), 6))
-    }
-
-  /** Test hook: the fallback form regardless of extension presence
-    * (RepetitionSpec pins native == shuffled bit-equality). */
-  private[operators] def repetitionShuffledForTest(t: Tables): DataFrame =
-    repetitionShuffled(withToks(t.documents))
-
-  private def repetitionShuffled(td: DataFrame): DataFrame = {
-    val grams = td
-      .select(col("doc_id"), explode(concat(
-        transform(wordShingles(col("toks"), 2),
-          g => struct(lit(2).as("n"), g.as("g"))),
-        transform(wordShingles(col("toks"), 3),
-          g => struct(lit(3).as("n"), g.as("g"))))).as("x"))
-      // hash the gram to a 60-bit long BEFORE the count shuffle (the
-      // x26/x27 move): the keys the wordcount exchange carries shrink
-      // from multi-word strings to 8 bytes, and the identical md5 fold
-      // in the oracle makes any collision merge the same counts on
-      // both engines
-      .select(col("doc_id"), col("x.n").as("n"), hash60(col("x.g")).as("g"))
-    val perN = grams
-      .groupBy("doc_id", "n", "g").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id", "n").agg(
-        (max("c").cast("double") / sum("c").cast("double")).as("top_frac"),
-        (sum(when(col("c") > 1, col("c")).otherwise(lit(0L))).cast("double")
-          / sum("c").cast("double")).as("dup_frac"))
-    td.select("doc_id")
-      .join(perN, Seq("doc_id"), "left")
-      .groupBy("doc_id").agg(
-        round(max(when(col("n") === 2, col("top_frac"))), 6).as("top2gram_frac"),
-        round(max(when(col("n") === 2, col("dup_frac"))), 6).as("dup2gram_frac"),
-        round(max(when(col("n") === 3, col("top_frac"))), 6).as("top3gram_frac"),
-        round(max(when(col("n") === 3, col("dup_frac"))), 6).as("dup3gram_frac"))
-      .orderBy("doc_id")
-  }
+    round(call_function("graft_gram_stats", toks, lit(2))
+      .getField("dup_frac"), 6)
 
   /** x18 deterministic stratified sample: the `perSource` docs with
     * the smallest md5(text) per source — the reproducible hash-ordered
@@ -745,7 +691,9 @@ object TextQueries {
     * ~3 scheduled jobs across the whole cluster. Past the limit, the
     * iterative hash-min + pointer-jump propagation runs fully
     * distributed. Both paths produce the identical min-label output
-    * (spec-asserted). */
+    * (spec-asserted). A distributed run that has not reached its
+    * fixpoint after `maxRounds` rounds throws an
+    * `IllegalStateException` rather than return unconverged labels. */
   private[operators] def connectedComponents(edges0: DataFrame,
                                              maxRounds: Int = 25,
                                              driverLimit: Long = 10000000): DataFrame = {
@@ -812,6 +760,10 @@ object TextQueries {
     }
     edges.unpersist()
     input.unpersist()
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within maxRounds=$maxRounds " +
+          s"rounds over $nEdges edges")
     labels
   }
 
@@ -958,9 +910,7 @@ object TextQueries {
     *      the Bloom cut its probe side is a sliver of the corpus.
     * False positives die in phase 3, false negatives don't exist, so
     * the result is row-identical to [[decontaminate]] — the two gates
-    * share one oracle. Without the session extensions the prefilter
-    * is skipped (phase 3 alone is already exact), so results cannot
-    * depend on session wiring. */
+    * share one oracle. */
   def bloomDecontaminate(t: Tables, mod: Int = DecontamMod,
                          fpp: Double = 0.01): DataFrame =
     bloomDecontaminateFrom(withToks(t.documents), mod, fpp)
@@ -970,17 +920,14 @@ object TextQueries {
     val sh = hashedShinglesFrom(td)
     val bench = sh.filter(col("doc_id") % mod === 0).select("hs").distinct()
     val corpus = sh.filter(col("doc_id") % mod =!= 0)
-    val prefiltered =
-      if (graft.functions.GraftExtensions.active) {
-        // two bounded-side jobs (count + treeAggregate build); the
-        // corpus never moves for either
-        val nBench = math.max(bench.count(), 1L)
-        val bf = bench.stat.bloomFilter("hs", nBench, fpp)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        corpus.filter(
-          call_function("graft_bloom_contains", col("hs"), lit(bos.toByteArray)))
-      } else corpus
+    // two bounded-side jobs (count + treeAggregate build); the corpus
+    // never moves for either
+    val nBench = math.max(bench.count(), 1L)
+    val bf = bench.stat.bloomFilter("hs", nBench, fpp)
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    val prefiltered = corpus.filter(
+      call_function("graft_bloom_contains", col("hs"), lit(bos.toByteArray)))
     val hits = prefiltered
       .join(bench.hint("shuffle_hash"), "hs")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))

@@ -78,7 +78,8 @@ class HashedShinglesSpec extends SparkSpec {
     assert(HashedShingles(litToks(), 1, 0L).eval(null)
       .asInstanceOf[ArrayData].numElements() == 0)
     // the TextFunctions wrapper resolves the native function in this session
-    assert(GraftExtensions.active)
+    assert(spark.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_hashed_shingles")))
   }
 
   test("distinct-before-hash vs distinct-after-hash orders both match array_distinct") {

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.functions.TextFunctions._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TextFunctionsSpec extends SparkSpec {
@@ -9,6 +10,25 @@ class TextFunctionsSpec extends SparkSpec {
 
   private def one[T](c: org.apache.spark.sql.Column): T =
     Seq("x").toDF("dummy").select(c.as("r")).collect()(0).getAs[T]("r")
+
+  /** The composed HOF form of [[hashedShingles]] — the reference the
+    * native expression is pinned against on every input class.
+    * Contract: NULL tokens → NULL; fewer than n tokens → empty array. */
+  private def hashedShinglesFallback(toks: Column, n: Int, mod: Long,
+                                     distinct: Boolean): Column = {
+    val res =
+      if (!distinct)
+        transform(wordShingles(toks, n),
+          s => if (mod > 0L) hash60(s) % mod else hash60(s))
+      else if (mod > 0L)
+        transform(array_distinct(wordShingles(toks, n)),
+          s => coalesce(hash60(s) % mod, lit(0L)))
+      else array_distinct(transform(wordShingles(toks, n), s => hash60(s)))
+    // the native expression is null-intolerant (NULL in → NULL out);
+    // wordShingles' when() would fall through to its empty-array
+    // otherwise on a NULL input
+    when(toks.isNull, lit(null).cast("array<bigint>")).otherwise(res)
+  }
 
   test("tokens splits on single space and drops empties") {
     val r = Seq("a  b c ").toDF("t")
@@ -46,8 +66,8 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("native simhash is bit-identical to the composed HOF fold") {
-    // the SQL-composable majority-vote fold (the no-extensions
-    // fallback's semantics, spelled out) vs the native expression,
+    // the SQL-composable majority-vote fold (the reference semantics,
+    // spelled out) vs the native expression,
     // over empty / single / repeated / unicode / many-token inputs
     val hof = expr(
       """aggregate(
@@ -77,8 +97,8 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("hashedShingles: native and HOF fallback agree on every input class") {
-    // ADVICE r10: the two deployment modes must not diverge even on
-    // inputs current call sites never produce — NULL token arrays and
+    // native and composed forms must not diverge even on inputs
+    // current call sites never produce — NULL token arrays and
     // sub-n docs. Pin: NULL -> NULL, < n tokens -> empty array, and
     // value identity elsewhere, across all (mod, distinct) branches.
     val docs = Seq(

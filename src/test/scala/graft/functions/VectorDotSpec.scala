@@ -13,8 +13,11 @@ class VectorDotSpec extends SparkSpec {
   }.toDF("id", "a", "b").persist()
 
   test("extensions are injected in the session") {
-    spark.emptyDataFrame // instantiate the shared session first
-    assert(GraftExtensions.active)
+    val registry = spark.sessionState.functionRegistry
+    Seq("graft_dot", "graft_dist2", "graft_tokens", "graft_band_keys").foreach { f =>
+      assert(registry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f)), f)
+    }
   }
 
   test("bit-identical to the sequential HOF aggregate, float and double") {

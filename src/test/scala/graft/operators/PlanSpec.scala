@@ -15,6 +15,39 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** A session on the shared context whose registry holds no `graft_*`
+    * function — the shape of a session built without the extensions. */
+  private def strippedSession(): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    registry.listFunction().filter(_.funcName.startsWith("graft_"))
+      .foreach(registry.dropFunction)
+    assert(!registry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_tokens")))
+    s
+  }
+
+  test("registration: Tables gives a session without the extensions the native functions") {
+    val s = strippedSession()
+    val df = TextQueries.textStats(Tables(s, "/root/testdata/sf0.001"))
+    val p = df.queryExecution.analyzed.toString
+    // tokens are the native scan, not the interpreted filter(split(...)) lambda
+    assert(p.contains("graft_tokens") && !p.contains("filter(split("), p.take(2000))
+    assert(df.count() > 0)
+    // idempotent: a second Tables over the same session still plans natively
+    assert(TextQueries.textStats(Tables(s, "/root/testdata/sf0.001"))
+      .queryExecution.analyzed.toString.contains("graft_tokens"))
+  }
+
+  test("registration: a frame built outside Tables on a bare session fails naming the function") {
+    val s = strippedSession()
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      s.range(1).select(graft.functions.TextFunctions.tokens(
+        org.apache.spark.sql.functions.lit("a b")))
+    }
+    assert(e.getMessage.contains("graft_tokens"), e.getMessage)
+  }
+
   test("q02: predicate pushed down to the parquet scan") {
     val p = plan(StarQueries.q02(t))
     assert(p.contains("PushedFilters:") &&

@@ -2,10 +2,40 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.core.Tables
+import graft.functions.TextFunctions.{hash60, tokens, wordShingles}
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 class RepetitionSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The exploded + grouped wordcount form of x16 — the reference the
+    * native row-local GramRepetition form must reproduce bit-for-bit. */
+  private def repetitionShuffled(docs: DataFrame): DataFrame = {
+    val td = docs.withColumn("toks", tokens(col("text")))
+    val grams = td
+      .select(col("doc_id"), explode(concat(
+        transform(wordShingles(col("toks"), 2),
+          g => struct(lit(2).as("n"), g.as("g"))),
+        transform(wordShingles(col("toks"), 3),
+          g => struct(lit(3).as("n"), g.as("g"))))).as("x"))
+      .select(col("doc_id"), col("x.n").as("n"), hash60(col("x.g")).as("g"))
+    val perN = grams
+      .groupBy("doc_id", "n", "g").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id", "n").agg(
+        (max("c").cast("double") / sum("c").cast("double")).as("top_frac"),
+        (sum(when(col("c") > 1, col("c")).otherwise(lit(0L))).cast("double")
+          / sum("c").cast("double")).as("dup_frac"))
+    td.select("doc_id")
+      .join(perN, Seq("doc_id"), "left")
+      .groupBy("doc_id").agg(
+        round(max(when(col("n") === 2, col("top_frac"))), 6).as("top2gram_frac"),
+        round(max(when(col("n") === 2, col("dup_frac"))), 6).as("dup2gram_frac"),
+        round(max(when(col("n") === 3, col("top_frac"))), 6).as("top3gram_frac"),
+        round(max(when(col("n") === 3, col("dup_frac"))), 6).as("dup3gram_frac"))
+      .orderBy("doc_id")
+  }
 
   test("repetition signals match hand-computed n-gram fractions") {
     val dir = Files.createTempDirectory("rep").toString
@@ -61,7 +91,7 @@ class RepetitionSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val t = Tables(spark, dir)
     val native = TextQueries.repetition(t).collect()
-    val shuffled = TextQueries.repetitionShuffledForTest(t).collect()
+    val shuffled = repetitionShuffled(t.documents).collect()
     assert(native.length == shuffled.length)
     native.zip(shuffled).foreach { case (a, b) => assert(a == b, s"$a != $b") }
   }

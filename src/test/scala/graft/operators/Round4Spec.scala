@@ -135,6 +135,15 @@ class Round4Spec extends SparkSpec {
     assert(lbl.length == 32 && lbl.forall(_.getLong(1) == 0L))
   }
 
+  test("cc: hitting the round cap before the fixpoint throws, naming cap and edges") {
+    val edges = (0L until 31L).map(i => (i, i + 1)).toDF("s", "d")
+    val e = intercept[IllegalStateException] {
+      TextQueries.connectedComponents(edges, maxRounds = 2, driverLimit = 0)
+    }
+    assert(e.getMessage.contains("maxRounds=2") && e.getMessage.contains("31 edges"),
+      e.getMessage)
+  }
+
   test("cc: empty edge set yields an empty labeling without looping") {
     for (lim <- Seq(1000000L, 0L)) {
       val empty = Seq.empty[(Long, Long)].toDF("s", "d")
