@@ -1,5 +1,7 @@
 import org.apache.spark.sql.functions._
 import spark.implicits._
+// the doublet kNN calls the native graft_dot/graft_dist2 functions
+graft.functions.GraftExtensions.register(spark)
 // 2 samples x (1500 ambient + 500 real cells), 200 genes
 def sample(name: String, off: Int) = {
   val amb = (0 until 1500).flatMap { i =>

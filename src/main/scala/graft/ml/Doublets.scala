@@ -17,17 +17,40 @@ import org.apache.spark.sql.functions._
   *
   * Classification follows scDblFinder's trained-classifier design
   * (`2-2:34-36` semantics): the artificial doublets are a LABELED
-  * positive class, so a gradient-boosted-tree model (Spark ML
-  * `GBTClassifier` — the in-engine analog of scDblFinder's xgboost,
-  * same boosted-trees family, seeded) is fit on ALL cells (real +
-  * artificial) over per-cell features mirroring scDblFinder's
-  * kNN-derived set: artificial-neighbor fraction at two neighborhood
-  * scales, distance-weighted artificial fraction, rank of the first
-  * artificial neighbor, mean neighbor distance (local density), log
-  * library size, log feature count. Each real cell's `doublet_scores`
-  * is the model's predicted doublet probability; `doublet` when it
-  * passes `probabilityThreshold` — the 0.5 default the reference
-  * configures (`4_Prepare_experiment.r: config.doubletScores`).
+  * positive class, so a boosted-trees model (the reference's xgboost
+  * family) is fit on ALL cells (real + artificial) over per-cell
+  * features mirroring scDblFinder's kNN-derived set: artificial-neighbor
+  * fraction at two neighborhood scales, distance-weighted artificial
+  * fraction, rank of the first artificial neighbor, mean neighbor
+  * distance (local density), log library size, log feature count. Each
+  * real cell's `doublet_scores` is the model's predicted doublet
+  * probability; `doublet` when it passes `probabilityThreshold` — the
+  * 0.5 default the reference configures
+  * (`4_Prepare_experiment.r: config.doubletScores`).
+  *
+  * Two defenses scDblFinder itself uses against the trap of this
+  * training scheme — every real doublet is LABELED real, so a flexible
+  * model fit naively memorizes the very cells the score must flag:
+  *  1. OUT-OF-FOLD round 1: real cells are split into 3 folds by
+  *     `xxhash64(barcode, seed) pmod 3` (artificial cells train every
+  *     model) and each fold is scored by the model that never saw it;
+  *  2. ITERATIVE EXCLUSION round 2: real cells in the top decile of
+  *     round-1 scores (an exact order statistic) are presumed doublets
+  *     and left out of the real class, then every real cell is rescored.
+  *     Without it, co-located real doublets vouch for each other across
+  *     folds.
+  *
+  * The learner is [[BoostedTrees]], a local reproduction of Spark ML's
+  * `GBTClassifier` for this configuration (20 iterations, depth 3, step
+  * 0.1, 5 rows per node, 32 bins): on the same rows it gives the same
+  * probabilities up to float noise (a spec pins ≤ 1e-3 and bit equality
+  * on ≥ 90% of rows against Spark ML). The whole scheme — 4 fits and
+  * all scoring — runs in ONE Spark task per sample over the persisted
+  * feature table coalesced to one partition: one job, where the Spark
+  * ML fits launched ~64 jobs each for a few hundred rows. The price is
+  * memory: that task buffers the sample's real + artificial cells
+  * (≈ 1.5 × cells × 7 doubles + barcode), O(cells per sample) in one
+  * executor task, never on the driver.
   */
 object Doublets {
 
@@ -36,8 +59,10 @@ object Doublets {
              probabilityThreshold: Double = 0.5): DataFrame = {
     val spark = expr.sparkSession
     import spark.implicits._
-    val samples = expr.select("sample").distinct()
-      .collect().map(_.getString(0)).sorted
+    // an RDD distinct keeps its shuffle inside the collect's one job
+    // (a DataFrame distinct runs the shuffle as a job of its own)
+    val samples = expr.select("sample").as[String].rdd.distinct()
+      .collect().sorted
     if (samples.isEmpty)
       return Seq.empty[(String, String, Double, String)]
         .toDF("sample", "barcode", "doublet_scores", "doublet_class")
@@ -60,7 +85,7 @@ object Doublets {
           .withColumn("doublet_scores", lit(0.0))
           .withColumn("doublet_class", lit("singlet"))
       case Some(feats) =>
-        classify(feats, sample, k, seed, probabilityThreshold)
+        classify(feats, sample, seed, probabilityThreshold)
     }
 
   /** The featurization stage, exposed package-private for spec-level
@@ -178,11 +203,10 @@ object Doublets {
       .withColumn("mean_dist", coalesce(col("mean_dist"), col("__dist_cap")))
       .drop("__dist_cap")
       .join(libs, "cells_id")
-      .withColumn("features", org.apache.spark.ml.functions.array_to_vector(
+      .withColumn("features",
         array(col("art_frac"), col("art_frac_inner"), col("w_art_frac"),
           col("first_art_rk"), col("mean_dist"),
-          col("log_lib"), col("log_nfeat"))))
-      .withColumn("label", col("is_art").cast("double"))
+          col("log_lib"), col("log_nfeat")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     feats.count()
     bc.unpersist(); combined.unpersist(); normHvg.unpersist()
@@ -190,94 +214,61 @@ object Doublets {
     Some(feats)
   }
 
-  /** Train + score from a materialized feature table; releases it. */
-  private def classify(feats: DataFrame, sample: String, k: Int, seed: Long,
-                       probabilityThreshold: Double): DataFrame = {
-    // scDblFinder-style classifier: artificial doublets are the labeled
-    // positive class; boosted trees (the reference's xgboost family),
-    // seeded for determinism
-    val gbt = new org.apache.spark.ml.classification.GBTClassifier()
-      .setMaxIter(20).setMaxDepth(3).setStepSize(0.1)
-      .setMinInstancesPerNode(5)
-      .setSeed(seed ^ sample.hashCode.toLong)
-      .setFeaturesCol("features").setLabelCol("label")
-      .setProbabilityCol("__prob")
-    // Two defenses scDblFinder itself uses against the trap inherent
-    // to this training scheme — every real doublet is LABELED real, so
-    // a flexible model fit naively memorizes the very cells the score
-    // must flag:
-    //  1. OUT-OF-FOLD round 1: real cells are hash-split into folds
-    //     (artificial cells train every model) and each fold is scored
-    //     by the model that never saw it.
-    //  2. ITERATIVE EXCLUSION round 2: real cells in the top decile of
-    //     round-1 scores are presumed doublets and EXCLUDED from the
-    //     real training class, then everything is rescored — without
-    //     this, co-located real doublets still vouch for each other
-    //     across folds (each one's held-out model trains on the
-    //     others, labeled real, at the same feature point).
-    // Deterministic: fold assignment is a seeded hash, the learner is
-    // seeded, the exclusion cut is an exact distributed order
-    // statistic (aggregation-only — no scored cells on the driver).
-    val numFolds = 3
-    val withFold = feats.withColumn("__fold",
-      when(col("is_art"), lit(-1)).otherwise(
-        pmod(xxhash64(col("barcode"), lit(seed)), lit(numFolds)).cast("int")))
+  /** Train + score from a materialized feature table in ONE Spark job:
+    * the table is coalesced to one partition and the whole two-round
+    * scheme runs in that task over rows sorted by `cells_id`, so float
+    * sums never depend on arrival order. Releases the feature table. */
+  private[ml] def classify(feats: DataFrame, sample: String, seed: Long,
+                           probabilityThreshold: Double): DataFrame = {
+    val spark = feats.sparkSession
+    import spark.implicits._
+    // RDD persist + count: ONE job. A persisted DataFrame would cost two
+    // (adaptive execution materializes a cache as its own stage job)
+    val scored = feats
+      .select(col("cells_id"), col("barcode"), col("is_art"),
+        when(col("is_art"), lit(-1)).otherwise(
+          pmod(xxhash64(col("barcode"), lit(seed)), lit(NumFolds)).cast("int")),
+        col("features"))
+      .as[Cell].rdd.coalesce(1)
+      .mapPartitions(it => twoRound(it.toArray.sortBy(_._1)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val realFolds = withFold.filter(!col("is_art"))
-      .select("__fold").distinct().collect().map(_.getInt(0)).sorted
-    val round1 =
-      if (realFolds.length < 2) {
-        // all real cells hashed into one fold: holding it out would
-        // leave a single-class training set — score in-sample instead
-        gbt.fit(withFold).transform(withFold.filter(!col("is_art")))
-      } else realFolds.map { f =>
-        gbt.fit(withFold.filter(col("__fold") =!= f))
-          .transform(withFold.filter(!col("is_art") && col("__fold") === f))
-      }.reduce(_ unionByName _)
-    val p1 = round1.select(col("cells_id"),
-      org.apache.spark.ml.functions.vector_to_array(col("__prob"))
-        .getItem(1).as("__p1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nReal = p1.count()
-    val nExcl = math.max(1L, math.ceil(nReal * 0.1).toLong)
-    // the exclusion cut = min of the top nExcl scores, as a distributed
-    // aggregation (no TakeOrdered of scored cells, no driver list, no
-    // .toInt ceiling). percentile interpolates at index p*(n-1); aiming
-    // at the HALF-INTEGER position (nReal-nExcl-0.5) lands the raw
-    // value strictly between the two straddling order statistics (or
-    // exactly on them when tied), so snapping to the smallest actual
-    // score >= it reproduces the exact order statistic — equal to the
-    // former orderBy.limit driver form except sub-ulp ties (straddling
-    // scores ~1 ulp apart can round the midpoint onto the lower one and
-    // snap the cut one rank low; GBT scores never resolve that finely).
-    // Note percentile's final merge buffers the distinct __p1 values in
-    // one aggregation task — O(nReal) peak in a task for continuous
-    // scores: moved OFF the driver, not eliminated. Swap in
-    // approx_percentile(+snap) if nReal ever makes that task the limit.
-    val p = if (nReal - nExcl <= 0L) 0.0
-            else (nReal - nExcl - 0.5) / (nReal - 1).toDouble
-    val thrRaw = p1.agg(expr(s"percentile(__p1, $p)"))
-      .collect()(0).getDouble(0)
-    val thr = p1.filter(col("__p1") >= thrRaw)
-      .agg(min(col("__p1"))).collect()(0).getDouble(0)
-    val train2 = withFold.join(p1, Seq("cells_id"), "left")
-      .filter(col("is_art") || col("__p1") < thr).drop("__p1")
-    val out0 =
-      if (train2.filter(!col("is_art")).isEmpty)
-        round1 // degenerate flat scores: round 2 would be single-class
-      else
-        gbt.fit(train2).transform(withFold.filter(!col("is_art")))
-    val out = out0
-      .withColumn("doublet_scores",
-        org.apache.spark.ml.functions.vector_to_array(col("__prob"))
-          .getItem(1))
-      .withColumn("doublet_class",
+    scored.count()
+    feats.unpersist()
+    scored.toDF("barcode", "doublet_scores")
+      .select(lit(sample).as("sample"), col("barcode"), col("doublet_scores"),
         when(col("doublet_scores") >= probabilityThreshold, "doublet")
-          .otherwise("singlet"))
-      .select("sample", "barcode", "doublet_scores", "doublet_class")
-    val result = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    feats.unpersist(); withFold.unpersist(); p1.unpersist()
-    result
+          .otherwise("singlet").as("doublet_class"))
+  }
+
+  /** (cells_id, barcode, is_art, fold, features); fold −1 = artificial. */
+  private type Cell = (Long, String, Boolean, Int, Array[Double])
+  private val NumFolds = 3
+
+  /** The scDblFinder scheme over one sample's cells, sorted by
+    * `cells_id`; yields (barcode, doublet probability) per real cell. */
+  private def twoRound(cells: Array[Cell]): Iterator[(String, Double)] = {
+    def fit(train: Array[Cell]) = BoostedTrees.fit(
+      train.map(_._5), train.map(c => if (c._3) 1.0 else 0.0))
+    val isReal = cells.map(!_._3)
+    val folds = cells.filter(!_._3).map(_._4).distinct.sorted
+    // round 1, out of fold: each real cell is scored by the model that
+    // never saw its fold (artificial cells train every model). All real
+    // cells in one fold would leave a single-class training set —
+    // score in-sample instead.
+    val models =
+      if (folds.length < 2) folds.map(_ -> fit(cells)).toMap
+      else folds.map(f => f -> fit(cells.filter(_._4 != f))).toMap
+    val p1 = cells.map(c => if (c._3) Double.NaN else models(c._4).probability(c._5))
+    // round 2: the top decile of round-1 scores is presumed doublets and
+    // left out of the real class, then every real cell is rescored
+    val real = p1.filter(!_.isNaN).sorted
+    val nExcl = math.max(1, math.ceil(real.length * 0.1).toInt)
+    val thr = real(real.length - nExcl)
+    val keep = cells.indices.filter(i => !isReal(i) || p1(i) < thr).map(cells)
+    // flat scores leave no real cell to train on: keep round 1
+    val round2 = if (keep.exists(!_._3)) Some(fit(keep.toArray)) else None
+    cells.indices.iterator.filter(isReal).map { i =>
+      (cells(i)._2, round2.fold(p1(i))(_.probability(cells(i)._5)))
+    }
   }
 }

@@ -183,6 +183,19 @@ class IngestSpec extends SparkSpec {
     assert(fdrs.forall(f => f != null && f < 0.05))
   }
 
+  test("every sample flagged by emptyDrops still yields a null emptyDrops_FDR column") {
+    // lower = 0 leaves no ambient pool, so emptyDrops skips and flags
+    // the sample and its scores frame has no columns at all
+    val d1 = Files.createDirectory(Files.createTempDirectory("ingest-flagged").resolve("s1"))
+    writeSample(d1, 0)
+    val r = Ingest.run(spark, Ingest.Config(name = "flagged-exp",
+      samples = Seq("s1" -> d1.toString), emptyDropsLower = 0, emptyDropsIters = 99))
+    assert(r.flaggedSamples == Seq("s1"))
+    val cells = r.experiment.cells.select("emptyDrops_FDR", "flag_filtered").collect()
+    assert(cells.length == 12)
+    assert(cells.forall(c => c.isNullAt(0) && c.getBoolean(1)))
+  }
+
   test("processing config has per-sample resolved blocks") {
     val cfg = result.processingConfig
     assert(cfg.contains("\"sample-s1\"") && cfg.contains("\"sample-s2\""))
