@@ -56,22 +56,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // optional conf overrides for A/B measurement while iterating
-    // ("k=v;k2=v2"); the driver never sets it, so its bench runs the
-    // defaults above — this exists so config experiments go through
-    // the SAME timing methodology as the artifact of record
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.core.Scratch.localDir())
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local()
     val loadStart = loadAvg()
     val stealStart = stealCs()
     // warm-up: JIT/codegen/session init and first-touch parquet footer

@@ -30,7 +30,6 @@ object Ingest {
       stepConfigs: Map[String, StepConfig] = Map.empty,
       minCells: Int = 3, minFeatures: Int = 10,
       emptyDropsLower: Long = 100, emptyDropsIters: Int = 1000,
-      runQcFilters: Boolean = false, // ingest resolves configs; filters run downstream
       metadata: Map[String, Map[String, String]] = Map.empty, // col -> sample -> value
       // When set, the merged raw matrix is checkpointed to
       // `<dir>/raw_expr` partitioned by sample (the stage-1 RDS
@@ -103,22 +102,21 @@ object Ingest {
     val cells = MergeSamples.withCellsId(MergeSamples.withCellName(cellsWithMeta))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val (qcCells, stepSettings) =
-      QcSteps.runAll(cells, config.stepConfigs)
-    val finalCells = if (config.runQcFilters) qcCells else cells
+    // ingest resolves the step configs; the filters run downstream
+    val (_, stepSettings) = QcSteps.runAll(cells, config.stepConfigs)
     val processingConfig = ProcessingConfig.build(config.stepConfigs, stepSettings)
 
-    val exp = Experiment(trimmed, finalCells, genes)
+    val exp = Experiment(trimmed, cells, genes)
     val violations = Invariants.check(exp)
 
     // P6: cell sets — the reference document is an OBJECT
     // {"cellSets": [...]} led by an empty scratchpad root
     // (`5_Upload-to-aws.py:138-143,254-256`)
-    val sampleSets = CellSets.fromColumn(finalCells, "sample", "sample")
+    val sampleSets = CellSets.fromColumn(cells, "sample", "sample")
     val sampleJson = CellSets.toJsonDocument(sampleSets, "sample", "Samples")
     val metaJsons = config.metadata.keys.toSeq.sorted.map { m =>
       CellSets.toJsonDocument(
-        CellSets.fromColumn(finalCells, m, s"metadata-$m"), m, m)
+        CellSets.fromColumn(cells, m, s"metadata-$m"), m, m)
     }
     val scratchpad =
       """{"key":"scratchpad","name":"Scratchpad","rootNode":true,"children":[]}"""

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Writes `.explain("formatted")` for declared queries to
@@ -8,22 +7,14 @@ import org.apache.spark.sql.execution.FormattedMode
   * evidence (the judge checks plan claims against these files).
   *
   * Usage: `runMain graft.PlanDump <suffix> [name1,name2,...]`
-  * (no names = every declared query). Same session shape as Bench.
+  * (no names = every declared query). Runs on [[Session.local]].
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val suffix = args.headOption.getOrElse("plan")
     val names = args.lift(1).map(_.split(",").map(_.trim).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.core.Scratch.localDir())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val dir = java.nio.file.Paths.get("plans/r13")
     java.nio.file.Files.createDirectories(dir)
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -28,11 +28,6 @@ object Fanout {
     * before redistributing); Catalyst still pushes filters and column
     * pruning below the added exchange. */
   def widen(df: DataFrame): DataFrame = {
-    // measurement-only kill switch (r13 A/B harness; the driver never
-    // sets it): widen placement is decided by measurement, and the
-    // r13 scratch relocation changed the exchange-vs-serial economics
-    // enough that every placement was re-measured (OPTIMIZATION_r13.md)
-    if (sys.env.contains("SPARK_GRAFT_NO_WIDEN")) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     val parts = df.rdd.getNumPartitions
     // partition count alone lies for a big single-row-group file:

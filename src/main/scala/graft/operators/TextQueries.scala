@@ -418,6 +418,26 @@ object TextQueries {
     unpersistAfterFirstUse(simhashPairsFromSims(sims), sims)
   }
 
+  /** SimHash banding layout of the x13/x42 family, batch and stream
+    * ([[graft.streaming.DocStream]]): the 60-bit SimHash splits into
+    * `SimBands` bands of `SimBandBits` bits; two documents are
+    * candidates when any band key agrees. */
+  val SimBands = 4
+  val SimBandBits = 15
+  private val SimBandMask: Long = (1L << SimBandBits) - 1
+
+  /** Band `b`'s key of a SimHash column. */
+  def simBandKey(sim: Column, b: Int): Column =
+    shiftright(sim, b * SimBandBits) bitwiseAND lit(SimBandMask)
+
+  /** One `(doc_id, sim, b, key)` row per band of a `(doc_id, sim)` table. */
+  private def simBands(sims: DataFrame): DataFrame = sims
+    .select(col("doc_id"), col("sim"), explode(array((0 until SimBands).map(b =>
+      struct(lit(b).as("b"), simBandKey(col("sim"), b).as("key"))): _*))
+      .as("band"))
+    .select(col("doc_id"), col("sim"),
+      col("band.b").as("b"), col("band.key").as("key"))
+
   /** The banded ham≤6 pair join over a `(doc_id, sim)` table — both
     * self-join sides read `sims`, so persist it at the call site.
     * Candidate volume is inherently quadratic in fingerprint
@@ -425,13 +445,7 @@ object TextQueries {
     * LIST cannot be smaller); callers that only need CONNECTIVITY
     * must collapse to distinct fingerprints first ([[dupClusters]]). */
   private def simhashPairsFromSims(sims: DataFrame): DataFrame = {
-    val banded = sims
-      .select(col("doc_id"), col("sim"), explode(array((0 until 4).map(b =>
-        struct(lit(b).as("b"),
-          (shiftright(col("sim"), b * 15) bitwiseAND lit(0x7fffL)).as("key"))): _*))
-        .as("band"))
-      .select(col("doc_id"), col("sim"),
-        col("band.b").as("b"), col("band.key").as("key"))
+    val banded = simBands(sims)
     banded.as("x")
       .join(banded.as("y"),
         col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
@@ -1825,33 +1839,6 @@ object TextQueries {
   /** Every `DeltaMod`-th doc_id plays the newly-ingested batch. */
   private val DeltaMod = 10L
 
-  /** x42 delta dedup — the INCREMENTAL production shape of the dedup
-    * family: a new batch (`doc_id % mod = 0`, ~10% of the fixture) is
-    * deduplicated AGAINST the standing corpus and within itself,
-    * without ever re-pairing the corpus with itself (which x01/x13
-    * style full-corpus passes would do on every ingest — unaffordable
-    * at 100 TB). Per delta doc, one status by precedence:
-    * `exact_dup_corpus` (normalized fingerprint already in the corpus)
-    * > `exact_dup_delta` (an earlier delta doc has the fingerprint)
-    * > `near_dup_corpus` (SimHash ham≤6 banded match in the corpus)
-    * > `new`; `dup_of` names the surviving doc (NULL for `new`).
-    *
-    * Scale shape: corpus work is ONE fingerprint projection + one
-    * band-table build (both linear, both the standing index a real
-    * pipeline would keep materialized); the delta side joins INTO
-    * those — cost per ingest is O(delta + matches), not O(corpus²).
-    * The banded join shuffles on the 15-bit band key exactly like x13;
-    * duplicity blowup cannot occur because the corpus side never
-    * self-joins. */
-  /** The 4×15-bit SimHash band explode shared by the x13/x42 family. */
-  private def simBands(sims: DataFrame): DataFrame = sims
-    .select(col("doc_id"), col("sim"), explode(array((0 until 4).map(b =>
-      struct(lit(b).as("b"),
-        (shiftright(col("sim"), b * 15) bitwiseAND lit(0x7fffL)).as("key"))): _*))
-      .as("band"))
-    .select(col("doc_id"), col("sim"),
-      col("band.b").as("b"), col("band.key").as("key"))
-
   /** A built standing-corpus dedup index — the build-once/ingest-many
     * artifact of [[deltaDedup]] (the buildIvfIndex pattern): `fp` is
     * the (fingerprint → min surviving doc_id) exact table, `bands` the
@@ -1947,6 +1934,24 @@ object TextQueries {
       index.bands.union(newBands).persist(StorageLevel.MEMORY_AND_DISK))
   }
 
+  /** x42 delta dedup — the INCREMENTAL production shape of the dedup
+    * family: a new batch (`doc_id % mod = 0`, ~10% of the fixture) is
+    * deduplicated AGAINST the standing corpus and within itself,
+    * without ever re-pairing the corpus with itself (which x01/x13
+    * style full-corpus passes would do on every ingest — unaffordable
+    * at 100 TB). Per delta doc, one status by precedence:
+    * `exact_dup_corpus` (normalized fingerprint already in the corpus)
+    * > `exact_dup_delta` (an earlier delta doc has the fingerprint)
+    * > `near_dup_corpus` (SimHash ham≤6 banded match in the corpus)
+    * > `new`; `dup_of` names the surviving doc (NULL for `new`).
+    *
+    * Scale shape: corpus work is ONE fingerprint projection + one
+    * band-table build (both linear, both the standing index a real
+    * pipeline would keep materialized); the delta side joins INTO
+    * those — cost per ingest is O(delta + matches), not O(corpus²).
+    * The banded join shuffles on the 15-bit band key exactly like x13;
+    * duplicity blowup cannot occur because the corpus side never
+    * self-joins. */
   def deltaDedup(t: Tables, mod: Long = DeltaMod): DataFrame = {
     val docs = graft.core.Fanout.widen(t.documents)
     val index = buildDedupIndex(docs.filter(col("doc_id") % mod =!= 0))

@@ -1,9 +1,14 @@
 package graft.streaming
 
 import graft.functions.TextFunctions
+import graft.operators.TextQueries
+import graft.operators.TextQueries.{SimBandBits, SimBands, simBandKey}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.storage.StorageLevel
 
 /** Streaming deduplication over an unbounded document feed — the
   * incremental forms of the batch dedup family (x01 exact, x11
@@ -89,15 +94,15 @@ object DocStream {
     * domains × horizon, not by stream length or total domain count.
     * Domains are the shard key, exactly like the batch window. */
   def domainCapAdmission(docs: Dataset[UrlDoc], cap: Long = 10,
-                         horizon: String = "1 hour",
-                         horizonMs: Long = 3600L * 1000L): Dataset[Admission] = {
+                         horizon: String = "1 hour"): Dataset[Admission] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val horizonMs = delayMs(horizon)
     docs
       .withWatermark("ts", horizon)
       .groupByKey(_.domain)
       .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout()) {
         (domain: String, rows: Iterator[UrlDoc],
          state: GroupState[Long]) =>
@@ -123,37 +128,41 @@ object DocStream {
       }
   }
 
-  private val Bands = 4
-  private val BandBits = 15
-  private val BandMask = (1L << BandBits) - 1
+  /** One bucket id per SimHash band of `sim` — `(b << bits) | key`, so
+    * equal keys of different bands never share a bucket. */
+  private def bandBuckets(sim: Column): Column =
+    array((0 until SimBands).map(b =>
+      lit(b.toLong << SimBandBits) bitwiseOR simBandKey(sim, b)): _*)
+
+  /** A watermark horizon in ms, parsed the way `withWatermark` parses
+    * its delay, so state timeouts run on the watermark's own clock. */
+  private def delayMs(horizon: String): Long =
+    EventTimeWatermark.getDelayMs(IntervalUtils.fromIntervalString(horizon))
 
   /** Streaming SimHash near-dup flagging: each document's 60-bit
-    * SimHash is split into 4×15-bit bands (the x13 blocking layout);
-    * per band-key state remembers the last `perBucket` (doc_id, sim)
-    * pairs, and an arriving document is Hamming-checked ONLY against
-    * its bucket cohort — never the whole history. A pair agreeing in
-    * several bands is emitted once per agreeing band (consumers
-    * `dropDuplicates("doc_id","dup_of")` per sink epoch if exact-once
-    * flags matter). State per key is a bounded FIFO, so memory is
-    * O(buckets × perBucket) regardless of stream length. */
+    * SimHash is split into the x13 band layout
+    * ([[TextQueries.SimBands]] bands of [[TextQueries.SimBandBits]]
+    * bits); per band-bucket state remembers the last `perBucket`
+    * (doc_id, sim) pairs, and an arriving document is Hamming-checked
+    * ONLY against its bucket cohort — never the whole history. A pair
+    * agreeing in several bands is emitted once per agreeing band
+    * (consumers `dropDuplicates("doc_id","dup_of")` per sink epoch if
+    * exact-once flags matter). State per key is a bounded FIFO, so
+    * memory is O(buckets × perBucket) regardless of stream length. */
   def nearDupFlags(docs: Dataset[Doc], maxHamming: Int = 6,
                    perBucket: Int = 1024): Dataset[NearDup] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val banded = docs
+    docs
       .withColumn("sim", TextFunctions.simhash60("text"))
       .select(col("doc_id"), col("sim"),
-        explode(array((0 until Bands).map(b =>
-          concat_ws("_", lit(b),
-            shiftright(col("sim"), b * BandBits) bitwiseAND BandMask)): _*))
-          .as("bucket"))
-      .as[(Long, Long, String)]
-    banded
+        explode(bandBuckets(col("sim"))).as("bucket"))
+      .as[(Long, Long, Long)]
       .groupByKey(_._3)
       .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[(Long, Long, String)],
+        (_: Long, rows: Iterator[(Long, Long, Long)],
          state: GroupState[List[(Long, Long)]]) =>
           var cohort = state.getOption.getOrElse(Nil)
           val out = scala.collection.mutable.ArrayBuffer.empty[NearDup]
@@ -175,6 +184,16 @@ object DocStream {
   final case class DeltaStatus(ts: java.sql.Timestamp, doc_id: Long,
                                status: String, dup_of: Option[Long])
 
+  /** The fingerprint machine's verdict on one document: its x42
+    * `status`/`dup_of`, beside the caller's row-local `row_status`. */
+  private[streaming] final case class Verdict(ts: java.sql.Timestamp,
+      doc_id: Long, status: String, dup_of: Option[Long], row_status: String)
+
+  /** One document entering the fingerprint machine: (ts, doc_id, fp,
+    * corpus_id, near_id, row_status, near_delta). */
+  private type FpRow = (java.sql.Timestamp, Long, String, Option[Long],
+    Option[Long], String, Option[Long])
+
   /** Streaming delta dedup — the incremental twin of the batch x42
     * ([[graft.operators.TextQueries.deltaDedup]]): an unbounded ingest
     * feed is deduplicated against a standing
@@ -182,68 +201,55 @@ object DocStream {
     * between [[graft.operators.TextQueries.absorbDelta]] batches) and
     * within itself, emitting the x42 status precedence
     * (`exact_dup_corpus` > `exact_dup_delta` > `near_dup_corpus` >
-    * `new`) per document in APPEND mode.
+    * `new`) per document in APPEND mode. It is the shared dedup core
+    * ([[dedupStates]], also under [[curationStream]]) projected to
+    * [[DeltaStatus]].
     *
-    * Shape: the corpus lookups are STREAM-STATIC equi-joins — one on
-    * the fingerprint table, four on per-band (key → candidate list)
-    * lookup tables — so the corpus contributes no stream state at all.
-    * The per-band candidate collapse (Hamming-filter the cohort, take
-    * the min survivor) runs ROW-LOCALLY via array HOFs over the
-    * collected candidate struct list (bucket cohorts are |distinct
-    * sims|·4 / 2^15 rows on average — hundreds at 12M docs), which
-    * keeps every doc ONE row through the joins and avoids the
-    * windowed aggregation an explode would force in append mode. The
-    * only stream state is the within-delta fingerprint-first map
-    * (one `(fp → first doc_id)` per fingerprint active within the
-    * watermark horizon, evicted by event-time timeout — the
-    * domainCapAdmission bound). A corpus-known fingerprint never
-    * touches state: its copies are `exact_dup_corpus` by precedence,
-    * exactly as the batch operator resolves them.
+    * Corpus lookups: STREAM-STATIC equi-joins — one on the fingerprint
+    * table, one per band on a persisted (key → candidate list) lookup
+    * — so the corpus contributes no stream state at all. The per-band
+    * candidate collapse (Hamming-filter the cohort, take the min
+    * survivor) runs ROW-LOCALLY via array HOFs over the collected
+    * candidate list (bucket cohorts are |distinct sims|·4 / 2^15 rows on
+    * average — hundreds at 12M docs), which keeps every doc ONE row
+    * through the joins and avoids the windowed aggregation an explode
+    * would force in append mode.
     *
-    * CONTRACT: the per-fingerprint state folds to `min(stored,
-    * incoming doc_id)` — the same `min(doc_id)` election the batch
+    * Stream state: the within-delta fingerprint machine, one `(fp →
+    * survivor doc_id)` row per corpus-unknown fingerprint active within
+    * the watermark horizon, evicted by event-time timeout. A
+    * corpus-known fingerprint never touches state: its copies are
+    * `exact_dup_corpus` by precedence, exactly as the batch operator
+    * resolves them.
+    *
+    * CONTRACT: the stored survivor folds to `min(stored, incoming
+    * doc_id)` — the `min(doc_id)` election the batch
     * `deltaDedupAgainst` computes over the whole delta — so every
     * status row emitted AFTER a duplicate's arrival equals the batch
-    * row under ANY arrival order, not just monotone ids (r10 verdict
-    * item 6; DocStreamSpec pins an inversion case). The one residual,
-    * structural divergence: when a LOWER id arrives after its
-    * duplicate was already emitted as the stream survivor, that pair's
-    * own two rows swap roles (the lower id is emitted
-    * `exact_dup_delta` pointing at the prior survivor, whose `new` row
-    * cannot be retracted in append mode) — but the folded state means
-    * every subsequent copy points at the true batch survivor.
+    * row under ANY arrival order, not just monotone ids (DocStreamSpec
+    * pins an inversion case). The one structural divergence: when a
+    * LOWER id arrives after its duplicate was already emitted as the
+    * stream survivor, that pair's own two rows swap roles (the lower id
+    * is emitted `exact_dup_delta` pointing at the prior survivor, whose
+    * `new` row cannot be retracted in append mode).
     *
-    * `withinStream = true` (r11 verdict item 6) closes the one
-    * semantic hole the default contract documents away: a NEAR-dup
-    * pair arriving in the same stream (no index hit) passes un-flagged
-    * until an `absorbDelta` index refresh. The bounded alternative
-    * carries the delta's own band keys in stream state — a FIRST
-    * stateful stage keyed by (band, key) bucket holds the
+    * `withinStream = true` also flags a NEAR-dup pair arriving in the
+    * same stream with no index hit, which the default passes un-flagged
+    * until an `absorbDelta` index refresh. A band-cohort stage keyed by
+    * band bucket runs before the fingerprint machine: it holds the
     * within-horizon cohort of `(event-ms, doc_id, sim)` per bucket
-    * (the [[nearDupFlags]] shape, with the fp map's event-time
-    * eviction: entries prune once `ts + horizon < watermark`, idle
-    * buckets time out wholesale, and a `perBucket` cap bounds
-    * adversarial bucket skew), and emits each doc's per-band verdict;
-    * the SECOND stage is the fp-keyed machine below, which merges the
-    * `Bands` rows per doc row-locally (same micro-batch, same fp
-    * group — no extra shuffle stage) and emits the new status
-    * `near_dup_delta` (precedence after `near_dup_corpus`) pointing at
-    * the min matching within-horizon doc_id. State stays
-    * horizon-bounded in BOTH stages; the batch x42 operator has no
-    * within-delta near-dup status (its near-dups are against the
-    * corpus by definition), so `withinStream` defaults false to keep
-    * exact stream/batch parity unless the caller opts in.
-    *
-    * The cohort path shares the fp contract's structural residue:
-    * when a near-dup pair arrives in id-INVERTED order (higher id
-    * first), the pair's own rows swap roles — the later, smaller id
-    * is emitted `near_dup_delta` pointing at the first-arrived larger
-    * survivor, whose `new` row cannot be retracted in append mode
-    * (the batch x12/x13 family would elect min(doc_id)). Subsequent
-    * arrivals still fold to the MIN matching cohort id, so
-    * post-inversion batches converge on the same elections the
-    * non-inverted case pins (DocStreamSpec pins both the inverted
-    * pair and the post-inversion parity; r12 verdict item 7).
+    * (entries prune once `ts + horizon < watermark`, idle buckets time
+    * out wholesale, `perBucket` caps adversarial bucket skew) and
+    * emits each doc's per-band match; the fingerprint machine merges
+    * the per-band rows row-locally and emits `near_dup_delta`
+    * (precedence after `near_dup_corpus`) pointing at the min matching
+    * within-horizon doc_id. The batch x42 operator has no within-delta
+    * near-dup status, so `withinStream` defaults false to keep exact
+    * stream/batch parity. The cohort shares the fingerprint contract's
+    * residue: a near-dup pair arriving id-INVERTED swaps roles (the
+    * later, smaller id is `near_dup_delta` pointing at the larger
+    * survivor), and later arrivals still fold to the MIN matching
+    * cohort id (DocStreamSpec pins both).
     *
     * `withinStream = true` requires
     * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`:
@@ -251,29 +257,45 @@ object DocStream {
     * downstream of a flatMapGroupsWithState because fMGWS *could*
     * delay emission past the watermark (session-window style). The
     * band stage cannot: it emits every row in the same micro-batch it
-    * arrives (state only augments the row with its cohort verdict), so
+    * arrives (state only augments the row with its cohort match), so
     * its output's event times are the arrival times — already
-    * watermark-filtered at the source — and the fp stage never sees a
-    * late row. The checker has no way to know that, hence the
-    * documented escape hatch. */
+    * watermark-filtered at the source — and the fingerprint machine
+    * never sees a late row. The checker has no way to know that, hence
+    * the documented escape hatch. */
   def deltaDedupStream(docs: DataFrame,
-                       index: graft.operators.TextQueries.DedupIndex,
+                       index: TextQueries.DedupIndex,
                        maxHamming: Int = 6, horizon: String = "1 hour",
-                       horizonMs: Long = 3600L * 1000L,
                        withinStream: Boolean = false,
                        perBucket: Int = 1024): Dataset[DeltaStatus] = {
+    import docs.sparkSession.implicits._
+    dedupStates(docs, index, lit("kept"), maxHamming, horizon,
+      withinStream, perBucket)
+      .drop("row_status").as[DeltaStatus]
+  }
+
+  /** The dedup core of [[deltaDedupStream]] and [[curationStream]]
+    * (stages documented on the former): corpus enrichment by
+    * stream-static joins, the optional band-cohort stage, then the
+    * fingerprint machine. `rowStatus` is evaluated over the enriched
+    * row (the input columns plus `fp`/`sim`) before any state and
+    * rides through unchanged. */
+  private def dedupStates(docs: DataFrame, index: TextQueries.DedupIndex,
+                          rowStatus: Column, maxHamming: Int,
+                          horizon: String, withinStream: Boolean,
+                          perBucket: Int): Dataset[Verdict] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val horizonMs = delayMs(horizon)
     // a stream-static join re-executes the static plan every micro-
     // batch — persist the lookup tables so each trigger pays an
     // in-memory scan, not a fresh per-band aggregation of the index
     // (released with the session / index refresh; they are derived
     // state, rebuilt from the index on restart)
-    val lookups = (0 until Bands).map { b =>
+    val lookups = (0 until SimBands).map { b =>
       index.bands.filter(col("b") === b)
         .groupBy(col("key").as(s"key$b"))
         .agg(collect_list(struct(col("sim"), col("doc_id"))).as(s"cands$b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     }
     def bandMin(cands: Column, sim: Column): Column =
       array_min(transform(
@@ -285,132 +307,121 @@ object DocStream {
       .withColumn("sim",
         coalesce(TextFunctions.simhash60("text"), lit((1L << 60) - 1)))
       .join(index.fp, Seq("fp"), "left")
-    for (b <- 0 until Bands)
+    for (b <- 0 until SimBands)
       enriched = enriched
-        .withColumn(s"key$b",
-          shiftright(col("sim"), b * BandBits) bitwiseAND BandMask)
+        .withColumn(s"key$b", simBandKey(col("sim"), b))
         .join(lookups(b), Seq(s"key$b"), "left")
     val selected = enriched
       .select(col("ts"), col("doc_id"), col("fp"), col("corpus_id"),
-        least((0 until Bands).map(b =>
+        least((0 until SimBands).map(b =>
           bandMin(col(s"cands$b"), col("sim"))): _*).as("near_id"),
-        col("sim"))
+        rowStatus.as("row_status"), col("sim"))
 
-    // rows entering the fp-keyed machine: (ts, doc_id, fp, corpus_id,
-    // near_id, near_delta). Default path: one stateless row per doc,
-    // near_delta always null — byte-identical behavior to pre-r12 (the
-    // projection stays column-level: a typed map here would strip the
-    // event-time watermark the stateful stage requires). withinStream
-    // path: a FIRST stateful stage keyed by (band, key) bucket emits
-    // one row per (doc, band) carrying that band's within-horizon
-    // cohort match (min doc_id at Hamming <= max), the bounded state
-    // the refresh-recipe contract hinted at; the typed hops re-tag the
-    // watermark on the event-time column (`withWatermark` on the
-    // intermediate — same column, same delay, so the query's combined
-    // watermark is unchanged).
-    val perDocRows: Dataset[(java.sql.Timestamp, Long, String,
-        Option[Long], Option[Long], Option[Long])] =
+    // one row per doc, near_delta null — the projection stays
+    // column-level: a typed map here would strip the event-time
+    // watermark the stateful stage requires
+    val perDoc: Dataset[FpRow] =
       if (!withinStream)
         selected
           .select(col("ts"), col("doc_id"), col("fp"), col("corpus_id"),
-            col("near_id"), lit(null).cast("long").as("near_delta"))
+            col("near_id"), col("row_status"),
+            lit(null).cast("long").as("near_delta"))
           .withWatermark("ts", horizon)
-          .as[(java.sql.Timestamp, Long, String, Option[Long],
-            Option[Long], Option[Long])]
+          .as[FpRow]
       else
+        // the band-cohort stage: one row per (doc, band) out, carrying
+        // that band's within-horizon cohort match (min doc_id at
+        // Hamming <= max) as near_delta; its typed output re-tags the
+        // watermark on the event-time column (same delay, so the
+        // query's combined watermark is unchanged)
         selected
-        .withWatermark("ts", horizon)
-        .as[(java.sql.Timestamp, Long, String, Option[Long], Option[Long], Long)]
-        .flatMap { case (ts, id, fp, c, n, sim) =>
-          (0 until Bands).map { b =>
-            val key = (sim >>> (b * BandBits)) & BandMask
-            ((b.toLong << BandBits) | key, ts, id, fp, c, n, sim)
-          }
-        }
-        .withWatermark("_2", horizon)
-        .groupByKey(_._1)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout()) {
-          (_: Long,
-           rows: Iterator[(Long, java.sql.Timestamp, Long, String,
-             Option[Long], Option[Long], Long)],
-           state: GroupState[List[(Long, Long, Long)]]) =>
-            if (state.hasTimedOut) {
-              state.remove()
-              Iterator.empty
-            } else {
-              val wm = state.getCurrentWatermarkMs()
-              // cohort entries are (event-ms, doc_id, sim); an entry
-              // can only flag arrivals (whose ts >= wm) within horizon
-              // of itself, so it prunes once ts + horizon < watermark —
-              // state per bucket is rate x horizon, capped at perBucket
-              var cohort = state.getOption.getOrElse(Nil)
-                .filter(_._1 + horizonMs >= wm)
-              val batch = rows.toSeq.sortBy(r => (r._2.getTime, r._3))
-              val out = batch.map { case (_, ts, id, fp, c, n, sim) =>
-                val tsMs = ts.getTime
-                val nd = cohort.iterator
-                  .filter { case (ets, eid, esim) =>
-                    eid != id && ets + horizonMs >= tsMs &&
-                      java.lang.Long.bitCount(esim ^ sim) <= maxHamming
-                  }
-                  .map(_._2)
-                  .foldLeft(Option.empty[Long]) { (acc, v) =>
-                    Some(acc.fold(v)(math.min(_, v))) }
-                cohort = ((tsMs, id, sim) :: cohort).take(perBucket)
-                (ts, id, fp, c, n, nd)
+          .withWatermark("ts", horizon)
+          .select(explode(bandBuckets(col("sim"))).as("bucket"), col("ts"),
+            col("doc_id"), col("fp"), col("corpus_id"), col("near_id"),
+            col("row_status"), col("sim"))
+          .as[(Long, java.sql.Timestamp, Long, String, Option[Long],
+            Option[Long], String, Long)]
+          .groupByKey(_._1)
+          .flatMapGroupsWithState(
+            OutputMode.Append(),
+            GroupStateTimeout.EventTimeTimeout()) {
+            (_: Long,
+             rows: Iterator[(Long, java.sql.Timestamp, Long, String,
+               Option[Long], Option[Long], String, Long)],
+             state: GroupState[List[(Long, Long, Long)]]) =>
+              if (state.hasTimedOut) {
+                state.remove()
+                Iterator.empty
+              } else {
+                val wm = state.getCurrentWatermarkMs()
+                // cohort entries are (event-ms, doc_id, sim); an entry
+                // can only flag arrivals (whose ts >= wm) within horizon
+                // of itself, so it prunes once ts + horizon < watermark —
+                // state per bucket is rate x horizon, capped at perBucket
+                var cohort = state.getOption.getOrElse(Nil)
+                  .filter(_._1 + horizonMs >= wm)
+                val batch = rows.toSeq.sortBy(r => (r._2.getTime, r._3))
+                val out = batch.map { case (_, ts, id, fp, c, n, rs, sim) =>
+                  val tsMs = ts.getTime
+                  val nd = cohort.iterator
+                    .filter { case (ets, eid, esim) =>
+                      eid != id && ets + horizonMs >= tsMs &&
+                        java.lang.Long.bitCount(esim ^ sim) <= maxHamming
+                    }
+                    .map(_._2)
+                    .foldLeft(Option.empty[Long]) { (acc, v) =>
+                      Some(acc.fold(v)(math.min(_, v))) }
+                  cohort = ((tsMs, id, sim) :: cohort).take(perBucket)
+                  (ts, id, fp, c, n, rs, nd)
+                }
+                state.update(cohort)
+                val newest = batch.map(_._2.getTime).max
+                state.setTimeoutTimestamp(math.max(newest, wm) + horizonMs)
+                out.iterator
               }
-              state.update(cohort)
-              val newest = batch.map(_._2.getTime).max
-              state.setTimeoutTimestamp(math.max(newest, wm) + horizonMs)
-              out.iterator
-            }
-        }
-        .withWatermark("_1", horizon)
+          }
+          .withWatermark("_1", horizon)
 
-    perDocRows
+    perDoc
       .groupByKey(_._3)
       .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout()) {
-        (_: String,
-         rows: Iterator[(java.sql.Timestamp, Long, String, Option[Long],
-           Option[Long], Option[Long])],
-         state: GroupState[Long]) =>
+        (_: String, rows: Iterator[FpRow], state: GroupState[Long]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
             var minSeen = state.getOption
-            // withinStream feeds Bands rows per doc (one per band) into
-            // the SAME fp group in the SAME micro-batch — merge them
-            // row-locally, min matching candidate across bands wins
-            // (the default path's single row per doc merges to itself)
+            // withinStream feeds one row per band per doc into the SAME
+            // fp group in the SAME micro-batch — merge them row-locally,
+            // min matching candidate across bands wins (the default
+            // path's single row per doc merges to itself)
             val batch = rows.toSeq
               .groupBy(r => (r._1.getTime, r._2))
               .map { case (_, rs) =>
                 val h = rs.head
-                (h._1, h._2, h._4, h._5, rs.flatMap(_._6).sorted.headOption)
+                (h._1, h._2, h._4, h._5, h._6, rs.flatMap(_._7).sorted.headOption)
               }
               .toSeq.sortBy(r => (r._1.getTime, r._2))
-            val out = batch.map { case (ts, id, corpusId, nearId, nearDelta) =>
-              if (corpusId.nonEmpty)
-                DeltaStatus(ts, id, "exact_dup_corpus", corpusId)
-              else if (minSeen.nonEmpty) {
-                // point at the standing survivor, then fold the
-                // election to min(stored, incoming) so later copies
-                // point at the batch-elected min under any order
-                val prior = minSeen
-                minSeen = Some(math.min(minSeen.get, id))
-                DeltaStatus(ts, id, "exact_dup_delta", prior)
-              } else {
-                minSeen = Some(id)
-                if (nearId.nonEmpty) DeltaStatus(ts, id, "near_dup_corpus", nearId)
-                else if (nearDelta.nonEmpty)
-                  DeltaStatus(ts, id, "near_dup_delta", nearDelta)
-                else DeltaStatus(ts, id, "new", None)
-              }
+            val out = batch.map {
+              case (ts, id, corpusId, nearId, rowStatus, nearDelta) =>
+                def verdict(status: String, dupOf: Option[Long]) =
+                  Verdict(ts, id, status, dupOf, rowStatus)
+                if (corpusId.nonEmpty) verdict("exact_dup_corpus", corpusId)
+                else if (minSeen.nonEmpty) {
+                  // point at the standing survivor, then fold the
+                  // election to min(stored, incoming) so later copies
+                  // point at the batch-elected min under any order
+                  val prior = minSeen
+                  minSeen = Some(math.min(minSeen.get, id))
+                  verdict("exact_dup_delta", prior)
+                } else {
+                  minSeen = Some(id)
+                  if (nearId.nonEmpty) verdict("near_dup_corpus", nearId)
+                  else if (nearDelta.nonEmpty) verdict("near_dup_delta", nearDelta)
+                  else verdict("new", None)
+                }
             }
             // only corpus-unknown fingerprints carry state
             if (minSeen.nonEmpty) {
@@ -427,27 +438,29 @@ object DocStream {
   final case class CurationStatus(ts: java.sql.Timestamp, doc_id: Long,
                                   status: String)
 
-  /** Streaming curation — the incremental composition the r9 verdict
-    * noted missing: the x30 status-precedence chain over an unbounded
-    * ingest feed, EXACT-deduplicated against a standing
-    * [[graft.operators.TextQueries.DedupIndex]] and within itself
-    * (fingerprint equality carries stream state; NEAR-dup detection is
-    * against the standing index only — a within-stream near-dup pair
-    * with no index hit emits both docs un-flagged, and catching it
-    * requires an index refresh between batches, exactly like the
-    * boilerplate branch below; r12: [[deltaDedupStream]]'s
-    * `withinStream = true` mode is the bounded in-stream alternative
-    * when the dedup statuses alone are what's needed). Emits ONE
-    * status per document in
-    * append mode, precedence matching the batch chain (`exact_dup` >
-    * `benchmark` > `contaminated` > `too_short` > `lang` >
-    * `low_quality` > `repetitive` > `near_dup` > `kept`).
+  /** Streaming curation — the x30 status-precedence chain over an
+    * unbounded ingest feed, deduplicated against a standing
+    * [[graft.operators.TextQueries.DedupIndex]] and within itself.
+    * Emits ONE status per document in append mode, precedence matching
+    * the batch chain (`exact_dup` > `benchmark` > `contaminated` >
+    * `too_short` > `lang` > `low_quality` > `repetitive` > `near_dup`
+    * > `kept`).
     *
-    * Signal provenance — every rung shares its COLUMN DEFINITION with
-    * the batch pipeline, so the two cannot drift:
+    * It is the dedup core under [[deltaDedupStream]] (same lookups,
+    * same stream state, same eviction bound, same `withinStream` band
+    * cohorts and checker escape hatch — documented there) fed the
+    * row-local rungs as one status column, then one row-local mapping:
+    * an `exact_dup_*` verdict is `exact_dup`; otherwise a fired
+    * row-local rung wins; otherwise a `near_dup_*` verdict (an index
+    * hit, or with `withinStream` a within-horizon stream hit) is
+    * `near_dup`; otherwise `kept`. Without `withinStream`, a
+    * within-stream near-dup pair with no index hit passes un-flagged
+    * until an index refresh.
+    *
+    * Every rung shares its COLUMN DEFINITION with the batch pipeline,
+    * so the two cannot drift:
     *  - exact_dup: fingerprint known to the corpus index, or seen
-    *    earlier in the stream ([[deltaDedupStream]]'s state machine —
-    *    same min-folded survivor election, documented there);
+    *    earlier in the stream;
     *  - benchmark: the x30 `doc_id % DecontamMod` membership rule;
     *  - contaminated: the doc's distinct hashed shingles
     *    ([[TextFunctions.hashedShingles]] mod=0 — x26's exact domain)
@@ -457,49 +470,19 @@ object DocStream {
     *  - too_short/lang/low_quality/repetitive: the batch builders
     *    verbatim ([[graft.operators.TextQueries.predLang]]/
     *    `qualityCol`/`dup2GramFrac`) — all row-local, stream-safe;
-    *  - near_dup: banded-SimHash hit against the index's band lookups
-    *    (stream-static joins, corpus contributes no stream state).
+    *  - near_dup: banded-SimHash hit against the index's band lookups.
     * The one signal with NO incremental form is x30's boilerplate
     * branch — its corpus document-frequency is a batch aggregate by
-    * definition; refresh it with the index between batches.
-    *
-    * All quality rungs resolve ROW-LOCALLY before the stateful step,
-    * so the only stream state is [[deltaDedupStream]]'s (fp → first
-    * doc_id) map with the same event-time-timeout eviction bound. */
+    * definition; refresh it with the index between batches. */
   def curationStream(docs: DataFrame,
-                     index: graft.operators.TextQueries.DedupIndex,
+                     index: TextQueries.DedupIndex,
                      benchHashes: Seq[Long],
                      minTokens: Long = 20, langs: Seq[String] = Seq("en"),
                      minQuality: Double = 0.3, maxDupFrac: Double = 0.6,
                      maxHamming: Int = 6, horizon: String = "1 hour",
-                     horizonMs: Long = 3600L * 1000L,
                      withinStream: Boolean = false,
                      perBucket: Int = 1024): Dataset[CurationStatus] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import graft.operators.TextQueries
-    val lookups = (0 until Bands).map { b =>
-      index.bands.filter(col("b") === b)
-        .groupBy(col("key").as(s"key$b"))
-        .agg(collect_list(struct(col("sim"), col("doc_id"))).as(s"cands$b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    def bandHit(cands: Column, sim: Column): Column =
-      coalesce(size(filter(cands, x =>
-        bit_count(x("sim").bitwiseXOR(sim)) <= maxHamming)) > 0, lit(false))
-    var enriched = docs
-      .withColumn("toks", TextFunctions.tokens(col("text")))
-      .withColumn("fp", TextFunctions.fingerprint(col("text")))
-      .withColumn("sim",
-        coalesce(TextFunctions.simhash60("text"), lit((1L << 60) - 1)))
-      .join(index.fp, Seq("fp"), "left")
-    for (b <- 0 until Bands)
-      enriched = enriched
-        .withColumn(s"key$b",
-          shiftright(col("sim"), b * BandBits) bitwiseAND BandMask)
-        .join(lookups(b), Seq(s"key$b"), "left")
-    // the whole sub-dedup precedence chain folds to ONE row-local
-    // string before the stateful step
+    import docs.sparkSession.implicits._
     val rowStatus =
       when(col("doc_id") % TextQueries.DecontamMod === 0, "benchmark")
         .when(arrays_overlap(
@@ -512,124 +495,15 @@ object DocStream {
           "low_quality")
         .when(TextQueries.dup2GramFrac(col("toks")) > maxDupFrac,
           "repetitive")
-        .when((0 until Bands).map(b =>
-          bandHit(col(s"cands$b"), col("sim"))).reduce(_ || _), "near_dup")
         .otherwise("kept")
-    val selected = enriched
-      .select(col("ts"), col("doc_id"), col("fp"),
-        col("corpus_id").isNotNull.as("corpus_dup"),
-        rowStatus.as("row_status"), col("sim"))
-
-    // rows into the fp-keyed machine: (ts, doc_id, fp, corpus_dup,
-    // row_status, near_delta). Default: one stateless row per doc,
-    // near_delta null — pre-r12 behavior, index-only near-dups. The
-    // withinStream path prepends [[deltaDedupStream]]'s band-cohort
-    // stage (same eviction bounds, same checker escape hatch —
-    // documented there), so the `near_dup` rung also fires for a pair
-    // arriving within the stream's own horizon with no index hit —
-    // but ONLY when every higher rung passed (row_status == "kept"):
-    // within-stream evidence occupies exactly the rung the index hit
-    // does, never jumping the precedence chain.
-    val perDoc: Dataset[(java.sql.Timestamp, Long, String, Boolean,
-        String, Option[Long])] =
-      if (!withinStream)
-        selected
-          .select(col("ts"), col("doc_id"), col("fp"), col("corpus_dup"),
-            col("row_status"), lit(null).cast("long").as("near_delta"))
-          .withWatermark("ts", horizon)
-          .as[(java.sql.Timestamp, Long, String, Boolean, String, Option[Long])]
-      else
-        selected
-        .withWatermark("ts", horizon)
-        .as[(java.sql.Timestamp, Long, String, Boolean, String, Long)]
-        .flatMap { case (ts, id, fp, cd, rs, sim) =>
-          (0 until Bands).map { b =>
-            val key = (sim >>> (b * BandBits)) & BandMask
-            ((b.toLong << BandBits) | key, ts, id, fp, cd, rs, sim)
-          }
-        }
-        .withWatermark("_2", horizon)
-        .groupByKey(_._1)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout()) {
-          (_: Long,
-           rows: Iterator[(Long, java.sql.Timestamp, Long, String,
-             Boolean, String, Long)],
-           state: GroupState[List[(Long, Long, Long)]]) =>
-            if (state.hasTimedOut) {
-              state.remove()
-              Iterator.empty
-            } else {
-              val wm = state.getCurrentWatermarkMs()
-              var cohort = state.getOption.getOrElse(Nil)
-                .filter(_._1 + horizonMs >= wm)
-              val batch = rows.toSeq.sortBy(r => (r._2.getTime, r._3))
-              val out = batch.map { case (_, ts, id, fp, cd, rs, sim) =>
-                val tsMs = ts.getTime
-                val nd = cohort.iterator
-                  .filter { case (ets, eid, esim) =>
-                    eid != id && ets + horizonMs >= tsMs &&
-                      java.lang.Long.bitCount(esim ^ sim) <= maxHamming
-                  }
-                  .map(_._2)
-                  .foldLeft(Option.empty[Long]) { (acc, v) =>
-                    Some(acc.fold(v)(math.min(_, v))) }
-                cohort = ((tsMs, id, sim) :: cohort).take(perBucket)
-                (ts, id, fp, cd, rs, nd)
-              }
-              state.update(cohort)
-              val newest = batch.map(_._2.getTime).max
-              state.setTimeoutTimestamp(math.max(newest, wm) + horizonMs)
-              out.iterator
-            }
-        }
-        .withWatermark("_1", horizon)
-
-    perDoc
-      .groupByKey(_._3)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (_: String,
-         rows: Iterator[(java.sql.Timestamp, Long, String, Boolean,
-           String, Option[Long])],
-         state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var first = state.getOption
-            // withinStream feeds Bands rows per doc — merge row-locally
-            // (min matching within-stream candidate across bands)
-            val batch = rows.toSeq
-              .groupBy(r => (r._1.getTime, r._2))
-              .map { case (_, rs) =>
-                val h = rs.head
-                (h._1, h._2, h._4, h._5, rs.flatMap(_._6).sorted.headOption)
-              }
-              .toSeq.sortBy(r => (r._1.getTime, r._2))
-            val out = batch.map { case (ts, id, corpusDup, rs, nearDelta) =>
-              if (corpusDup) CurationStatus(ts, id, "exact_dup")
-              else if (first.nonEmpty) CurationStatus(ts, id, "exact_dup")
-              else {
-                first = Some(id)
-                if (rs == "kept" && nearDelta.nonEmpty)
-                  CurationStatus(ts, id, "near_dup")
-                else CurationStatus(ts, id, rs)
-              }
-            }
-            // only corpus-unknown fingerprints carry state (a corpus
-            // dup's copies are exact_dup by precedence regardless)
-            if (first.nonEmpty) {
-              state.update(first.get)
-              val newest = batch.map(_._1.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(newest, state.getCurrentWatermarkMs()) + horizonMs)
-            }
-            out.iterator
-          }
-      }
+    dedupStates(docs.withColumn("toks", TextFunctions.tokens(col("text"))),
+        index, rowStatus, maxHamming, horizon, withinStream, perBucket)
+      .select(col("ts"), col("doc_id"),
+        when(col("status").startsWith("exact_dup"), "exact_dup")
+          .when(col("row_status") =!= "kept", col("row_status"))
+          .when(col("status").startsWith("near_dup"), "near_dup")
+          .otherwise("kept").as("status"))
+      .as[CurationStatus]
   }
 
   /** Streaming quality-classifier scoring — model serving for the

@@ -610,6 +610,136 @@ class DocStreamSpec extends SparkSpec {
       assert(sig(16L)._1 >= 0.3 && sig(16L)._2 > 0.6, sig)
     } finally { q.stop(); index.release() }
   }
+  test("streaming domain caps: a domain quiet past a non-default horizon gets a fresh budget") {
+    implicit val ctx = spark.sqlContext
+    import DocStream.UrlDoc
+    val mem = MemoryStream[UrlDoc]
+    val q = DocStream.domainCapAdmission(mem.toDS(), cap = 1, horizon = "10 minutes")
+      .writeStream.format("memory").queryName("domain_caps_horizon")
+      .outputMode("append").start()
+    try {
+      mem.addData(UrlDoc(ts(0), 1L, "a.example.com"))
+      q.processAllAvailable()
+      // moves the watermark to 09:20, more than 10 minutes past a's
+      // newest event: a's counter times out in the next micro-batch
+      mem.addData(UrlDoc(ts(30), 2L, "b.example.com"))
+      q.processAllAvailable()
+      mem.addData(UrlDoc(ts(31), 3L, "c.example.com"))
+      q.processAllAvailable()
+      mem.addData(UrlDoc(ts(32), 4L, "a.example.com"))
+      q.processAllAvailable()
+      val out = spark.table("domain_caps_horizon")
+        .select("doc_id", "rnk", "kept").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+      assert(out(1L) == ((1L, true)), out)
+      assert(out(4L) == ((1L, true)), s"a's budget must restart: $out")
+    } finally q.stop()
+  }
+
+  // near-dup pairs that fail a higher rung: 16 vs 15 repetitions of
+  // "the of" (repetitive) and 20 vs 19 dots after "the" (low_quality)
+  // have different fingerprints and Hamming-0 SimHashes
+  private val repText = Seq.fill(15)("the of").mkString(" ")
+  private val repNear = Seq.fill(16)("the of").mkString(" ")
+  private val lowText = "the " + Seq.fill(19)(".").mkString(" ")
+  private val lowNear = "the " + Seq.fill(20)(".").mkString(" ")
+
+  private def nearStatuses(index: graft.operators.TextQueries.DedupIndex,
+                           docs: Seq[(Long, String)]): Map[Long, String] =
+    graft.operators.TextQueries.deltaDedupAgainst(index, docs.toDF("doc_id", "text"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  test("streaming curation: an index near-dup that is also repetitive or low_quality keeps its higher rung") {
+    implicit val ctx = spark.sqlContext
+    val index = graft.operators.TextQueries.buildDedupIndex(
+      Seq(1L -> repText, 2L -> lowText).toDF("doc_id", "text"))
+    index.fp.count(); index.bands.count()
+    // the index does hit both docs
+    assert(nearStatuses(index, Seq(20L -> repNear, 21L -> lowNear)) ==
+      Map(20L -> "near_dup_corpus", 21L -> "near_dup_corpus"))
+    val mem = MemoryStream[Doc]
+    val q = DocStream.curationStream(mem.toDF(), index, Seq(12345L))
+      .writeStream.format("memory").queryName("curation_rungs_index")
+      .outputMode("append").start()
+    try {
+      mem.addData(Doc(ts(0), 20L, repNear), Doc(ts(1), 21L, lowNear))
+      q.processAllAvailable()
+      val out = spark.table("curation_rungs_index")
+        .select("doc_id", "status").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(out == Map(20L -> "repetitive", 21L -> "low_quality"), out)
+    } finally { q.stop(); index.release() }
+  }
+
+  test("curationStream withinStream=true: a stream near-dup that is also repetitive or low_quality keeps its higher rung") {
+    implicit val ctx = spark.sqlContext
+    val index = graft.operators.TextQueries.buildDedupIndex(
+      Seq(1L -> (0 until 50).map(i => s"cr$i").mkString(" ")).toDF("doc_id", "text"))
+    index.fp.count(); index.bands.count()
+    // the pairs do match under the band layout the cohort stage uses
+    val pairIndex = graft.operators.TextQueries.buildDedupIndex(
+      Seq(30L -> repText, 31L -> lowText).toDF("doc_id", "text"))
+    assert(nearStatuses(pairIndex, Seq(32L -> repNear, 33L -> lowNear)) ==
+      Map(32L -> "near_dup_corpus", 33L -> "near_dup_corpus"))
+    pairIndex.release()
+    val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val multiKey = "spark.sql.streaming.statefulOperator.allowMultiple"
+    val prior = spark.conf.get(checkKey, "true")
+    val priorMulti = spark.conf.get(multiKey, "true")
+    spark.conf.set(checkKey, "false")
+    spark.conf.set(multiKey, "false")
+    val mem = MemoryStream[Doc]
+    val q = DocStream.curationStream(mem.toDF(), index, Seq(12345L),
+        withinStream = true)
+      .writeStream.format("memory").queryName("curation_rungs_within")
+      .outputMode("append").start()
+    try {
+      mem.addData(Doc(ts(0), 30L, repText), Doc(ts(1), 31L, lowText))
+      q.processAllAvailable()
+      mem.addData(Doc(ts(2), 32L, repNear), Doc(ts(3), 33L, lowNear))
+      q.processAllAvailable()
+      val out = spark.table("curation_rungs_within")
+        .select("doc_id", "status").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(out == Map(30L -> "repetitive", 31L -> "low_quality",
+        32L -> "repetitive", 33L -> "low_quality"), out)
+    } finally {
+      q.stop(); index.release()
+      spark.conf.set(checkKey, prior); spark.conf.set(multiKey, priorMulti)
+    }
+  }
+
+  test("streaming curation state: one stateful operator, one row per corpus-unknown fingerprint") {
+    implicit val ctx = spark.sqlContext
+    val index = graft.operators.TextQueries.buildDedupIndex(
+      Seq(1L -> base).toDF("doc_id", "text"))
+    index.fp.count(); index.bands.count()
+    val kept = "the " + (0 until 28).map(i => s"s$i").mkString(" ") + " of"
+    val near = base.replace("tok7 ", "tok7x ")
+    val mem = MemoryStream[Doc]
+    val q = DocStream.curationStream(mem.toDF(), index, Seq(12345L))
+      .writeStream.format("memory").queryName("curation_state")
+      .outputMode("append").start()
+    try {
+      mem.addData(
+        Doc(ts(0), 10L, base),     // corpus copy: no state
+        Doc(ts(1), 11L, kept),
+        Doc(ts(2), 13L, lowText),
+        Doc(ts(3), 14L, near))     // index near-dup: still a new fingerprint
+      q.processAllAvailable()
+      mem.addData(Doc(ts(4), 12L, kept), Doc(ts(5), 15L, s" $base"))
+      q.processAllAvailable()
+      val out = spark.table("curation_state")
+        .select("doc_id", "status").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(out == Map(10L -> "exact_dup", 11L -> "kept", 12L -> "exact_dup",
+        13L -> "low_quality", 14L -> "lang", 15L -> "exact_dup"), out)
+      val ops = q.lastProgress.stateOperators
+      assert(ops.length == 1, s"expected the fingerprint machine only, got ${ops.length}")
+      // kept, lowText and near: three corpus-unknown fingerprints
+      assert(ops(0).numRowsTotal == 3)
+    } finally { q.stop(); index.release() }
+  }
 }
 
 object DocStreamSpec {
