@@ -1,16 +1,20 @@
-// Streaming delta-dedup soak (round 9): DocStream.deltaDedupStream
-// under sustained load — a 500k-doc standing index (100k distinct
-// texts x duplicity 5), 400k delta docs streamed in 40 batches.
+// Streaming delta-dedup soak: DocStream.deltaDedupStream under
+// sustained load — a 500k-doc standing index (100k distinct texts x
+// duplicity 5: 100k fp rows, 400k band rows), 400k delta docs streamed
+// in 40 batches of 10k.
 // Claims under test:
-//  - the corpus contributes ZERO stream state (all lookups are
-//    stream-static joins against the persisted DedupIndex);
+//  - the corpus contributes ZERO stream state: every corpus lookup is
+//    one row-local read of the index's probe (TextQueries.DedupProbe),
+//    collected and broadcast once before the stream starts — its build
+//    time, rows and bytes are printed;
 //  - the only state is the within-delta (fp -> first) map, which goes
 //    FLAT once the watermark horizon starts evicting (event time
 //    advances 30 min/batch, horizon 1 h => ~2 batches of fresh fps);
 //  - statuses land at the planted mixture (1/4 exact_dup_corpus,
 //    1/4 near_dup_corpus, 1/8 new + 1/8 exact_dup_delta pairs,
 //    1/4 new), at streaming throughput.
-// Run (box idle):
+// Run (box idle; local[4] with --driver-memory 4g and 4 shuffle
+// partitions fits a 4-core host):
 //   sbt -batch package
 //   /opt/spark/bin/spark-shell --master local[32] --driver-memory 16g \
 //     --conf spark.ui.enabled=false \
@@ -49,6 +53,12 @@ val t0 = System.nanoTime()
 val index = TextQueries.buildDedupIndex(corpus)
 println(f"index build: fp=${index.fp.count()} bands=${index.bands.count()}" +
   f" in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+
+val tp = System.nanoTime()
+val probe = index.probe.value // built once here; the query reuses it
+println(f"probe build: fp=${probe.fpRows} bands=${probe.bandRows}" +
+  f" bytes=${org.apache.spark.util.SizeEstimator.estimate(probe)}" +
+  f" in ${(System.nanoTime() - tp) / 1e9}%.2f s")
 
 val mem = MemoryStream[Doc]
 val q = DocStream.deltaDedupStream(mem.toDF(), index)

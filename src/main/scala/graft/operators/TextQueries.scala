@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.Tables
 import graft.functions.TextFunctions._
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1850,11 +1851,150 @@ object TextQueries {
     * frames are persisted by [[buildDedupIndex]]; callers own the
     * release. In production these ARE the materialized tables a
     * pipeline keeps between ingests — per batch, the corpus is never
-    * re-fingerprinted, never re-banded, never self-joined. */
+    * re-fingerprinted, never re-banded, never self-joined.
+    *
+    * The streaming operators read the index through its [[DedupProbe]]:
+    * built on first use by one driver collect of `fp` and one of
+    * `bands`, broadcast once, and immutable for the life of this index
+    * version (an [[absorbDelta]]'d index is a new version with its own
+    * probe). Memory, for F `fp` rows and B `bands` rows: the driver
+    * holds the collected rows while it builds (~[[ProbeFpRowBytes]]·F
+    * + [[ProbeBandRowBytes]]·B bytes, checked before collecting against
+    * `spark.driver.maxResultSize` — past it the build throws
+    * [[ProbeTooLargeException]]), then the probe itself on the driver
+    * and once per executor: 24·F + 16·B bytes plus a 512 KB bucket
+    * offset table. The batch [[deltaDedupAgainst]] never builds it. */
   final case class DedupIndex(fp: DataFrame, bands: DataFrame) {
-    def release(): Unit = {
+    @volatile private var built: Option[Broadcast[DedupProbe]] = None
+
+    /** This version's probe, built and broadcast on first call. */
+    def probe: Broadcast[DedupProbe] = synchronized {
+      built.getOrElse {
+        val sc = fp.sparkSession.sparkContext
+        val b = sc.broadcast(DedupProbe.build(this,
+          sc.getConf.getSizeAsBytes(ProbeLimitSetting, "1g")))
+        built = Some(b)
+        b
+      }
+    }
+
+    /** Unpersist both frames and destroy the probe's broadcast, if
+      * one was built. Stop the queries reading this index first; a
+      * later streaming use builds a fresh probe. */
+    def release(): Unit = synchronized {
+      built.foreach(_.destroy())
+      built = None
       fp.unpersist(blocking = false)
       bands.unpersist(blocking = false)
+    }
+  }
+
+  /** The setting that bounds a [[DedupProbe]] build (0 = no bound, as
+    * it means for Spark's own collects). */
+  private val ProbeLimitSetting = "spark.driver.maxResultSize"
+  /** Driver bytes per collected `fp` row (a 32-char md5 string and a
+    * boxed id in a tuple) and per collected `bands` row (three boxed
+    * longs in a tuple) while a probe builds. */
+  private[graft] val ProbeFpRowBytes = 120L
+  private[graft] val ProbeBandRowBytes = 80L
+
+  /** A [[DedupProbe]] build refused before collecting: the index's
+    * rows would not fit the bound the setting gives. */
+  final class ProbeTooLargeException(msg: String)
+    extends IllegalStateException(msg)
+
+  /** Throw [[ProbeTooLargeException]] when `fpRows` fp and `bandRows`
+    * band rows, collected, would exceed `limitBytes` (0 = no bound). */
+  private[graft] def checkProbeBound(fpRows: Long, bandRows: Long,
+                                     limitBytes: Long, setting: String): Unit = {
+    val estimate = fpRows * ProbeFpRowBytes + bandRows * ProbeBandRowBytes
+    if (limitBytes > 0 && estimate > limitBytes)
+      throw new ProbeTooLargeException(
+        s"DedupIndex probe too large: $fpRows fp rows and $bandRows band rows " +
+          s"collect to ~$estimate bytes, over $setting = $limitBytes bytes")
+  }
+
+  /** The streaming read side of a [[DedupIndex]]: the fp → `corpus_id`
+    * map as md5 halves sorted for binary search, and every band
+    * bucket's candidates as parallel `sim`/`doc_id` slices sorted by
+    * `doc_id`, indexed by the dense bucket id `(b << SimBandBits) |
+    * key`. [[nearId]] is the join formulation's min Hamming-matching
+    * `doc_id` over a doc's buckets; a sorted bucket scan stops at its
+    * first match, or once its ids pass the best found so far. */
+  final class DedupProbe private (fpHi: Array[Long], fpLo: Array[Long],
+      fpIds: Array[Long], starts: Array[Int], sims: Array[Long],
+      ids: Array[Long]) extends Serializable {
+
+    def fpRows: Int = fpIds.length
+    def bandRows: Int = ids.length
+
+    /** The corpus survivor of fingerprint `fp` (an md5 hex), if any. */
+    def corpusId(fp: String): Option[Long] =
+      if (fp == null) None
+      else {
+        val (hi, lo) = DedupProbe.halves(fp)
+        var l = 0
+        var r = fpIds.length - 1
+        var hit = -1
+        while (hit < 0 && l <= r) {
+          val m = (l + r) >>> 1
+          val c = DedupProbe.compare(fpHi(m), fpLo(m), hi, lo)
+          if (c == 0) hit = m else if (c < 0) l = m + 1 else r = m - 1
+        }
+        if (hit < 0) None else Some(fpIds(hit))
+      }
+
+    /** The smallest candidate `doc_id` within `maxHamming` of `sim` in
+      * any of its band buckets, if any. */
+    def nearId(sim: Long, maxHamming: Int): Option[Long] = {
+      var best = Long.MaxValue
+      var found = false
+      for (b <- 0 until SimBands) {
+        val bucket = (b << SimBandBits) | ((sim >> (b * SimBandBits)) & SimBandMask).toInt
+        var i = starts(bucket)
+        val end = starts(bucket + 1)
+        while (i < end && (!found || ids(i) < best)) {
+          if (java.lang.Long.bitCount(sims(i) ^ sim) <= maxHamming) {
+            best = ids(i); found = true; i = end
+          } else i += 1
+        }
+      }
+      if (found) Some(best) else None
+    }
+  }
+
+  object DedupProbe {
+    private def halves(fp: String): (Long, Long) =
+      (java.lang.Long.parseUnsignedLong(fp, 0, 16, 16),
+        java.lang.Long.parseUnsignedLong(fp, 16, 32, 16))
+
+    /** Unsigned order of md5 halves: the order of their lowercase hex. */
+    private def compare(h1: Long, l1: Long, h2: Long, l2: Long): Int = {
+      val c = java.lang.Long.compareUnsigned(h1, h2)
+      if (c != 0) c else java.lang.Long.compareUnsigned(l1, l2)
+    }
+
+    /** Collect `index` into a probe, refusing past `limitBytes`. */
+    private[operators] def build(index: DedupIndex, limitBytes: Long): DedupProbe = {
+      val spark = index.fp.sparkSession
+      import spark.implicits._
+      checkProbeBound(index.fp.count(), index.bands.count(), limitBytes,
+        ProbeLimitSetting)
+      // `fp` is TextFunctions.fingerprint's lowercase md5 hex, so the
+      // string order is the halves' unsigned order
+      val fps = index.fp.select("fp", "corpus_id").as[(String, Long)].collect()
+        .sortBy(_._1)
+      val fpHalves = fps.map(f => halves(f._1))
+      val cands = index.bands
+        .select(shiftleft(col("b").cast("long"), SimBandBits).bitwiseOR(col("key")).as("bucket"),
+          col("doc_id"), col("sim"))
+        .as[(Long, Long, Long)].collect()
+        .sortBy(c => (c._1, c._2))
+      val starts = new Array[Int]((SimBands << SimBandBits) + 1)
+      cands.foreach(c => starts(c._1.toInt + 1) += 1)
+      for (i <- 1 until starts.length) starts(i) += starts(i - 1)
+      new DedupProbe(fpHalves.map(_._1), fpHalves.map(_._2), fps.map(_._2),
+        starts, cands.map(_._3), cands.map(_._2))
     }
   }
 

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.storage.StorageLevel
 
 /** Streaming deduplication over an unbounded document feed — the
   * incremental forms of the batch dedup family (x01 exact, x11
@@ -205,15 +204,19 @@ object DocStream {
     * ([[dedupStates]], also under [[curationStream]]) projected to
     * [[DeltaStatus]].
     *
-    * Corpus lookups: STREAM-STATIC equi-joins — one on the fingerprint
-    * table, one per band on a persisted (key → candidate list) lookup
-    * — so the corpus contributes no stream state at all. The per-band
-    * candidate collapse (Hamming-filter the cohort, take the min
-    * survivor) runs ROW-LOCALLY via array HOFs over the collected
-    * candidate list (bucket cohorts are |distinct sims|·4 / 2^15 rows on
-    * average — hundreds at 12M docs), which keeps every doc ONE row
-    * through the joins and avoids the windowed aggregation an explode
-    * would force in append mode.
+    * Corpus lookups: ONE row-local probe of the index
+    * ([[TextQueries.DedupProbe]]) — the fp → survivor map and every
+    * band bucket's candidates sorted by `doc_id`, collected and
+    * broadcast once per index version when this operator is called,
+    * then read by every micro-batch as-is — so the corpus contributes
+    * no stream state, no join and no per-batch broadcast. Each doc
+    * stays ONE row: `near_id` is the min Hamming-matching candidate
+    * over its four buckets, each scan stopping at its first match
+    * (bucket cohorts are |distinct sims|·4 / 2^15 rows on average —
+    * hundreds at 12M docs). The probe's memory bound and its refusal
+    * past `spark.driver.maxResultSize` are documented on
+    * [[TextQueries.DedupIndex]]; release the index after stopping the
+    * query.
     *
     * Stream state: the within-delta fingerprint machine, one `(fp →
     * survivor doc_id)` row per corpus-unknown fingerprint active within
@@ -274,8 +277,8 @@ object DocStream {
   }
 
   /** The dedup core of [[deltaDedupStream]] and [[curationStream]]
-    * (stages documented on the former): corpus enrichment by
-    * stream-static joins, the optional band-cohort stage, then the
+    * (stages documented on the former): the row-local corpus lookup
+    * ([[probed]]), the optional band-cohort stage, then the
     * fingerprint machine. `rowStatus` is evaluated over the enriched
     * row (the input columns plus `fp`/`sim`) before any state and
     * rides through unchanged. */
@@ -286,36 +289,9 @@ object DocStream {
     val spark = docs.sparkSession
     import spark.implicits._
     val horizonMs = delayMs(horizon)
-    // a stream-static join re-executes the static plan every micro-
-    // batch — persist the lookup tables so each trigger pays an
-    // in-memory scan, not a fresh per-band aggregation of the index
-    // (released with the session / index refresh; they are derived
-    // state, rebuilt from the index on restart)
-    val lookups = (0 until SimBands).map { b =>
-      index.bands.filter(col("b") === b)
-        .groupBy(col("key").as(s"key$b"))
-        .agg(collect_list(struct(col("sim"), col("doc_id"))).as(s"cands$b"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    def bandMin(cands: Column, sim: Column): Column =
-      array_min(transform(
-        filter(cands, x =>
-          bit_count(x("sim").bitwiseXOR(sim)) <= maxHamming),
-        x => x("doc_id")))
-    var enriched = docs
-      .withColumn("fp", TextFunctions.fingerprint(col("text")))
-      .withColumn("sim",
-        coalesce(TextFunctions.simhash60("text"), lit((1L << 60) - 1)))
-      .join(index.fp, Seq("fp"), "left")
-    for (b <- 0 until SimBands)
-      enriched = enriched
-        .withColumn(s"key$b", simBandKey(col("sim"), b))
-        .join(lookups(b), Seq(s"key$b"), "left")
-    val selected = enriched
+    val selected = probed(docs, index, maxHamming)
       .select(col("ts"), col("doc_id"), col("fp"), col("corpus_id"),
-        least((0 until SimBands).map(b =>
-          bandMin(col(s"cands$b"), col("sim"))): _*).as("near_id"),
-        rowStatus.as("row_status"), col("sim"))
+        col("near_id"), rowStatus.as("row_status"), col("sim"))
 
     // one row per doc, near_delta null — the projection stays
     // column-level: a typed map here would strip the event-time
@@ -435,6 +411,27 @@ object DocStream {
       }
   }
 
+  /** `docs` plus each doc's `fp`, `sim` (all-ones when the text has
+    * no tokens) and the index's answers for them: `corpus_id`, the
+    * corpus survivor of `fp`, and `near_id`, the smallest indexed
+    * `doc_id` within `maxHamming` of `sim` in any shared band bucket.
+    * Both come from the index's broadcast [[TextQueries.DedupProbe]]
+    * in one row-local lookup, so a stream pays no join, no broadcast
+    * exchange and no cached scan per micro-batch; the probe is built
+    * here on first use of `index`. */
+  private[streaming] def probed(docs: DataFrame, index: TextQueries.DedupIndex,
+                                maxHamming: Int): DataFrame = {
+    val probe = index.probe
+    val corpusId = udf((fp: String) => probe.value.corpusId(fp))
+    val nearId = udf((sim: Long) => probe.value.nearId(sim, maxHamming))
+    docs
+      .withColumn("fp", TextFunctions.fingerprint(col("text")))
+      .withColumn("sim",
+        coalesce(TextFunctions.simhash60("text"), lit((1L << 60) - 1)))
+      .withColumn("corpus_id", corpusId(col("fp")))
+      .withColumn("near_id", nearId(col("sim")))
+  }
+
   final case class CurationStatus(ts: java.sql.Timestamp, doc_id: Long,
                                   status: String)
 
@@ -446,7 +443,7 @@ object DocStream {
     * `too_short` > `lang` > `low_quality` > `repetitive` > `near_dup`
     * > `kept`).
     *
-    * It is the dedup core under [[deltaDedupStream]] (same lookups,
+    * It is the dedup core under [[deltaDedupStream]] (same probe,
     * same stream state, same eviction bound, same `withinStream` band
     * cohorts and checker escape hatch — documented there) fed the
     * row-local rungs as one status column, then one row-local mapping:
@@ -470,7 +467,7 @@ object DocStream {
     *  - too_short/lang/low_quality/repetitive: the batch builders
     *    verbatim ([[graft.operators.TextQueries.predLang]]/
     *    `qualityCol`/`dup2GramFrac`) — all row-local, stream-safe;
-    *  - near_dup: banded-SimHash hit against the index's band lookups.
+    *  - near_dup: banded-SimHash hit against the index's probe.
     * The one signal with NO incremental form is x30's boilerplate
     * branch — its corpus document-frequency is a batch aggregate by
     * definition; refresh it with the index between batches. */

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.functions.TextFunctions
+import graft.operators.TextQueries
 import graft.streaming.DocStream.Doc
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -739,6 +741,275 @@ class DocStreamSpec extends SparkSpec {
       // kept, lowText and near: three corpus-unknown fingerprints
       assert(ops(0).numRowsTotal == 3)
     } finally { q.stop(); index.release() }
+  }
+
+  // ---- the index probe: one broadcast per index version -----------------
+
+  private type Lookup = (Long, Option[Long], Option[Long])
+
+  /** (doc_id, corpus_id, near_id) rows, sorted. */
+  private def lookupRows(df: org.apache.spark.sql.DataFrame): Seq[Lookup] =
+    df.select("doc_id", "corpus_id", "near_id").as[Lookup].collect().toSeq.sorted
+
+  /** The probe's lookup equals the join reference row for row at every
+    * `maxHamming` given; returns the probe's rows per `maxHamming`. */
+  private def probeMatchesJoins(docs: org.apache.spark.sql.DataFrame,
+                                index: TextQueries.DedupIndex,
+                                hams: Seq[Int] = Seq(0, 6, 60)): Map[Int, Map[Long, Lookup]] =
+    hams.map { h =>
+      val probe = lookupRows(DocStream.probed(docs, index, h))
+      val ref = lookupRows(ProbeJoinReference.enrich(docs, index, h))
+      assert(probe == ref, s"maxHamming $h: probe=$probe\nref=$ref")
+      h -> probe.map(r => r._1 -> r).toMap
+    }.toMap
+
+  /** A band table over `(doc_id, sim)` representatives, laid out as
+    * `buildDedupIndex` lays out its own. */
+  private def bandsOf(reps: Seq[(Long, Long)]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val df = reps.toDF("doc_id", "sim")
+    (0 until TextQueries.SimBands).map(b => df.select(col("doc_id"), col("sim"),
+        lit(b).as("b"), TextQueries.simBandKey(col("sim"), b).as("key")))
+      .reduce(_ union _)
+  }
+
+  /** `sim` with the given bit positions flipped. */
+  private def flip(sim: Long, bits: Seq[Int]): Long =
+    bits.foldLeft(sim)((s, i) => s ^ (1L << i))
+
+  test("index probe matches the join formulation: hot bucket, split band minima, empty/null text, exact-and-near, maxHamming 0/6/60") {
+    val rng = new scala.util.Random(7)
+    def words(n: Int, p: String) = (0 until n).map(i => s"$p${rng.nextInt(500)}w$i").mkString(" ")
+    val corpusText = words(60, "c")
+    val docs = ((0 until 20).map(i => i.toLong -> words(40 + i, s"d$i")) ++
+      Seq(100L -> "", 102L -> corpusText)).toDF("doc_id", "text")
+      .union(Seq(101L).toDF("doc_id").selectExpr("doc_id", "CAST(NULL AS STRING) AS text"))
+    val sims = TextQueries.simhashDf(docs).as[(Long, Long)].collect().toMap
+    val allOnes = (1L << 60) - 1
+    assert(sims(100L) == allOnes && sims(101L) == allOnes)
+    val corpusSim = TextQueries.simhashDf(Seq(5L -> corpusText).toDF("doc_id", "text"))
+      .as[(Long, Long)].collect().head._2
+    assert(sims(102L) == corpusSim)
+    // bit positions of band b, and of every band but b
+    def inBand(b: Int) = (b * TextQueries.SimBandBits until (b + 1) * TextQueries.SimBandBits)
+    def outside(b: Int) = (0 until 60).filterNot(inBand(b).contains)
+    val reps = scala.collection.mutable.ArrayBuffer(5L -> corpusSim)
+    var nextId = 1000L
+    def rep(sim: Long): Unit = { reps += nextId -> sim; nextId += 1 }
+    // random cohorts: candidates sharing one band of a doc, 1-12 bits off
+    for (d <- 0 until 20; b <- 0 until 4; _ <- 0 until 6)
+      rep(flip(sims(d.toLong), rng.shuffle(outside(b)).take(1 + rng.nextInt(12))))
+    // a hot bucket: 1,500 candidates in doc 0's band-0 bucket, 7+ bits off
+    for (_ <- 0 until 1500)
+      rep(flip(sims(0L), rng.shuffle(outside(0)).take(7 + rng.nextInt(20))))
+    // doc 1: each band's min is a different id — 900 at Hamming 4 in
+    // bands 0/3, 400 at Hamming 3 in bands 1-3, 100 at Hamming 8 in 1-3
+    reps += 900L -> flip(sims(1L), inBand(1).take(2) ++ inBand(2).take(2))
+    reps += 400L -> flip(sims(1L), inBand(0).take(3))
+    reps += 100L -> flip(sims(1L), inBand(0).take(8))
+    // the all-ones fallback of empty and null text has neighbours too
+    reps += 77L -> flip(allOnes, Seq(3, 40))
+    val fp = Seq(5L -> corpusText, 6L -> "").toDF("doc_id", "text")
+      .select(TextFunctions.fingerprint(org.apache.spark.sql.functions.col("text")).as("fp"),
+        org.apache.spark.sql.functions.col("doc_id").as("corpus_id"))
+    val index = TextQueries.DedupIndex(fp, bandsOf(reps.toSeq))
+    try {
+      val hot = reps.count { case (_, s) =>
+        ((s ^ sims(0L)) & ((1L << TextQueries.SimBandBits) - 1)) == 0 }
+      assert(hot > 1000, s"hot bucket holds $hot")
+      val byHam = probeMatchesJoins(docs, index)
+      assert(byHam(6)(1L)._3.contains(400L), byHam(6)(1L))
+      assert(byHam(60)(1L)._3.contains(100L), byHam(60)(1L))
+      assert(byHam(0)(1L)._3.isEmpty, byHam(0)(1L))
+      assert(byHam(6)(100L) == ((100L, Some(6L), Some(77L))), byHam(6)(100L))
+      assert(byHam(6)(101L) == ((101L, None, Some(77L))), byHam(6)(101L))
+      assert(byHam(0)(102L) == ((102L, Some(5L), Some(5L))), byHam(0)(102L))
+      assert(byHam(6).values.count(_._3.nonEmpty) > 10, byHam(6))
+    } finally index.release()
+  }
+
+  test("index probe matches the join formulation on an absorbDelta'd index (band keys repeat across versions)") {
+    val texts = (0 until 30).map(i => (0 until 60).map(k => s"a${i}t$k").mkString(" "))
+    val corpus = texts.zipWithIndex.map { case (t, i) => i.toLong -> t }.toDF("doc_id", "text")
+    val idx0 = TextQueries.buildDedupIndex(corpus)
+    val delta = texts.take(15).zipWithIndex.map { case (t, i) =>
+      (100L + i) -> t.replace(s"a${i}t7 ", s"a${i}mut ") }.toDF("doc_id", "text")
+    val idx1 = TextQueries.absorbDelta(idx0, delta)
+    try {
+      val keys = idx1.bands.groupBy("b", "key").count()
+        .filter(org.apache.spark.sql.functions.col("count") > 1).count()
+      assert(keys > 0, "expected band buckets shared by corpus and delta reps")
+      val probes = (texts.take(20).zipWithIndex.map { case (t, i) =>
+        (200L + i) -> t.replace(s"a${i}t9 ", s"a${i}x ") } ++
+        Seq(300L -> texts(3), 301L -> delta.as[(Long, String)].collect()(4)._2))
+        .toDF("doc_id", "text")
+      val byHam = probeMatchesJoins(probes, idx1)
+      assert(byHam(6).values.count(_._3.nonEmpty) > 10, byHam(6))
+      assert(byHam(6)(301L)._2.contains(104L), byHam(6)(301L))
+    } finally { idx1.release(); idx0.release() }
+  }
+
+  test("probe bound: refused past the limit with a named error naming counts, estimate and setting") {
+    import TextQueries.{ProbeBandRowBytes, ProbeFpRowBytes, ProbeTooLargeException, checkProbeBound}
+    val need = 100 * ProbeFpRowBytes + 400 * ProbeBandRowBytes
+    checkProbeBound(100, 400, need, "spark.driver.maxResultSize")
+    checkProbeBound(100, 400, 0, "spark.driver.maxResultSize") // 0 = no bound
+    val e = intercept[ProbeTooLargeException](
+      checkProbeBound(100, 400, need - 1, "spark.driver.maxResultSize"))
+    assert(e.isInstanceOf[IllegalStateException])
+    for (part <- Seq("100 fp rows", "400 band rows", s"~$need bytes",
+      s"spark.driver.maxResultSize = ${need - 1} bytes"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  /** Job counts per micro-batch id of the query in job group `runId`. */
+  private final class BatchJobs(runId: String) extends org.apache.spark.scheduler.SparkListener {
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    @volatile private var marks = Set.empty[String]
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      if (group == runId)
+        Option(e.properties.getProperty("streaming.sql.batchId"))
+          .foreach(id => jobs.merge(id.toLong, 1, _ + _))
+      else if (group != null) marks += group
+    }
+    /** Returns once every job event posted before the call has arrived:
+      * events reach a listener in order, so a marker job's arrival
+      * drains the ones before it. */
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val tag = s"drain-${System.nanoTime}"
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!marks.contains(tag) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marks.contains(tag), "listener bus did not drain")
+    }
+  }
+
+  private def executedPlan(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+
+  /** No broadcast exchange, broadcast join or cached scan in the plan. */
+  private def assertNoIndexJoin(plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val banned = plan.collectWithSubqueries {
+      case p: BroadcastExchangeExec => p.nodeName
+      case p: BroadcastHashJoinExec => p.nodeName
+      case p: InMemoryTableScanExec => p.nodeName
+    }
+    assert(banned.isEmpty, s"$banned in\n${plan.treeString}")
+  }
+
+  test("default deltaDedupStream: one Spark job per micro-batch after the first, no index join in its plan") {
+    implicit val ctx = spark.sqlContext
+    val index = TextQueries.buildDedupIndex(
+      Seq(1L -> base, 2L -> (0 until 50).map(i => s"c$i").mkString(" ")).toDF("doc_id", "text"))
+    index.fp.count(); index.bands.count()
+    val mem = MemoryStream[Doc]
+    val q = DocStream.deltaDedupStream(mem.toDF(), index)
+      .writeStream.format("memory").queryName("delta_jobs")
+      .outputMode("append").start()
+    val listener = new BatchJobs(q.runId.toString)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (b <- 0 until 4) {
+        mem.addData(Doc(ts(b), 10L + 2 * b, s"$base b$b"),
+          Doc(ts(b), 11L + 2 * b, (0 until 40).map(i => s"n${b}x$i").mkString(" ")))
+        q.processAllAvailable()
+      }
+      listener.drain()
+      val byBatch = scala.jdk.CollectionConverters.MapHasAsScala(listener.jobs).asScala.toMap
+      val first = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).min
+      val later = byBatch.filter(_._1 > first)
+      assert(later.size >= 3, byBatch)
+      assert(later.values.forall(_ == 1), s"jobs per batch id: $byBatch")
+      assertNoIndexJoin(executedPlan(q))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      q.stop(); index.release()
+    }
+  }
+
+  test("default curationStream: no index join in its plan") {
+    implicit val ctx = spark.sqlContext
+    val index = TextQueries.buildDedupIndex(Seq(1L -> base).toDF("doc_id", "text"))
+    val mem = MemoryStream[Doc]
+    val q = DocStream.curationStream(mem.toDF(), index, Seq(12345L))
+      .writeStream.format("memory").queryName("curation_plan")
+      .outputMode("append").start()
+    try {
+      mem.addData(Doc(ts(0), 10L, base), Doc(ts(1), 11L, base.replace("tok7 ", "tok7x ")))
+      q.processAllAvailable()
+      assert(spark.table("curation_plan").count() == 2)
+      assertNoIndexJoin(executedPlan(q))
+    } finally { q.stop(); index.release() }
+  }
+
+  test("index.release() destroys the probe's broadcast and leaves no cached plan derived from the index") {
+    implicit val ctx = spark.sqlContext
+    // numCachedEntries is sql-private in Scala, public in bytecode
+    val cache = spark.sharedState.cacheManager
+    def cached = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    val before = cached
+    val index = TextQueries.buildDedupIndex(Seq(1L -> base).toDF("doc_id", "text"))
+    val mem = MemoryStream[Doc]
+    val q = DocStream.deltaDedupStream(mem.toDF(), index)
+      .writeStream.format("memory").queryName("delta_release")
+      .outputMode("append").start()
+    try {
+      mem.addData(Doc(ts(0), 10L, base))
+      q.processAllAvailable()
+    } finally q.stop()
+    val probe = index.probe
+    assert(probe.value.fpRows == 1 && probe.value.bandRows == 4)
+    index.release()
+    val e = intercept[org.apache.spark.SparkException](probe.value)
+    assert(e.getMessage.contains("destroyed"), e.getMessage)
+    assert(index.fp.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(index.bands.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(cached <= before, s"${cached - before} cached plans left behind")
+  }
+
+  test("deltaDedupStream recovers from a checkpoint: probe rebuilt from the index, state round-trips, only the unseen suffix is emitted") {
+    implicit val ctx = spark.sqlContext
+    val near = base.replace("tok7 ", "tok7x ")
+    val fresh = (0 until 60).map(i => s"rs$i").mkString(" ")
+    val corpus = Seq(1L -> base, 2L -> (0 until 50).map(i => s"c$i").mkString(" "))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("ckpt_delta").toString
+    val mem = MemoryStream[Doc]
+    def start(index: TextQueries.DedupIndex) = DocStream.deltaDedupStream(mem.toDF(), index)
+      .writeStream.format("parquet")
+      .option("checkpointLocation", s"$root/checkpoint").option("path", s"$root/out")
+      .outputMode("append").start()
+    val index1 = TextQueries.buildDedupIndex(corpus)
+    val q1 = start(index1)
+    try {
+      mem.addData(Doc(ts(0), 10L, base), Doc(ts(1), 11L, fresh))
+      q1.processAllAvailable()
+    } finally { q1.stop(); index1.release() }
+    // a restarted process rebuilds its index, hence a new probe; doc 12
+    // is a copy of 11, known only through the recovered state
+    mem.addData(Doc(ts(2), 12L, fresh), Doc(ts(3), 13L, near))
+    val index2 = TextQueries.buildDedupIndex(corpus)
+    val q2 = start(index2)
+    try {
+      q2.processAllAvailable()
+      val out = spark.read.parquet(s"$root/out")
+        .select("doc_id", "status", "dup_of").as[(Long, String, Option[Long])]
+        .collect().toSeq.sortBy(_._1)
+      assert(out == Seq((10L, "exact_dup_corpus", Some(1L)), (11L, "new", None),
+        (12L, "exact_dup_delta", Some(11L)), (13L, "near_dup_corpus", Some(1L))), out)
+      val batch = TextQueries.deltaDedupAgainst(index2,
+        Seq(10L -> base, 11L -> fresh, 12L -> fresh, 13L -> near).toDF("doc_id", "text"))
+        .select("doc_id", "status", "dup_of").as[(Long, String, Option[Long])]
+        .collect().toSeq.sortBy(_._1)
+      assert(out == batch, s"batch=$batch stream=$out")
+    } finally { q2.stop(); index2.release() }
   }
 }
 
