@@ -84,11 +84,7 @@ object Ingest {
     val metrics = CellQc.cellMetrics(trimmed, annotations)
     val withScores = metrics
       .join(doublets, Seq("sample", "barcode"), "left")
-      // every sample flagged → `spark.emptyDataFrame` (no columns): test
-      // the schema, not the rows, so the scores are computed only once
-      .join(if (ed.scores.columns.isEmpty) metrics.select("sample", "barcode")
-          .withColumn("emptyDrops_FDR", lit(null).cast("double")).limit(0)
-        else ed.scores, Seq("sample", "barcode"), "left")
+      .join(ed.scores, Seq("sample", "barcode"), "left")
       .withColumn("flag_filtered",
         col("sample").isin(ed.flagged: _*))
 

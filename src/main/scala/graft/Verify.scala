@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare. A failed query does not stop
+  * the others; the run lists the failures and exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,16 +15,15 @@ object Verify {
     // independent queries submitted concurrently (bounded pool) — the
     // scheduler interleaves their jobs across cores; each result lands
     // in its own directory so there is no output-order dependence
-    graft.ml.Concurrency.mapSamples(
+    val failed = graft.ml.Concurrency.mapSamples(
       SparkEntry.queries.keys.toSeq.sorted
         .filter(n => only.forall(_.exists(n.startsWith))),
       maxConcurrent = 4) { name =>
-      try SparkEntry.queries(name)(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/$name")
+      try { SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+        System.err.println(s"[verify] $name failed: ${e.getMessage}"); Some(name) }
+    }.flatten
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,5 +40,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}"); sys.exit(1)
+    }
   }
 }

@@ -55,10 +55,11 @@ object EmptyDrops {
     }
     val flagged = perSample.collect { case (s, None) => s }
     val scored = perSample.collect { case (_, Some(df)) => df }
-    val scores =
-      if (scored.isEmpty)
-        spark.emptyDataFrame
-      else scored.reduce(_ unionByName _)
+    // every sample flagged: no rows, but the same columns as a scored run
+    val scores = scored.reduceOption(_ unionByName _).getOrElse(
+      Seq.empty[(String, String, Long, Double, Double, Boolean, Double)]
+        .toDF("sample", "barcode", "emptyDrops_Total", "emptyDrops_LogProb",
+          "emptyDrops_PValue", "emptyDrops_Limited", "emptyDrops_FDR"))
     Result(scores, flagged.toSeq)
   }
 

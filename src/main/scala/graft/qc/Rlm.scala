@@ -9,85 +9,78 @@ import org.apache.spark.sql.functions._
   * = "prediction", level = 1 − p.level)` in the numGenesVsNumUmis step
   * (`QC_helpers/numGenesVsNumUmis.r:71-85`).
   *
-  * IRLS with Huber weights, one line per sample, ALL samples fitted
-  * simultaneously: each iteration is two grouped aggregations over the
-  * cells table (residual-scale MAD, then weighted normal equations) and
-  * a per-sample 2×2 solve on the driver. Per SURVEY §7.4 the accepted
-  * parity is algorithmic, not bitwise with R's rlm internals.
+  * IRLS with Huber weights, one line per sample, as ONE lazy plan: the
+  * points are grouped by sample and each sample is fitted inside one
+  * task (OLS start, 8 reweighting steps, MAD scale from the exact local
+  * median). Nothing runs until a caller reads the result. A task holds
+  * one sample's `(x, y)` doubles, 16 B per cell, plus an 8 B per cell
+  * scratch for the median: 2.4 MB for a 100,000-cell sample. Per SURVEY
+  * §7.4 the accepted parity is algorithmic, not bitwise with R's rlm
+  * internals.
   */
 object Rlm {
 
+  private val Iters = 8
+  private val HuberK = 1.345
+  /** MAD → σ for normal residuals. */
+  private val MadToSigma = 1.4826
+
   /** Per-sample fit `(sample, alpha, beta, sigma, xbar, sxx, n)` for
-    * y ≈ alpha + beta·x. `sigma` is the robust MAD residual scale
-    * (what `rlm` reports as `s`) — an SSE-based scale would be blown
-    * up by exactly the outliers the band is meant to exclude. */
-  def fitPerSample(pts: DataFrame, xCol: String, yCol: String,
-                   iters: Int = 8, huberK: Double = 1.345): DataFrame = {
+    * y ≈ alpha + beta·x over the rows with both coordinates set.
+    * `sigma` is the robust MAD residual scale (what `rlm` reports as
+    * `s`) — an SSE-based scale would be blown up by exactly the
+    * outliers the band is meant to exclude. */
+  def fitPerSample(pts: DataFrame, xCol: String, yCol: String): DataFrame = {
     val spark = pts.sparkSession
     import spark.implicits._
-    val x = col(xCol).cast("double")
-    val y = col(yCol).cast("double")
-    val base = pts.select(col("sample"), x.as("x"), y.as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // iteration state: sample -> (alpha, beta)
-    def solve(stats: Array[(String, (Double, Double, Double, Double, Double))]): Map[String, (Double, Double)] =
-      stats.map { case (s, (sw, swx, swy, swxx, swxy)) =>
-        val denom = sw * swxx - swx * swx
-        val beta = if (math.abs(denom) < 1e-12) 0.0 else (sw * swxy - swx * swy) / denom
-        val alpha = (swy - beta * swx) / sw
-        s -> (alpha, beta)
-      }.toMap
-
-    // OLS start (w = 1)
-    var coeffs = solve(base.groupBy("sample").agg(
-      count(lit(1)).cast("double").as("sw"), sum("x").as("swx"), sum("y").as("swy"),
-      sum(col("x") * col("x")).as("swxx"), sum(col("x") * col("y")).as("swxy"))
-      .collect().map(r => (r.getString(0), (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))))
-
-    for (_ <- 1 to iters) {
-      val cdf = coeffs.toSeq.map { case (s, (a, b)) => (s, a, b) }
-        .toDF("sample", "__a", "__b")
-      val withR = base.join(broadcast(cdf), "sample")
-        .withColumn("__r", col("y") - col("__a") - col("__b") * col("x"))
-      // robust scale: MAD * 1.4826 (exact percentile; post-reduction size)
-      val scales = withR.groupBy("sample")
-        .agg((expr("percentile(abs(__r), 0.5D)") * 1.4826).as("__s"))
-      // weight 1 inside the Huber corner (incl. r = 0 — the division
-      // must not evaluate there under ANSI mode)
-      val weighted = withR.join(broadcast(scales), "sample")
-        .withColumn("__w",
-          when(col("__s") <= 0 ||
-            abs(col("__r")) <= lit(huberK) * col("__s"), lit(1.0))
-            .otherwise(lit(huberK) * col("__s") / abs(col("__r"))))
-      coeffs = solve(weighted.groupBy("sample").agg(
-        sum("__w").as("sw"), sum(col("__w") * col("x")).as("swx"),
-        sum(col("__w") * col("y")).as("swy"),
-        sum(col("__w") * col("x") * col("x")).as("swxx"),
-        sum(col("__w") * col("x") * col("y")).as("swxy"))
-        .collect().map(r => (r.getString(0), (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5)))))
-    }
-
-    val cdf = coeffs.toSeq.map { case (s, (a, b)) => (s, a, b) }
-      .toDF("sample", "alpha", "beta")
-    val out = base.join(broadcast(cdf), "sample")
-      .withColumn("__r", col("y") - col("alpha") - col("beta") * col("x"))
-      .groupBy("sample")
-      .agg(
-        first("alpha").as("alpha"), first("beta").as("beta"),
-        count(lit(1)).as("n"), avg("x").as("xbar"),
-        (expr("percentile(abs(__r), 0.5D)") * 1.4826).as("sigma"),
-        (sum(col("x") * col("x")) - count(lit(1)) * avg("x") * avg("x")).as("sxx"))
-      .select("sample", "alpha", "beta", "sigma", "xbar", "sxx", "n")
-    val result = out.collect()
-    base.unpersist()
-    result.toSeq.map(r => (r.getString(0), r.getDouble(1), r.getDouble(2),
-      r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getLong(6)))
+    pts.select(col("sample"), col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
+      .filter(col("x").isNotNull && col("y").isNotNull)
+      .as[(String, Double, Double)].groupByKey(_._1)
+      .mapGroups((sample, rows) => fit(sample, rows))
       .toDF("sample", "alpha", "beta", "sigma", "xbar", "sxx", "n")
   }
 
-  /** Student-t two-sided quantile for the prediction band. */
-  def tQuantile(pLevel: Double, df: Long): Double =
-    if (df <= 0) Double.PositiveInfinity
-    else new TDistribution(df.toDouble).inverseCumulativeProbability(1.0 - pLevel / 2.0)
+  private def fit(sample: String, rows: Iterator[(String, Double, Double)]) = {
+    val xs = Array.newBuilder[Double]; val ys = Array.newBuilder[Double]
+    rows.foreach { case (_, x, y) => xs += x; ys += y }
+    val (x, y) = (xs.result(), ys.result()); val n = x.length
+    def absR(i: Int, a: Double, b: Double) = math.abs(y(i) - a - b * x(i))
+    // exact median of |r|, interpolated like Spark's `percentile(…, 0.5)`
+    val scratch = new Array[Double](n)
+    def scale(a: Double, b: Double): Double = {
+      for (i <- 0 until n) scratch(i) = absR(i, a, b)
+      java.util.Arrays.sort(scratch)
+      val m = n / 2
+      (if (n % 2 == 1) scratch(m) else 0.5 * scratch(m - 1) + 0.5 * scratch(m)) * MadToSigma
+    }
+    // weighted normal equations; a degenerate x spread gives slope 0
+    def solve(w: Int => Double): (Double, Double) = {
+      var sw, swx, swy, swxx, swxy = 0.0
+      for (i <- 0 until n) {
+        val wi = w(i)
+        sw += wi; swx += wi * x(i); swy += wi * y(i)
+        swxx += wi * x(i) * x(i); swxy += wi * x(i) * y(i)
+      }
+      val denom = sw * swxx - swx * swx
+      val beta = if (math.abs(denom) < 1e-12) 0.0 else (sw * swxy - swx * swy) / denom
+      ((swy - beta * swx) / sw, beta)
+    }
+    // OLS start, then Huber reweighting
+    val (alpha, beta) = (1 to Iters).foldLeft(solve(_ => 1.0)) { case ((a, b), _) =>
+      val s = scale(a, b)
+      solve { i =>
+        val r = absR(i, a, b)
+        if (s <= 0 || r <= HuberK * s) 1.0 else HuberK * s / r
+      }
+    }
+    val xbar = x.sum / n
+    (sample, alpha, beta, scale(alpha, beta), xbar, x.map(v => (v - xbar) * (v - xbar)).sum, n.toLong)
+  }
+
+  /** Student-t two-sided quantile `(p_level, df)` for the prediction
+    * band; null when `df ≤ 0` or `p_level` is null, i.e. no band. */
+  val tQuantile = udf { (pLevel: Double, df: Long) =>
+    if (df <= 0) None
+    else Some(new TDistribution(df.toDouble).inverseCumulativeProbability(1.0 - pLevel / 2.0))
+  }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * (`4_Prepare_experiment.r:310-329`); here `autoSettings` returns ONE
   * DataFrame keyed by sample — every sample's threshold from a single
   * grouped pass, and the filter is a broadcast join against that
-  * settings table.
+  * settings table. Steps, `run` and `QcSteps.runAll` only build plans:
+  * nothing runs until a caller reads the cells or the settings.
   */
 final case class StepConfig(
     enabled: Boolean = true,
@@ -162,20 +163,17 @@ object NumGenesVsNumUmisStep extends QcStep {
       .agg(least(lit(0.001), lit(1.0) / count(lit(1))).as("p_level"))
 
   def filter(cells: DataFrame, settings: DataFrame): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
     val pts = cells
       .withColumn("__x", log10(col("nCount")))
       .withColumn("__y", log10(col("nFeature")))
-    val fit = Rlm.fitPerSample(pts, "__x", "__y")
-    // per-sample t quantile from p_level (driver: one row per sample)
-    val tq = fit.join(broadcast(settings), "sample")
-      .select("sample", "p_level", "n").collect().map { r =>
-        (r.getString(0), Rlm.tQuantile(r.getDouble(1), r.getLong(2) - 2))
-      }.toSeq.toDF("sample", "__tq")
+    // one row per sample: the fit and its band's t quantile (null for
+    // n <= 2 or no p_level, which keeps the whole sample)
+    val band = Rlm.fitPerSample(pts, "__x", "__y")
+      .join(broadcast(settings.select("sample", "p_level")), Seq("sample"), "left")
+      .withColumn("__tq", Rlm.tQuantile(col("p_level"), col("n") - 2))
+      .drop("p_level")
     pts
-      .join(broadcast(fit), Seq("sample"), "left")
-      .join(broadcast(tq), Seq("sample"), "left")
+      .join(broadcast(band), Seq("sample"), "left")
       .withColumn("__pred", col("alpha") + col("beta") * col("__x"))
       .withColumn("__se", col("sigma") *
         sqrt(lit(1.0) + lit(1.0) / col("n") +

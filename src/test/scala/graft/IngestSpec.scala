@@ -185,7 +185,7 @@ class IngestSpec extends SparkSpec {
 
   test("every sample flagged by emptyDrops still yields a null emptyDrops_FDR column") {
     // lower = 0 leaves no ambient pool, so emptyDrops skips and flags
-    // the sample and its scores frame has no columns at all
+    // the sample and its scores frame has no rows
     val d1 = Files.createDirectory(Files.createTempDirectory("ingest-flagged").resolve("s1"))
     writeSample(d1, 0)
     val r = Ingest.run(spark, Ingest.Config(name = "flagged-exp",

@@ -93,27 +93,6 @@ class DoubletsSpec extends SparkSpec {
 
   // ---- job counts -----------------------------------------------------
 
-  /** Spark jobs launched while `f` runs (listener events are async:
-    * wait until the count stops moving). */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      Thread.sleep(250)
-      var prev = -1; var cur = jobs.get(); var spins = 0
-      while (prev != cur && spins < 60) {
-        Thread.sleep(50); prev = cur; cur = jobs.get(); spins += 1
-      }
-      (out, cur)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("classify launches one Spark job per sample; scores stays within featurize + 2") {
     val (feats, featJobs) = jobsDuring(Doublets.featurize(fixture, "s1", k = 10,
       numHvg = 16, numPcs = 5, seed = 123L).get)

@@ -42,6 +42,9 @@ class EmptyDropsSpec extends SparkSpec {
     val res = EmptyDrops.run(tiny, lower = 100, nIters = 50)
     assert(res.flagged == Seq("s2"))
     assert(res.scores.isEmpty || res.scores.count() == 0)
+    // no rows, but a scored run's columns and types
+    def cols(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(cols(res.scores) == cols(EmptyDrops.run(fixture, lower = 100, nIters = 9).scores))
   }
 
   test("deterministic across invocations (seeded per sample/run)") {

@@ -101,50 +101,27 @@ class Round7Spec extends SparkSpec {
     val t = Tables(spark, "/root/testdata/sf0.001")
     // warm plan construction + parquet footers OUTSIDE the counted window
     StarQueries.q38Auto(t, exact = Some(true)).queryExecution.analyzed
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // every t.lineitem access pays one parquet footer-schema job
-        // (Tables builds a fresh reader per access, by design — nothing
-        // cached so Catalyst sees the full pipeline); only EXECUTION
-        // jobs count as "the probe ran"
-        val name = js.stageInfos.map(_.name).mkString("|")
-        if (!name.startsWith("parquet at ")) {
-          jobs.incrementAndGet()
-          names.add(name)
-        }
-        ()
-      }
-    }
-    // listener events are async — wait until the count stops moving
-    def settled(): Int = {
-      Thread.sleep(250) // let in-flight listener events land
-      var prev = -1; var cur = jobs.get(); var spins = 0
-      while (prev != cur && spins < 60) {
-        Thread.sleep(50); prev = cur; cur = jobs.get(); spins += 1
-      }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // forced routes: plan construction only, zero Spark jobs
+    // every t.lineitem access pays one parquet footer-schema job
+    // (Tables builds a fresh reader per access, by design — nothing
+    // cached so Catalyst sees the full pipeline); only EXECUTION jobs
+    // count as "the probe ran"
+    def probeJobs(f: => Unit): Int =
+      jobsDuring(f, keep = !_.startsWith("parquet at "))._2
+    // forced routes: plan construction only, zero Spark jobs
+    val forced = probeJobs {
       StarQueries.q38Auto(t, exact = Some(true))
       StarQueries.q38Auto(t, exact = Some(false))
-      assert(settled() == 0, s"forced routes must skip the probe entirely: ${names.toArray.mkString(";")}")
-      // the probe route costs a CONSTANT number of jobs per call (AQE
-      // may split the one HLL scan into >1 job, so pin linearity, not
-      // an absolute): doubling the calls exactly doubles the jobs —
-      // i.e. the probe runs at most once per call, never re-executed
-      // inside a single invocation
-      StarQueries.q38Auto(t)
-      val perCall = settled()
-      assert(perCall >= 1, "the None route must actually probe")
-      StarQueries.q38Auto(t)
-      StarQueries.q38Auto(t)
-      assert(settled() == 3 * perCall,
-        s"probe job count not linear in calls: 1 call = $perCall, 3 calls = ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(forced == 0, s"forced routes must skip the probe entirely: $forced jobs")
+    // the probe route costs a CONSTANT number of jobs per call (AQE
+    // may split the one HLL scan into >1 job, so pin linearity, not
+    // an absolute): doubling the calls exactly doubles the jobs —
+    // i.e. the probe runs at most once per call, never re-executed
+    // inside a single invocation
+    val perCall = probeJobs(StarQueries.q38Auto(t))
+    assert(perCall >= 1, "the None route must actually probe")
+    val twoCalls = probeJobs { StarQueries.q38Auto(t); StarQueries.q38Auto(t) }
+    assert(twoCalls == 2 * perCall,
+      s"probe job count not linear in calls: 1 call = $perCall, 2 calls = $twoCalls")
   }
 }

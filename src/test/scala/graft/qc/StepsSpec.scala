@@ -91,16 +91,71 @@ class StepsSpec extends SparkSpec {
     assert(keep(out.cells) == Set("A", "B", "C", "D"))
   }
 
+  /** A line with jitter plus two gross outliers. */
+  private def outlierPts = (0 until 60).map { i =>
+    val x = 2.0 + i * 0.05
+    val y = 1.0 + 2.0 * x + 0.01 * math.sin(i.toDouble)
+    ("s1", s"c$i", x, y)
+  } ++ Seq(("s1", "out1", 3.0, 12.0), ("s1", "out2", 4.0, 2.0))
+
   test("rlm recovers the line under gross outliers") {
-    val pts = (0 until 60).map { i =>
-      val x = 2.0 + i * 0.05
-      val y = 1.0 + 2.0 * x + 0.01 * math.sin(i.toDouble)
-      ("s1", s"c$i", x, y)
-    } ++ Seq(("s1", "out1", 3.0, 12.0), ("s1", "out2", 4.0, 2.0))
-    val fit = Rlm.fitPerSample(pts.toDF("sample", "barcode", "x", "y"), "x", "y")
+    val fit = Rlm.fitPerSample(outlierPts.toDF("sample", "barcode", "x", "y"), "x", "y")
       .collect()(0)
     assert(math.abs(fit.getAs[Double]("alpha") - 1.0) < 0.1)
     assert(math.abs(fit.getAs[Double]("beta") - 2.0) < 0.05)
+  }
+
+  test("one-task rlm fit matches the driver-loop reference") {
+    // a second sample: another line, other noise, an even cell count
+    // (interpolated median) and three outliers
+    val s2 = (0 until 45).map { i =>
+      val x = 1.5 + i * 0.07
+      ("s2", s"d$i", x, 0.4 + 0.7 * x + 0.02 * math.cos(i * 1.7))
+    } ++ Seq(("s2", "o1", 2.0, 5.0), ("s2", "o2", 3.5, -1.0), ("s2", "o3", 4.0, 4.5))
+    def byS(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[String]("sample") -> r).toMap
+    for (pts <- Seq(outlierPts, outlierPts ++ s2)) {
+      val df = pts.toDF("sample", "barcode", "x", "y")
+      val got = byS(Rlm.fitPerSample(df, "x", "y"))
+      val want = byS(RlmReference.fitPerSample(df, "x", "y"))
+      assert(got.keySet == want.keySet)
+      for ((s, w) <- want; g = got(s)) {
+        for (c <- Seq("alpha", "beta", "sigma")) {
+          val (a, b) = (g.getAs[Double](c), w.getAs[Double](c))
+          assert(math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)),
+            s"$s.$c: $a vs reference $b")
+        }
+        assert(g.getAs[Long]("n") == w.getAs[Long]("n"))
+      }
+    }
+  }
+
+  test("numGenesVsNumUmis keeps every cell of a sample too small for a band") {
+    // n <= 2 leaves no degrees of freedom: no t quantile, no band. A
+    // one-cell sample has sigma exactly 0, which must not turn into a
+    // NaN band that drops the cell.
+    val cells = Seq(
+      ("one", "a", 1000L, 300L),
+      ("two", "a", 1000L, 300L), ("two", "b", 2000L, 700L),
+      ("three", "a", 1000L, 300L), ("three", "b", 2000L, 500L),
+      ("three", "c", 4000L, 900L))
+      .toDF("sample", "barcode", "nCount", "nFeature")
+    val out = NumGenesVsNumUmisStep.run(cells,
+      StepConfig(auto = false, settings = Map("p_level" -> 0.001)))
+    assert(out.cells.collect().map(r => r.getString(0) + "/" + r.getString(1)).toSet ==
+      Set("one/a", "two/a", "two/b", "three/a", "three/b", "three/c"))
+  }
+
+  test("the QC chain only builds plans; the config document collects the settings") {
+    val (_, filterJobs) = jobsDuring(NumGenesVsNumUmisStep.filter(cellsDf,
+      NumGenesVsNumUmisStep.autoSettings(cellsDf)))
+    assert(filterJobs == 0, s"filter launched $filterJobs jobs")
+    val ((_, settings), runAllJobs) = jobsDuring(QcSteps.runAll(cellsDf, Map.empty))
+    assert(runAllJobs == 0, s"runAll launched $runAllJobs jobs")
+    // the three per-sample tables it collects are one shuffle each
+    // (AQE: a map-stage job, then the result job) → 6 jobs in total
+    val (_, buildJobs) = jobsDuring(ProcessingConfig.build(Map.empty, settings))
+    assert(buildJobs == 6, s"ProcessingConfig.build launched $buildJobs jobs")
   }
 
   test("numGenesVsNumUmis band keeps inliers, drops outliers") {

@@ -862,31 +862,6 @@ class DocStreamSpec extends SparkSpec {
       assert(e.getMessage.contains(part), e.getMessage)
   }
 
-  /** Job counts per micro-batch id of the query in job group `runId`. */
-  private final class BatchJobs(runId: String) extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
-    @volatile private var marks = Set.empty[String]
-    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-      if (group == runId)
-        Option(e.properties.getProperty("streaming.sql.batchId"))
-          .foreach(id => jobs.merge(id.toLong, 1, _ + _))
-      else if (group != null) marks += group
-    }
-    /** Returns once every job event posted before the call has arrived:
-      * events reach a listener in order, so a marker job's arrival
-      * drains the ones before it. */
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      val tag = s"drain-${System.nanoTime}"
-      sc.setJobGroup(tag, tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (!marks.contains(tag) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(marks.contains(tag), "listener bus did not drain")
-    }
-  }
-
   private def executedPlan(q: org.apache.spark.sql.streaming.StreamingQuery) =
     q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
       .streamingQuery.lastExecution.executedPlan
@@ -913,25 +888,23 @@ class DocStreamSpec extends SparkSpec {
     val q = DocStream.deltaDedupStream(mem.toDF(), index)
       .writeStream.format("memory").queryName("delta_jobs")
       .outputMode("append").start()
-    val listener = new BatchJobs(q.runId.toString)
-    spark.sparkContext.addSparkListener(listener)
     try {
-      for (b <- 0 until 4) {
+      val (_, starts) = jobStartsDuring(for (b <- 0 until 4) {
         mem.addData(Doc(ts(b), 10L + 2 * b, s"$base b$b"),
           Doc(ts(b), 11L + 2 * b, (0 until 40).map(i => s"n${b}x$i").mkString(" ")))
         q.processAllAvailable()
-      }
-      listener.drain()
-      val byBatch = scala.jdk.CollectionConverters.MapHasAsScala(listener.jobs).asScala.toMap
+      })
+      // job counts per micro-batch id of this query's job group
+      val byBatch = starts.map(_.properties)
+        .filter(p => p != null && p.getProperty("spark.jobGroup.id") == q.runId.toString)
+        .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+        .groupBy(_.toLong).view.mapValues(_.size).toMap
       val first = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).min
       val later = byBatch.filter(_._1 > first)
       assert(later.size >= 3, byBatch)
       assert(later.values.forall(_ == 1), s"jobs per batch id: $byBatch")
       assertNoIndexJoin(executedPlan(q))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      q.stop(); index.release()
-    }
+    } finally { q.stop(); index.release() }
   }
 
   test("default curationStream: no index join in its plan") {
