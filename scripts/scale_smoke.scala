@@ -1,6 +1,6 @@
 import org.apache.spark.sql.functions._
 import spark.implicits._
-// the doublet kNN calls the native graft_dot/graft_dist2 functions
+// the integration and embedding kNN call the native graft_dot/graft_dist2 functions
 graft.functions.GraftExtensions.register(spark)
 // 2 samples x (1500 ambient + 500 real cells), 200 genes
 def sample(name: String, off: Int) = {
@@ -16,7 +16,13 @@ def time[T](label: String)(f: => T): T = { val t0 = System.nanoTime(); val r = f
 val ed = time("emptyDrops") { val r = graft.ml.EmptyDrops.run(expr, 100, 500); r.scores.count(); r }
 println("ed rows=" + ed.scores.count() + " flagged=" + ed.flagged)
 val pre = graft.qc.CellQc.minFeatureFilter(expr, 10)
+// peak heap of the doublets step: the heap pools' peaks, reset after a GC
+val heapPools = { import java.lang.management._
+  ManagementFactory.getMemoryPoolMXBeans.toArray.map(_.asInstanceOf[MemoryPoolMXBean])
+    .filter(_.getType == MemoryType.HEAP) }
+System.gc(); heapPools.foreach(_.resetPeakUsage())
 val dbl = time("doublets") { val d = graft.ml.Doublets.scores(pre); d.count(); d }
+println(f"doublets peak heap ${heapPools.map(_.getPeakUsage.getUsed).sum / 1048576.0}%.0f MB")
 println("dbl rows=" + dbl.count())
 val cellsBase = graft.operators.MergeSamples.withCellsId(pre.select("sample","barcode").distinct())
 val red = time("integration") { graft.qc.DataIntegration.run(expr.join(cellsBase.select("sample","barcode"), Seq("sample","barcode"), "left_semi"), cellsBase, 150, 20) }

@@ -49,7 +49,8 @@ object Ingest {
 
   def run(spark: SparkSession, config: Config): Result = {
     import spark.implicits._
-    // the doublet kNN (Snn) calls the native graft_dot/graft_dist2
+    // the later stages on this session (the integration and embedding
+    // kNN, Snn) call the native graft_dot/graft_dist2
     graft.functions.GraftExtensions.register(spark)
 
     // P1: read samples, union expr + annotations

@@ -1,56 +1,79 @@
 package graft.ml
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Doublet scoring — scDblFinder semantics (`2-2_Compute-metrics_
   * doublets.r:34-36`): simulate artificial doublets by summing random
   * cell pairs, embed real + artificial together, and score each real
-  * cell by the artificial fraction of its k nearest neighbors.
+  * cell with a classifier trained to tell the artificial class apart.
   *
-  * Spark decomposition (SURVEY §2.9): pair table → grouped sum (the
-  * doublet synthesis is a join + agg on the long table), the existing
-  * LogNormalize → HVG → Scale → PCA pipeline for the embedding, and
-  * the bounded [[Snn.knnJoin]] for the kNN — every stage distributed,
-  * seeded, and deterministic (pairing hashes each barcode with the
-  * seed and pairs consecutive dense ranks; no driver materialization).
+  * The reference scores one sample at a time (`2-2:31-36`), and so does
+  * this: [[scores]] groups the `(sample, barcode, gene, count)` rows by
+  * sample in ONE Spark job, and each sample's whole chain runs inside
+  * its one task ([[featurize]], then [[twoRound]]):
+  *  1. pairing: every barcode gets the rank of Spark's
+  *     `xxhash64(barcode, lit(seed ^ sample.hashCode))` (ties by
+  *     barcode), and consecutive ranks pair up into `__art_%06d` cells
+  *     (⌊real/2⌋ of them) whose counts are the pair's sums;
+  *  2. LogNormalize (scale factor 1e4), vst HVG selection of `numHvg`
+  *     genes (the [[Loess]] mean-variance trend, [[Hvg]]'s score),
+  *     [[Scale]]'s clipped z-scores, with implicit zeros kept implicit;
+  *  3. PCA: the covariance is accumulated from each cell's nonzero
+  *     entries, [[Pca.principalAxes]] takes its top `numPcs` axes, and
+  *     every cell is projected onto them;
+  *  4. EXACT kNN over all cells ([[nearest]], a k-d tree): the k other
+  *     cells with the smallest elementwise Σ(p−q)², ties by `cells_id`
+  *     — scDblFinder's own neighbourhoods (a distributed join needed a
+  *     radius cut-off, which could leave an isolated cell without
+  *     neighbours);
+  *  5. 7 features per cell, mirroring scDblFinder's kNN-derived set:
+  *     artificial-neighbour fraction at k and at k/2, the
+  *     distance-weighted artificial fraction, the rank of the first
+  *     artificial neighbour (k + 1 when none), the mean neighbour
+  *     distance, log library size and log feature count.
+  * `cells_id` numbers real + artificial cells in binary UTF-8 barcode
+  * order — Spark's string order — and every float sum runs in that
+  * order, so a sample's scores do not depend on how its rows arrive.
   *
-  * Classification follows scDblFinder's trained-classifier design
-  * (`2-2:34-36` semantics): the artificial doublets are a LABELED
-  * positive class, so a boosted-trees model (the reference's xgboost
-  * family) is fit on ALL cells (real + artificial) over per-cell
-  * features mirroring scDblFinder's kNN-derived set: artificial-neighbor
-  * fraction at two neighborhood scales, distance-weighted artificial
-  * fraction, rank of the first artificial neighbor, mean neighbor
-  * distance (local density), log library size, log feature count. Each
-  * real cell's `doublet_scores` is the model's predicted doublet
-  * probability; `doublet` when it passes `probabilityThreshold` — the
-  * 0.5 default the reference configures
-  * (`4_Prepare_experiment.r: config.doubletScores`).
-  *
-  * Two defenses scDblFinder itself uses against the trap of this
-  * training scheme — every real doublet is LABELED real, so a flexible
-  * model fit naively memorizes the very cells the score must flag:
-  *  1. OUT-OF-FOLD round 1: real cells are split into 3 folds by
-  *     `xxhash64(barcode, seed) pmod 3` (artificial cells train every
-  *     model) and each fold is scored by the model that never saw it;
+  * Classification follows scDblFinder's trained-classifier design: the
+  * artificial doublets are a LABELED positive class, and a boosted-trees
+  * model is fit on all cells. Each real cell's `doublet_scores` is its
+  * predicted doublet probability; `doublet` when it reaches
+  * `probabilityThreshold`, the 0.5 default the reference configures
+  * (`4_Prepare_experiment.r: config.doubletScores`). Two defenses
+  * scDblFinder itself uses against this scheme's trap — every real
+  * doublet is LABELED real, so a flexible model fit naively memorizes
+  * the very cells the score must flag:
+  *  1. OUT-OF-FOLD round 1: real cells are split into 3 folds by Spark's
+  *     `xxhash64(barcode, lit(seed)) pmod 3` (artificial cells train
+  *     every model) and each fold is scored by the model that never saw
+  *     it;
   *  2. ITERATIVE EXCLUSION round 2: real cells in the top decile of
-  *     round-1 scores (an exact order statistic) are presumed doublets
-  *     and left out of the real class, then every real cell is rescored.
-  *     Without it, co-located real doublets vouch for each other across
-  *     folds.
-  *
+  *     round-1 scores are presumed doublets and left out of the real
+  *     class, then every real cell is rescored.
   * The learner is [[BoostedTrees]], a local reproduction of Spark ML's
   * `GBTClassifier` for this configuration (20 iterations, depth 3, step
-  * 0.1, 5 rows per node, 32 bins): on the same rows it gives the same
-  * probabilities up to float noise (a spec pins ≤ 1e-3 and bit equality
-  * on ≥ 90% of rows against Spark ML). The whole scheme — 4 fits and
-  * all scoring — runs in ONE Spark task per sample over the persisted
-  * feature table coalesced to one partition: one job, where the Spark
-  * ML fits launched ~64 jobs each for a few hundred rows. The price is
-  * memory: that task buffers the sample's real + artificial cells
-  * (≈ 1.5 × cells × 7 doubles + barcode), O(cells per sample) in one
-  * executor task, never on the driver.
+  * 0.1, 5 rows per node, 32 bins).
+  *
+  * Cost: the task of a sample holds O(nnz + numHvg² + cells·(numPcs +
+  * 7 + k)) values — its rows, the HVG covariance and the per-cell
+  * embedding, features and neighbours; [[taskBytes]] bounds the bytes.
+  * The task counts that bound, as its row buffer grows, against the
+  * heap Spark leaves to user code, shared by every doublet task of the
+  * executor ([[SampleMatrix]]), and refuses the sample with
+  * [[SampleTooLargeException]] before it could run the executor out of
+  * memory. The kNN's k-d tree answers a query in far fewer than the
+  * O(cells·numPcs) steps of a scan on clustered data, but its worst
+  * case is that scan, O(cells²·numPcs) for the sample. A sample uses
+  * one core. The distributed form of steps 1-5, ~78 Spark jobs per
+  * sample, is kept in the test sources as `FeaturizeReference`.
   */
 object Doublets {
 
@@ -59,194 +82,472 @@ object Doublets {
              probabilityThreshold: Double = 0.5): DataFrame = {
     val spark = expr.sparkSession
     import spark.implicits._
-    // an RDD distinct keeps its shuffle inside the collect's one job
-    // (a DataFrame distinct runs the shuffle as a job of its own)
-    val samples = expr.select("sample").as[String].rdd.distinct()
-      .collect().sorted
-    if (samples.isEmpty)
-      return Seq.empty[(String, String, Double, String)]
-        .toDF("sample", "barcode", "doublet_scores", "doublet_class")
-    // independent per-sample pipelines submitted concurrently (each is
-    // seeded by sample name — order of completion cannot change scores)
-    Concurrency.mapSamples(samples.toIndexedSeq)(s =>
-        scoreSample(expr.filter(col("sample") === s), s, k, numHvg, numPcs,
-          seed, probabilityThreshold))
-      .reduce(_ unionByName _)
-  }
-
-  private def scoreSample(expr: DataFrame, sample: String, k: Int,
-                          numHvg: Int, numPcs: Int, seed: Long,
-                          probabilityThreshold: Double): DataFrame =
-    featurize(expr, sample, k, numHvg, numPcs, seed) match {
-      case None =>
-        // a 1-cell sample cannot host a doublet: pass through as singlet
-        // (no artificial class exists, so there is nothing to train on)
-        expr.select("sample", "barcode").distinct()
-          .withColumn("doublet_scores", lit(0.0))
-          .withColumn("doublet_class", lit("singlet"))
-      case Some(feats) =>
-        classify(feats, sample, seed, probabilityThreshold)
-    }
-
-  /** The featurization stage, exposed package-private for spec-level
-    * inspection: per-cell classifier features over real + artificial
-    * cells, persisted and materialized (internal caches released).
-    * None when the sample cannot host an artificial class. */
-  private[ml] def featurize(expr: DataFrame, sample: String, k: Int,
-                            numHvg: Int, numPcs: Int,
-                            seed: Long): Option[DataFrame] = {
-    val spark = expr.sparkSession
-    import spark.implicits._
-
-    val bc = expr.select("barcode").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nReal = bc.count()
-    val nArt = nReal / 2
-    if (nArt == 0) {
-      bc.unpersist()
-      return None
-    }
-    // deterministic DISTRIBUTED pairing: a seeded hash gives every
-    // barcode a pseudo-random rank, a two-pass dense id turns the rank
-    // into a permutation index, and consecutive indices pair up — no
-    // O(cells) barcode list ever reaches the driver
-    val keyed = bc.withColumn("__k",
-      xxhash64(col("barcode"), lit(seed ^ sample.hashCode.toLong)))
-    val pairs = graft.operators.DenseId
-      .withDenseId(keyed, Seq(col("__k"), col("barcode")), "__idx")
-      .filter(col("__idx") < lit(2L * nArt))
-      .select(col("barcode"),
-        format_string("__art_%06d", shiftright(col("__idx"), 1)).as("art_barcode"))
-
-    val artExpr = expr.join(pairs, "barcode")
-      .groupBy(col("sample"), col("art_barcode").as("barcode"), col("gene"))
-      .agg(sum("count").as("count"))
-      .select("sample", "barcode", "gene", "count")
-    val combined = expr.select("sample", "barcode", "gene", "count")
-      .unionByName(artExpr)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val nCells = nReal + nArt
-    val norm = Normalize.logNormalize(combined)
-    val hvg = Hvg.selectHvg(norm, nCells, numGenes = numHvg, valueCol = "norm")
-    val ords = Hvg.ordinals(hvg)
-    // the HVG-restricted normalized table feeds both the moments pass
-    // and the scaling pass — cache it once instead of re-normalizing
-    val normHvg = norm.join(ords, "gene")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val moments = Scale.geneMoments(normHvg, nCells)
-    val scaled = Scale.scaleData(normHvg, moments)
-    val ids = graft.operators.DenseId.withDenseId(
-      combined.select("sample", "barcode").distinct(),
-      Seq(col("sample"), col("barcode")), "cells_id")
-    val zeroZ = Scale.zeroZ(moments).join(ords, "gene")
-      .select("gene_ord", "z0").collect()
-      .sortBy(_.getInt(0)).map(_.getDouble(1))
-    val pcaIn = scaled.join(ids, Seq("sample", "barcode"))
-      .select("cells_id", "gene_ord", "z")
-    val (emb, _) = Pca.fit(pcaIn, zeroZ, k = numPcs,
-      allCells = Some(ids.select("cells_id")))
-
-    val tagged = emb.join(ids, "cells_id")
-      .withColumn("is_art", col("barcode").startsWith("__art_"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bounded kNN over ALL cells (real + artificial are both featurized
-    // — the artificial class is the training signal), radius + bucket
-    // length derived from the data, skew-safe two-stage rank
-    val ranked = Snn.knnJoin(
-        tagged.select("cells_id", "pc"),
-        tagged.select("cells_id", "pc"), k, seed)
-      .join(tagged.select(col("cells_id").as("nid"),
-        col("is_art").as("n_art")), "nid")
-    // LEFT join from the full cell set: an isolated cell whose kth-NN
-    // lies beyond the bounded radius has NO ranked rows — it must still
-    // emerge, with artificial-neighbor fraction 0. All neighborhood
-    // features come from the ONE ranked table — no extra shuffles.
-    val kInner = math.max(1, k / 2)
-    val artFrac = ranked
-      .groupBy(col("cid").as("cells_id"))
-      .agg(
-        (count(when(col("n_art"), 1)).cast("double") / count(lit(1)))
-          .as("art_frac"),
-        (count(when(col("n_art") && col("rk") <= kInner, 1)).cast("double") /
-          greatest(count(when(col("rk") <= kInner, 1)), lit(1L)).cast("double"))
-          .as("art_frac_inner"),
-        (sum(when(col("n_art"), lit(1.0) / (lit(1.0) + col("dist"))))
-          .cast("double") /
-          sum(lit(1.0) / (lit(1.0) + col("dist"))))
-          .as("w_art_frac"),
-        min(when(col("n_art"), col("rk"))).as("first_art_rk"),
-        avg(col("dist")).as("mean_dist"))
-    // sentinel for cells with NO neighbor inside the bounded radius:
-    // the largest observed neighbor distance (the radius bound), NOT
-    // 0.0 — zero reads as maximal local density, the opposite of the
-    // truth for exactly the isolated cells this feature describes
-    val distCap = ranked.agg(
-      coalesce(max(col("dist")), lit(1.0)).as("__dist_cap"))
-    // per-cell library features from the combined matrix
-    val libs = combined
-      .groupBy("sample", "barcode")
-      .agg(sum("count").as("lib"), count(lit(1)).as("nfeat"))
-      .join(ids, Seq("sample", "barcode"))
-      .select(col("cells_id"), log1p(col("lib")).as("log_lib"),
-        log1p(col("nfeat")).as("log_nfeat"))
-    val feats = tagged
-      .join(artFrac, Seq("cells_id"), "left")
-      .withColumn("art_frac", coalesce(col("art_frac"), lit(0.0)))
-      .withColumn("art_frac_inner", coalesce(col("art_frac_inner"), lit(0.0)))
-      .withColumn("w_art_frac", coalesce(col("w_art_frac"), lit(0.0)))
-      // no artificial neighbor within k (or no neighbors at all) →
-      // sentinel rank one past the last slot, the bounded null-free form
-      .withColumn("first_art_rk",
-        coalesce(col("first_art_rk"), lit(k + 1)).cast("double"))
-      .crossJoin(broadcast(distCap))
-      .withColumn("mean_dist", coalesce(col("mean_dist"), col("__dist_cap")))
-      .drop("__dist_cap")
-      .join(libs, "cells_id")
-      .withColumn("features",
-        array(col("art_frac"), col("art_frac_inner"), col("w_art_frac"),
-          col("first_art_rk"), col("mean_dist"),
-          col("log_lib"), col("log_nfeat")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    feats.count()
-    bc.unpersist(); combined.unpersist(); normHvg.unpersist()
-    tagged.unpersist()
-    Some(feats)
-  }
-
-  /** Train + score from a materialized feature table in ONE Spark job:
-    * the table is coalesced to one partition and the whole two-round
-    * scheme runs in that task over rows sorted by `cells_id`, so float
-    * sums never depend on arrival order. Releases the feature table. */
-  private[ml] def classify(feats: DataFrame, sample: String, seed: Long,
-                           probabilityThreshold: Double): DataFrame = {
-    val spark = feats.sparkSession
-    import spark.implicits._
-    // RDD persist + count: ONE job. A persisted DataFrame would cost two
-    // (adaptive execution materializes a cache as its own stage job)
-    val scored = feats
-      .select(col("cells_id"), col("barcode"), col("is_art"),
-        when(col("is_art"), lit(-1)).otherwise(
-          pmod(xxhash64(col("barcode"), lit(seed)), lit(NumFolds)).cast("int")),
-        col("features"))
-      .as[Cell].rdd.coalesce(1)
-      .mapPartitions(it => twoRound(it.toArray.sortBy(_._1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sc = spark.sparkContext
+    val sizing = Sizing(k, numHvg, numPcs,
+      sc.getConf.getDouble("spark.memory.fraction", 0.6))
+    // RDD persist + count: ONE job, the grouping shuffle included (a
+    // persisted DataFrame would cost more: adaptive execution runs each
+    // shuffle and the cache as jobs of their own)
+    val scored = expr
+      .select(col("sample"), col("barcode"), col("gene"), col("count").cast("long"))
+      .as[(String, String, String, Long)].rdd
+      .map(row => (row._1, row))
+      .combineByKey[SampleMatrix](row => new SampleMatrix(row._1, sizing).add(row),
+        _ add _, _ merge _, new HashPartitioner(sc.defaultParallelism))
+      .flatMap { case (_, m) => scoreSample(m, k, numHvg, numPcs, seed, probabilityThreshold) }
+      .persist(StorageLevel.MEMORY_AND_DISK)
     scored.count()
-    feats.unpersist()
-    scored.toDF("barcode", "doublet_scores")
-      .select(lit(sample).as("sample"), col("barcode"), col("doublet_scores"),
-        when(col("doublet_scores") >= probabilityThreshold, "doublet")
-          .otherwise("singlet").as("doublet_class"))
+    scored.toDF("sample", "barcode", "doublet_scores", "doublet_class")
   }
+
+  private def scoreSample(m: SampleMatrix, k: Int, numHvg: Int, numPcs: Int,
+                          seed: Long, probabilityThreshold: Double
+                         ): Iterator[(String, String, Double, String)] =
+    featurize(m, k, numHvg, numPcs, seed) match {
+      // a 1-cell sample cannot host a doublet: pass through as singlet
+      // (no artificial class exists, so there is nothing to train on)
+      case None => m.barcodes.iterator.map(b => (m.sample, b, 0.0, "singlet"))
+      case Some(cells) => twoRound(cells).map { case (b, p) =>
+        (m.sample, b, p, if (p >= probabilityThreshold) "doublet" else "singlet")
+      }
+    }
+
+  // ---- the per-sample kernel -------------------------------------------
+
+  /** The kernel's parameters, and the share of the heap Spark's own
+    * memory manager claims (`spark.memory.fraction`). */
+  private[ml] final case class Sizing(k: Int, numHvg: Int, numPcs: Int,
+                                      memoryFraction: Double) {
+    /** The heap Spark leaves to user code on this JVM: (heap − 300 MiB,
+      * Spark's reserved memory) · (1 − `spark.memory.fraction`). */
+    def budget: Long =
+      ((Runtime.getRuntime.maxMemory - 300L * 1024 * 1024) * (1 - memoryFraction)).toLong
+  }
+
+  /** Bytes the running doublet tasks of this JVM have counted. */
+  private[ml] val heldBytes = new AtomicLong
+
+  /** One sample's `(barcode, gene, count)` rows, barcodes and genes
+    * interned as they arrive (16 bytes per row). Row order is free:
+    * [[drain]] fixes every order the kernel sums in.
+    *
+    * Inside a task, each growth of the row buffer counts the
+    * [[taskBytes]] of the sample at the new capacity against the
+    * [[Sizing.budget]], less what the executor's other doublet tasks
+    * have counted, and [[checkMemory]] refuses the sample past it; the
+    * task gives its count back when it ends. */
+  private[ml] final class SampleMatrix(val sample: String, sizing: Sizing)
+    extends Serializable {
+    private val barcodeIds = scala.collection.mutable.HashMap.empty[String, Int]
+    private val geneIds = scala.collection.mutable.HashMap.empty[String, Int]
+    private val barcodeNames = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val geneNames = scala.collection.mutable.ArrayBuffer.empty[String]
+    private var cellOf = new Array[Int](16)
+    private var geneOf = new Array[Int](16)
+    private var countOf = new Array[Long](16)
+    private var n = 0
+    // the bytes this matrix has counted in `heldBytes` (a copy shipped
+    // through the shuffle starts from none)
+    @transient private var counted = 0L
+    @transient private var releasing = false
+
+    def cells: Int = barcodeNames.length
+    def barcodes: Seq[String] = barcodeNames.toSeq
+
+    def add(row: (String, String, String, Long)): SampleMatrix = {
+      if (n == cellOf.length) grow(math.max(16, 2 * n))
+      append(row._2, row._3, row._4)
+      this
+    }
+
+    def merge(o: SampleMatrix): SampleMatrix = {
+      if (n + o.n > cellOf.length) grow(math.max(n + o.n, cellOf.length + cellOf.length / 2))
+      var i = 0
+      while (i < o.n) {
+        append(o.barcodeNames(o.cellOf(i)), o.geneNames(o.geneOf(i)), o.countOf(i))
+        i += 1
+      }
+      this
+    }
+
+    private def append(barcode: String, gene: String, count: Long): Unit = {
+      cellOf(n) = barcodeIds.getOrElseUpdate(barcode,
+        { barcodeNames += barcode; barcodeNames.length - 1 })
+      geneOf(n) = geneIds.getOrElseUpdate(gene,
+        { geneNames += gene; geneNames.length - 1 })
+      countOf(n) = count
+      n += 1
+    }
+
+    private def grow(capacity: Int): Unit = {
+      reserve(capacity)
+      cellOf = java.util.Arrays.copyOf(cellOf, capacity)
+      geneOf = java.util.Arrays.copyOf(geneOf, capacity)
+      countOf = java.util.Arrays.copyOf(countOf, capacity)
+    }
+
+    private def reserve(rows: Long): Unit = {
+      val need = taskBytes(cells, geneNames.length, rows, sizing.numHvg, sizing.numPcs, sizing.k)
+      val others = Option(TaskContext.get()).fold(0L) { ctx =>
+        if (!releasing) {
+          ctx.addTaskCompletionListener[Unit] { _ => heldBytes.addAndGet(-counted); counted = 0 }
+          releasing = true
+        }
+        val held = heldBytes.addAndGet(need - counted)
+        counted = need
+        held - need
+      }
+      checkMemory(sample, cells, rows, need, math.max(0L, sizing.budget - others))
+    }
+
+    /** Barcodes in binary order and, per cell, its entries as (gene rank
+      * in binary gene order, count), sorted by (gene, count). Counts the
+      * sample's exact size first, and frees the row buffer. */
+    def drain(): (Array[String], Array[Array[Int]], Array[Array[Long]]) = {
+      reserve(n)
+      val cellRank = ranks(barcodeNames.toArray)
+      val geneRank = ranks(geneNames.toArray)
+      val sizes = new Array[Int](cells)
+      var i = 0
+      while (i < n) { sizes(cellRank(cellOf(i))) += 1; i += 1 }
+      val genes = sizes.map(new Array[Int](_))
+      val counts = sizes.map(new Array[Long](_))
+      val fill = new Array[Int](cells)
+      i = 0
+      while (i < n) {
+        val c = cellRank(cellOf(i))
+        genes(c)(fill(c)) = geneRank(geneOf(i)); counts(c)(fill(c)) = countOf(i)
+        fill(c) += 1; i += 1
+      }
+      cellOf = Array.emptyIntArray; geneOf = Array.emptyIntArray
+      countOf = Array.emptyLongArray; n = 0
+      barcodeIds.clear(); geneIds.clear()
+      for (c <- 0 until cells) {
+        val order = genes(c).indices.sortBy(e => (genes(c)(e), counts(c)(e)))
+        genes(c) = order.map(genes(c)).toArray
+        counts(c) = order.map(counts(c)).toArray
+      }
+      val names = new Array[String](cells)
+      barcodeNames.indices.foreach(b => names(cellRank(b)) = barcodeNames(b))
+      (names, genes, counts)
+    }
+  }
+
+  /** The position of each string in binary UTF-8 order. */
+  private def ranks(xs: Array[String]): Array[Int] = {
+    val utf8 = xs.map(UTF8String.fromString)
+    val order = xs.indices.sortWith((a, b) => utf8(a).binaryCompare(utf8(b)) < 0)
+    val rank = new Array[Int](xs.length)
+    order.zipWithIndex.foreach { case (x, r) => rank(x) = r }
+    rank
+  }
+
+  /** Spark's `xxhash64(s, lit(v))`: `v` is hashed as a second column,
+    * chained from the string's hash under Spark's seed 42. */
+  private[ml] def xxhash64(s: String, v: Long): Long =
+    XXH64.hashLong(v, XXH64.hashUTF8String(UTF8String.fromString(s), 42L))
+
+  /** The sum of two cells' entries (genes ascending, one entry each). */
+  private def pairSum(ga: Array[Int], ca: Array[Long], gb: Array[Int],
+                      cb: Array[Long]): (Array[Int], Array[Long]) = {
+    val genes = new Array[Int](ga.length + gb.length)
+    val counts = new Array[Long](ga.length + gb.length)
+    var (a, b, o) = (0, 0, -1)
+    while (a < ga.length || b < gb.length) {
+      val fromA = b == gb.length || (a < ga.length && ga(a) <= gb(b))
+      val (g, c) = if (fromA) { a += 1; (ga(a - 1), ca(a - 1)) } else { b += 1; (gb(b - 1), cb(b - 1)) }
+      if (o >= 0 && genes(o) == g) counts(o) += c
+      else { o += 1; genes(o) = g; counts(o) = c }
+    }
+    (java.util.Arrays.copyOf(genes, o + 1), java.util.Arrays.copyOf(counts, o + 1))
+  }
+
+  /** The sample's real + artificial cells in `cells_id` order with
+    * their 7 classifier features. None when the sample cannot host an
+    * artificial class (one cell). Drains `m`. */
+  private[ml] def featurize(m: SampleMatrix, k: Int, numHvg: Int, numPcs: Int,
+                            seed: Long): Option[Array[Cell]] = {
+    val (realBc, realGenes, realCounts) = m.drain()
+    val nReal = realBc.length
+    val nArt = nReal / 2
+    if (nArt == 0) return None
+
+    // pairing: hash rank, ties by barcode (cells are in barcode order)
+    val key = realBc.map(xxhash64(_, seed ^ m.sample.hashCode.toLong))
+    val perm = (0 until nReal).sortBy(c => (key(c), c))
+    val artCells = Array.tabulate(nArt) { j =>
+      val (a, b) = (perm(2 * j), perm(2 * j + 1))
+      pairSum(realGenes(a), realCounts(a), realGenes(b), realCounts(b))
+    }
+    val n = nReal + nArt
+    val ids = ranks(realBc ++ Array.tabulate(nArt)(j =>
+      String.format(java.util.Locale.ROOT, "__art_%06d", Int.box(j))))
+    val barcode = new Array[String](n)
+    val genes = new Array[Array[Int]](n)
+    val counts = new Array[Array[Long]](n)
+    for (c <- 0 until nReal) {
+      barcode(ids(c)) = realBc(c); genes(ids(c)) = realGenes(c); counts(ids(c)) = realCounts(c)
+    }
+    for (j <- 0 until nArt) {
+      val i = ids(nReal + j)
+      barcode(i) = String.format(java.util.Locale.ROOT, "__art_%06d", Int.box(j))
+      genes(i) = artCells(j)._1; counts(i) = artCells(j)._2
+    }
+    val lib = counts.map(_.sum)
+    // LogNormalize; each cell's counts are dropped once normalized
+    val norm = Array.tabulate(n) { i =>
+      val x = counts(i).map(c => math.log1p(c.toDouble / lib(i).toDouble * 1e4))
+      counts(i) = null
+      x
+    }
+
+    val emb = embed(genes, norm, numHvg, numPcs)
+    val (nbr, dist) = nearest(emb, k)
+    val isArt = barcode.map(_.startsWith("__art_"))
+    val kInner = math.max(1, k / 2)
+    Some(Array.tabulate(n) { i =>
+      val r = nbr(i).length
+      var arts = 0; var innerArts = 0; var firstArt = k + 1
+      var w = 0.0; var wArt = 0.0; var sumDist = 0.0
+      var rk = 1
+      while (rk <= r) {
+        val d = dist(i)(rk - 1)
+        w += 1.0 / (1.0 + d); sumDist += d
+        if (isArt(nbr(i)(rk - 1))) {
+          arts += 1
+          if (rk <= kInner) innerArts += 1
+          if (firstArt > k) firstArt = rk
+          wArt += 1.0 / (1.0 + d)
+        }
+        rk += 1
+      }
+      val features = Array(
+        arts.toDouble / r,
+        innerArts.toDouble / math.max(math.min(r, kInner), 1).toDouble,
+        if (arts == 0) 0.0 else wArt / w,
+        firstArt.toDouble,
+        sumDist / r,
+        math.log1p(lib(i).toDouble),
+        math.log1p(genes(i).length.toDouble))
+      val fold = if (isArt(i)) -1 else java.lang.Math.floorMod(xxhash64(barcode(i), seed), NumFolds)
+      (i.toLong, barcode(i), isArt(i), fold, features)
+    })
+  }
+
+  /** The PCA embedding of the normalized cells (entries `(gene, norm)`
+    * per cell, genes numbered in binary order), one row per cell:
+    * vst HVG selection, clipped z-scores with implicit zeros at the
+    * gene's z0, and the projection onto the top `numPcs` axes. */
+  private def embed(genes: Array[Array[Int]], norm: Array[Array[Double]],
+                    numHvg: Int, numPcs: Int): Array[Array[Double]] = {
+    val n = genes.length
+    val nd = n.toDouble
+    val numGenes = genes.iterator.flatMap(_.iterator).maxOption.fold(0)(_ + 1)
+    val s = new Array[Double](numGenes)
+    val ss = new Array[Double](numGenes)
+    val nz = new Array[Long](numGenes)
+    for (i <- 0 until n; e <- genes(i).indices) {
+      val (g, x) = (genes(i)(e), norm(i)(e))
+      s(g) += x; ss(g) += x * x; nz(g) += 1
+    }
+    def variance(g: Int) = (ss(g) - s(g) * s(g) / nd) / (nd - 1)
+    // vst: loess of log10(variance) ~ log10(mean) over the genes that vary
+    val varying = (0 until numGenes).filter(variance(_) > 0).toArray
+    val expSd = new Array[Double](numGenes)
+    if (varying.nonEmpty) {
+      val fitted = Loess.fit(varying.map(g => math.log10(s(g) / nd)),
+        varying.map(g => math.log10(variance(g))), 0.3)
+      varying.indices.foreach(v => expSd(varying(v)) = Hvg.expectedSd(fitted(v)))
+    }
+    val clipMax = Hvg.clipMax(n)
+    val znnz = new Array[Double](numGenes)
+    for (i <- 0 until n; e <- genes(i).indices) {
+      val g = genes(i)(e)
+      if (expSd(g) > 0) {
+        val z = Scale.z(norm(i)(e), s(g) / nd, expSd(g), clipMax)
+        znnz(g) += z * z
+      }
+    }
+    val hvg = varying.sortBy { g =>
+      (-Hvg.standardizedVariance(znnz(g), nz(g), n, s(g) / nd, expSd(g)), g)
+    }.take(numHvg)
+    val d = hvg.length
+    val ord = Array.fill(numGenes)(-1)
+    hvg.indices.foreach(o => ord(hvg(o)) = o)
+    // ScaleData: z clipped at 10; an implicit zero sits at z0
+    val sigma = hvg.map(g => Scale.sigma(variance(g)))
+    val z0 = hvg.indices.map(o => Scale.z(0.0, s(hvg(o)) / nd, sigma(o), Scale.ScaleMax)).toArray
+    // each cell's HVG entries as (ord, z − z0), ords ascending and the
+    // last of a repeated gene kept: the dense row is z0 + δ
+    val deltas = Array.tabulate(n) { i =>
+      val es = genes(i).indices.filter(e => ord(genes(i)(e)) >= 0).map { e =>
+        val o = ord(genes(i)(e))
+        o -> (Scale.z(norm(i)(e), s(hvg(o)) / nd, sigma(o), Scale.ScaleMax) - z0(o))
+      }.toMap.toArray.sortBy(_._1)
+      (es.map(_._1), es.map(_._2))
+    }
+    if (d == 0) return Array.fill(n)(Array.empty[Double])
+    // covariance of the dense rows: (Σ δδᵀ − n·δ̄δ̄ᵀ) / (n − 1)
+    val mean = new Array[Double](d)
+    val cov = new Array[Double](d * d)
+    for ((os, ds) <- deltas) {
+      var a = 0
+      while (a < os.length) {
+        mean(os(a)) += ds(a)
+        var b = a
+        while (b < os.length) { cov(os(a) * d + os(b)) += ds(a) * ds(b); b += 1 }
+        a += 1
+      }
+    }
+    for (a <- 0 until d) mean(a) /= nd
+    for (a <- 0 until d; b <- a until d) {
+      val c = (cov(a * d + b) - nd * mean(a) * mean(b)) / (nd - 1)
+      cov(a * d + b) = c; cov(b * d + a) = c
+    }
+    val (axes, _) = Pca.principalAxes(new breeze.linalg.DenseMatrix(d, d, cov), numPcs)
+    val kEff = axes.length / d
+    val base = Array.tabulate(kEff)(j => (0 until d).map(o => z0(o) * axes(j * d + o)).sum)
+    deltas.map { case (os, ds) =>
+      Array.tabulate(kEff) { j =>
+        var x = base(j); var e = 0
+        while (e < os.length) { x += ds(e) * axes(j * d + os(e)); e += 1 }
+        x
+      }
+    }
+  }
+
+  /** Leaves of the kNN's k-d tree hold at most this many rows. */
+  private val LeafRows = 16
+
+  /** Exact kNN: for each row, the (up to) k other rows with the
+    * smallest Σ(p−q)² (summed in dimension order), ties to the lower
+    * row; returns their rows, nearest first, and distances sqrt(Σ).
+    *
+    * A k-d tree (leaves of ≤ [[LeafRows]] rows, each node split at the
+    * median of its box's widest dimension) is searched near side first.
+    * A node is skipped only when the smallest sum any row in its box
+    * can reach — taken term by term in the same order, so it never
+    * exceeds a row's own sum in floating point — is above the current
+    * k-th, so the answer is the scan's, bit for bit. O(rows·k) memory;
+    * the time is far below the scan's O(rows²·dim) on clustered rows,
+    * and equals it at worst. */
+  private[ml] def nearest(emb: Array[Array[Double]],
+                          k: Int): (Array[Array[Int]], Array[Array[Double]]) = {
+    val n = emb.length
+    val kk = math.max(0, math.min(k, n - 1))
+    val dim = if (n == 0) 0 else emb(0).length
+    // the tree: node t covers rows(begin(t) until end(t)), its box is
+    // lo/hi(t*dim + ·), and its children are left/right(t) (−1: leaf)
+    val rows = Array.range(0, n)
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    val boxes = scala.collection.mutable.ArrayBuffer.empty[(Array[Double], Array[Double])]
+    val children = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    def build(a: Int, b: Int): Int = {
+      val t = nodes.length
+      val (mn, mx) = (Array.fill(dim)(Double.PositiveInfinity), Array.fill(dim)(Double.NegativeInfinity))
+      for (r <- a until b; c <- 0 until dim) {
+        val x = emb(rows(r))(c)
+        mn(c) = math.min(mn(c), x); mx(c) = math.max(mx(c), x)
+      }
+      nodes += ((a, b)); boxes += ((mn, mx)); children += ((-1, -1))
+      val widest = (0 until dim).maxByOption(c => mx(c) - mn(c))
+      if (b - a > LeafRows && widest.exists(c => mx(c) > mn(c))) {
+        val c = widest.get
+        val byCoord = rows.slice(a, b).sortBy(r => emb(r)(c))(Ordering.Double.TotalOrdering)
+        System.arraycopy(byCoord, 0, rows, a, b - a)
+        val mid = (a + b) >>> 1
+        val l = build(a, mid)
+        children(t) = (l, build(mid, b))
+      }
+      t
+    }
+    if (n > 0) build(0, n)
+    val begin = nodes.map(_._1).toArray
+    val end = nodes.map(_._2).toArray
+    val left = children.map(_._1).toArray
+    val right = children.map(_._2).toArray
+    val lo = boxes.flatMap(_._1).toArray
+    val hi = boxes.flatMap(_._2).toArray
+
+    val ids = Array.fill(n)(new Array[Int](kk))
+    val sums = Array.fill(n)(new Array[Double](kk))
+    for (i <- 0 until n if kk > 0) {
+      val (id, best, p) = (ids(i), sums(i), emb(i))
+      var len = 0
+      def offer(j: Int): Unit = {
+        val q = emb(j)
+        var s = 0.0; var c = 0
+        while (c < dim) { val x = p(c) - q(c); s += x * x; c += 1 }
+        if (len < kk || s < best(len - 1) || (s == best(len - 1) && j < id(len - 1))) {
+          var at = math.min(len, kk - 1)
+          while (at > 0 && (best(at - 1) > s || (best(at - 1) == s && id(at - 1) > j))) {
+            best(at) = best(at - 1); id(at) = id(at - 1); at -= 1
+          }
+          best(at) = s; id(at) = j
+          if (len < kk) len += 1
+        }
+      }
+      def bound(t: Int): Double = {
+        var s = 0.0; var c = 0
+        while (c < dim) {
+          val (x, l, h) = (p(c), lo(t * dim + c), hi(t * dim + c))
+          val gap = if (x < l) l - x else if (x > h) x - h else 0.0
+          s += gap * gap; c += 1
+        }
+        s
+      }
+      def visit(t: Int, bt: Double): Unit =
+        if (len < kk || bt <= best(kk - 1)) {
+          if (left(t) < 0) {
+            var r = begin(t)
+            while (r < end(t)) { if (rows(r) != i) offer(rows(r)); r += 1 }
+          } else {
+            val (bl, br) = (bound(left(t)), bound(right(t)))
+            if (bl <= br) { visit(left(t), bl); visit(right(t), br) }
+            else { visit(right(t), br); visit(left(t), bl) }
+          }
+        }
+      visit(0, 0.0)
+    }
+    (ids, sums.map(_.map(math.sqrt)))
+  }
+
+  /** A task past this many bytes is refused: the sample is too large
+    * to score in one task. */
+  final class SampleTooLargeException(msg: String) extends IllegalStateException(msg)
+
+  /** An upper bound on the bytes one sample's task holds: 100 per
+    * interned barcode or gene name; per row, 24 in the row buffer (16,
+    * and the old half of a doubling copy), 12 sorted, at most 12 more
+    * for the artificial cells' entries and 24 for the scaled HVG
+    * entries; three numHvg² matrices (the covariance and its
+    * eigen-decomposition); and per real or artificial cell 128 of array
+    * headers and tree nodes plus its embedding, features and
+    * neighbours' rows and distances. */
+  private[ml] def taskBytes(cells: Long, genes: Long, nnz: Long, numHvg: Int,
+                            numPcs: Int, k: Int): Long =
+    100 * (cells + genes) + 72 * nnz + 24L * numHvg * numHvg +
+      (cells + cells / 2) * (128 + 8L * (numPcs + 7 + 2 * k))
+
+  /** Throw [[SampleTooLargeException]] when scoring `sample` (`cells`
+    * cells, `nnz` rows), estimated at `estimate` bytes, would hold more
+    * than `limitBytes`. */
+  private[ml] def checkMemory(sample: String, cells: Long, nnz: Long, estimate: Long,
+                              limitBytes: Long): Unit =
+    if (estimate > limitBytes)
+      throw new SampleTooLargeException(
+        s"doublet scoring of sample $sample ($cells cells, $nnz nonzeros) needs " +
+          s"~$estimate bytes in one task, over its $limitBytes-byte share of the heap")
+
+  // ---- the classifier --------------------------------------------------
 
   /** (cells_id, barcode, is_art, fold, features); fold −1 = artificial. */
-  private type Cell = (Long, String, Boolean, Int, Array[Double])
+  private[ml] type Cell = (Long, String, Boolean, Int, Array[Double])
   private val NumFolds = 3
 
   /** The scDblFinder scheme over one sample's cells, sorted by
     * `cells_id`; yields (barcode, doublet probability) per real cell. */
-  private def twoRound(cells: Array[Cell]): Iterator[(String, Double)] = {
+  private[ml] def twoRound(cells: Array[Cell]): Iterator[(String, Double)] = {
     def fit(train: Array[Cell]) = BoostedTrees.fit(
       train.map(_._5), train.map(c => if (c._3) 1.0 else 0.0))
     val isReal = cells.map(!_._3)

@@ -29,6 +29,24 @@ object Hvg {
         col("nnz"))
   }
 
+  /** vst's clip of a standardized value: sqrt(nCells), one-sided
+    * (counts are non-negative). */
+  def clipMax(nCells: Long): Double = math.sqrt(nCells.toDouble)
+
+  /** A gene's expected sd at its loess-fitted log10 variance. */
+  def expectedSd(fittedLog10Variance: Double): Double =
+    math.sqrt(math.pow(10, fittedLog10Variance))
+
+  /** vst standardized variance of one gene over `nCells` cells, from
+    * the sum of its nonzero entries' clipped squared z-scores:
+    * [Σ z_clip² + (nCells − nnz)·z0²]/(nCells − 1), where z0 = −mean/sd
+    * is the standardized implicit zero. */
+  def standardizedVariance(zSqNonzero: Double, nnz: Long, nCells: Long,
+                           mean: Double, expSd: Double): Double = {
+    val z0 = -mean / expSd
+    (zSqNonzero + (nCells - nnz).toDouble * z0 * z0) / (nCells - 1).toDouble
+  }
+
   /** vst standardized variance + top-N cut. Steps (Seurat semantics):
     *  1. per-gene raw mean/variance (zero-corrected);
     *  2. loess of log10(var) ~ log10(mean) over genes with var > 0
@@ -49,25 +67,22 @@ object Hvg {
     val xs = pts.map(r => math.log10(r.getDouble(1)))
     val ys = pts.map(r => math.log10(r.getDouble(2)))
     val fitted = Loess.fit(xs, ys, span)
-    val sdRows = pts.indices.map { i =>
-      (pts(i).getString(0), math.sqrt(math.pow(10, fitted(i))))
-    }
+    val sdRows = pts.indices.map(i => (pts(i).getString(0), expectedSd(fitted(i))))
     import spark.implicits._
     val expected = sdRows.toDF("gene", "exp_sd")
-    val clipMax = math.sqrt(nCells.toDouble)
     val x = col(valueCol).cast("double")
-    val z = least((x - col("mean")) / col("exp_sd"), lit(clipMax))
+    val z = least((x - col("mean")) / col("exp_sd"), lit(clipMax(nCells)))
     val stdParts = expr
       .join(broadcast(stats.select("gene", "mean").join(expected, "gene")), "gene")
       .groupBy("gene")
       .agg(sum(z * z).as("__znnz"), count(lit(1)).as("__nnz"))
+    val stdVariance = udf((zSq: Double, nnz: Long, mean: Double, sd: Double) =>
+      standardizedVariance(zSq, nnz, nCells, mean, sd))
     val withStd = stats
       .join(broadcast(expected), "gene")
       .join(stdParts, "gene")
-      .withColumn("__z0", -col("mean") / col("exp_sd"))
       .withColumn("variance_standardized",
-        (col("__znnz") + (lit(nCells) - col("__nnz")) * col("__z0") * col("__z0"))
-          / (nCells - 1))
+        stdVariance(col("__znnz"), col("__nnz"), col("mean"), col("exp_sd")))
     // top-N via orderBy+limit = TakeOrderedAndProject (per-partition
     // heaps, no global-order shuffle), NOT a global rank window (which
     // would drag every gene into one WindowExec partition). The re-rank

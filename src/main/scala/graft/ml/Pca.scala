@@ -25,8 +25,6 @@ object Pca {
   def fit(scaled: DataFrame, zeroZByOrd: Array[Double], k: Int = 50,
           allCells: Option[DataFrame] = None): (DataFrame, Array[Double]) = {
     val spark = scaled.sparkSession
-    val nGenes = zeroZByOrd.length
-    val kEff = math.min(k, nGenes)
     val bz = spark.sparkContext.broadcast(zeroZByOrd)
     val grouped = scaled
       .select("cells_id", "gene_ord", "z").rdd
@@ -47,26 +45,41 @@ object Pca {
     }
     val mat = new IndexedRowMatrix(rows)
     mat.rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // covariance is computed distributed (MLlib Gramian); the d×d
-    // eigen-decomposition runs on the driver via eigSym (LAPACK dsyevd)
-    // rather than RowMatrix's breeze svd (dgesdd): divide-and-conquer
-    // SVD fails to converge on covariances with tightly repeated
-    // eigenvalues — the domain soak's 20k-cell synthetic sample, whose
-    // duplicated expression patterns produce exactly that spectrum,
-    // killed the doublets stage through this path — while the
-    // symmetric-tridiagonal eigensolver is robust there, and an
-    // eigen-decomposition is the mathematically exact operation for a
-    // symmetric PSD covariance anyway
+    // covariance is computed distributed (MLlib Gramian); only the d×d
+    // eigen-decomposition runs on the driver
     val covMat = mat.toRowMatrix().computeCovariance()
     val d = covMat.numCols
-    val bm = new breeze.linalg.DenseMatrix(d, d, covMat.toArray)
-    val es = breeze.linalg.eigSym(bm)
-    val top = (0 until d).sortBy(i => (-es.eigenvalues(i), i)).take(kEff)
-    val pcArr = new Array[Double](d * kEff)
+    val (axes, varExp) = principalAxes(
+      new breeze.linalg.DenseMatrix(d, d, covMat.toArray), k)
+    val pc = new org.apache.spark.mllib.linalg.DenseMatrix(d, axes.length / d, axes)
+    val emb = mat.multiply(pc)
+    import spark.implicits._
+    val embDf = emb.rows
+      .map(r => (r.index, r.vector.toArray))
+      .toDF("cells_id", "pc")
+    (embDf, varExp)
+  }
+
+  /** The top `min(k, d)` principal axes of a d×d covariance, as a
+    * column-major d×kEff array, and each axis's share of the trace.
+    *
+    * The eigen-decomposition is `eigSym` (LAPACK dsyevd), not an SVD:
+    * divide-and-conquer SVD (dgesdd, RowMatrix's own PCA route) fails
+    * to converge on covariances with tightly repeated eigenvalues —
+    * the domain soak's 20k-cell synthetic sample, whose duplicated
+    * expression patterns produce exactly that spectrum, killed the
+    * doublets stage that way — while the symmetric eigensolver is
+    * robust there, and exact for a symmetric PSD matrix anyway. Axes
+    * come in `(−λ, index)` order, and each is signed so that its
+    * largest-|component| entry (the first on ties) is positive, so
+    * embeddings do not depend on LAPACK's arbitrary orientation. */
+  private[ml] def principalAxes(cov: breeze.linalg.DenseMatrix[Double],
+                                k: Int): (Array[Double], Array[Double]) = {
+    val d = cov.rows
+    val es = breeze.linalg.eigSym(cov)
+    val top = (0 until d).sortBy(i => (-es.eigenvalues(i), i)).take(math.min(k, d))
+    val axes = new Array[Double](d * top.length)
     top.zipWithIndex.foreach { case (c, j) =>
-      // deterministic sign: the largest-|component| entry (first on
-      // ties) is positive, so embeddings don't depend on LAPACK's
-      // arbitrary eigenvector orientation
       var mi = 0
       var i = 1
       while (i < d) {
@@ -75,18 +88,12 @@ object Pca {
       }
       val s = if (es.eigenvectors(mi, c) < 0) -1.0 else 1.0
       i = 0
-      while (i < d) { pcArr(j * d + i) = s * es.eigenvectors(i, c); i += 1 }
+      while (i < d) { axes(j * d + i) = s * es.eigenvectors(i, c); i += 1 }
     }
-    val pc = new org.apache.spark.mllib.linalg.DenseMatrix(d, kEff, pcArr)
-    val trace = (0 until d).map(i => bm(i, i)).sum
+    val trace = (0 until d).map(i => cov(i, i)).sum
     val varExp = top.map(c =>
       math.max(0.0, es.eigenvalues(c)) / math.max(trace, Double.MinPositiveValue))
       .toArray
-    val emb = mat.multiply(pc)
-    import spark.implicits._
-    val embDf = emb.rows
-      .map(r => (r.index, r.vector.toArray))
-      .toDF("cells_id", "pc")
-    (embDf, varExp.toArray)
+    (axes, varExp)
   }
 }

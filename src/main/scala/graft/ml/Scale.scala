@@ -14,26 +14,37 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Per-gene (μ, σ) of the normalized value over ALL cells, with the
-    * zero-inclusive correction. Genes with σ = 0 get σ = 1 (their z is
-    * identically 0, matching Seurat's guard). */
+  /** Seurat's `scale.max`: z-scores are clipped at +10. */
+  val ScaleMax = 10.0
+
+  /** A gene's σ from its variance over all cells; 1 for a constant (or
+    * single-cell) gene, whose z is then identically 0 (Seurat's
+    * guard). */
+  def sigma(variance: Double): Double = {
+    val sd = math.sqrt(math.max(variance, 0.0))
+    if (sd > 0) sd else 1.0
+  }
+
+  /** The z-score of a value, clipped at `clipMax` (one-sided). */
+  def z(x: Double, mu: Double, sigma: Double, clipMax: Double): Double =
+    math.min((x - mu) / sigma, clipMax)
+
+  /** Per-gene (μ, [[sigma]]) of the normalized value over ALL cells,
+    * with the zero-inclusive correction. */
   def geneMoments(norm: DataFrame, nCells: Long, valueCol: String = "norm"): DataFrame = {
     val x = col(valueCol).cast("double")
+    val sigmaOf = udf((variance: Double) => sigma(variance))
     norm.groupBy("gene")
       .agg(sum(x).as("__s"), sum(x * x).as("__ss"))
       .select(
         col("gene"),
         (col("__s") / nCells).as("mu"),
-        sqrt(greatest(
-          (col("__ss") - col("__s") * col("__s") / nCells) / (nCells - 1),
-          lit(0.0))).as("sigma"))
-      .withColumn("sigma", when(col("sigma") > 0, col("sigma")).otherwise(lit(1.0)))
+        sigmaOf((col("__ss") - col("__s") * col("__s") / nCells) / (nCells - 1))
+          .as("sigma"))
   }
 
-  /** Nonzero z-scores `(…, gene, z)` plus the per-gene implicit-zero
-    * z-score column `z0` on the moments table. Clip at `clipMax`
-    * (one-sided, Seurat `scale.max = 10`). */
-  def scaleData(norm: DataFrame, moments: DataFrame, clipMax: Double = 10.0,
+  /** Nonzero z-scores `(…, gene, z)`, [[z]] as a column expression. */
+  def scaleData(norm: DataFrame, moments: DataFrame, clipMax: Double = ScaleMax,
                 valueCol: String = "norm"): DataFrame =
     norm
       .join(broadcast(moments), "gene")
@@ -43,7 +54,8 @@ object Scale {
 
   /** z-score of an implicit zero for each gene (broadcast side of the
     * PCA densification). */
-  def zeroZ(moments: DataFrame, clipMax: Double = 10.0): DataFrame =
-    moments.withColumn("z0",
-      least(-col("mu") / col("sigma"), lit(clipMax)))
+  def zeroZ(moments: DataFrame, clipMax: Double = ScaleMax): DataFrame = {
+    val zeroOf = udf((mu: Double, sd: Double) => z(0.0, mu, sd, clipMax))
+    moments.withColumn("z0", zeroOf(col("mu"), col("sigma")))
+  }
 }

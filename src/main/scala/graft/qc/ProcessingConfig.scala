@@ -1,7 +1,8 @@
 package graft.qc
 
 import graft.util.Json
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 
 /** The processing-config document (`4_Prepare_experiment.r:338-357`):
   * per QC step — `{enabled, auto, filterSettings}` defaults plus a
@@ -16,25 +17,26 @@ object ProcessingConfig {
   val PerSampleSteps: Set[String] =
     Set("cellSizeDistribution", "numGenesVsNumUmis", "doubletScores")
 
-  /** `settings` is QcSteps.runAll's per-step `(sample, key…)` tables;
-    * the collect is #samples × #steps rows. The document carries the
-    * reference's full 7-key shape: the five filter steps plus the
-    * dataIntegration and configureEmbedding blocks
-    * (`4_Prepare_experiment.r:338-348`, defaults `:251-270`). */
+  /** `settings` is QcSteps.runAll's per-step `(sample, key…)` tables
+    * of numeric settings; the collect is #samples × #steps rows. The
+    * document carries the reference's full 7-key shape: the five
+    * filter steps plus the dataIntegration and configureEmbedding
+    * blocks (`4_Prepare_experiment.r:338-348`, defaults `:251-270`). */
   def build(configs: Map[String, StepConfig],
             settings: Map[String, DataFrame]): String = {
+    // ONE action over the per-sample steps' settings, unioned as
+    // (step, sample, the values in settingKeys order)
+    val perSample = QcSteps.all.filter(s => PerSampleSteps.contains(s.name))
+      .flatMap(step => settings.get(step.name).map(_.select(lit(step.name).as("step"),
+        col("sample"), array(step.settingKeys.map(col(_).cast("double")): _*).as("values"))))
+    val rows =
+      if (perSample.isEmpty) Array.empty[Row] else perSample.reduce(_ unionByName _).collect()
     val stepDocs: Seq[(String, Any)] = QcSteps.all.map { step =>
       val cfg = configs.getOrElse(step.name, StepConfig())
-      val resolved =
-        if (!PerSampleSteps.contains(step.name)) Seq.empty
-        else settings.get(step.name).map { df =>
-          df.collect().map { r =>
-            val sample = r.getAs[String]("sample")
-            val kv: Map[String, Any] = step.settingKeys
-              .map(k => k -> r.getAs[Any](k)).toMap
-            s"sample-$sample" -> Map("filterSettings" -> kv)
-          }.toSeq.sortBy(_._1)
-        }.getOrElse(Seq.empty)
+      val resolved = rows.filter(_.getString(0) == step.name).map { r =>
+        val kv: Map[String, Any] = step.settingKeys.zip(r.getSeq[Any](2)).toMap
+        s"sample-${r.getString(1)}" -> Map("filterSettings" -> kv)
+      }.toSeq.sortBy(_._1)
       val base: Seq[(String, Any)] = Seq(
         "enabled" -> cfg.enabled,
         "auto" -> cfg.auto,

@@ -1,6 +1,8 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 class DoubletsSpec extends SparkSpec {
   import spark.implicits._
@@ -50,12 +52,22 @@ class DoubletsSpec extends SparkSpec {
 
   // ---- the local learner against Spark ML --------------------------
 
+  /** The local two-round scheme over a feature table in
+    * `FeaturizeReference`'s shape: barcode → score per real cell. */
+  private def localScores(feats: DataFrame): Map[String, Double] =
+    Doublets.twoRound(feats.select("cells_id", "barcode", "is_art", "features")
+      .collect().sortBy(_.getLong(0)).map { r =>
+        val (b, art) = (r.getString(1), r.getBoolean(2))
+        (r.getLong(0), b, art,
+          if (art) -1 else java.lang.Math.floorMod(Doublets.xxhash64(b, 123L), 3),
+          r.getSeq[Double](3).toArray)
+      }).toMap
+
   /** Spark ML reference vs the local learner on one feature table:
     * max |Δp| ≤ 1e-3, identical classes, ≥ 90% bit-identical. */
-  private def assertMatchesReference(feats: org.apache.spark.sql.DataFrame): Unit = {
+  private def assertMatchesReference(feats: DataFrame): Unit = {
     val ref = GbtReference.classify(feats, seed = 123L)
-    val local = Doublets.classify(feats, "s1", 123L, 0.5).collect()
-      .map(r => r.getAs[String]("barcode") -> r.getAs[Double]("doublet_scores")).toMap
+    val local = localScores(feats)
     assert(local.keySet == ref.keySet)
     val deltas = local.map { case (b, p) => math.abs(p - ref(b)) }
     assert(deltas.max <= 1e-3, s"max |dp| ${deltas.max}")
@@ -65,7 +77,7 @@ class DoubletsSpec extends SparkSpec {
   }
 
   test("local boosted trees match Spark ML GBTClassifier on the fixture's features") {
-    val feats = Doublets.featurize(fixture, "s1", k = 10, numHvg = 16,
+    val feats = FeaturizeReference.featurize(fixture, "s1", k = 10, numHvg = 16,
       numPcs = 5, seed = 123L).get
     assertMatchesReference(feats)
   }
@@ -94,18 +106,25 @@ class DoubletsSpec extends SparkSpec {
   // ---- job counts -----------------------------------------------------
 
   test("classify launches one Spark job per sample; scores stays within featurize + 2") {
-    val (feats, featJobs) = jobsDuring(Doublets.featurize(fixture, "s1", k = 10,
+    val (ref, featJobs) = jobsDuring(FeaturizeReference.featurize(fixture, "s1", k = 10,
       numHvg = 16, numPcs = 5, seed = 123L).get)
-    val (_, classifyJobs) = jobsDuring(Doublets.classify(feats, "s1", 123L, 0.5))
-    assert(classifyJobs == 1, s"classify launched $classifyJobs jobs")
+    ref.unpersist()
     val (_, scoreJobs) = jobsDuring(Doublets.scores(fixture, k = 10, numHvg = 16, numPcs = 5))
+    assert(scoreJobs == 1, s"scores launched $scoreJobs jobs")
     assert(scoreJobs <= featJobs + 2,
-      s"scores launched $scoreJobs jobs; featurize alone $featJobs")
+      s"scores launched $scoreJobs jobs; the reference featurize alone $featJobs")
+  }
+
+  test("scores launches at most 2 Spark jobs on a 2-sample frame") {
+    val twoSamples = fixture.unionByName(fixture.withColumn("sample", lit("s2")))
+    val (res, jobs) = jobsDuring(Doublets.scores(twoSamples, k = 10, numHvg = 16, numPcs = 5))
+    assert(jobs <= 2, s"scores launched $jobs jobs")
+    assert(res.count() == 126)
   }
 
   // ---- adversarial classifier inputs -----------------------------------
 
-  /** A persisted feature table in `featurize`'s shape. */
+  /** A persisted feature table in `FeaturizeReference`'s shape. */
   private def featureTable(rows: Seq[(Long, String, Boolean, Array[Double])]) =
     rows.map { case (id, b, art, x) => (id, b, art, x.toSeq) }
       .toDF("cells_id", "barcode", "is_art", "features").cache()
@@ -113,17 +132,15 @@ class DoubletsSpec extends SparkSpec {
   /** `n` barcodes whose round-1 fold (`xxhash64(barcode, 123) pmod 3`)
     * is `fold`. */
   private def barcodesInFold(fold: Int, n: Int, prefix: String): Seq[String] = {
-    import org.apache.spark.sql.functions._
     spark.range(0, 40L * n).select(concat(lit(prefix), col("id").cast("string")).as("b"))
       .filter(pmod(xxhash64(col("b"), lit(123L)), lit(3)) === fold)
       .orderBy("b").limit(n).collect().map(_.getString(0)).toSeq
   }
 
-  /** Runs classify twice on fresh copies of the table: scores in [0, 1],
-    * equal across the calls; returns barcode → score. */
+  /** Runs the local scheme twice on fresh copies of the table: scores
+    * in [0, 1], equal across the calls; returns barcode → score. */
   private def classifiedTwice(rows: Seq[(Long, String, Boolean, Array[Double])]) = {
-    def once() = Doublets.classify(featureTable(rows), "s1", 123L, 0.5).collect()
-      .map(r => r.getAs[String]("barcode") -> r.getAs[Double]("doublet_scores")).toMap
+    def once() = localScores(featureTable(rows))
     val (a, b) = (once(), once())
     assert(a == b)
     assert(a.keySet == rows.filterNot(_._3).map(_._2).toSet)
@@ -181,5 +198,190 @@ class DoubletsSpec extends SparkSpec {
     assert(a.filter(_._1 == "s2") == Seq(("s2", "lone", 0.0)))
     assert(a.forall(p => p._3 >= 0.0 && p._3 <= 1.0))
     assert(once() == a)
+  }
+
+  // ---- the one-task kernel against the distributed reference -----------
+
+  /** Benchmark-shaped sample: 200 cells, each expressing 120-259 genes
+    * of one of 8 programs of 300 genes drawn from a 2,000-gene
+    * vocabulary (counts 2-11), plus 2-4 of 13 MT genes (counts 1-5). */
+  private def benchmarkShaped(seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    val programs = Seq.fill(8)(rnd.shuffle((13 until 2000).toVector).take(300))
+    (0 until 200).flatMap { i =>
+      val genes = rnd.shuffle(programs(rnd.nextInt(8))).take(120 + rnd.nextInt(140)) ++
+        rnd.shuffle((0 until 13).toVector).take(2 + rnd.nextInt(3))
+      genes.map(g => ("s1", f"CELL$i%06d", f"Gene$g%04d",
+        (if (g < 13) 1 + rnd.nextInt(5) else 2 + rnd.nextInt(10)).toLong))
+    }.toDF("sample", "barcode", "gene", "count")
+  }
+
+  private def matrixOf(expr: DataFrame): Doublets.SampleMatrix =
+    expr.select("sample", "barcode", "gene", "count").as[(String, String, String, Long)]
+      .collect().foldLeft(new Doublets.SampleMatrix("s1", Doublets.Sizing(20, 500, 10, 0.6)))(_ add _)
+
+  /** Ranks like the kernel's kNN, by scanning every row: per row, the k
+    * other rows with the smallest Σ(p−q)² summed in dimension order,
+    * ties to the lower row; their rows and squared sums. */
+  private def scanNearest(emb: Array[Array[Double]], k: Int): Array[Seq[(Double, Int)]] =
+    emb.indices.map { i =>
+      emb.indices.filter(_ != i).map { j =>
+        (emb(i).indices.foldLeft(0.0) { (s, c) =>
+          val x = emb(i)(c) - emb(j)(c); s + x * x }, j)
+      }.sorted.take(k)
+    }.toArray
+
+  /** The 7 features of every cell of `FeaturizeReference`'s table, from
+    * the exact kNN over the table's own `pc` embedding (rows in
+    * `cells_id` order): the oracle for the kernel's steps 4-5, with the
+    * reference's steps 1-3. */
+  private def exactFeatures(ref: DataFrame, k: Int): Array[Doublets.Cell] = {
+    val rows = ref.select("cells_id", "barcode", "is_art", "pc", "log_lib", "log_nfeat")
+      .collect().sortBy(_.getLong(0))
+    assert(rows.map(_.getLong(0)).toSeq == rows.indices.map(_.toLong))
+    val isArt = rows.map(_.getBoolean(2))
+    val kInner = math.max(1, k / 2)
+    val nbrs = scanNearest(rows.map(_.getSeq[Double](3).toArray), k)
+    rows.indices.map { i =>
+      val ranked = nbrs(i).map { case (s, j) => (math.sqrt(s), isArt(j)) }
+      val r = ranked.length
+      val weights = ranked.map { case (d, _) => 1.0 / (1.0 + d) }
+      val arts = ranked.count(_._2)
+      val features = Array(
+        arts.toDouble / r,
+        ranked.take(kInner).count(_._2).toDouble / math.max(math.min(r, kInner), 1),
+        if (arts == 0) 0.0
+        else ranked.indices.filter(ranked(_)._2).map(weights).sum / weights.sum,
+        (ranked.indexWhere(_._2) match { case -1 => k + 1; case at => at + 1 }).toDouble,
+        ranked.map(_._1).sum / r,
+        rows(i).getDouble(4), rows(i).getDouble(5))
+      val b = rows(i).getString(1)
+      (i.toLong, b, isArt(i),
+        if (isArt(i)) -1 else java.lang.Math.floorMod(Doublets.xxhash64(b, 123L), 3), features)
+    }.toArray
+  }
+
+  /** The kernel against `FeaturizeReference` on one sample: every cell
+    * has the reference's cells_id and artificial flag, and its 7
+    * features equal, within 1e-6, the exact kNN's over the reference's
+    * embedding ([[exactFeatures]]). The scores equal, within 1e-3 and
+    * with the same class, the two-round scheme over those features. */
+  private def assertMatchesFeaturizeReference(expr: DataFrame, k: Int, numHvg: Int,
+                                              numPcs: Int): Unit = {
+    val ref = FeaturizeReference.featurize(expr, "s1", k, numHvg, numPcs, seed = 123L).get
+    val oracle = exactFeatures(ref, k)
+    ref.unpersist()
+    val local = Doublets.featurize(matrixOf(expr), k, numHvg, numPcs, 123L).get
+    assert(local.map(c => (c._1, c._2, c._3, c._4)).toSeq ==
+      oracle.map(c => (c._1, c._2, c._3, c._4)).toSeq)
+    local.zip(oracle).foreach { case (c, o) =>
+      val worst = c._5.indices.map(f => math.abs(c._5(f) - o._5(f))).max
+      assert(worst <= 1e-6, s"${c._2}: features ${c._5.toSeq} vs exact ${o._5.toSeq}")
+    }
+    val scores = Doublets.scores(expr, k, numHvg, numPcs).collect()
+      .map(r => r.getString(1) -> r.getDouble(2)).toMap
+    val refScores = Doublets.twoRound(oracle).toMap
+    assert(scores.keySet == refScores.keySet)
+    val deltas = scores.map { case (b, p) => math.abs(p - refScores(b)) }
+    assert(deltas.max <= 1e-3, s"max |dp| ${deltas.max}")
+    assert(scores.forall { case (b, p) => (p >= 0.5) == (refScores(b) >= 0.5) })
+  }
+
+  test("featurize matches FeaturizeReference on the fixture") {
+    assertMatchesFeaturizeReference(fixture, k = 10, numHvg = 16, numPcs = 5)
+  }
+
+  test("featurize matches FeaturizeReference on a seeded benchmark-shaped sample") {
+    assertMatchesFeaturizeReference(benchmarkShaped(901L), k = 20, numHvg = 500, numPcs = 10)
+  }
+
+  test("scores are bit-identical from 1 input partition or 7") {
+    val expr = benchmarkShaped(902L).unionByName(fixture.withColumn("sample", lit("s2")))
+    def scored(parts: Int) = Doublets.scores(expr.repartition(parts)).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getString(3)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val one = scored(1)
+    assert(one.size == 263)
+    assert(scored(7) == one)
+  }
+
+  test("an isolated cell gets its k exact neighbours") {
+    // 30 points on a line and one far off it: the far point's
+    // neighbours are the line's last 5, in order; ties go to the lower id
+    val emb = ((0 until 30).map(i => Array(i.toDouble, 0.0)) :+ Array(29.0, 1000.0)).toArray
+    val (nbr, dist) = Doublets.nearest(emb, 5)
+    assert(nbr(30).toSeq == Seq(29, 28, 27, 26, 25))
+    assert(dist(30).toSeq == Seq(0, 1, 2, 3, 4).map(d => math.sqrt(d * d + 1e6)))
+    assert(nbr(10).toSeq == Seq(9, 11, 8, 12, 7))
+    assert(nbr(0).toSeq == Seq(1, 2, 3, 4, 5))
+    // fewer rows than k + 1: every other row, nearest first
+    assert(Doublets.nearest(emb.take(3), 5)._1.map(_.toSeq).toSeq ==
+      Seq(Seq(1, 2), Seq(0, 2), Seq(1, 0)))
+    // a cell expressing genes no other cell has: all k neighbours, the
+    // largest mean distance of the sample
+    val iso = fixture.unionByName(
+      (0 until 8).map(g => ("s1", "iso", s"gC$g", 30L)).toDF("sample", "barcode", "gene", "count"))
+    val cells = Doublets.featurize(matrixOf(iso), 10, 24, 5, 123L).get
+    val meanDist = cells.map(c => c._2 -> c._5(4)).toMap
+    assert(meanDist("iso") > meanDist.removed("iso").values.max)
+  }
+
+  test("the k-d tree kNN equals a scan, ties included") {
+    val rnd = new scala.util.Random(11L)
+    // a 3-d integer grid with repeated points (many exact ties) and a
+    // 10-d Gaussian cloud of 4 clusters
+    val grid = Array.fill(400)(Array.fill(3)(rnd.nextInt(6).toDouble))
+    val cloud = Array.tabulate(500)(i => Array.fill(10)(rnd.nextGaussian() + 6.0 * (i % 4)))
+    for ((emb, k) <- Seq(grid -> 7, cloud -> 20, cloud.take(20) -> 20)) {
+      val (nbr, dist) = Doublets.nearest(emb, k)
+      val scan = scanNearest(emb, k)
+      emb.indices.foreach { i =>
+        assert(nbr(i).toSeq == scan(i).map(_._2), s"row $i")
+        assert(dist(i).toSeq == scan(i).map(x => math.sqrt(x._1)), s"row $i")
+      }
+    }
+  }
+
+  test("checkMemory refuses a sample past its limit, naming it") {
+    val need = Doublets.taskBytes(200, 3000, 40000, 500, 10, 20)
+    Doublets.checkMemory("s1", 200, 40000, need, need)
+    val e = intercept[Doublets.SampleTooLargeException](
+      Doublets.checkMemory("s1", 200, 40000, need, need - 1))
+    assert(e.isInstanceOf[IllegalStateException])
+    Seq("sample s1", "200 cells", "40000 nonzeros", s"~$need bytes", s"${need - 1}-byte")
+      .foreach(x => assert(e.getMessage.contains(x), e.getMessage))
+  }
+
+  test("a sample is refused while its rows are buffered, within what other tasks leave") {
+    // inside a task, with the executor's other doublet tasks holding
+    // all but 8 MB of the budget: the refusal comes as the row buffer
+    // grows, long before a million rows are held, and the task's count
+    // is given back when it ends
+    val (refused, added) = spark.sparkContext.parallelize(Seq(1), 1).map { _ =>
+      val sizing = Doublets.Sizing(20, 16, 5, 0.6)
+      val others = sizing.budget - 8L * 1024 * 1024
+      Doublets.heldBytes.addAndGet(others)
+      val m = new Doublets.SampleMatrix("big", sizing)
+      var added = 0
+      try {
+        (0 until 1000000).foreach { i => m.add(("big", s"c${i / 100}", s"g${i % 100}", 1L)); added += 1 }
+        ("", added)
+      } catch { case e: Doublets.SampleTooLargeException => (e.getMessage, added) }
+      finally Doublets.heldBytes.addAndGet(-others)
+    }.collect().head
+    assert(refused.contains("sample big"), refused)
+    assert(added < 200000, s"$added rows buffered before the refusal")
+    assert(Doublets.heldBytes.get == 0)
+  }
+
+  test("the pairing and fold hashes are Spark's xxhash64(barcode, lit(v))") {
+    val barcodes = Seq("a", "CELL000001", "", "\u00fcn\u00efcode", "__art_000001", "\uD83D\uDE00x")
+    val v = 123L ^ "s1".hashCode.toLong
+    val viaSpark = barcodes.toDF("b")
+      .select(col("b"), xxhash64(col("b"), lit(v)), xxhash64(col("b"), lit(123L))).collect()
+    viaSpark.foreach { r =>
+      assert(Doublets.xxhash64(r.getString(0), v) == r.getLong(1), r.getString(0))
+      assert(Doublets.xxhash64(r.getString(0), 123L) == r.getLong(2), r.getString(0))
+    }
   }
 }

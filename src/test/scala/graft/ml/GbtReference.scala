@@ -4,7 +4,7 @@ import org.apache.spark.ml.classification.GBTClassifier
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The distributed reference for [[Doublets.classify]]: the same
+/** The distributed reference for [[Doublets.twoRound]]: the same
   * two-round scheme with Spark ML's `GBTClassifier` as the learner, fit
   * on the feature table in ONE partition sorted by `cells_id` — the row
   * order the local learner sums in — so any difference left is the

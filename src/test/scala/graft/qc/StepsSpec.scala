@@ -152,10 +152,10 @@ class StepsSpec extends SparkSpec {
     assert(filterJobs == 0, s"filter launched $filterJobs jobs")
     val ((_, settings), runAllJobs) = jobsDuring(QcSteps.runAll(cellsDf, Map.empty))
     assert(runAllJobs == 0, s"runAll launched $runAllJobs jobs")
-    // the three per-sample tables it collects are one shuffle each
-    // (AQE: a map-stage job, then the result job) → 6 jobs in total
+    // the three per-sample tables are one shuffle each, collected as
+    // one union (AQE: three map-stage jobs, then the result job)
     val (_, buildJobs) = jobsDuring(ProcessingConfig.build(Map.empty, settings))
-    assert(buildJobs == 6, s"ProcessingConfig.build launched $buildJobs jobs")
+    assert(buildJobs == 4, s"ProcessingConfig.build launched $buildJobs jobs")
   }
 
   test("numGenesVsNumUmis band keeps inliers, drops outliers") {
