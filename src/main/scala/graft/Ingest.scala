@@ -33,10 +33,10 @@ object Ingest {
       metadata: Map[String, Map[String, String]] = Map.empty, // col -> sample -> value
       // When set, the merged raw matrix is checkpointed to
       // `<dir>/raw_expr` partitioned by sample (the stage-1 RDS
-      // checkpoint, `1_Preproc.r:174`) and the per-sample stages read
-      // it back with partition pruning — at cluster scale each
-      // per-sample job then scans ONE directory instead of the whole
-      // union (PartitionFilters asserted in PlanSpec).
+      // checkpoint, `1_Preproc.r:174`) and the later stages read it
+      // back from disk instead of holding the union in memory. No stage
+      // filters by sample; a reader that does scans one directory
+      // (PartitionFilters asserted in PlanSpec).
       checkpointDir: Option[String] = None)
 
   final case class Result(
@@ -91,6 +91,7 @@ object Ingest {
 
     // P5: merge + gene dedup + dense cells_id + auto-config + invariants
     val genes = MergeSamples.dedupGeneNames(annotations)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cellsWithMeta = config.metadata.foldLeft(withScores) {
       case (df, (colName, bySample)) =>
         val m = bySample.toSeq.toDF("sample", colName)

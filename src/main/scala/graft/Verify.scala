@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.Executors
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare. A failed query does not stop
   * the others; the run lists the failures and exits 1. */
@@ -12,13 +15,11 @@ object Verify {
     // check_oracle.py --only; the driver never sets it → full set)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // independent queries submitted concurrently (bounded pool) — the
-    // scheduler interleaves their jobs across cores; each result lands
-    // in its own directory so there is no output-order dependence
-    val failed = graft.ml.Concurrency.mapSamples(
-      SparkEntry.queries.keys.toSeq.sorted
-        .filter(n => only.forall(_.exists(n.startsWith))),
-      maxConcurrent = 4) { name =>
+    // independent queries submitted concurrently — the scheduler
+    // interleaves their jobs across cores; each result lands in its own
+    // directory so there is no output-order dependence
+    val failed = inPool(SparkEntry.queries.keys.toSeq.sorted
+        .filter(n => only.forall(_.exists(n.startsWith))), threads = 4) { name =>
       try { SparkEntry.queries(name)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name"); None }
       catch { case e: Throwable =>
@@ -43,5 +44,13 @@ object Verify {
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}"); sys.exit(1)
     }
+  }
+
+  /** `f` over `names` on a pool of `threads`, results in input order. */
+  private def inPool[A](names: Seq[String], threads: Int)(f: String => A): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(threads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.sequence(names.map(n => Future(f(n)))), Duration.Inf)
+    finally pool.shutdown()
   }
 }

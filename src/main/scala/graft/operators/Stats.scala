@@ -20,19 +20,18 @@ object Stats {
   def bhAdjust(df: DataFrame, pCol: String, outCol: String,
                partitionCols: Seq[String] = Seq.empty): DataFrame = {
     val part: Seq[Column] = partitionCols.map(col)
-    val nonNull = df.filter(col(pCol).isNotNull)
-    val rankW = Window.partitionBy(part: _*).orderBy(col(pCol).asc)
+    // one pass over df: null p-values rank last, so the others keep
+    // ranks 1..n and a null row's (null) term never enters their
+    // cumulative min
+    val rankW = Window.partitionBy(part: _*).orderBy(col(pCol).asc_nulls_last)
     val nW = Window.partitionBy(part: _*)
     val cumW = Window.partitionBy(part: _*).orderBy(col("__rk").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val adjusted = nonNull
-      .withColumn("__rk", row_number().over(rankW))
-      .withColumn("__n", count(lit(1)).over(nW))
+    df.withColumn("__rk", row_number().over(rankW))
+      .withColumn("__n", count(col(pCol)).over(nW))
       .withColumn("__pnr", col(pCol) * col("__n") / col("__rk"))
-      .withColumn(outCol, least(lit(1.0), min(col("__pnr")).over(cumW)))
+      .withColumn(outCol, when(col(pCol).isNotNull,
+        least(lit(1.0), min(col("__pnr")).over(cumW))))
       .drop("__rk", "__n", "__pnr")
-    val nulls = df.filter(col(pCol).isNull)
-      .withColumn(outCol, lit(null).cast("double"))
-    adjusted.unionByName(nulls)
   }
 }

@@ -50,6 +50,13 @@ class IngestSpec extends SparkSpec {
     assert(result.violations.isEmpty, result.violations.mkString("; "))
   }
 
+  test("invariants over the ingest result run 2 jobs (genes persisted)") {
+    val exp = result.experiment
+    val (violations, jobs) = jobsDuring(graft.core.Invariants.check(exp))
+    assert(violations.isEmpty, violations.mkString("; "))
+    assert(jobs == 2, s"$jobs jobs")
+  }
+
   test("upload sink writes the stage-5 records and objects through Hadoop FS") {
     val root = Files.createTempDirectory("upload").toString
     val sink = new graft.export.HadoopFsSink(s"file:$root")

@@ -148,10 +148,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("per-sample stage filter prunes a sample-partitioned store to one partition") {
-    // EmptyDrops.run / Doublets.scores split work with
-    // filter(col("sample") === s) per sample; over an
-    // ExperimentStore-shaped parquet layout that must become a
-    // PartitionFilters entry (scan one directory), not a row filter.
+    // No ingest stage filters by sample; a reader of the
+    // sample-partitioned checkpoint (Ingest.Config.checkpointDir) or
+    // of an ExperimentStore-shaped layout that does filter
+    // (col("sample") === s) must get a PartitionFilters entry (scan
+    // one directory), not a row filter.
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("pruned").toString
