@@ -1,140 +1,105 @@
-// Domain-pipeline soak: the reference's actual workload shape
+// Domain-pipeline soak: the reference's workload shape
 // (1_Preproc.r:109-112 — up to 1e6 barcodes/sample) at parameterized
-// scale, with per-stage wall times and shuffle-volume capture.
-// Run via spark-shell -I (see SOAK_domain.md):
-//   SOAK_AMBIENT / SOAK_REAL (per sample), SOAK_GENES select the scale.
+// scale. Stages: EmptyDrops.run(expr, 100, 500); CellQc.minFeatureFilter
+// + Doublets.scores; DataIntegration.runIntegrated(numHvg = 1000,
+// numPcs = 30); ConfigureEmbedding.run(numPCs = 20, k = 15). Each
+// prints its wall time, shuffle write and the heap pools' peak. Run via
+// spark-shell -I (see SOAK_domain.md); lines of interest start with
+// "SOAK".
+//   SOAK_AMBIENT / SOAK_REAL: ambient barcodes / real cells per sample
+//   SOAK_STAGES: the stages to run (default
+//     "emptyDrops,doublets,integration,embedding"; embedding needs
+//     integration)
 import org.apache.spark.sql.functions._
 import spark.implicits._
 
 val nAmbient = sys.env.getOrElse("SOAK_AMBIENT", "45000").toLong
 val nReal    = sys.env.getOrElse("SOAK_REAL", "5000").toLong
-val nGenes   = sys.env.getOrElse("SOAK_GENES", "20000").toLong
+val nGenes   = 20000L
 val realGenes = 200L // nnz per real cell
+// every 25th real cell (4%) is a planted doublet: it also carries the
+// counts of the real cell half a sample away, whose genes lie elsewhere
+val plantEvery = 25L
+val stages = sys.env.getOrElse("SOAK_STAGES",
+  "emptyDrops,doublets,integration,embedding").split(",").toSet
 
-// shuffle accounting: total + peak single-stage write bytes
 val shuffleTotal = new java.util.concurrent.atomic.AtomicLong
-val shufflePeak = new java.util.concurrent.atomic.AtomicLong
 spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-  override def onStageCompleted(
-      sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-    val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    shuffleTotal.addAndGet(w)
-    shufflePeak.getAndUpdate(p => math.max(p, w))
-  }
+  override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+    shuffleTotal.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
 })
 
 // distributed synthetic 10x-shaped COO (nothing driver-side): ambient
-// barcodes ~3 genes @ 1-2 counts, real cells 200 genes @ 5-24 with
-// id-local gene neighborhoods so kNN/cluster structure exists
+// barcodes of 3 genes @ 1-2 counts; real cells of 200 genes @ 5-24
+// with near-unique id-local gene neighbourhoods (id*37 mod 7919 gene
+// base), so kNN/cluster structure exists without coincident cells
 def gen(name: String, off: Int) = {
   val amb = spark.range(nAmbient)
-    .select(lit(name).as("sample"),
-      format_string("AMB%08d", col("id")).as("barcode"),
+    .select(lit(name).as("sample"), format_string("AMB%08d", col("id")).as("barcode"),
       explode(sequence(lit(0L), lit(2L))).as("g"), col("id"))
     .select(col("sample"), col("barcode"),
-      format_string("G%05d",
-        pmod(col("id") * 7 + col("g") * 7919 + lit(off), lit(nGenes))).as("gene"),
+      format_string("G%05d", pmod(col("id") * 7 + col("g") * 7919 + lit(off), lit(nGenes))).as("gene"),
       (lit(1L) + pmod(col("id") + col("g"), lit(2L))).as("count"))
-  // near-UNIQUE per-cell profiles (id*37 mod 7919 gene base): blocks of
-  // identical cells would collapse to coincident PCA points — a shape
-  // the kNN radius estimator now degrades gracefully on (GraphSpec),
-  // but which is not the workload this soak times
-  val real = spark.range(nReal)
-    .select(lit(name).as("sample"),
-      format_string("CELL%07d", col("id")).as("barcode"),
-      explode(sequence(lit(0L), lit(realGenes - 1L))).as("g"), col("id"))
-    .select(col("sample"), col("barcode"),
-      format_string("G%05d",
-        pmod(pmod(col("id") * 37, lit(7919L)) + col("g") * 3 + lit(off),
-          lit(nGenes))).as("gene"),
+  def cells(ids: org.apache.spark.sql.DataFrame) = ids
+    .select(col("barcode"), explode(sequence(lit(0L), lit(realGenes - 1L))).as("g"), col("id"))
+    .select(lit(name).as("sample"), col("barcode"),
+      format_string("G%05d", pmod(pmod(col("id") * 37, lit(7919L)) + col("g") * 3 + lit(off), lit(nGenes))).as("gene"),
       (lit(5L) + pmod(col("id") * 13 + col("g") * 7, lit(20L))).as("count"))
-  amb.unionByName(real)
+  val real = cells(spark.range(nReal).select(format_string("CELL%07d", col("id")).as("barcode"), col("id")))
+  val partners = cells(spark.range(nReal).filter(col("id") % plantEvery === 0)
+    .select(format_string("CELL%07d", col("id")).as("barcode"),
+      pmod(col("id") + lit(nReal / 2), lit(nReal)).as("id")))
+  amb.unionByName(real.unionByName(partners)
+    .groupBy("sample", "barcode", "gene").agg(sum("count").as("count")))
 }
 val expr = gen("s1", 0).unionByName(gen("s2", 3))
   .repartition(32).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-println(s"rows=${expr.count()} barcodes_per_sample=${nAmbient + nReal} genes=$nGenes")
+println(s"SOAK rows=${expr.count()} barcodes_per_sample=${nAmbient + nReal}")
 
-// Diagnostic for the 1M-run NPE (SparkPlan.session()==null inside
-// anchors.count()): any SparkPlan constructed on a thread without an
-// active SparkSession captures session=null and NPEs at first
-// sparkContext() use. Cached plans outlive their construction site, so
-// scan the CacheManager between stages to catch the poisoned plan at
-// the stage that CREATED it rather than the stage that tripped on it.
-def scanCacheForNullSession(label: String): Unit = try {
-  val cm = spark.sharedState.cacheManager
-  val f = cm.getClass.getDeclaredFields.find(_.getName.contains("cachedData"))
-  f.foreach { fld =>
-    fld.setAccessible(true)
-    val entries = fld.get(cm) match {
-      case l: java.util.List[_] => scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.toSeq
-      case s: scala.collection.Iterable[_] => s.toSeq
-      case other => Seq.empty
-    }
-    var bad = 0
-    entries.foreach { cd =>
-      val imr = cd.getClass.getMethod("cachedRepresentation").invoke(cd)
-      val builder = imr.getClass.getMethod("cacheBuilder").invoke(imr)
-      val plan = builder.getClass.getMethod("cachedPlan").invoke(builder)
-        .asInstanceOf[org.apache.spark.sql.execution.SparkPlan]
-      plan.foreach { node =>
-        if (node.session == null) {
-          bad += 1
-          println(s"NULL-SESSION cached plan node [$label]: ${node.getClass.getName} in:\n$plan")
-        }
-      }
-    }
-    println(s"CACHESCAN $label: ${entries.size} cached entries, $bad null-session nodes")
-  }
-} catch { case e: Throwable => println(s"CACHESCAN $label failed: $e") }
-
-def time[T](label: String)(f: => T): T = {
+val heapPools = { import java.lang.management._
+  ManagementFactory.getMemoryPoolMXBeans.toArray.map(_.asInstanceOf[MemoryPoolMXBean])
+    .filter(_.getType == MemoryType.HEAP) }
+def measured[A](stage: String)(f: => A): A = {
+  System.gc(); heapPools.foreach(_.resetPeakUsage())
   val s0 = shuffleTotal.get(); val t0 = System.nanoTime()
-  val r = try f catch {
-    case e: Throwable =>
-      // the REPL elides the cause frames that identify WHICH plan
-      // carried a null session — print the full chain ourselves
-      println(s"=== STAGE $label FAILED: full cause chain ===")
-      var c: Throwable = e; var depth = 0
-      while (c != null && depth < 8) {
-        println(s"--- [$depth] ${c.getClass.getName}: ${c.getMessage}")
-        c.getStackTrace.foreach(f => println(s"    at $f"))
-        c = c.getCause; depth += 1
-      }
-      scanCacheForNullSession(s"$label-postmortem")
-      throw e
-  }
-  val secs = (System.nanoTime() - t0) / 1e9
-  val sh = (shuffleTotal.get() - s0) / 1e6
-  println(f"STAGE $label%-12s ${secs}%.1f s  shuffle ${sh}%.0f MB")
-  r
+  val out = try f catch {
+    case e: Throwable => var c: Throwable = e; while (c.getCause != null) c = c.getCause
+      println(s"SOAK $stage FAILED ${(System.nanoTime() - t0) / 1e9}s: $c"); sys.exit(1) }
+  println(f"SOAK $stage ${(System.nanoTime() - t0) / 1e9}%.1f s shuffle ${(shuffleTotal.get() - s0) / 1e6}%.0f MB peak heap ${heapPools.map(_.getPeakUsage.getUsed).sum / 1048576.0}%.0f MB")
+  out
 }
 
-
-val ed = time("emptyDrops") {
-  val r = graft.ml.EmptyDrops.run(expr, 100, 500); r.scores.count(); r }
-println(s"emptyDrops rows=${ed.scores.count()} flagged=${ed.flagged}")
-scanCacheForNullSession("after-emptyDrops")
-
+if (stages("emptyDrops")) {
+  val (ed, scored) = measured("emptyDrops") {
+    val r = graft.ml.EmptyDrops.run(expr, 100, 500)
+    val s = r.scores.persist(); (r, s.count()) }
+  println(s"SOAK flagged=${ed.flagged.mkString("[", ",", "]")} scored=$scored " +
+    s"fdr<=0.01=${ed.scores.filter(col("emptyDrops_FDR") <= 0.01).count()}")
+  ed.scores.unpersist()
+}
 val pre = graft.qc.CellQc.minFeatureFilter(expr, 10)
-val dbl = time("doublets") { val d = graft.ml.Doublets.scores(pre); d.count(); d }
-println(s"doublets rows=${dbl.count()} " +
-  s"called=${dbl.filter(col("doublet_class") === "doublet").count()}")
-scanCacheForNullSession("after-doublets")
-
-val cellsBase = graft.operators.MergeSamples.withCellsId(
-  pre.select("sample", "barcode").distinct())
-val red = time("integration") {
-  val r = graft.qc.DataIntegration.runIntegrated(
-    expr.join(cellsBase.select("sample", "barcode"),
-      Seq("sample", "barcode"), "left_semi"),
-    cellsBase, numHvg = 1000, numPcs = 30)
-  r.pca.count(); r
+if (stages("doublets")) {
+  val dbl = measured("doublets") { val d = graft.ml.Doublets.scores(pre); d.count(); d }
+  val planted = substring(col("barcode"), 5, 7).cast("long") % plantEvery === 0 &&
+    col("barcode").startsWith("CELL")
+  val Array(r) = dbl.agg(count(lit(1)), count(when(col("doublet_class") === "doublet", 1)),
+    count(when(planted, 1)), count(when(planted && col("doublet_class") === "doublet", 1))).collect()
+  println(f"SOAK rows=${r.getLong(0)} called=${r.getLong(1)} planted=${r.getLong(2)} " +
+    f"recall=${r.getLong(3).toDouble / math.max(r.getLong(2), 1L)}%.3f")
 }
-println(s"pca rows=${red.pca.count()}")
-scanCacheForNullSession("after-integration")
-
-val emb = time("embedding") {
-  graft.qc.ConfigureEmbedding.run(red.pca, numPCs = 20, k = 15, umapEpochs = 50) }
-println(s"clusters=${emb.clusters.select("cluster").distinct().count()}")
-println(f"SHUFFLE total ${shuffleTotal.get() / 1e6}%.0f MB  peak_stage ${shufflePeak.get() / 1e6}%.0f MB")
+if (stages("integration")) {
+  val cellsBase = graft.operators.MergeSamples.withCellsId(pre.select("sample", "barcode").distinct())
+  val red = measured("integration") {
+    val r = graft.qc.DataIntegration.runIntegrated(
+      expr.join(cellsBase.select("sample", "barcode"), Seq("sample", "barcode"), "left_semi"),
+      cellsBase, numHvg = 1000, numPcs = 30)
+    r.pca.count(); r
+  }
+  println(s"SOAK pca rows=${red.pca.count()}")
+  if (stages("embedding")) {
+    val emb = measured("embedding") {
+      graft.qc.ConfigureEmbedding.run(red.pca, numPCs = 20, k = 15, umapEpochs = 50) }
+    println(s"SOAK clusters=${emb.clusters.select("cluster").distinct().count()}")
+  }
+}
 sys.exit(0)

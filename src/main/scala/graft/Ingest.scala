@@ -49,8 +49,8 @@ object Ingest {
 
   def run(spark: SparkSession, config: Config): Result = {
     import spark.implicits._
-    // the later stages on this session (the integration and embedding
-    // kNN, Snn) call the native graft_dot/graft_dist2
+    // queries run later on this session may call the native graft_*
+    // functions
     graft.functions.GraftExtensions.register(spark)
 
     // P1: read samples, union expr + annotations

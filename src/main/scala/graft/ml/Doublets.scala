@@ -28,11 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  3. PCA: the covariance is accumulated from each cell's nonzero
   *     entries, [[Pca.principalAxes]] takes its top `numPcs` axes, and
   *     every cell is projected onto them;
-  *  4. EXACT kNN over all cells ([[nearest]], a k-d tree): the k other
+  *  4. EXACT kNN over all cells ([[KdTree.nearest]]): the k other
   *     cells with the smallest elementwise Σ(p−q)², ties by `cells_id`
-  *     — scDblFinder's own neighbourhoods (a distributed join needed a
-  *     radius cut-off, which could leave an isolated cell without
-  *     neighbours);
+  *     — scDblFinder's own neighbourhoods;
   *  5. 7 features per cell, mirroring scDblFinder's kNN-derived set:
   *     artificial-neighbour fraction at k and at k/2, the
   *     distance-weighted artificial fraction, the rank of the first
@@ -302,7 +300,7 @@ object Doublets {
     }
 
     val emb = embed(genes, norm, numHvg, numPcs)
-    val (nbr, dist) = nearest(emb, k)
+    val (nbr, dist) = KdTree.nearest(emb, k)
     val isArt = barcode.map(_.startsWith("__art_"))
     val kInner = math.max(1, k / 2)
     Some(Array.tabulate(n) { i =>
@@ -414,102 +412,6 @@ object Doublets {
         x
       }
     }
-  }
-
-  /** Leaves of the kNN's k-d tree hold at most this many rows. */
-  private val LeafRows = 16
-
-  /** Exact kNN: for each row, the (up to) k other rows with the
-    * smallest Σ(p−q)² (summed in dimension order), ties to the lower
-    * row; returns their rows, nearest first, and distances sqrt(Σ).
-    *
-    * A k-d tree (leaves of ≤ [[LeafRows]] rows, each node split at the
-    * median of its box's widest dimension) is searched near side first.
-    * A node is skipped only when the smallest sum any row in its box
-    * can reach — taken term by term in the same order, so it never
-    * exceeds a row's own sum in floating point — is above the current
-    * k-th, so the answer is the scan's, bit for bit. O(rows·k) memory;
-    * the time is far below the scan's O(rows²·dim) on clustered rows,
-    * and equals it at worst. */
-  private[ml] def nearest(emb: Array[Array[Double]],
-                          k: Int): (Array[Array[Int]], Array[Array[Double]]) = {
-    val n = emb.length
-    val kk = math.max(0, math.min(k, n - 1))
-    val dim = if (n == 0) 0 else emb(0).length
-    // the tree: node t covers rows(begin(t) until end(t)), its box is
-    // lo/hi(t*dim + ·), and its children are left/right(t) (−1: leaf)
-    val rows = Array.range(0, n)
-    val nodes = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    val boxes = scala.collection.mutable.ArrayBuffer.empty[(Array[Double], Array[Double])]
-    val children = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    def build(a: Int, b: Int): Int = {
-      val t = nodes.length
-      val (mn, mx) = (Array.fill(dim)(Double.PositiveInfinity), Array.fill(dim)(Double.NegativeInfinity))
-      for (r <- a until b; c <- 0 until dim) {
-        val x = emb(rows(r))(c)
-        mn(c) = math.min(mn(c), x); mx(c) = math.max(mx(c), x)
-      }
-      nodes += ((a, b)); boxes += ((mn, mx)); children += ((-1, -1))
-      val widest = (0 until dim).maxByOption(c => mx(c) - mn(c))
-      if (b - a > LeafRows && widest.exists(c => mx(c) > mn(c))) {
-        val c = widest.get
-        val byCoord = rows.slice(a, b).sortBy(r => emb(r)(c))(Ordering.Double.TotalOrdering)
-        System.arraycopy(byCoord, 0, rows, a, b - a)
-        val mid = (a + b) >>> 1
-        val l = build(a, mid)
-        children(t) = (l, build(mid, b))
-      }
-      t
-    }
-    if (n > 0) build(0, n)
-    val begin = nodes.map(_._1).toArray
-    val end = nodes.map(_._2).toArray
-    val left = children.map(_._1).toArray
-    val right = children.map(_._2).toArray
-    val lo = boxes.flatMap(_._1).toArray
-    val hi = boxes.flatMap(_._2).toArray
-
-    val ids = Array.fill(n)(new Array[Int](kk))
-    val sums = Array.fill(n)(new Array[Double](kk))
-    for (i <- 0 until n if kk > 0) {
-      val (id, best, p) = (ids(i), sums(i), emb(i))
-      var len = 0
-      def offer(j: Int): Unit = {
-        val q = emb(j)
-        var s = 0.0; var c = 0
-        while (c < dim) { val x = p(c) - q(c); s += x * x; c += 1 }
-        if (len < kk || s < best(len - 1) || (s == best(len - 1) && j < id(len - 1))) {
-          var at = math.min(len, kk - 1)
-          while (at > 0 && (best(at - 1) > s || (best(at - 1) == s && id(at - 1) > j))) {
-            best(at) = best(at - 1); id(at) = id(at - 1); at -= 1
-          }
-          best(at) = s; id(at) = j
-          if (len < kk) len += 1
-        }
-      }
-      def bound(t: Int): Double = {
-        var s = 0.0; var c = 0
-        while (c < dim) {
-          val (x, l, h) = (p(c), lo(t * dim + c), hi(t * dim + c))
-          val gap = if (x < l) l - x else if (x > h) x - h else 0.0
-          s += gap * gap; c += 1
-        }
-        s
-      }
-      def visit(t: Int, bt: Double): Unit =
-        if (len < kk || bt <= best(kk - 1)) {
-          if (left(t) < 0) {
-            var r = begin(t)
-            while (r < end(t)) { if (rows(r) != i) offer(rows(r)); r += 1 }
-          } else {
-            val (bl, br) = (bound(left(t)), bound(right(t)))
-            if (bl <= br) { visit(left(t), bl); visit(right(t), br) }
-            else { visit(right(t), br); visit(left(t), bl) }
-          }
-        }
-      visit(0, 0.0)
-    }
-    (ids, sums.map(_.map(math.sqrt)))
   }
 
   /** A task past this many bytes is refused: the sample is too large

@@ -173,9 +173,10 @@ object Embed {
     *  2. the exact kernel lays out ONLY the landmarks (m² bounded,
     *     m ≪ n);
     *  3. every remaining cell is placed at the distance-weighted mean
-    *     of its `kPlace` nearest landmarks' 2-D positions — one bounded
-    *     distributed kNN join, O(n·k) — the standard landmark/kernel
-    *     out-of-sample extension for t-SNE-family embeddings.
+    *     of its `kPlace` nearest landmarks' 2-D positions — one exact
+    *     [[Snn.knnJoin]] against the landmarks — the standard
+    *     landmark/kernel out-of-sample extension for t-SNE-family
+    *     embeddings.
     *
     * With n <= m the kernel runs on everything and this is exact. */
   def landmarkLayout(emb: DataFrame, m: Int = 2000, kPlace: Int = 10,
@@ -189,26 +190,15 @@ object Embed {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     layout.count()
     val rest = emb.join(landmarks.select("cells_id"), Seq("cells_id"), "left_anti")
-    val placed = Snn.knnJoin(rest, landmarks, kPlace, seed, conservative = true)
+    // every other cell has min(kPlace, m) landmarks: the kNN is exact
+    val placed = Snn.knnJoin(rest, landmarks, kPlace)
       .join(layout.select(col("cells_id").as("nid"), col("x"), col("y")), "nid")
       .withColumn("w", lit(1.0) / (lit(1.0) + col("dist")))
       .groupBy("cid")
       .agg((sum(col("w") * col("x")) / sum("w")).as("x"),
         (sum(col("w") * col("y")) / sum("w")).as("y"))
       .select(col("cid").as("cells_id"), col("x"), col("y"))
-    // LEFT join from `rest`: a cell beyond the kNN radius of every
-    // landmark still gets a row — at the layout's centroid, which is
-    // deterministic and on the layout's own coordinate scale (raw PC
-    // coordinates would be on a different scale than either kernel's
-    // output)
-    val centroid = layout.agg(avg("x"), avg("y")).head()
-    val (cx, cy) = (centroid.getDouble(0), centroid.getDouble(1))
-    val restPlaced = rest
-      .join(placed, Seq("cells_id"), "left")
-      .select(col("cells_id"),
-        coalesce(col("x"), lit(cx)).as("x"),
-        coalesce(col("y"), lit(cy)).as("y"))
-    val out = layout.unionByName(restPlaced).localCheckpoint(true)
+    val out = layout.unionByName(placed).localCheckpoint(true)
     landmarks.unpersist(); layout.unpersist()
     out
   }

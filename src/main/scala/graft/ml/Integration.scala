@@ -81,6 +81,17 @@ object Integration {
           .toDF("cells_id", "pc")
     }
 
+  /** Each `qry` cell's candidate anchors `(cells_id, aid, dist)`: its
+    * `k` nearest anchor cells other than itself, and itself at distance
+    * 0 when it is an anchor (such a cell corrects by its own vector
+    * too). Its k nearest anchors, itself included, are the first k by
+    * (dist, aid). */
+  private[ml] def nearestAnchors(qry: DataFrame, anchorPts: DataFrame, k: Int): DataFrame =
+    Snn.knnJoin(qry, anchorPts, k)
+      .select(col("cid").as("cells_id"), col("nid").as("aid"), col("dist"))
+      .unionByName(anchorPts.select(col("cells_id"), col("cells_id").as("aid"),
+        lit(0.0).as("dist")))
+
   /** `pca`: `(cells_id, pc)`; `groups`: `(cells_id, group)`.
     * Returns `(cells_id, pc)` with non-reference groups corrected into
     * the reference's space. Defaults mirror Seurat's
@@ -96,30 +107,17 @@ object Integration {
     * anchors (that stage is O(n·kWeight) and scales) — Seurat's own
     * sketch-based/reference-sampling answer for atlas-scale
     * integration, and the same landmark idiom as
-    * [[Embed.landmarkLayout]]. The anchor search drops from O(n·k)
-    * candidate volume to O(m·k); fidelity costs only anchor-set
-    * coverage (the IntegrationSpec mixing metric quantifies it).
+    * [[Embed.landmarkLayout]]. The anchor searches shrink from n to m
+    * cells per group; fidelity costs only anchor-set coverage (the
+    * IntegrationSpec mixing metric quantifies it).
     * Groups at or under m run the exact path bit-identically.
     *
-    * `maxAnchorsPerCell` (round 13, the 8M-barcode soak's named next
-    * knob): 0 = exact (every scored anchor is searchable in the
-    * correction — the default and gate behavior). With c > 0 the
-    * CORRECTION stage's anchor set is thinned to the c
-    * highest-scored anchors per ε-grid cell
-    * ([[Snn.thinPerGridCell]], same rotation the correction's own
-    * knnJoin keys), bounding the correction's candidate volume at
-    * O(n · c · 3^m) regardless of how anchors cluster — the last
-    * correction-stage term that otherwise grows with anchor density.
-    * Every query cell is still corrected; a cap at or above the
-    * densest cell's anchor count is bit-identical to exact
-    * (IntegrationSpec pins both that and that a small cap still
-    * removes the planted shift). */
+    * Every neighbour search is [[Snn.knnJoin]], an exact kNN. */
   def integrateEmbeddings(pca: DataFrame, groups: DataFrame,
                           kAnchor: Int = 5, kWeight: Int = 5,
                           seed: Long = 42L, dims: Int = 30,
                           kScore: Int = 30, kFilter: Int = 200,
-                          maxAnchorCells: Int = 0,
-                          maxAnchorsPerCell: Int = 0): DataFrame = {
+                          maxAnchorCells: Int = 0): DataFrame = {
     // Intermediates are EAGER localCheckpoints, deliberately NOT
     // persist(): the pipeline's reused frames form a chain six deep
     // (tagged → ref → refR → qryR → nbrs → anchors), and with cache
@@ -200,23 +198,19 @@ object Integration {
       val basisQ = eigenBasis(qryA, dims)
       val qryR = trackedProj(qryA, basisR)
       // reciprocal anchor search: q→r on the reference basis, r→q on
-      // the query basis; mutual pairs are anchors. All cross-batch
-      // searches run with the conservative radius: the batch gap means
-      // neighbors are NOT local, and missing them (not candidate
-      // volume) is the failure mode.
-      val q2r = Snn.knnJoin(qryR, refR, kAnchor, seed, conservative = true)
+      // the query basis; mutual pairs are anchors
+      val q2r = Snn.knnJoin(qryR, refR, kAnchor)
         .select(col("cid").as("qid"), col("nid").as("rid"))
-      val r2q = Snn.knnJoin(project(refA, basisQ), project(qryA, basisQ),
-          kAnchor, seed, conservative = true)
+      val r2q = Snn.knnJoin(project(refA, basisQ), project(qryA, basisQ), kAnchor)
         .select(col("nid").as("qid"), col("cid").as("rid"))
       val mutual = q2r.intersect(r2q)
       // k.filter: the pair must also be a joint-space kFilter-neighbor;
       // kFilter >= |ref anchors| keeps every pair by definition, so
-      // skip the join (and its LSH recall noise) entirely in that regime
+      // skip the search in that regime
       val filtered =
         if (kFilter <= 0 || kFilter >= refACount) mutual
         else mutual.join(
-          Snn.knnJoin(qryA, refA, kFilter, seed, conservative = true)
+          Snn.knnJoin(qryA, refA, kFilter)
             .select(col("cid").as("qid"), col("nid").as("rid")),
           Seq("qid", "rid"), "left_semi")
       // k.score: shared-neighbor overlap of the two anchor cells'
@@ -227,7 +221,7 @@ object Integration {
         else {
           val allR = refR.unionByName(qryR)
           val nbrs = tracked(
-            Snn.knnJoin(allR, allR, kScore, seed).select("cid", "nid"))
+            Snn.knnJoin(allR, allR, kScore).select("cid", "nid"))
           val overlap = filtered
             .join(nbrs.select(col("cid").as("qid"), col("nid").as("n")), "qid")
             .join(nbrs.select(col("cid").as("rid"), col("nid").as("n")),
@@ -260,35 +254,11 @@ object Integration {
         // for exactly the cells that need a real (if distant) anchor
         val scored = anchors.withColumn("score", scoreCol)
           .filter(col("score") > 0)
-        // each query cell's kWeight nearest anchor query-side points;
-        // conservative radius — a cell far from every anchor must still
-        // find its nearest ones (Seurat searches anchors exactly)
-        val anchorPts = {
-          val exactPts = scored
-            .select(col("qid").as("cells_id"), col("qpc").as("pc"))
-            .dropDuplicates("cells_id")
-          if (maxAnchorsPerCell <= 0) exactPts
-          else {
-            // each anchor cell's priority = its best pair score
-            // (deterministic: max over pairs); spatially-capped set
-            // checkpointed — it is scanned by radius probe + grid join
-            val prioritized = scored
-              .groupBy(col("qid").as("cells_id"))
-              .agg(max(col("score")).as("priority"),
-                first(col("qpc")).as("pc"))
-            tracked(Snn.thinPerGridCell(qry, prioritized,
-              maxAnchorsPerCell, kWeight, seed, conservative = true)
-              .select("cells_id", "pc"))
-          }
-        }
-        val near = Snn.knnJoin(qry, anchorPts, kWeight, seed,
-            conservative = true)
-          .select(col("cid").as("cells_id"), col("nid").as("aid"),
-            col("dist"))
-        // allow self-anchor (a query cell that IS an anchor corrects by
-        // its own vector too): knnJoin excluded self, so union it back
-        val selfA = anchorPts.select(col("cells_id"),
-          col("cells_id").as("aid"), lit(0.0).as("dist"))
+        // each query cell's kWeight nearest anchor query-side points
+        val anchorPts = scored
+          .select(col("qid").as("cells_id"), col("qpc").as("pc"))
+          .dropDuplicates("cells_id")
+        val near = nearestAnchors(qry, anchorPts, kWeight)
         // EXACT Seurat FindWeights kernel (Stuart et al. 2019 Cell,
         // Methods "Calculating anchor weights" — the IntegrateData
         // weighting the reference invokes, dataIntegration.r:95):
@@ -312,7 +282,7 @@ object Integration {
         // ordering information and 1 - d/d_k would zero every weight,
         // deleting the correction for exactly those cells — fall back
         // to the scores alone there.
-        val pairRows = near.unionByName(selfA)
+        val pairRows = near
           .join(scored.select(col("qid").as("aid"), col("rid"),
             col("vec"), col("score")), "aid")
         val rkW = org.apache.spark.sql.expressions.Window

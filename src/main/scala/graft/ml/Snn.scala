@@ -1,321 +1,81 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.operators.Similarity
 
 /** `FindNeighbors(k = 20)` → shared-nearest-neighbor graph
   * (`QC_helpers/configureEmbedding.r:113`).
   *
-  * Spark decomposition (SURVEY §2.9): approximate kNN via a seeded
-  * E2LSH AND-OR grid join (see [[candidatePairs]]) + distance-ranked
-  * window, then the SNN weight is pure relational algebra — self-join
-  * the kNN table on the shared neighbor, count, Jaccard =
-  * shared/(2k − shared), prune below 1/15 (Seurat default). Every
-  * stage shuffles on 8-byte grid keys or cell ids only.
+  * Spark decomposition (SURVEY §2.9): an EXACT kNN — every query row
+  * searches a [[KdTree]] built once over the corpus and broadcast —
+  * then the SNN weight is pure relational algebra: self-join the kNN
+  * table on the shared neighbor, count, Jaccard = shared/(2k − shared),
+  * prune below 1/15 (Seurat default).
   */
 object Snn {
 
-  /** kNN search radius: the EXACT kth-NN distance of a 128-probe
-    * panel sampled from `query`, measured against the FULL corpus in
-    * one distributed scan (broadcast probes, per-partition bounded
-    * top-(k+1) lists, treeAggregate merge). An earlier form measured
-    * against a 2048-point corpus sample; its kth-NN distance
-    * over-states the true one by ~(n/2048)^(1/d) as the corpus grows,
-    * and the 1M-barcode domain soak measured the consequence — the
-    * inflated radius blew the grid-join candidate volume superlinearly
-    * (2.5× cells → 10× doublets shuffle). Exact distances keep
-    * candidates-per-cell Θ(k) at every corpus size; the 2× factor
-    * covers the upper tail of true kth-NN distances across cells. The
-    * corpus scan costs 128·dim flops/row — O(scan), the same order as
-    * the probe sampling pass, and corpus-size-independent per row. */
-  private[ml] def estimateRadius(query: DataFrame, corpus: DataFrame,
-                                 k: Int, seed: Long,
-                                 conservative: Boolean = false): Double = {
-    // value-keyed pseudo-random probe panel (NOT rand(): its stream
-    // depends on the partition layout, so the same data in a different
-    // layout would yield a different radius)
-    val probes = query.select(col("pc"))
-      .orderBy(xxhash64(col("pc"), lit(seed)), col("pc").getItem(0))
-      .limit(128).collect()
-      .map(_.getSeq[Double](0).toArray)
-    if (probes.isEmpty) return Double.MaxValue
-    val sc = corpus.sparkSession.sparkContext
-    val bcProbes = sc.broadcast(probes)
-    val cap = k + 1
-    // per-probe bounded ascending top-(k+1) distance lists + global
-    // (count, smallest positive distance); merged associatively
-    final class Acc(val tops: Array[Array[Double]], val lens: Array[Int],
-                    var n: Long, var minPos: Double) extends Serializable
-    def zero() = new Acc(Array.fill(probes.length)(new Array[Double](cap)),
-      new Array[Int](probes.length), 0L, Double.MaxValue)
-    def insert(acc: Acc, pi: Int, d: Double): Unit = {
-      val t = acc.tops(pi); val len = acc.lens(pi)
-      if (len < cap || d < t(len - 1)) {
-        var i = math.min(len, cap - 1)
-        while (i > 0 && t(i - 1) > d) { t(i) = t(i - 1); i -= 1 }
-        t(i) = d
-        if (len < cap) acc.lens(pi) = len + 1
-      }
-    }
-    val agg = corpus.select(col("pc")).rdd.treeAggregate(zero())(
-      seqOp = (acc, row) => {
-        val c = row.getSeq[Double](0)
-        val ps = bcProbes.value
-        var pi = 0
-        while (pi < ps.length) {
-          val p = ps(pi)
-          var s = 0.0; var i = 0
-          while (i < p.length) { val d = p(i) - c(i); s += d * d; i += 1 }
-          val d = math.sqrt(s)
-          insert(acc, pi, d)
-          if (d > 0.0 && d < acc.minPos) acc.minPos = d
-          pi += 1
-        }
-        acc.n += 1
-        acc
-      },
-      combOp = (a, b) => {
-        var pi = 0
-        while (pi < a.tops.length) {
-          var i = 0
-          while (i < b.lens(pi)) { insert(a, pi, b.tops(pi)(i)); i += 1 }
-          pi += 1
-        }
-        a.n += b.n
-        if (b.minPos < a.minPos) a.minPos = b.minPos
-        a
-      })
-    bcProbes.destroy()
-    if (agg.n <= k) return Double.MaxValue
-    val minPos = agg.minPos
-    val kth = Array.tabulate(probes.length) { pi =>
-      agg.tops(pi)(math.min(k, agg.lens(pi) - 1))
-    }
-    // median probe by default: the estimator must be stable — an
-    // outlier probe (a corner cell) inflating the radius inflates the
-    // candidate count for the WHOLE join; the 2x factor covers the
-    // upper tail of true kth-NN distances instead. `conservative` takes
-    // the max probe: for queries that must reach across a gap (anchor
-    // search between batches), missing neighbors is the failure mode,
-    // not candidate volume.
-    java.util.Arrays.sort(kth)
-    val r = (if (conservative) kth(kth.length - 1) else kth(kth.length / 2)) * 2.0
-    if (r > 0 && java.lang.Double.isFinite(r)) r
-    // kth distance 0 means >= k COINCIDENT points (PCR duplicates,
-    // zero-expression cells collapsing in PCA): the true neighbors sit
-    // at distance 0, so a small positive radius reaches them — prefer
-    // the smallest positive kth among probes (a real k-neighborhood
-    // scale), then the smallest positive distance seen, NEVER the
-    // infinite radius, which flips the whole join quadratic (surfaced
-    // by the domain soak: duplicate-heavy synthetic cells spilled
-    // >78 GB of candidate pairs under the old MaxValue degradation)
-    else kth.find(_ > 0).map(_ * 2.0)
-      .orElse(if (minPos < Double.MaxValue) Some(minPos * 2.0) else None)
-      .getOrElse(1.0) // every sampled point identical: scale arbitrary
+  /** The setting that bounds the corpus a [[knnJoin]] collects (0 = no
+    * bound, as it means for Spark's own collects). */
+  private val CorpusLimitSetting = "spark.driver.maxResultSize"
+
+  /** A [[knnJoin]] refused before collecting: the corpus's tree would
+    * not fit the bound the setting gives. */
+  final class CorpusTooLargeException(msg: String) extends IllegalStateException(msg)
+
+  /** Throw [[CorpusTooLargeException]] when a tree over `rows` points
+    * of `dim` coordinates ([[KdTree.bytes]]) would exceed `limitBytes`
+    * (0 = no bound). */
+  private[ml] def checkCorpusBound(rows: Long, dim: Int, limitBytes: Long): Unit = {
+    val estimate = KdTree.bytes(rows, dim)
+    if (limitBytes > 0 && estimate > limitBytes)
+      throw new CorpusTooLargeException(
+        s"kNN corpus too large: $rows rows of $dim dims build a tree of ~$estimate bytes, " +
+          s"over $CorpusLimitSetting = $limitBytes bytes")
   }
 
-  /** Generic approximate kNN join: for each row of `query`, the k
-    * nearest rows of `corpus` (both `(cells_id, pc)`), excluding
-    * self-matches by id. Returns `(cid, nid, dist, rk)`.
+  /** Exact kNN join: for each row of `query`, the k rows of `corpus`
+    * (both `(cells_id, pc)`, one width) with the smallest Σ(p−q)²,
+    * ties to the lower id, its own id excluded. Returns
+    * `(cid, nid, dist = sqrt(Σ), rk)`: exactly min(k, |corpus| − self)
+    * rows per query row, rk 1 nearest.
     *
-    * Scale posture (reference semantics: configureEmbedding.r:113): the
-    * candidate join is an E2LSH-style AND-OR grid (Datar et al., SoCG
-    * 2004) with a FINITE data-derived radius, so the candidate-pair
-    * count tracks the true k-neighborhood instead of growing
-    * quadratically with density. Survivors are then top-k pruned in two
-    * stages: a per-shuffle-partition rank caps any one cell's
-    * candidates at partitions×k before the global per-cell rank, so a
-    * skewed/hot cell never funnels its whole candidate set through one
-    * window partition. */
-  def knnJoin(query: DataFrame, corpus: DataFrame, k: Int,
-              seed: Long = 42L, bucketLength: Double = 0.0,
-              conservative: Boolean = false): DataFrame =
-    rankCandidates(
-      candidatePairs(query, corpus, k, seed, bucketLength, conservative), k)
+    * The corpus is counted, then collected to the driver (two jobs);
+    * its tree is broadcast and every query partition searches it, so
+    * the result is one narrow pass over `query`, no shuffle. A corpus
+    * whose tree would pass `spark.driver.maxResultSize` is refused with
+    * [[CorpusTooLargeException]] before the collect. */
+  def knnJoin(query: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    knnJoin(query, corpus, k,
+      corpus.sparkSession.sparkContext.getConf.getSizeAsBytes(CorpusLimitSetting, "1g"))
 
-  /** Radius-bounded candidate set `(cid, nid, dist)` — the stage whose
-    * size must stay O(n·occupancy) as data grows (asserted in
-    * GraphSpec).
-    *
-    * Deterministic ε-grid join (the spatial epsilon-grid order join —
-    * Böhm et al., ICDE 2001 — on a randomly-rotated subspace): project
-    * every point onto M ORTHONORMAL random directions and quantize each
-    * coordinate at cell width w = the estimated kNN radius r. Unit-norm
-    * directions give |a·(p−q)| ≤ ‖p−q‖ (Cauchy–Schwarz), so a pair
-    * within r differs by AT MOST ONE cell per axis — the corpus keys
-    * its own cell, the query probes the 3^M adjacent cells, and every
-    * pair within the radius is guaranteed to meet (100% recall of the
-    * radius-bounded kNN; the exact distance filter then prunes grid
-    * corners and hash collisions). Contrast BOTH with mllib's
-    * `BucketedRandomProjectionLSH` — each of its hash tables quantizes
-    * ONE projection, so bucket occupancy is Θ(n·w/σ) and candidates
-    * grow QUADRATICALLY with density (the domain soak measured 4× cells
-    * → ~12× shuffle, 67 GB, disk-full) — and with probabilistic AND-OR
-    * LSH, which bounds occupancy but misses a density-dependent
-    * fraction of true neighbors. Joint M-axis cells keep occupancy
-    * Θ(n·(w/σ)^M) while the adjacency probe replaces the recall that
-    * amplification would only approximate. All join keys are 8-byte
-    * hashes of the cell vector; the pair stream drops vectors before
-    * any shuffle. */
-  /** Deterministic orthonormal basis of the m-dim projection subspace
-    * (Gram–Schmidt over seeded Gaussian draws) — driver-side, m×dim.
-    * Shared by [[candidatePairs]] and [[thinPerGridCell]] so both key
-    * the SAME rotation for a given (seed, dim). */
-  private def orthonormalDirs(dim: Int, m: Int,
-                              seed: Long): Array[Array[Double]] = {
-    val rng = new scala.util.Random(seed)
-    val dirs = new Array[Array[Double]](m)
-    var i = 0
-    while (i < m) {
-      val v = Array.fill(dim)(rng.nextGaussian())
-      for (p <- 0 until i) {
-        var d = 0.0
-        for (j <- 0 until dim) d += v(j) * dirs(p)(j)
-        for (j <- 0 until dim) v(j) -= d * dirs(p)(j)
+  private[ml] def knnJoin(query: DataFrame, corpus: DataFrame, k: Int,
+                          limitBytes: Long): DataFrame = {
+    val spark = query.sparkSession
+    import spark.implicits._
+    def points(df: DataFrame) =
+      df.select(col("cells_id").cast("long"), col("pc")).as[(Long, Array[Double])]
+    val (rows, dim) = corpus.select(size(col("pc"))).rdd
+      .aggregate((0L, 0))((a, r) => (a._1 + 1, math.max(a._2, r.getInt(0))),
+        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+    checkCorpusBound(rows, dim, limitBytes)
+    // sorted by id: a tie goes to the lower row, so to the lower nid
+    val byId = points(corpus).collect().sortBy(_._1)
+    val tree = spark.sparkContext.broadcast(KdTree.build(byId.map(_._2), byId.map(_._1)))
+    points(query).mapPartitions { it =>
+      val t = tree.value
+      it.flatMap { case (cid, pc) =>
+        val (found, sums) = t.search(pc, k, cid)
+        Iterator.tabulate(found.length)(r => (cid, t.id(found(r)), math.sqrt(sums(r)), r + 1))
       }
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n > 1e-9) { dirs(i) = v.map(_ / n); i += 1 } // else redraw
-    }
-    dirs
-  }
-
-  /** Deterministically thin `points` `(cells_id, pc, priority)` to at
-    * most `cap` rows per ε-grid cell — highest `priority` first, ties
-    * by lowest `cells_id`. The grid uses the SAME rotation a
-    * subsequent `knnJoin(query, points, k, seed, …)` builds and the
-    * radius estimated against the UN-thinned set, so the cap bounds
-    * (approximately — the search re-estimates its radius against the
-    * thinned set, which can only coarsen its grid by a bounded factor)
-    * the per-probed-cell occupancy that search will see. This is the
-    * "bounded anchor subset per grid cell" scale knob the 8M-barcode
-    * domain soak named for the integration correction stage: it keeps
-    * the correction's candidate volume O(|query| · cap · 3^m) no
-    * matter how the anchor set clusters, while preserving spatial
-    * coverage (a uniform hash-thinning would starve sparse regions of
-    * their only anchors). Infinite radius (points sample ≤ k) means
-    * one global cell; the set is tiny there and the cap applies to
-    * all of it. */
-  private[ml] def thinPerGridCell(query: DataFrame, points: DataFrame,
-                                  cap: Int, k: Int, seed: Long,
-                                  conservative: Boolean = false,
-                                  gridDims: Int = 3): DataFrame = {
-    val radius = estimateRadius(query, points, k, seed, conservative)
-    val w =
-      if (!java.lang.Double.isFinite(radius) || radius >= Double.MaxValue)
-        Double.MaxValue
-      else radius
-    val dim = points.select(col("pc")).head(1) match {
-      case Array(r) => r.getSeq[Double](0).length
-      case _ => 1
-    }
-    val m = math.max(1, math.min(gridDims, dim))
-    val dirs = orthonormalDirs(dim, m, seed)
-    val cellKey = xxhash64((0 until m).map { j =>
-      floor(Similarity.dotCols(col("pc"), typedlit(dirs(j).toSeq)) / lit(w))
-        .cast("long")
-    }: _*)
-    points
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(cellKey)
-          .orderBy(col("priority").desc, col("cells_id"))))
-      .filter(col("__rk") <= cap)
-      .drop("__rk")
-  }
-
-  private[ml] def candidatePairs(query: DataFrame, corpus: DataFrame, k: Int,
-                                 seed: Long, bucketLength: Double = 0.0,
-                                 conservative: Boolean = false,
-                                 gridDims: Int = 3): DataFrame = {
-    val radius = estimateRadius(query, corpus, k, seed, conservative)
-    // infinite radius (corpus sample <= k points): every pair is a
-    // candidate — a single shared grid cell degrades to the cartesian
-    // join that a <= k-point corpus genuinely needs
-    val w =
-      if (!java.lang.Double.isFinite(radius) || radius >= Double.MaxValue)
-        Double.MaxValue
-      // the one-cell-per-axis recall guarantee needs w >= radius, so a
-      // caller's bucketLength may only COARSEN the grid (fewer, fuller
-      // cells), never shrink cells below the radius — under the old
-      // BRP-LSH this knob was recall-safe (pure bucket granularity),
-      // and clamping keeps that contract
-      else if (bucketLength > 0) math.max(bucketLength, radius)
-      else radius
-    val dim = corpus.select(col("pc")).head(1) match {
-      case Array(r) => r.getSeq[Double](0).length
-      case _ => 1 // empty corpus: any keying yields an empty join
-    }
-    val m = math.max(1, math.min(gridDims, dim))
-    val dirs = orthonormalDirs(dim, m, seed)
-    def cells(side: DataFrame) = (0 until m).map { j =>
-      floor(Similarity.dotCols(col("pc"), typedlit(dirs(j).toSeq)) / lit(w))
-        .cast("long")
-    }
-    val c = corpus.select(col("cells_id").as("nid"), col("pc").as("__pc_nid"),
-      xxhash64(cells(corpus): _*).as("__g"))
-    val probes = Seq.tabulate(math.pow(3, m).toInt) { combo =>
-      val qc = cells(query)
-      xxhash64((0 until m).map(j => qc(j) + lit(combo / math.pow(3, j).toInt % 3 - 1)): _*)
-    }
-    val q = query.select(col("cells_id").as("cid"), col("pc").as("__pc_cid"),
-      explode(array(probes: _*)).as("__g"))
-    // elementwise Σ(p−q)², not ‖p‖²+‖q‖²−2p·q: the expanded form
-    // cancels catastrophically for near-coincident points with large
-    // norms (error ~ ‖p‖·√ε), which misranks ties and jitters the
-    // radius-boundary filter exactly on coincident-heavy data. The
-    // filter below is pushed into the join condition and evaluated per
-    // CANDIDATE PAIR, so the distance must stay codegen'd: dist2Cols is
-    // the native graft_dist2 single-loop expression (a zip_with
-    // difference here — interpreted HOF — pinned the 1M-cell soak's
-    // anchor search at ~16 cores inside ZipWith.eval for 20+ min)
-    q.join(c, Seq("__g"))
-      .filter(col("cid") =!= col("nid"))
-      .withColumn("dist",
-        sqrt(Similarity.dist2Cols(col("__pc_cid"), col("__pc_nid"))))
-      .filter(col("dist") <= lit(radius))
-      .select("cid", "nid", "dist")
-  }
-
-  /** Skew-safe two-stage top-k over the candidate set. The candidate
-    * stream may repeat a (cid, nid) pair (once per LSH table that
-    * bucketed it together), so the per-partition pre-cap leaves slack
-    * (2k) and the cid-partitioned stage drops adjacent duplicates —
-    * dist is deterministic per pair, so copies sort adjacently — before
-    * assigning ranks. Both windows and the dedup filter share one
-    * exchange+sort on cid. */
-  private def rankCandidates(candidates: DataFrame, k: Int): DataFrame = {
-    val byDist =
-      Window.partitionBy("cid").orderBy(col("dist").asc, col("nid").asc)
-    candidates
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__prk", row_number().over(
-        Window.partitionBy("cid", "__pid")
-          .orderBy(col("dist").asc, col("nid").asc)))
-      .filter(col("__prk") <= 2 * k)
-      .withColumn("__dup",
-        coalesce(col("nid") === lag("nid", 1).over(byDist), lit(false)))
-      .filter(!col("__dup"))
-      .withColumn("rk", row_number().over(byDist))
-      .filter(col("rk") <= k)
-      .drop("__pid", "__prk", "__dup")
+    }.toDF("cid", "nid", "dist", "rk")
   }
 
   /** kNN edge table `(cid, nid, dist, rk)` from embeddings
     * `(cells_id, pc: array<double>)`. Each cell is its own 0-th
-    * neighbor in Seurat; we exclude self and rank 1..k. */
-  def knn(emb: DataFrame, k: Int = 20, seed: Long = 42L,
-          bucketLength: Double = 0.0): DataFrame = {
-    // no internal persist: `emb` is scanned ~4× (radius probe panel,
-    // radius corpus scan, grid query side, grid corpus side), so
-    // callers that care pass an already-persisted frame (both engine
-    // call sites do). An earlier form persisted here, which both
-    // double-cached the callers' frames and leaked the entry — the
-    // caller can't release a cache it can't see.
-    knnJoin(emb.select(col("cells_id"), col("pc")),
-      emb.select(col("cells_id"), col("pc")), k, seed, bucketLength)
-  }
+    * neighbor in Seurat; we exclude self and rank 1..k. `emb` is
+    * scanned three times (count, collect, search), so callers pass a
+    * persisted frame. */
+  def knn(emb: DataFrame, k: Int = 20): DataFrame = knnJoin(emb, emb, k)
 
   /** SNN edges `(src, dst, weight)` with src < dst, Jaccard-weighted
     * over the k-neighborhoods (self counted as its own neighbor, as in

@@ -26,7 +26,7 @@ object ConfigureEmbedding {
     val trimmed = pca.select(col("cells_id"),
       slice(col("pc"), 1, numPCs).as("pc"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val knn = Snn.knn(trimmed, k, seed)
+    val knn = Snn.knn(trimmed, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edges = Snn.graph(knn, k)
     val nCells = trimmed.count()
@@ -37,7 +37,7 @@ object ConfigureEmbedding {
         Clustering.louvainDistributed(trimmed.select("cells_id"), edges, resolution)
       else Clustering.louvain(trimmed.select("cells_id"), edges, resolution)
     // subKnn is by-name: the tsne branch never evaluates it, so the
-    // landmark path doesn't pay for an unused kNN join
+    // landmark path doesn't pay for an unused kNN
     def kernel(sub: DataFrame, subKnn: => DataFrame): DataFrame = method match {
       case "tsne" => Embed.tsneLike(sub, seed = seed)
       case _ => Embed.umapLike(sub, subKnn, epochs = umapEpochs, seed = seed)
@@ -45,7 +45,7 @@ object ConfigureEmbedding {
     val embedding =
       if (nCells > maxExact)
         Embed.landmarkLayout(trimmed, m = maxExact, seed = seed)(
-          sub => kernel(sub, Snn.knn(sub, k, seed)))
+          sub => kernel(sub, Snn.knn(sub, k)))
       else kernel(trimmed, knn)
     knn.unpersist(); trimmed.unpersist()
     Result(clusters, embedding)

@@ -220,17 +220,6 @@ class DoubletsSpec extends SparkSpec {
     expr.select("sample", "barcode", "gene", "count").as[(String, String, String, Long)]
       .collect().foldLeft(new Doublets.SampleMatrix("s1", Doublets.Sizing(20, 500, 10, 0.6)))(_ add _)
 
-  /** Ranks like the kernel's kNN, by scanning every row: per row, the k
-    * other rows with the smallest Σ(p−q)² summed in dimension order,
-    * ties to the lower row; their rows and squared sums. */
-  private def scanNearest(emb: Array[Array[Double]], k: Int): Array[Seq[(Double, Int)]] =
-    emb.indices.map { i =>
-      emb.indices.filter(_ != i).map { j =>
-        (emb(i).indices.foldLeft(0.0) { (s, c) =>
-          val x = emb(i)(c) - emb(j)(c); s + x * x }, j)
-      }.sorted.take(k)
-    }.toArray
-
   /** The 7 features of every cell of `FeaturizeReference`'s table, from
     * the exact kNN over the table's own `pc` embedding (rows in
     * `cells_id` order): the oracle for the kernel's steps 4-5, with the
@@ -241,7 +230,7 @@ class DoubletsSpec extends SparkSpec {
     assert(rows.map(_.getLong(0)).toSeq == rows.indices.map(_.toLong))
     val isArt = rows.map(_.getBoolean(2))
     val kInner = math.max(1, k / 2)
-    val nbrs = scanNearest(rows.map(_.getSeq[Double](3).toArray), k)
+    val nbrs = KdTreeSpec.scanNearest(rows.map(_.getSeq[Double](3).toArray), k)
     rows.indices.map { i =>
       val ranked = nbrs(i).map { case (s, j) => (math.sqrt(s), isArt(j)) }
       val r = ranked.length
@@ -309,13 +298,13 @@ class DoubletsSpec extends SparkSpec {
     // 30 points on a line and one far off it: the far point's
     // neighbours are the line's last 5, in order; ties go to the lower id
     val emb = ((0 until 30).map(i => Array(i.toDouble, 0.0)) :+ Array(29.0, 1000.0)).toArray
-    val (nbr, dist) = Doublets.nearest(emb, 5)
+    val (nbr, dist) = KdTree.nearest(emb, 5)
     assert(nbr(30).toSeq == Seq(29, 28, 27, 26, 25))
     assert(dist(30).toSeq == Seq(0, 1, 2, 3, 4).map(d => math.sqrt(d * d + 1e6)))
     assert(nbr(10).toSeq == Seq(9, 11, 8, 12, 7))
     assert(nbr(0).toSeq == Seq(1, 2, 3, 4, 5))
     // fewer rows than k + 1: every other row, nearest first
-    assert(Doublets.nearest(emb.take(3), 5)._1.map(_.toSeq).toSeq ==
+    assert(KdTree.nearest(emb.take(3), 5)._1.map(_.toSeq).toSeq ==
       Seq(Seq(1, 2), Seq(0, 2), Seq(1, 0)))
     // a cell expressing genes no other cell has: all k neighbours, the
     // largest mean distance of the sample
@@ -324,22 +313,6 @@ class DoubletsSpec extends SparkSpec {
     val cells = Doublets.featurize(matrixOf(iso), 10, 24, 5, 123L).get
     val meanDist = cells.map(c => c._2 -> c._5(4)).toMap
     assert(meanDist("iso") > meanDist.removed("iso").values.max)
-  }
-
-  test("the k-d tree kNN equals a scan, ties included") {
-    val rnd = new scala.util.Random(11L)
-    // a 3-d integer grid with repeated points (many exact ties) and a
-    // 10-d Gaussian cloud of 4 clusters
-    val grid = Array.fill(400)(Array.fill(3)(rnd.nextInt(6).toDouble))
-    val cloud = Array.tabulate(500)(i => Array.fill(10)(rnd.nextGaussian() + 6.0 * (i % 4)))
-    for ((emb, k) <- Seq(grid -> 7, cloud -> 20, cloud.take(20) -> 20)) {
-      val (nbr, dist) = Doublets.nearest(emb, k)
-      val scan = scanNearest(emb, k)
-      emb.indices.foreach { i =>
-        assert(nbr(i).toSeq == scan(i).map(_._2), s"row $i")
-        assert(dist(i).toSeq == scan(i).map(x => math.sqrt(x._1)), s"row $i")
-      }
-    }
   }
 
   test("checkMemory refuses a sample past its limit, naming it") {

@@ -8,16 +8,9 @@ import org.apache.spark.storage.StorageLevel
   * scDblFinder chain built from Spark stages — a seeded-hash pairing
   * turned into a permutation by a two-pass dense id, the artificial
   * doublets as a join + grouped sum, the LogNormalize → vst HVG →
-  * Scale → [[Pca.fit]] pipeline, and the radius-bounded
-  * [[Snn.knnJoin]] for the neighbours. It launches ~78 Spark jobs per
-  * sample, where the local kernel runs inside one task.
-  *
-  * One difference is by design: the kNN here ranks only the
-  * candidates inside an estimated radius, so a cell whose k-th
-  * neighbour lies beyond it has fewer than k ranked rows (and none at
-  * all falls back to a largest-distance sentinel), while the kernel's
-  * kNN is exact. A spec compares the kernel with the exact kNN over
-  * this table's `pc` embedding instead. */
+  * Scale → [[Pca.fit]] pipeline, and [[Snn.knnJoin]] for the
+  * neighbours. It launches ~78 Spark jobs per sample, where the local
+  * kernel runs inside one task. */
 object FeaturizeReference {
 
   /** The per-cell feature table `(cells_id, pc, sample, barcode,
@@ -77,12 +70,10 @@ object FeaturizeReference {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val ranked = Snn.knnJoin(
         tagged.select("cells_id", "pc"),
-        tagged.select("cells_id", "pc"), k, seed)
+        tagged.select("cells_id", "pc"), k)
       .join(tagged.select(col("cells_id").as("nid"),
         col("is_art").as("n_art")), "nid")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // LEFT join from the full cell set: a cell with no ranked rows
-    // still emerges, with artificial-neighbour fraction 0
     val kInner = math.max(1, k / 2)
     val artFrac = ranked
       .groupBy(col("cid").as("cells_id"))
@@ -98,26 +89,18 @@ object FeaturizeReference {
           .as("w_art_frac"),
         min(when(col("n_art"), col("rk"))).as("first_art_rk"),
         avg(col("dist")).as("mean_dist"))
-    // sentinel for a cell with no neighbour inside the radius: the
-    // largest observed neighbour distance
-    val distCap = ranked.agg(
-      coalesce(max(col("dist")), lit(1.0)).as("__dist_cap"))
     val libs = combined
       .groupBy("sample", "barcode")
       .agg(sum("count").as("lib"), count(lit(1)).as("nfeat"))
       .join(ids, Seq("sample", "barcode"))
       .select(col("cells_id"), log1p(col("lib")).as("log_lib"),
         log1p(col("nfeat")).as("log_nfeat"))
+    // every cell has min(k, cells − 1) > 0 neighbours
     val feats = tagged
-      .join(artFrac, Seq("cells_id"), "left")
-      .withColumn("art_frac", coalesce(col("art_frac"), lit(0.0)))
-      .withColumn("art_frac_inner", coalesce(col("art_frac_inner"), lit(0.0)))
+      .join(artFrac, "cells_id")
       .withColumn("w_art_frac", coalesce(col("w_art_frac"), lit(0.0)))
       .withColumn("first_art_rk",
         coalesce(col("first_art_rk"), lit(k + 1)).cast("double"))
-      .crossJoin(broadcast(distCap))
-      .withColumn("mean_dist", coalesce(col("mean_dist"), col("__dist_cap")))
-      .drop("__dist_cap")
       .join(libs, "cells_id")
       .withColumn("features",
         array(col("art_frac"), col("art_frac_inner"), col("w_art_frac"),

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -26,116 +27,139 @@ class GraphSpec extends SparkSpec {
     assert(perCell.forall(_ == 5))
   }
 
-  test("LSH candidate-pair count stays O(n·k) under a 10x blowup") {
-    // Uniform cloud in 5-D: with an unbounded radius every bucket
-    // collision survives, so candidates grow ~quadratically with n.
-    // The data-derived finite radius must keep growth ~linear.
-    val rnd = new scala.util.Random(7)
-    def cloud(n: Int) = (0 until n).map(i =>
-      (i.toLong, Array.fill(5)(rnd.nextDouble() * 100))).toDF("cells_id", "pc")
-    val k = 10
-    val small = cloud(300).persist()
-    val big = cloud(3000).persist()
-    val cSmall = Snn.candidatePairs(small, small, k, seed = 42L).count()
-    val cBig = Snn.candidatePairs(big, big, k, seed = 42L).count()
-    // quadratic would be 100x; require comfortably sub-quadratic and
-    // within a constant factor of the linear ideal (10x)
-    assert(cBig.toDouble / cSmall < 30,
-      s"candidate growth ${cBig.toDouble / cSmall}x for 10x data (small=$cSmall big=$cBig)")
-    // and the bounded join still yields full, correct k-neighborhoods
-    val perCell = Snn.knnJoin(big, big, k, seed = 42L)
-      .groupBy("cid").count().collect().map(_.getLong(1))
-    assert(perCell.length == 3000 && perCell.forall(_ == k))
-    small.unpersist(); big.unpersist()
+  /** Brute force: per query row, the k corpus rows other than itself
+    * with the smallest (Σ(p−q)², summed in dimension order; nid), as
+    * `(cid, nid, sqrt(Σ), rk)`. */
+  private def scan(query: DataFrame, corpus: DataFrame, k: Int): Set[(Long, Long, Double, Int)] = {
+    def rows(df: DataFrame) = df.select("cells_id", "pc").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val cs = rows(corpus)
+    rows(query).flatMap { case (cid, p) =>
+      cs.filter(_._1 != cid).map { case (nid, q) =>
+        (p.indices.foldLeft(0.0) { (s, c) => val x = p(c) - q(c); s + x * x }, nid)
+      }.sorted.take(k).zipWithIndex.map { case ((s, nid), r) => (cid, nid, math.sqrt(s), r + 1) }
+    }.toSet
   }
 
-  test("coincident-heavy data keeps a finite radius and a bounded candidate set") {
-    // >= k exact duplicates per point (PCR duplicates / zero-expression
-    // cells collapsing in PCA): the sampled kth-NN distance is 0, and
-    // the radius estimator must degrade to a SMALL positive radius —
-    // the old MaxValue degradation flipped the join quadratic (the
-    // domain soak spilled >78 GB of candidate pairs on exactly this
-    // shape before the fix).
+  private def rows(knn: DataFrame): Set[(Long, Long, Double, Int)] =
+    knn.select("cid", "nid", "dist", "rk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+
+  private def shortCells(knn: Set[(Long, Long, Double, Int)], ids: Seq[Long], k: Int): Int = {
+    val got = knn.groupBy(_._1).view.mapValues(_.size).toMap
+    ids.count(id => got.getOrElse(id, 0) < k)
+  }
+
+  test("exact kNN equals a brute-force scan on a 3000-point uniform cloud") {
+    val rnd = new scala.util.Random(7)
+    val cloud = (0 until 3000).map(i =>
+      (i.toLong, Array.fill(5)(rnd.nextDouble() * 100))).toDF("cells_id", "pc").persist()
+    val got = rows(Snn.knn(cloud, 10))
+    assert(got == scan(cloud, cloud, 10))
+    assert(got.size == 3000 * 10)
+    cloud.unpersist()
+  }
+
+  test("coincident piles: exact kNN equals a scan, ties to the lower nid") {
+    // 50 identical copies of each of 40 points: every cell's 10
+    // neighbours are pile mates at distance 0, the lowest ids but its own
     val k = 10
     val piles = (0 until 40).flatMap { p =>
-      (0 until 50).map { c => // 50 identical copies of each of 40 points
-        ((p * 50 + c).toLong,
-          Array(10.0 * p, 3.0 * (p % 7), 0.0, 0.0, 0.0))
+      (0 until 50).map { c =>
+        ((p * 50 + c).toLong, Array(10.0 * p, 3.0 * (p % 7), 0.0, 0.0, 0.0))
       }
     }.toDF("cells_id", "pc").persist()
-    val r = Snn.estimateRadius(piles, piles, k, seed = 42L)
-    assert(r > 0 && r < Double.MaxValue, s"radius degraded to $r")
-    // candidates = the true radius-bounded pair set: 49 own-pile
-    // neighbors plus the 2-4 adjacent piles that fall inside the
-    // fallback radius (2x the nearest inter-pile distance) — about
-    // n x 220 here, nowhere near the n^2 = 4M cartesian the MaxValue
-    // degradation used to produce
-    val cands = Snn.candidatePairs(piles, piles, k, seed = 42L).count()
-    assert(cands < 600000L, s"candidate blowup: $cands pairs for 2000 points")
-    // and every cell still gets its k coincident neighbors
-    val perCell = Snn.knnJoin(piles, piles, k, seed = 42L)
-      .groupBy("cid").count().collect().map(_.getLong(1))
-    assert(perCell.length == 2000 && perCell.forall(_ == k))
+    val got = rows(Snn.knn(piles, k))
+    assert(got == scan(piles, piles, k))
+    got.groupBy(_._1).foreach { case (cid, nbrs) =>
+      val pile = cid / 50 * 50
+      assert(nbrs.toSeq.sortBy(_._4).map(_._2) ==
+        (pile until pile + 50).filter(_ != cid).take(k), s"cell $cid")
+      assert(nbrs.forall(_._3 == 0.0))
+    }
+    assert(got.map(_._1).size == 2000)
     piles.unpersist()
   }
 
-  test("radius tracks true density past the probe panel — no sample-rate inflation") {
-    // Two uniform clouds at the SAME density, one 4x the volume/points
-    // of the other (both past the old 2048-point corpus-sample cap).
-    // The kth-NN distance depends only on density, so the estimated
-    // radius must match across them. The former sample-based estimator
-    // measured the big corpus through a 2048/12000 sample — an
-    // effective density ~5.9x too low, inflating its radius ~(5.9)^(1/3)
-    // ≈ 1.8x and with it the grid candidate volume superlinearly (the
-    // 1M-barcode domain soak measured 2.5x cells → 10x doublets
-    // shuffle from exactly this).
-    val rnd = new scala.util.Random(11)
-    def cube(n: Int, side: Double) = (0 until n).map(i =>
-      (i.toLong, Array.fill(3)(rnd.nextDouble() * side))).toDF("cells_id", "pc")
-    val k = 10
-    val small = cube(3000, 100.0).persist()             // density 3e-3
-    val big = cube(12000, 100.0 * math.cbrt(4.0)).persist() // same density
-    val rSmall = Snn.estimateRadius(small, small, k, seed = 42L)
-    val rBig = Snn.estimateRadius(big, big, k, seed = 42L)
-    assert(rBig < rSmall * 1.35 && rBig > rSmall * 0.65,
-      s"radius not density-stable: small=$rSmall big=$rBig")
-    small.unpersist(); big.unpersist()
+  test("far outliers get their k exact neighbours: no cell comes back short") {
+    // 300 Gaussian cells in 10-D and 30 scattered far from them and
+    // from each other: the ε-grid join gave all 30 no neighbour at all
+    val rnd = new scala.util.Random(3)
+    val core = (0 until 300).map(i => (i.toLong, Array.fill(10)(rnd.nextGaussian())))
+    val far = (300 until 330).map(i =>
+      (i.toLong, Array.fill(10)((rnd.nextDouble() - 0.5) * 2000)))
+    val emb = (core ++ far).toDF("cells_id", "pc").persist()
+    val got = rows(Snn.knn(emb, 10))
+    assert(got == scan(emb, emb, 10))
+    assert(shortCells(got, 0L until 330L, 10) == 0)
+    emb.unpersist()
   }
 
-  test("a sub-radius bucketLength is clamped — recall survives the knob") {
-    // the one-cell-per-axis recall guarantee needs cell width >= the
-    // estimated radius; a caller passing a tiny bucketLength (recall-
-    // safe under the old BRP-LSH, where it was pure bucket granularity)
-    // must not silently lose true within-radius neighbors
-    val k = 5
-    val base = Snn.knnJoin(emb, emb, k, seed = 42L)
-      .select("cid", "nid", "rk").collect().toSet
-    val tiny = Snn.knnJoin(emb, emb, k, seed = 42L, bucketLength = 1e-6)
-      .select("cid", "nid", "rk").collect().toSet
-    assert(tiny == base,
-      s"bucketLength=1e-6 changed the kNN graph (${tiny.size} vs ${base.size} edges)")
+  test("query ≠ corpus: each query row gets the corpus's k nearest") {
+    // the Integration / Embed shape: query cells searched against a
+    // different corpus; a query id found in the corpus is excluded
+    val rnd = new scala.util.Random(5)
+    val corpus = (0 until 400).map(i =>
+      (i.toLong, Array.fill(4)(rnd.nextGaussian() + 5.0 * (i % 3)))).toDF("cells_id", "pc")
+    val query = ((1000 until 1200).map(i =>
+      (i.toLong, Array.fill(4)(rnd.nextGaussian() * 4))) :+ (7L, Array(0.0, 0.0, 0.0, 0.0)))
+      .toDF("cells_id", "pc")
+    val got = rows(Snn.knnJoin(query, corpus, 8))
+    assert(got == scan(query, corpus, 8))
+    assert(got.size == 201 * 8 && !got.exists(r => r._1 == 7L && r._2 == 7L))
   }
 
-  test("candidate-join distance is native codegen — no interpreted HOF in the plan") {
-    // The distance filter is pushed into the join condition and
-    // evaluated per candidate pair; an interpreted zip_with there
-    // pinned the 1M-cell soak's anchor search at ~16 cores inside
-    // ZipWith.eval for 20+ minutes. With the extensions injected the
-    // plan must carry graft_dist2 and no higher-order lambda.
-    val plan = Snn.candidatePairs(emb, emb, 5, seed = 42L)
-      .queryExecution.optimizedPlan.toString
-    assert(plan.contains("graft_dist2"), plan)
-    assert(!plan.contains("zip_with") && !plan.contains("lambdafunction"), plan)
-    // and the native form agrees with the interpreted fallback
+  test("k >= |corpus| returns every other row; an empty corpus returns nothing") {
+    val small = (0 until 6).map(i => (i.toLong, Array(i.toDouble, 1.0))).toDF("cells_id", "pc")
+    val outside = Seq((100L, Array(2.4, 0.0))).toDF("cells_id", "pc")
+    val got = rows(Snn.knnJoin(small.unionByName(outside), small, 10))
+    assert(got == scan(small.unionByName(outside), small, 10))
+    assert(got.count(_._1 == 100L) == 6 && (0L until 6L).forall(c => got.count(_._1 == c) == 5))
+    assert(rows(Snn.knnJoin(small, small.limit(0), 10)).isEmpty)
+    assert(rows(Snn.knnJoin(small, small, 0)).isEmpty)
+  }
+
+  test("dist is sqrt of graft_dist2 on every row, bit for bit") {
+    val knn = Snn.knn(emb, 5)
+    val pcs = emb.select(col("cells_id"), col("pc"))
+    val checked = knn
+      .join(pcs.select(col("cells_id").as("cid"), col("pc").as("a")), "cid")
+      .join(pcs.select(col("cells_id").as("nid"), col("pc").as("b")), "nid")
+      .select(col("dist"), sqrt(call_function("graft_dist2", col("a"), col("b"))).as("native"))
+      .collect()
+    assert(checked.length == 30 * 5)
+    checked.foreach(r => assert(r.getDouble(0) == r.getDouble(1), r))
+    // and the native form agrees with the interpreted composition
     val d2 = call_function("graft_dist2", col("a"), col("b"))
     val fb = aggregate(
       zip_with(col("a"), col("b"),
         (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
-    val rows = Seq(
+    val pairs = Seq(
       (Array(1.5, -2.0, 3e8), Array(1.5, -2.0, 3e8 + 1e-4)),
       (Array(0.0, 0.0, 0.0), Array(1.0, 2.0, 2.0)))
       .toDF("a", "b").select(d2.as("n"), fb.as("f")).collect()
-    rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1), r))
+    pairs.foreach(r => assert(r.getDouble(0) == r.getDouble(1), r))
+  }
+
+  test("a corpus past the driver bound is refused by name before its collect") {
+    val e = intercept[Snn.CorpusTooLargeException](Snn.checkCorpusBound(1000, 20, 1000))
+    assert(e.isInstanceOf[IllegalStateException])
+    Seq("1000 rows", "20 dims", s"~${KdTree.bytes(1000, 20)} bytes", "spark.driver.maxResultSize")
+      .foreach(x => assert(e.getMessage.contains(x), e.getMessage))
+    Snn.checkCorpusBound(1000, 20, KdTree.bytes(1000, 20))
+    Snn.checkCorpusBound(1000, 20, 0) // 0: no bound
+    // through the join: the count runs, the collect never does
+    val (refused, jobs) = jobsDuring(
+      scala.util.Try(Snn.knnJoin(emb, emb, 5, limitBytes = 1000)))
+    assert(refused.failed.get.isInstanceOf[Snn.CorpusTooLargeException])
+    assert(jobs == 1)
+  }
+
+  test("knnJoin runs its count and collect jobs, then one job for the result") {
+    val (knn, built) = jobsDuring(Snn.knnJoin(emb, emb, 5))
+    assert(built == 2)
+    val (n, consumed) = jobsDuring(knn.collect().length)
+    assert(n == 30 * 5 && consumed == 1)
   }
 
   test("SNN graph + Louvain recovers the two blobs") {

@@ -201,35 +201,25 @@ class IntegrationSpec extends SparkSpec {
     assert(after < 0.85, s"sampled-anchor mixing $after (exact: ~0.6975)")
   }
 
-  test("capped-correction path: a generous per-cell cap is bit-identical to exact; a tight cap still removes the shift") {
-    // r12 verdict item 1: the correction stage's anchor set bounded
-    // per ε-grid cell (Snn.thinPerGridCell). A cap at/above the
-    // densest cell's anchor count drops nothing, so the output must
-    // not differ by a single double from the exact path...
-    val exact = Integration.integrateEmbeddings(pca, groups,
-      kAnchor = 8, kWeight = 8)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val generous = Integration.integrateEmbeddings(pca, groups,
-      kAnchor = 8, kWeight = 8, maxAnchorsPerCell = 1000)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    assert(generous == exact)
-    // ...and a genuinely tight cap (2 anchors per grid cell) must
-    // still correct EVERY query cell well enough to remove the
-    // planted batch shift: coverage, not anchor count, is what the
-    // per-cell thinning preserves
-    val capped = Integration.integrateEmbeddings(pca, groups,
-      kAnchor = 8, kWeight = 8, maxAnchorsPerCell = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    assert(capped.size == 80)
-    (0 until 40).foreach(i => assert(capped(i.toLong) == exact(i.toLong)))
-    def centroid(out: Map[Long, Seq[Double]], ids: Range) = {
-      val vs = ids.map(out(_))
-      vs.head.indices.map(d => vs.map(_(d)).sum / vs.size)
+  test("every query cell's kWeight nearest anchors equal a brute-force scan") {
+    // the correction's search: batch 2 against anchors in only one of
+    // its populations, so the other population's cells must reach ~28
+    // units for theirs; an anchor cell counts itself at distance 0
+    val kWeight = 4
+    val qry = pca.filter(col("cells_id") >= 100)
+    val anchors = qry.filter(col("cells_id") < 120 && col("cells_id") % 3 === 0)
+    val got = Integration.nearestAnchors(qry, anchors, kWeight).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
+      .view.mapValues(_.map(r => (r._3, r._2)).sorted.take(kWeight).toSeq).toMap
+    val pts = pca.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val anchorIds = anchors.collect().map(_.getLong(0))
+    assert(got.size == 40)
+    got.foreach { case (c, nearest) =>
+      val scan = anchorIds.map { a =>
+        (pts(c).indices.foldLeft(0.0) { (s, d) => val x = pts(c)(d) - pts(a)(d); s + x * x }, a)
+      }.sorted.take(kWeight).map { case (s, a) => (math.sqrt(s), a) }.toSeq
+      assert(nearest == scan, s"cell $c")
     }
-    val p1b1 = centroid(capped, 0 until 20)
-    val p1b2 = centroid(capped, 100 until 120)
-    assert(dist(p1b1, p1b2) < 3.0,
-      s"capped correction left the shift in: ${dist(p1b1, p1b2)}")
   }
 
   test("single group passes through unchanged") {
