@@ -1,161 +1,54 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-/** `FindClusters` (`QC_helpers/configureEmbedding.r:114`) — community
-  * detection on the SNN graph.
-  *
-  * v1 is deterministic weighted label propagation (the staged fallback
-  * of SURVEY §7.3; Louvain modularity refinement is a later round).
-  * Implemented on DataFrames rather than GraphX's LabelPropagation
-  * because the latter's tie-breaking is map-iteration-order dependent:
-  * here ties break on the smallest label, so the result is a pure
-  * function of the graph. Each iteration is one join + one grouped
-  * sum + one window — all keyed by vertex id.
+/** `FindClusters(louvain, resolution = 0.5)`
+  * (`QC_helpers/configureEmbedding.r:114`) — community detection on the
+  * SNN graph by the [[Louvain]] driver kernel, whatever the graph's
+  * size. The edge list is post-reduction (≤ cells × k rows); only it
+  * and the vertex ids are collected, matching the reference's igraph
+  * locality. A graph whose kernel would pass `spark.driver.maxResultSize`
+  * is refused by name before either collect.
   *
   * Cluster ids are renumbered 0..C−1 by ascending min member id
   * (deterministic-ordinal convention, SURVEY §2.10).
   */
 object Clustering {
 
-  /** `(cells_id, cluster)` from SNN edges `(src, dst, weight)`.
-    * `vertices` supplies isolated cells (they keep singleton labels). */
-  def labelPropagation(vertices: DataFrame, edges: DataFrame,
-                       maxIters: Int = 10): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"), col("weight"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint each iteration: an iterative self-referencing
-    // plan otherwise grows exponentially deep and blows up at analysis
-    var labels = vertices.select(col("cells_id"), col("cells_id").as("label"))
-      .localCheckpoint(true)
-    var iter = 0
-    var changed = 1L
-    while (iter < maxIters && changed > 0) {
-      val votes = sym
-        .join(labels.withColumnRenamed("cells_id", "dst"), "dst")
-        .groupBy(col("src"), col("label"))
-        .agg(sum("weight").as("w"))
-      val best = votes
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("src").orderBy(col("w").desc, col("label").asc)))
-        .filter(col("rk") === 1)
-        .select(col("src").as("cells_id"), col("label").as("new_label"))
-      val next = labels
-        .join(best, Seq("cells_id"), "left")
-        .select(col("cells_id"),
-          coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint(true)
-      changed = next.join(labels.withColumnRenamed("label", "old"), "cells_id")
-        .filter(col("label") =!= col("old")).count()
-      labels = next
-      iter += 1
-    }
-    sym.unpersist()
-    renumber(labels)
+  /** The setting that bounds the graph [[louvain]] collects (0 = no
+    * bound, as it means for Spark's own collects). */
+  private val GraphLimitSetting = "spark.driver.maxResultSize"
+
+  /** A [[louvain]] refused before collecting: the kernel over the graph
+    * would not fit the bound the setting gives. */
+  final class GraphTooLargeException(msg: String) extends IllegalStateException(msg)
+
+  /** Throw [[GraphTooLargeException]] when the kernel over `cells`
+    * vertices and `edges` edges ([[Louvain.bytes]]) would exceed
+    * `limitBytes` (0 = no bound). */
+  private[ml] def checkGraphBound(cells: Long, edges: Long, limitBytes: Long): Unit = {
+    val estimate = Louvain.bytes(cells, edges)
+    if (limitBytes > 0 && estimate > limitBytes)
+      throw new GraphTooLargeException(
+        s"SNN graph too large to cluster: $cells cells and $edges edges need ~$estimate bytes " +
+          s"in the Louvain kernel, over $GraphLimitSetting = $limitBytes bytes")
   }
 
-  /** Distributed Louvain-style local-move refinement of an initial
-    * partition (e.g. [[labelPropagation]]'s): each pass computes, for
-    * every node, the modularity gain of moving to each neighboring
-    * community — ΔQ ∝ k_{i→C} − γ·k_i·Σ_C/2m, the Louvain local-move
-    * rule — and applies the best strictly-relational move. Moves are
-    * parity-gated (even ids on even passes) so the synchronous update
-    * cannot oscillate by swapping a pair. Every stage is a join +
-    * grouped sum keyed by vertex or community id: no driver
-    * materialization, unlike the [[Louvain]] kernel. */
-  def modularityRefine(vertices: DataFrame, edges: DataFrame,
-                       init: DataFrame, resolution: Double = 1.0,
-                       maxIters: Int = 6): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"), col("weight"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val m2Row = sym.agg(sum("weight")).head()
-    if (m2Row.isNullAt(0)) { sym.unpersist(); return renumber(init) }
-    val m2 = m2Row.getDouble(0) // = 2m
-    val deg = sym.groupBy(col("src").as("cells_id"))
-      .agg(sum("weight").as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // vertices not covered by init become singleton communities (the
-    // same isolated-cell contract labelPropagation documents); their
-    // labels are offset above init's namespace — init is typically
-    // renumbered 0..C-1, so a raw cells_id could collide with an
-    // existing community and silently absorb the vertex into it
-    val maxLabelRow = init.agg(max("label")).head()
-    val labelBase = (if (maxLabelRow.isNullAt(0)) -1L
-                     else maxLabelRow.getLong(0)) + 1L
-    var labels = init.select("cells_id", "label")
-      .unionByName(vertices
-        .join(init.select("cells_id"), Seq("cells_id"), "left_anti")
-        .select(col("cells_id"), (col("cells_id") + lit(labelBase)).as("label")))
-      .localCheckpoint(true)
-    for (it <- 0 until maxIters) {
-      val commDeg = labels.join(deg, "cells_id")
-        .groupBy("label").agg(sum("deg").as("cdeg"))
-        .withColumnRenamed("label", "clabel")
-      val nbrW = sym
-        .join(labels.select(col("cells_id").as("dst"), col("label").as("clabel")), "dst")
-        .groupBy(col("src"), col("clabel")).agg(sum("weight").as("kic"))
-      // the node's own community is always a candidate, even with no
-      // neighbors in it (kic = 0) — union + max dedupes the two rows
-      val own = labels.select(col("cells_id").as("src"),
-        col("label").as("clabel"), lit(0.0).as("kic"))
-      val cand = nbrW.unionByName(own)
-        .groupBy("src", "clabel").agg(max("kic").as("kic"))
-        .join(labels.select(col("cells_id").as("src"), col("label").as("own")), "src")
-        .join(deg.select(col("cells_id").as("src"), col("deg")), "src")
-        .join(commDeg, "clabel")
-        // Σ_C must exclude the node itself when C is its own community
-        .withColumn("cdegx", col("cdeg") -
-          when(col("clabel") === col("own"), col("deg")).otherwise(lit(0.0)))
-        .withColumn("gain",
-          col("kic") - lit(resolution) * col("deg") * col("cdegx") / lit(m2))
-      val best = cand
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("src").orderBy(col("gain").desc, col("clabel").asc)))
-        .filter(col("rk") === 1)
-        .select(col("src").as("cells_id"), col("clabel").as("new_label"))
-      labels = labels.join(best, Seq("cells_id"), "left")
-        .select(col("cells_id"),
-          when(pmod(col("cells_id"), lit(2)) === lit(it % 2),
-            coalesce(col("new_label"), col("label")))
-            .otherwise(col("label")).as("label"))
-        .localCheckpoint(true)
-    }
-    sym.unpersist(); deg.unpersist()
-    renumber(labels)
-  }
-
-  /** Cluster ids 0..C−1 by ascending min member id. */
-  private def renumber(labels: DataFrame): DataFrame = {
-    val renum = labels.groupBy("label")
-      .agg(min("cells_id").as("rep"))
-      .withColumn("cluster",
-        (row_number().over(Window.orderBy(col("rep").asc)) - 1).cast("long"))
-      .select("label", "cluster")
-    labels.join(renum, "label").select("cells_id", "cluster")
-  }
-
-  /** The fully-distributed clustering path: label-propagation init +
-    * modularity local-move refinement — the 100 TB substitute for the
-    * [[Louvain]] driver kernel. */
-  def louvainDistributed(vertices: DataFrame, edges: DataFrame,
-                         resolution: Double = 1.0): DataFrame =
-    modularityRefine(vertices, edges,
-      labelPropagation(vertices, edges)
-        .select(col("cells_id"), col("cluster").as("label")),
-      resolution)
-
-  /** Louvain modularity clustering via the [[Louvain]] driver kernel —
-    * the reference-parity path (`configureEmbedding.r:114`). The edge
-    * list is post-reduction (≤ cells × k rows); only it is collected,
-    * matching the reference's igraph locality. */
+  /** `(cells_id, cluster)` from `vertices (cells_id)` and SNN `edges
+    * (src, dst, weight)`, each pair listed once. A vertex with no edge
+    * is its own cluster. Both frames are counted, then collected (each
+    * is read twice, so callers pass persisted frames); the result is a
+    * local frame. */
   def louvain(vertices: DataFrame, edges: DataFrame,
-              resolution: Double = 1.0): DataFrame = {
+              resolution: Double = 1.0): DataFrame =
+    louvain(vertices, edges, resolution,
+      vertices.sparkSession.sparkContext.getConf.getSizeAsBytes(GraphLimitSetting, "1g"))
+
+  private[ml] def louvain(vertices: DataFrame, edges: DataFrame, resolution: Double,
+                          limitBytes: Long): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
+    checkGraphBound(vertices.count(), edges.count(), limitBytes)
     val ids = vertices.select("cells_id").collect().map(_.getLong(0)).sorted
     val idx = ids.zipWithIndex.toMap
     val es = edges.select("src", "dst", "weight").collect()

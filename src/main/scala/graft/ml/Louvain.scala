@@ -10,8 +10,24 @@ import scala.collection.mutable
   * Deterministic by construction: nodes are visited in ascending id
   * order, modularity-gain ties break on the smallest community id, and
   * the recursion bottoms out when a full pass moves nothing.
+  *
+  * Bounded: a local-moving pass makes at most [[MaxSweeps]] sweeps over
+  * the nodes, and every level that moves a node leaves fewer
+  * communities than it had nodes, so there are at most n levels.
   */
 object Louvain {
+
+  /** The cap on one local-moving pass's sweeps over the nodes: a pass
+    * that still moves a node on its last sweep stops there. */
+  val MaxSweeps = 100
+
+  /** An upper bound on the driver bytes [[Clustering.louvain]] holds to
+    * run this kernel on `n` vertices and `e` edges. Per edge, the peak
+    * is the collected row (~135 B) alive with its index tuple (~47 B),
+    * above the tuple and its two neighbour entries (~79 B) of a pass;
+    * per vertex, the sorted ids and the id → index map (~65 B), the
+    * pass's per-node arrays and buffers, and the result row. */
+  def bytes(n: Long, e: Long): Long = 256L * n + 200L * e
 
   /** `communities(n, edges)` → community id per node 0..n−1, renumbered
     * 0..C−1 by ascending smallest member. Edges are undirected, each
@@ -73,7 +89,7 @@ object Louvain {
     var movedAny = false
     var movedThisSweep = true
     var sweeps = 0
-    while (movedThisSweep && sweeps < 100) {
+    while (movedThisSweep && sweeps < MaxSweeps) {
       movedThisSweep = false
       var i = 0
       while (i < n) {
@@ -89,10 +105,8 @@ object Louvain {
         wTo.keysIterator.toArray.sorted.foreach { c =>
           if (c != ci) {
             val gain = wTo(c) - resolution * k(i) * sigmaTot(c) / m2 - base
-            if (gain > bestGain + 1e-12 ||
-                (math.abs(gain - bestGain) <= 1e-12 && bestGain > 0 && c < bestC)) {
-              bestGain = gain; bestC = c
-            }
+            // candidates ascend, so a tie keeps the smaller id
+            if (gain > bestGain + 1e-12) { bestGain = gain; bestC = c }
           }
         }
         sigmaTot(bestC) += k(i)

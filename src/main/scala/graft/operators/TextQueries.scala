@@ -697,8 +697,7 @@ object TextQueries {
     * (one direction suffices). Output: (v, lbl) with lbl = min node id
     * of v's component.
     *
-    * Size-routed like the repo's other graph kernels
-    * (ConfigureEmbedding): the dedup graph is orders of magnitude
+    * Size-routed: the dedup graph is orders of magnitude
     * smaller than the corpus (only docs in near-dup PAIRS appear), so
     * up to `driverLimit` edges a driver union-find answers in under a
     * second (10M edges ≈ 160 MB collected — nothing on a driver sized

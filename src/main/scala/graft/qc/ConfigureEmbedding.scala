@@ -16,26 +16,28 @@ object ConfigureEmbedding {
       clusters: DataFrame, // (cells_id, cluster)
       umap: DataFrame)     // (cells_id, x, y)
 
-  /** `maxExact` is the driver-kernel boundary: above it the embedding
-    * runs through [[Embed.landmarkLayout]] (exact kernel on that many
-    * landmarks, distributed weighted-kNN placement for the rest). */
+  /** Above this many cells the layout runs through
+    * [[Embed.landmarkLayout]]: the exact kernel on this many landmarks,
+    * distributed weighted-kNN placement for the rest. */
+  private val ExactLayoutCells = 10000
+
+  /** Clusters come from [[Clustering.louvain]] at every size; a graph
+    * past its driver bound is refused with
+    * [[Clustering.GraphTooLargeException]]. */
   def run(pca: DataFrame, numPCs: Int = 30, k: Int = 20,
           resolution: Double = 0.5, umapEpochs: Int = 200,
-          method: String = "umap", seed: Long = 42L,
-          maxExact: Int = 10000): Result = {
+          method: String = "umap", seed: Long = 42L): Result = {
     val trimmed = pca.select(col("cells_id"),
       slice(col("pc"), 1, numPCs).as("pc"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val knn = Snn.knn(trimmed, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // counted, then collected, by the clustering
     val edges = Snn.graph(knn, k)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val clusters = Clustering.louvain(trimmed.select("cells_id"), edges, resolution)
+    edges.unpersist()
     val nCells = trimmed.count()
-    // Louvain driver kernel inside the sanctioned locality boundary;
-    // past it, the fully-distributed label-prop + modularity-refine path
-    val clusters =
-      if (nCells > maxExact)
-        Clustering.louvainDistributed(trimmed.select("cells_id"), edges, resolution)
-      else Clustering.louvain(trimmed.select("cells_id"), edges, resolution)
     // subKnn is by-name: the tsne branch never evaluates it, so the
     // landmark path doesn't pay for an unused kNN
     def kernel(sub: DataFrame, subKnn: => DataFrame): DataFrame = method match {
@@ -43,8 +45,8 @@ object ConfigureEmbedding {
       case _ => Embed.umapLike(sub, subKnn, epochs = umapEpochs, seed = seed)
     }
     val embedding =
-      if (nCells > maxExact)
-        Embed.landmarkLayout(trimmed, m = maxExact, seed = seed)(
+      if (nCells > ExactLayoutCells)
+        Embed.landmarkLayout(trimmed, m = ExactLayoutCells, seed = seed)(
           sub => kernel(sub, Snn.knn(sub, k)))
       else kernel(trimmed, knn)
     knn.unpersist(); trimmed.unpersist()

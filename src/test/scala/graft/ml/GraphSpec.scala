@@ -179,11 +179,10 @@ class GraphSpec extends SparkSpec {
     assert(byCluster(0L).contains(0L))
   }
 
-  test("label propagation (distributed fallback) never mixes blobs") {
+  test("Louvain at k = 5 never mixes blobs") {
     val knn = Snn.knn(emb, k = 5)
     val edges = Snn.graph(knn, k = 5)
-    val clusters = Clustering.labelPropagation(
-      emb.select("cells_id"), edges, maxIters = 10)
+    val clusters = Clustering.louvain(emb.select("cells_id"), edges)
     val byCluster = clusters.collect()
       .groupBy(_.getAs[Long]("cluster"))
       .view.mapValues(_.map(_.getAs[Long]("cells_id")).toSet).toMap
@@ -191,9 +190,10 @@ class GraphSpec extends SparkSpec {
       assert(members.forall(_ < 100) || members.forall(_ >= 100),
         s"cluster mixes blobs: $members")
     }
+    assert(byCluster.values.flatten.size == 30)
   }
 
-  test("distributed modularity refinement: cliques recovered, modularity not worse than init") {
+  test("Louvain on a ring of cliques keeps each clique whole") {
     // ring of 4 cliques (6 nodes each) bridged by single weak edges —
     // the canonical modularity fixture
     val cliques = (0 until 4).flatMap { c =>
@@ -222,21 +222,83 @@ class GraphSpec extends SparkSpec {
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-    val lp = toMap(Clustering.labelPropagation(verts, edges))
-    val refined = toMap(Clustering.louvainDistributed(verts, edges))
-    assert(refined.size == 24)
+    val perClique = (0 until 4).flatMap(c =>
+      (0 until 6).map(i => (c * 100 + i).toLong -> c.toLong)).toMap
+    val got = toMap(Clustering.louvain(verts, edges))
+    assert(got.size == 24)
     // cliques end up whole: members of one clique share a cluster and
     // no cluster spans two cliques
-    val byCluster = refined.groupBy(_._2).view.mapValues(_.keys.toSet).toMap
+    val byCluster = got.groupBy(_._2).view.mapValues(_.keys.toSet).toMap
     byCluster.values.foreach { members =>
       assert(members.map(_ / 100).size == 1, s"cluster spans cliques: $members")
     }
-    assert(refined.groupBy(_._1 / 100).values.forall(_.values.toSet.size == 1))
-    assert(modularity(refined) >= modularity(lp) - 1e-9,
-      s"refined ${modularity(refined)} < lp ${modularity(lp)}")
+    assert(got.groupBy(_._1 / 100).values.forall(_.values.toSet.size == 1))
+    assert(modularity(got) >= modularity(perClique) - 1e-9,
+      s"louvain ${modularity(got)} < one per clique ${modularity(perClique)}")
     // deterministic
-    assert(toMap(Clustering.louvainDistributed(verts, edges)) == refined)
+    assert(toMap(Clustering.louvain(verts, edges)) == got)
     edges.unpersist(); verts.unpersist()
+  }
+
+  test("a graph past the driver bound is refused by name before its collect") {
+    val e = intercept[Clustering.GraphTooLargeException](
+      Clustering.checkGraphBound(1000, 20000, 1000))
+    assert(e.isInstanceOf[IllegalStateException])
+    Seq("1000 cells", "20000 edges", s"~${Louvain.bytes(1000, 20000)} bytes",
+      "spark.driver.maxResultSize").foreach(x => assert(e.getMessage.contains(x), e.getMessage))
+    Clustering.checkGraphBound(1000, 20000, Louvain.bytes(1000, 20000))
+    Clustering.checkGraphBound(1000, 20000, 0) // 0: no bound
+    val verts = emb.select("cells_id")
+    val edges = Snn.graph(Snn.knn(emb, k = 5), k = 5).persist()
+    edges.count()
+    // the two counts run (a shuffle-map job and a result job each), no
+    // collect does
+    val (refused, jobs) = jobsDuring(
+      scala.util.Try(Clustering.louvain(verts, edges, 1.0, limitBytes = 1000)))
+    assert(refused.failed.get.isInstanceOf[Clustering.GraphTooLargeException])
+    assert(refused.failed.get.getMessage.contains("30 cells"))
+    assert(jobs == 4)
+    // within the bound: the two counts, then the two collects
+    val (clusters, built) = jobsDuring(Clustering.louvain(verts, edges, 1.0, limitBytes = 0))
+    assert(built == 6)
+    val (n, consumed) = jobsDuring(clusters.collect().length)
+    assert(n == 30 && consumed == 0)
+    edges.unpersist()
+  }
+
+  test("Louvain on degenerate graphs: no vertex, no edge, one cell") {
+    def clusters(ids: Seq[Long], es: Seq[(Long, Long, Double)]) =
+      Clustering.louvain(ids.toDF("cells_id"), es.toDF("src", "dst", "weight"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    assert(clusters(Nil, Nil).isEmpty)
+    // every isolated cell is its own cluster, numbered by ascending id
+    assert(clusters(Seq(42L, 7L, 19L, 3L), Nil) == Seq(3L -> 0L, 7L -> 1L, 19L -> 2L, 42L -> 3L))
+    // one edge among isolated cells: its pair shares a cluster, the
+    // numbering still follows each cluster's smallest id
+    assert(clusters(Seq(42L, 7L, 19L, 3L), Seq((19L, 42L, 0.5))) ==
+      Seq(3L -> 0L, 7L -> 1L, 19L -> 2L, 42L -> 2L))
+    assert(clusters(Seq(5L), Nil) == Seq(5L -> 0L))
+  }
+
+  test("SNN clusters are bit-identical at 1 and 7 shuffle partitions") {
+    val rnd = new scala.util.Random(11)
+    val cloud = (0 until 600).map(i =>
+      (i.toLong, Array.fill(4)(rnd.nextGaussian() + 3.0 * (i % 6)))).toDF("cells_id", "pc")
+      .persist()
+    def at(n: Int) = {
+      val before = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
+      try {
+        val edges = Snn.graph(Snn.knn(cloud, 10), 10).persist()
+        try Clustering.louvain(cloud.select("cells_id"), edges, 0.5).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        finally edges.unpersist()
+      } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
+    val one = at(1)
+    assert(one.size == 600 && one.values.toSet.size > 1)
+    assert(at(7) == one)
+    cloud.unpersist()
   }
 
   test("tsneLike keeps the blobs separated") {

@@ -83,4 +83,27 @@ class PipelineSpec extends SparkSpec {
         (12 until 24).map(c => f"c$c%02d").toSet))
     assert(emb.umap.count() == 24)
   }
+
+  test("clusters above 10,000 cells equal Clustering.louvain over the SNN graph") {
+    // 10,500 cells in 30 overlapping Gaussian groups, 4 PCs of which
+    // run keeps 3: past the exact-layout size, the clustering is still
+    // the one Louvain kernel over the same graph
+    val rnd = new scala.util.Random(13)
+    val pca = (0 until 10500).map { i =>
+      val g = i % 30
+      (i.toLong, Array(2.0 * (g % 5) + rnd.nextGaussian(), 2.0 * (g / 5) + rnd.nextGaussian(),
+        rnd.nextGaussian(), 100.0 * rnd.nextGaussian()))
+    }.toDF("cells_id", "pc").persist()
+    val emb = ConfigureEmbedding.run(pca, numPCs = 3, k = 5, umapEpochs = 1)
+    val got = emb.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val trimmed = pca.select(col("cells_id"), slice(col("pc"), 1, 3).as("pc")).persist()
+    val want = graft.ml.Clustering.louvain(trimmed.select("cells_id"),
+      graft.ml.Snn.graph(graft.ml.Snn.knn(trimmed, 5), 5), resolution = 0.5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size == 10500 && want.size == 10500)
+    val differ = got.count { case (c, l) => !want.get(c).contains(l) }
+    assert(differ == 0, s"$differ cells differ: ${got.values.toSet.size} clusters, " +
+      s"louvain gives ${want.values.toSet.size}")
+    trimmed.unpersist(); pca.unpersist()
+  }
 }
