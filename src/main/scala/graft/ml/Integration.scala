@@ -1,9 +1,8 @@
 package graft.ml
 
-import org.apache.spark.mllib.linalg.{DenseMatrix, Vectors}
-import org.apache.spark.mllib.linalg.distributed.{IndexedRow, IndexedRowMatrix, RowMatrix}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Anchor-based batch integration — the Seurat-v4 step
   * (`QC_helpers/dataIntegration.r:90-97`: split by group, find anchor
@@ -15,8 +14,7 @@ import org.apache.spark.sql.functions._
   * filter/score stages, re-derived for the embedding-level input):
   *  1. the first group (ascending order) is the reference;
   *  2. each group gets its own `dims`-dim eigenbasis (covariance of its
-  *     rows in the joint PCA space — a d×d Gramian computed
-  *     distributed, eigendecomposed on the driver);
+  *     rows in the joint PCA space, through [[Pca.principalAxes]]);
   *  3. anchors = MUTUAL nearest neighbors searched reciprocally: query
   *     vs reference with both sides projected onto the REFERENCE basis,
   *     and reference vs query on the QUERY basis (Seurat
@@ -25,9 +23,9 @@ import org.apache.spark.sql.functions._
   *     NN of the query cell in the joint space (Seurat `k.filter`);
   *  5. each anchor is scored by the shared-neighbor overlap of its two
   *     cells' `kScore`-neighborhoods in the reference-projected space,
-  *     quantile-scaled to [0,1] with the 1%/90% quantiles (Seurat
-  *     `k.score` + `ScoreAnchors`); a degenerate score distribution
-  *     (all equal) carries no information and scores 1;
+  *     quantile-scaled to [0,1] with the 1%/90% nearest-rank quantiles
+  *     (Seurat `k.score` + `ScoreAnchors`); a degenerate score
+  *     distribution (all equal) carries no information and scores 1;
   *  6. every query cell is corrected by the weighted mean of its
   *     `kWeight` nearest anchor pairs' correction vectors, with
   *     Seurat's own FindWeights kernel (Stuart et al. 2019, Methods):
@@ -42,290 +40,254 @@ import org.apache.spark.sql.functions._
   * With `dims >= d` the projections are full-rank rotations, so the
   * anchor search degenerates to joint-space MNN (the v1 lineage,
   * Haghverdi et al. 2018) and only filtering/scoring remain active.
+  *
+  * The step is one driver kernel: both inputs are read in one narrow
+  * pass, kept in storage while it is counted and then collected, and
+  * every stage runs on local arrays. Each neighbour
+  * search is a [[KdTree]] over rows in id order, so ties go to the
+  * lower id, as in [[Snn.knnJoin]]. An input whose kernel would pass
+  * `spark.driver.maxResultSize` is refused with
+  * [[Snn.CorpusTooLargeException]] before the collect.
   */
 object Integration {
 
-  /** Top-`dims` eigenbasis (d×dims, column-major) of the group's
-    * covariance in the joint PCA space. Returns None when the group is
-    * too small for a covariance or truncation would be a no-op. */
-  private def eigenBasis(df: DataFrame, dims: Int): Option[DenseMatrix] = {
-    val rows = df.select("pc").rdd
-      .map(r => Vectors.dense(r.getSeq[Double](0).toArray))
-    val first = rows.take(1)
-    if (first.isEmpty) return None
-    val d = first.head.size
-    if (dims >= d || df.limit(2).count() < 2) return None
-    val cov = new RowMatrix(rows).computeCovariance()
-    val bm = new breeze.linalg.DenseMatrix(d, d, cov.toArray)
-    val es = breeze.linalg.eigSym(bm)
-    val top = (0 until d).sortBy(i => -es.eigenvalues(i)).take(dims)
-    val data = new Array[Double](d * dims)
-    for ((c, j) <- top.zipWithIndex; i <- 0 until d)
-      data(j * d + i) = es.eigenvectors(i, c)
-    Some(new DenseMatrix(d, dims, data))
+  /** An upper bound on the driver bytes the kernel holds for `rows`
+    * collected rows (cells and group labels together) of at most `dim`
+    * coordinates: the collected rows (and their stored copy while they
+    * are collected), each cell's point, projections, anchor pairs and
+    * neighbourhoods, the one tree alive at a time, and the output rows
+    * and their local frame. Heap deltas after GC peaked
+    * in the shared-neighbour stage at ~780 B per row on the domain
+    * soak's 10,000 cells of 30 dims, and at ~870 B on 40,000 Gaussian
+    * cells of 50 dims projected to 30. */
+  def bytes(rows: Long, dim: Int): Long = rows * (300L + 32L * dim)
+
+  /** `pca`: `(cells_id, pc)`; `groups`: `(cells_id, group)`, each keyed
+    * by `cells_id`. Returns `(cells_id, pc)` for the cells in both, the
+    * non-reference groups corrected into the reference's space, as a
+    * local frame. Defaults mirror Seurat's `FindIntegrationAnchors`
+    * (k.anchor=5, k.filter=200, k.score=30) and the reference's
+    * `numPCs=30` rPCA config. */
+  def integrateEmbeddings(pca: DataFrame, groups: DataFrame,
+                          kAnchor: Int = 5, kWeight: Int = 5, dims: Int = 30,
+                          kScore: Int = 30, kFilter: Int = 200): DataFrame =
+    integrateEmbeddings(pca, groups, kAnchor, kWeight, dims, kScore, kFilter,
+      pca.sparkSession.sparkContext.getConf.getSizeAsBytes(Snn.CorpusLimitSetting, "1g"))
+
+  private[ml] def integrateEmbeddings(pca: DataFrame, groups: DataFrame,
+                                      kAnchor: Int, kWeight: Int, dims: Int,
+                                      kScore: Int, kFilter: Int,
+                                      limitBytes: Long): DataFrame = {
+    val spark = pca.sparkSession
+    import spark.implicits._
+    // one narrow pass over both inputs, a pca row carrying its pc and a
+    // groups row its group, kept for the count and the collect
+    val both = pca.select(col("cells_id").cast("long"),
+        lit(null).cast("string").as("group"), col("pc"))
+      .unionByName(groups.select(col("cells_id").cast("long"), col("group"),
+        lit(null).cast("array<double>").as("pc")))
+      .as[(Long, String, Array[Double])].rdd
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (ids, pcs, group) = try {
+      val (rows, dim) = both.aggregate((0L, 0))(
+        (a, r) => (a._1 + 1, if (r._3 == null) a._2 else math.max(a._2, r._3.length)),
+        (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      val estimate = bytes(rows, dim)
+      if (limitBytes > 0 && estimate > limitBytes)
+        throw new Snn.CorpusTooLargeException(
+          s"integration input too large: $rows rows of $dim dims need ~$estimate bytes " +
+            s"on the driver, over ${Snn.CorpusLimitSetting} = $limitBytes bytes")
+      cellsById(both.collect())
+    } finally both.unpersist(false)
+    val out = pcs.clone()
+    if (group.exists(_ > 0)) {
+      val ref = ids.indices.filter(group(_) == 0).toArray
+      val basisR = basis(ref.map(pcs), dims)
+      val refR = project(ref.map(pcs), basisR)
+      (1 to group.max).foreach { g =>
+        val qry = ids.indices.filter(group(_) == g).toArray
+        correct(ids, pcs, ref, refR, basisR, qry, kAnchor, kWeight, dims, kScore, kFilter)
+          .foreach { case (c, pc) => out(qry(c)) = pc }
+      }
+    }
+    ids.indices.map(i => (ids(i), out(i))).toDF("cells_id", "pc")
   }
 
-  /** `(cells_id, pc)` rows projected onto `basis` (distributed
-    * row-matrix multiply, ids preserved). Identity when basis is None. */
-  private def project(df: DataFrame, basis: Option[DenseMatrix]): DataFrame =
-    basis match {
-      case None => df
-      case Some(b) =>
-        val spark = df.sparkSession
-        val rows = df.select("cells_id", "pc").rdd
-          .map(r => IndexedRow(r.getLong(0),
-            Vectors.dense(r.getSeq[Double](1).toArray)))
-        import spark.implicits._
-        new IndexedRowMatrix(rows).multiply(b)
-          .rows.map(r => (r.index, r.vector.toArray))
-          .toDF("cells_id", "pc")
-    }
+  /** The cells of the collected `(cells_id, group, pc)` rows (a null
+    * `pc` marks a groups row): ids ascending, their points, and their
+    * group's rank among the sorted group names. */
+  private def cellsById(collected: Array[(Long, String, Array[Double])])
+      : (Array[Long], Array[Array[Double]], Array[Int]) = {
+    val groupOf = scala.collection.mutable.LongMap.from(
+      collected.iterator.collect { case (id, g, null) => id -> g })
+    val cells = collected.filter(r => r._3 != null && groupOf.contains(r._1)).sortBy(_._1)
+    val rank = cells.map(r => groupOf(r._1)).distinct.sorted.zipWithIndex.toMap
+    (cells.map(_._1), cells.map(_._3), cells.map(r => rank(groupOf(r._1))))
+  }
 
-  /** Each `qry` cell's candidate anchors `(cells_id, aid, dist)`: its
-    * `k` nearest anchor cells other than itself, and itself at distance
-    * 0 when it is an anchor (such a cell corrects by its own vector
-    * too). Its k nearest anchors, itself included, are the first k by
-    * (dist, aid). */
-  private[ml] def nearestAnchors(qry: DataFrame, anchorPts: DataFrame, k: Int): DataFrame =
-    Snn.knnJoin(qry, anchorPts, k)
-      .select(col("cid").as("cells_id"), col("nid").as("aid"), col("dist"))
-      .unionByName(anchorPts.select(col("cells_id"), col("cells_id").as("aid"),
-        lit(0.0).as("dist")))
-
-  /** `pca`: `(cells_id, pc)`; `groups`: `(cells_id, group)`.
-    * Returns `(cells_id, pc)` with non-reference groups corrected into
-    * the reference's space. Defaults mirror Seurat's
-    * `FindIntegrationAnchors` (k.anchor=5, k.filter=200, k.score=30)
-    * and the reference's `numPCs=30` rPCA config.
-    *
-    * `maxAnchorCells` (round 12, the 4M-barcode soak's "sampled-anchor
-    * variant"): 0 = exact Seurat semantics (every cell is an anchor
-    * candidate — the default, and the gate behavior). With m > 0, the
-    * ANCHOR PIPELINE (bases, reciprocal NN, k.filter, k.score) runs on
-    * a deterministic value-hash sample of ~m cells per group, while
-    * the CORRECTION still weights EVERY query cell against the found
-    * anchors (that stage is O(n·kWeight) and scales) — Seurat's own
-    * sketch-based/reference-sampling answer for atlas-scale
-    * integration, and the same landmark idiom as
-    * [[Embed.landmarkLayout]]. The anchor searches shrink from n to m
-    * cells per group; fidelity costs only anchor-set coverage (the
-    * IntegrationSpec mixing metric quantifies it).
-    * Groups at or under m run the exact path bit-identically.
-    *
-    * Every neighbour search is [[Snn.knnJoin]], an exact kNN. */
-  def integrateEmbeddings(pca: DataFrame, groups: DataFrame,
-                          kAnchor: Int = 5, kWeight: Int = 5,
-                          seed: Long = 42L, dims: Int = 30,
-                          kScore: Int = 30, kFilter: Int = 200,
-                          maxAnchorCells: Int = 0): DataFrame = {
-    // Intermediates are EAGER localCheckpoints, deliberately NOT
-    // persist(): the pipeline's reused frames form a chain six deep
-    // (tagged → ref → refR → qryR → nbrs → anchors), and with cache
-    // each level's cached plan scans the previous level's
-    // InMemoryRelation. Under AQE that nests
-    // TableCacheQueryStageExec materializations, a path the 1M-barcode
-    // domain soak showed to be broken in Spark 4.1.2: a failure inside
-    // the nested cache build enters CachedRDDBuilder.buildBuffers'
-    // catch handler (InMemoryRelation.scala:330), whose
-    // recacheByPlan → tryRebuildCacheEntry NPEs on
-    // SparkPlan.session()==null and MASKS the original exception —
-    // the same 1M leg with spark.sql.adaptive.enabled=false ran to
-    // completion. (Round-6's eager count()s serialized FIRST builds
-    // but could not stop later nested rebuilds.) localCheckpoint
-    // materializes to plain RDD blocks on the driver thread: no
-    // CacheManager entry, no nested cache stages, nothing for AQE to
-    // rebuild — and the lineage cut also keeps per-level plans flat.
-    // Block release is explicit (releaseCkpt) once the output is
-    // materialized. Cluster note: checkpoint blocks are not
-    // recomputable after executor loss (persist would recompute); the
-    // frames are O(cells·dims) doubles, small enough to re-run the
-    // operator on the rare loss, and the alternative is the broken
-    // rebuild path above.
-    def ckpt(df: DataFrame): DataFrame =
-      df.localCheckpoint(true)
-    def releaseCkpt(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(false)
-        case _ => ()
+  /** Top-`dims` eigenbasis (d×dims, column-major) of the rows'
+    * covariance. None when there are fewer than 2 rows or truncation
+    * would be a no-op. */
+  private def basis(pts: Array[Array[Double]], dims: Int): Option[Array[Double]] = {
+    val n = pts.length
+    val d = pts.headOption.fold(0)(_.length)
+    if (n < 2 || dims >= d) None
+    else {
+      val mean = Array.tabulate(d)(i => pts.iterator.map(_(i)).sum / n)
+      val cov = new Array[Double](d * d)
+      for (p <- pts; i <- 0 until d; j <- 0 to i)
+        cov(i * d + j) += (p(i) - mean(i)) * (p(j) - mean(j))
+      for (i <- 0 until d; j <- 0 to i) {
+        cov(i * d + j) /= (n - 1); cov(j * d + i) = cov(i * d + j)
       }
-    val released = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def tracked(df: DataFrame): DataFrame = {
-      val c = ckpt(df); released += c; c
+      Some(Pca.principalAxes(new breeze.linalg.DenseMatrix(d, d, cov), dims)._1)
     }
-    // project() returns its input unchanged when the basis is None
-    // (dims >= d): re-checkpointing it would double block storage for
-    // an identical frame, so only checkpoint genuinely new frames
-    def trackedProj(df: DataFrame, basis: Option[DenseMatrix]): DataFrame =
-      if (basis.isEmpty) df else tracked(project(df, basis))
+  }
 
-    // try/finally: localCheckpoint blocks have no CacheManager entry, so
-    // a mid-pipeline failure (approxQuantile, a knnJoin action) would
-    // otherwise leak every intermediate's storage for the session's
-    // lifetime with nothing to find them by. The output checkpoint is
-    // EAGER, so on the success path it is fully materialized before the
-    // finally releases the intermediates it was built from.
-    try {
-    val tagged = tracked(pca.join(groups, "cells_id"))
-    val groupNames = tagged.select("group").distinct()
-      .collect().map(_.getString(0)).sorted
-    if (groupNames.length < 2) {
-      return tagged.select("cells_id", "pc").localCheckpoint(true)
-    }
-    val ref = tracked(tagged.filter(col("group") === groupNames.head)
-      .select("cells_id", "pc"))
-    val refCount = ref.count()
-    // sampled-anchor scale path: a deterministic value-hash THINNING
-    // (no global order, no shuffle — the Embed.landmarkLayout idiom);
-    // the sample size is ~m (binomial around the hash threshold).
-    // Groups at/under m return the input frame itself, so the exact
-    // path's frames — and outputs — are untouched.
-    def anchorSample(df: DataFrame, cnt: Long): DataFrame =
-      if (maxAnchorCells <= 0 || cnt <= maxAnchorCells) df
-      else tracked(df.filter(
-        pmod(xxhash64(lit(seed), col("cells_id")), lit(1000000L)) <
-          lit(math.ceil(maxAnchorCells.toDouble / cnt * 1e6).toLong)))
-    val refA = anchorSample(ref, refCount)
-    val basisR = eigenBasis(refA, dims)
-    val refR = trackedProj(refA, basisR)
-    val refACount = if (refA eq ref) refCount else refA.count()
-
-    val corrected = groupNames.tail.map { g =>
-      val qry = tracked(tagged.filter(col("group") === g)
-        .select("cells_id", "pc"))
-      val qryA = anchorSample(qry,
-        if (maxAnchorCells <= 0) 0L else qry.count())
-      val basisQ = eigenBasis(qryA, dims)
-      val qryR = trackedProj(qryA, basisR)
-      // reciprocal anchor search: q→r on the reference basis, r→q on
-      // the query basis; mutual pairs are anchors
-      val q2r = Snn.knnJoin(qryR, refR, kAnchor)
-        .select(col("cid").as("qid"), col("nid").as("rid"))
-      val r2q = Snn.knnJoin(project(refA, basisQ), project(qryA, basisQ), kAnchor)
-        .select(col("nid").as("qid"), col("cid").as("rid"))
-      val mutual = q2r.intersect(r2q)
-      // k.filter: the pair must also be a joint-space kFilter-neighbor;
-      // kFilter >= |ref anchors| keeps every pair by definition, so
-      // skip the search in that regime
-      val filtered =
-        if (kFilter <= 0 || kFilter >= refACount) mutual
-        else mutual.join(
-          Snn.knnJoin(qryA, refA, kFilter)
-            .select(col("cid").as("qid"), col("nid").as("rid")),
-          Seq("qid", "rid"), "left_semi")
-      // k.score: shared-neighbor overlap of the two anchor cells'
-      // neighborhoods in the reference-projected space (both groups);
-      // kScore <= 0 disables scoring (every anchor weighs equally)
-      val withShared =
-        if (kScore <= 0) filtered.withColumn("shared", lit(0L))
-        else {
-          val allR = refR.unionByName(qryR)
-          val nbrs = tracked(
-            Snn.knnJoin(allR, allR, kScore).select("cid", "nid"))
-          val overlap = filtered
-            .join(nbrs.select(col("cid").as("qid"), col("nid").as("n")), "qid")
-            .join(nbrs.select(col("cid").as("rid"), col("nid").as("n")),
-              Seq("rid", "n"))
-            .groupBy("qid", "rid")
-            .agg(count(lit(1)).as("shared"))
-          filtered.join(overlap, Seq("qid", "rid"), "left")
-            .withColumn("shared", coalesce(col("shared"), lit(0L)))
+  /** The rows projected onto `basis`; the rows themselves when None. */
+  private def project(pts: Array[Array[Double]], basis: Option[Array[Double]]): Array[Array[Double]] =
+    basis.fold(pts) { b =>
+      pts.map { p =>
+        val d = p.length
+        Array.tabulate(b.length / d) { j =>
+          var s = 0.0; var i = 0
+          while (i < d) { s += p(i) * b(j * d + i); i += 1 }
+          s
         }
-      val anchors = tracked(withShared
-        .join(qry.select(col("cells_id").as("qid"), col("pc").as("qpc")), "qid")
-        .join(ref.select(col("cells_id").as("rid"), col("pc").as("rpc")), "rid")
-        .select(col("qid"), col("rid"), col("qpc"), col("shared"),
-          zip_with(col("rpc"), col("qpc"), (r, q) => r - q).as("vec")))
-      val nAnchors = anchors.count()
-      if (nAnchors == 0) qry
-      else {
-        // quantile-scale scores to [0,1] (Seurat: 1% and 90% quantiles);
-        // a flat distribution is uninformative → everyone scores 1
-        val Array(lo, hi) = anchors.stat
-          .approxQuantile("shared", Array(0.01, 0.90), 0.001)
-        val scoreCol =
-          if (hi > lo)
-            least(greatest((col("shared") - lit(lo)) / lit(hi - lo),
-              lit(0.0)), lit(1.0))
-          else lit(1.0)
-        // anchors scored 0 were judged spurious — discard them BEFORE
-        // the weighting search; keeping them as weight-0 placeholders
-        // would both occupy kWeight slots and zero out the correction
-        // for exactly the cells that need a real (if distant) anchor
-        val scored = anchors.withColumn("score", scoreCol)
-          .filter(col("score") > 0)
-        // each query cell's kWeight nearest anchor query-side points
-        val anchorPts = scored
-          .select(col("qid").as("cells_id"), col("qpc").as("pc"))
-          .dropDuplicates("cells_id")
-        val near = nearestAnchors(qry, anchorPts, kWeight)
-        // EXACT Seurat FindWeights kernel (Stuart et al. 2019 Cell,
-        // Methods "Calculating anchor weights" — the IntegrateData
-        // weighting the reference invokes, dataIntegration.r:95):
-        //  1. each cell selects its kWeight nearest anchor PAIRS — the
-        //     distance to a pair is the distance to its query-side
-        //     cell, so an anchor cell in several pairs fills several
-        //     slots, exactly the cells x anchors weight matrix. The
-        //     kWeight nearest pairs are always among the pairs of the
-        //     kWeight nearest distinct cells, so expanding the cell-NN
-        //     result and re-ranking is exact.
-        //  2. distance weight 1 - d/d_k against the kWeight-th selected
-        //     pair's distance (the furthest selected anchor contributes
-        //     ZERO, unlike the previous score/(1+d) approximation which
-        //     never vanished), scaled by the anchor score;
-        //  3. exponential kernel 1 - exp(-w / (2/sd^2)), sd.weight = 1;
-        //  4. weights normalize to sum 1 per cell — implicit in the
-        //     weighted mean below.
-        // Degenerate guard Seurat never needs (k.weight=100 spans many
-        // distinct anchor cells; a small kWeight over few anchors can
-        // select pairs at ONE distance): equal distances carry no
-        // ordering information and 1 - d/d_k would zero every weight,
-        // deleting the correction for exactly those cells — fall back
-        // to the scores alone there.
-        val pairRows = near
-          .join(scored.select(col("qid").as("aid"), col("rid"),
-            col("vec"), col("score")), "aid")
-        val rkW = org.apache.spark.sql.expressions.Window
-          .partitionBy("cells_id")
-          .orderBy(col("dist"), col("aid"), col("rid"))
-        val cellW = org.apache.spark.sql.expressions.Window
-          .partitionBy("cells_id")
-        val sdWeight = 1.0
-        val weighted = pairRows
-          .withColumn("rk", row_number().over(rkW))
-          .filter(col("rk") <= kWeight)
-          .withColumn("dk", max(col("dist")).over(cellW))
-          .withColumn("dmin", min(col("dist")).over(cellW))
-          .withColumn("w",
-            lit(1.0) - exp(-(when(col("dk") > col("dmin"),
-                (lit(1.0) - col("dist") / col("dk")) * col("score"))
-              .otherwise(col("score"))) /
-              lit(2.0 / (sdWeight * sdWeight))))
-          .filter(col("w") > 0)
-        // blend: posexplode vectors, grouped weighted mean per dim
-        // (= Seurat's sum-to-1 normalized weights); cells whose
-        // selected anchors all weigh 0 have no rows here and pass
-        // through via the left join below
-        val blended = weighted
-          .select(col("cells_id"), col("w"), posexplode(col("vec")).as(Seq("d", "v")))
-          .groupBy("cells_id", "d")
-          .agg((sum(col("w") * col("v")) / sum(col("w"))).as("corr"))
-          .groupBy("cells_id")
-          .agg(map_from_arrays(collect_list("d"), collect_list("corr")).as("corrmap"))
-        qry.join(blended, Seq("cells_id"), "left")
-          .select(col("cells_id"),
-            when(col("corrmap").isNull, col("pc")).otherwise(
-              zip_with(col("pc"),
-                transform(sequence(lit(0), size(col("pc")) - 1),
-                  i => element_at(col("corrmap"), i)),
-                (p, c) => p + coalesce(c, lit(0.0)))).as("pc"))
       }
     }
-    // materialize the output checkpoint (eager); the finally then frees
-    // every intermediate's blocks — out no longer references any of them
-    (ref +: corrected).reduce(_ unionByName _).localCheckpoint(true)
-    } finally {
-      released.foreach(releaseCkpt)
+
+  /** Each row `i` of `pts` (ids ascending) with its `k` nearest other
+    * rows of `corpus` (ids ascending) by row index, nearest first. */
+  private def knn(pts: Array[Array[Double]], ptIds: Array[Long],
+                  corpus: Array[Array[Double]], corpusIds: Array[Long],
+                  k: Int): Array[Array[Int]] = {
+    val tree = KdTree.build(corpus, corpusIds)
+    pts.indices.map(i => tree.search(pts(i), k, ptIds(i))._1).toArray
+  }
+
+  /** Row `c`'s candidate anchors `(anchor row, dist)`: its `k` nearest
+    * `anchors` (row indices of `pts`, ascending) other than itself, and
+    * itself at distance 0 when it is an anchor (such a cell corrects by
+    * its own vector too). Its k nearest anchors, itself included, are
+    * the first k by (dist, id). */
+  private[ml] def nearestAnchors(pts: Array[Array[Double]], ids: Array[Long],
+                                 anchors: Array[Int], k: Int): Int => Seq[(Int, Double)] = {
+    val tree = KdTree.build(anchors.map(pts), anchors.map(ids))
+    c => {
+      val (found, sums) = tree.search(pts(c), k, ids(c))
+      found.indices.map(r => (anchors(found(r)), math.sqrt(sums(r)))) ++
+        (if (java.util.Arrays.binarySearch(anchors, c) >= 0) Seq((c, 0.0)) else Nil)
+    }
+  }
+
+  /** The corrected points `(query row, pc)` of query group `qry` (row
+    * indices of `pcs`, ascending) against reference group `ref`, whose
+    * points on its own basis `basisR` are `refR`. Cells left
+    * uncorrected are not returned. */
+  private def correct(ids: Array[Long], pcs: Array[Array[Double]],
+                      ref: Array[Int], refR: Array[Array[Double]],
+                      basisR: Option[Array[Double]], qry: Array[Int],
+                      kAnchor: Int, kWeight: Int, dims: Int,
+                      kScore: Int, kFilter: Int): Seq[(Int, Array[Double])] = {
+    val (refPts, refIds) = (ref.map(pcs), ref.map(ids))
+    val (qryPts, qryIds) = (qry.map(pcs), qry.map(ids))
+    val qryR = project(qryPts, basisR)
+    // reciprocal anchor search: q→r on the reference basis, r→q on the
+    // query basis; mutual pairs `(query row, ref row)` are anchors
+    val basisQ = basis(qryPts, dims)
+    val r2q = knn(project(refPts, basisQ), refIds, project(qryPts, basisQ), qryIds, kAnchor)
+    val q2r = knn(qryR, qryIds, refR, refIds, kAnchor)
+    // k.filter: the pair must also be a joint-space kFilter-neighbor;
+    // kFilter >= |ref| keeps every pair by definition, so skip the
+    // search in that regime
+    lazy val jointRef = KdTree.build(refPts, refIds)
+    val filtered = q2r.indices.flatMap { q =>
+      val mutual = q2r(q).filter(r => r2q(r).contains(q))
+      val kept =
+        if (mutual.isEmpty || kFilter <= 0 || kFilter >= ref.length) mutual
+        else {
+          val near = jointRef.search(qryPts(q), kFilter, qryIds(q))._1
+          mutual.filter(near.contains)
+        }
+      kept.map(r => (q, r))
+    }
+    if (filtered.isEmpty) return Nil
+    // k.score: shared-neighbor overlap of the two anchor cells'
+    // neighborhoods in the reference-projected space (both groups, in id
+    // order); kScore <= 0 disables scoring (every anchor weighs equally)
+    val shared =
+      if (kScore <= 0) filtered.map(_ => 0L)
+      else {
+        val all = (refIds.zip(refR) ++ qryIds.zip(qryR)).sortBy(_._1)
+        val tree = KdTree.build(all.map(_._2), all.map(_._1))
+        val hoods = scala.collection.mutable.LongMap.empty[Array[Int]]
+        def hood(id: Long, p: Array[Double]) =
+          hoods.getOrElseUpdate(id, tree.search(p, kScore, id)._1)
+        filtered.map { case (q, r) =>
+          hood(qryIds(q), qryR(q)).count(hood(refIds(r), refR(r)).contains).toLong
+        }
+      }
+    // quantile-scale scores to [0,1] (Seurat: 1% and 90% quantiles,
+    // nearest rank); a flat distribution is uninformative → everyone
+    // scores 1
+    val sorted = shared.sorted
+    def quantile(p: Double) = sorted(math.max(0, math.ceil(p * sorted.length).toInt - 1)).toDouble
+    val (lo, hi) = (quantile(0.01), quantile(0.90))
+    val score = shared.map(s =>
+      if (hi > lo) math.min(math.max((s - lo) / (hi - lo), 0.0), 1.0) else 1.0)
+    // anchors scored 0 were judged spurious — discard them BEFORE the
+    // weighting search; keeping them as weight-0 placeholders would both
+    // occupy kWeight slots and zero out the correction for exactly the
+    // cells that need a real (if distant) anchor
+    val pairsOf = filtered.indices.filter(score(_) > 0).groupBy(filtered(_)._1)
+    if (pairsOf.isEmpty) return Nil
+    val near = nearestAnchors(qryPts, qryIds, pairsOf.keys.toArray.sorted, kWeight)
+    // EXACT Seurat FindWeights kernel (Stuart et al. 2019 Cell, Methods
+    // "Calculating anchor weights" — the IntegrateData weighting the
+    // reference invokes, dataIntegration.r:95):
+    //  1. each cell selects its kWeight nearest anchor PAIRS — the
+    //     distance to a pair is the distance to its query-side cell, so
+    //     an anchor cell in several pairs fills several slots, exactly
+    //     the cells x anchors weight matrix. The kWeight nearest pairs
+    //     are always among the pairs of the kWeight nearest distinct
+    //     cells, so expanding the cell-NN result and re-ranking is exact.
+    //  2. distance weight 1 - d/d_k against the kWeight-th selected
+    //     pair's distance (the furthest selected anchor contributes
+    //     ZERO), scaled by the anchor score;
+    //  3. exponential kernel 1 - exp(-w / (2/sd^2)), sd.weight = 1;
+    //  4. weights normalize to sum 1 per cell — the weighted mean below.
+    // Degenerate guard Seurat never needs (k.weight=100 spans many
+    // distinct anchor cells; a small kWeight over few anchors can select
+    // pairs at ONE distance): equal distances carry no ordering
+    // information and 1 - d/d_k would zero every weight, deleting the
+    // correction for exactly those cells — fall back to the scores
+    // alone there.
+    val sdWeight = 1.0
+    val byRank = Ordering.Tuple3(Ordering.Double.TotalOrdering, Ordering.Long, Ordering.Long)
+    qry.indices.flatMap { c =>
+      val sel = near(c).flatMap { case (a, d) => pairsOf(a).map(p => (d, p)) }
+        .sortBy { case (d, p) => (d, qryIds(filtered(p)._1), refIds(filtered(p)._2)) }(byRank)
+        .take(kWeight)
+      val dk = sel.map(_._1).maxOption.getOrElse(0.0)
+      val dmin = sel.map(_._1).minOption.getOrElse(0.0)
+      val weighted = sel.map { case (d, p) =>
+        val w = if (dk > dmin) (1.0 - d / dk) * score(p) else score(p)
+        (1.0 - math.exp(-w / (2.0 / (sdWeight * sdWeight))), p)
+      }.filter(_._1 > 0)
+      // blend: the weighted mean of the selected pairs' vectors; cells
+      // whose selected anchors all weigh 0 pass through
+      if (weighted.isEmpty) None
+      else {
+        val pc = qryPts(c)
+        val sw = weighted.map(_._1).sum
+        Some(c -> Array.tabulate(pc.length) { i =>
+          pc(i) + weighted.map { case (w, p) =>
+            val (q, r) = filtered(p)
+            w * (refPts(r)(i) - qryPts(q)(i))
+          }.sum / sw
+        })
+      }
     }
   }
 }

@@ -16,7 +16,7 @@ object Snn {
 
   /** The setting that bounds the corpus a [[knnJoin]] collects (0 = no
     * bound, as it means for Spark's own collects). */
-  private val CorpusLimitSetting = "spark.driver.maxResultSize"
+  private[ml] val CorpusLimitSetting = "spark.driver.maxResultSize"
 
   /** A [[knnJoin]] refused before collecting: the corpus's tree would
     * not fit the bound the setting gives. */

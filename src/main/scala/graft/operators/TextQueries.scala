@@ -583,25 +583,6 @@ object TextQueries {
     CurationBranches(td, base, rep, nearDups)
   }
 
-  /** Diagnostic seam: the x30 branch frames individually, for
-    * per-branch wall/scratch attribution when capacity-planning the
-    * curation pipeline (SOAK_corpus.md round-9 uses it to locate the
-    * dominant spill producer). `td` is the shared persisted
-    * tokenization — callers own its unpersist. Not a gate. */
-  def curationBranchFrames(t: Tables, nearDupJaccard: Double = 0.8)
-  : Seq[(String, DataFrame)] = {
-    val b = curationBranches(t, nearDupJaccard)
-    Seq(
-      "td" -> b.td,
-      "base" -> b.base.select("doc_id", "n_tokens", "hash_rank"),
-      "rep" -> b.rep,
-      "nearDups" -> b.nearDups,
-      "decontaminate" -> decontaminateFrom(b.td, DecontamMod)
-        .select(col("doc_id"), col("n_hits")),
-      "boilerplate" -> boilerplateFrom(b.td, BoilerMaxDocs)
-        .select(col("doc_id"), col("boiler_frac")))
-  }
-
   /** x20 KMV (k-minimum-values) approximate distinct count — the
     * mergeable cardinality sketch of a 100 TB pipeline (Bar-Yossef et
     * al. 2002): per group keep the k smallest values of a uniform hash

@@ -7,14 +7,14 @@ import org.apache.spark.sql.functions._
 /** The dataIntegration step (`QC_helpers/dataIntegration.r:28-63`):
   * normalize → find variable features → scale → PCA.
   *
-  * v1 implements the reference's unisample path
+  * [[run]] is the reference's unisample path
   * (`dataIntegration.r:98-103`: `NormalizeData` → `FindVariableFeatures
   * (vst, 2000)` → `ScaleData` → `RunPCA(npcs = 50)`), applied to the
   * merged matrix for any number of samples — i.e. `numSamples > 1`
   * runs uncorrected, matching the reference when integration is
-  * disabled. Seurat-v4 anchor correction (`dataIntegration.r:90-97`)
-  * is the deliberately-last hard part (SURVEY §7.4 #1) and lands in a
-  * later round.
+  * disabled. [[runIntegrated]] adds the Seurat-v4 anchor correction
+  * (`dataIntegration.r:90-97`) of that PCA embedding, the driver
+  * kernel [[graft.ml.Integration.integrateEmbeddings]].
   */
 object DataIntegration {
 
@@ -57,11 +57,9 @@ object DataIntegration {
     * unisample path when only one group exists. */
   def runIntegrated(expr: DataFrame, cells: DataFrame,
                     numHvg: Int = 2000, numPcs: Int = 50,
-                    splitCol: String = "sample",
-                    maxAnchorCells: Int = 0): Reductions = {
+                    splitCol: String = "sample"): Reductions = {
     val red = run(expr, cells, numHvg, numPcs)
     val groups = cells.select(col("cells_id"), col(splitCol).as("group"))
-    red.copy(pca = graft.ml.Integration.integrateEmbeddings(red.pca, groups,
-      maxAnchorCells = maxAnchorCells))
+    red.copy(pca = graft.ml.Integration.integrateEmbeddings(red.pca, groups))
   }
 }

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class IntegrationSpec extends SparkSpec {
@@ -150,6 +151,13 @@ class IntegrationSpec extends SparkSpec {
     assert(math.abs(after - 0.6975) < 0.02, s"mixing after correction: $after")
   }
 
+  private lazy val handFixture = (
+    Seq((1L, Array(0.0, 0.0, 0.0)), (2L, Array(10.0, 0.5, 0.0)),
+      (11L, Array(0.0, 1.0, 0.0)), (12L, Array(10.0, 1.0, 0.0)),
+      (13L, Array(2.0, 1.0, 0.0))).toDF("cells_id", "pc"),
+    Seq(1L -> "a", 2L -> "a", 11L -> "b", 12L -> "b", 13L -> "b")
+      .toDF("cells_id", "group"))
+
   test("hand-computed FindWeights kernel: furthest selected anchor contributes zero") {
     // Minimal fixture where the exact kernel and the superseded
     // score/(1+d) approximation disagree. Reference a={1:(0,0,0),
@@ -160,12 +168,7 @@ class IntegrationSpec extends SparkSpec {
     // furthest (12) weight 1-d/d_k = 0, so the correction is pair 11's
     // vector ALONE -> 13 lands exactly at (2,0,0). The approximation
     // blended 1/3 vs 1/9 weights -> y = 0.125, measurably different.
-    val pcaDf = Seq(
-      (1L, Array(0.0, 0.0, 0.0)), (2L, Array(10.0, 0.5, 0.0)),
-      (11L, Array(0.0, 1.0, 0.0)), (12L, Array(10.0, 1.0, 0.0)),
-      (13L, Array(2.0, 1.0, 0.0))).toDF("cells_id", "pc")
-    val grpDf = Seq(1L -> "a", 2L -> "a", 11L -> "b", 12L -> "b", 13L -> "b")
-      .toDF("cells_id", "group")
+    val (pcaDf, grpDf) = handFixture
     val out = Integration.integrateEmbeddings(pcaDf, grpDf,
       kAnchor = 1, kWeight = 2, dims = 3, kScore = 0)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -177,48 +180,23 @@ class IntegrationSpec extends SparkSpec {
     assert(out(13L) == Seq(2.0, 0.0, 0.0), s"13 -> ${out(13L)}")
   }
 
-  test("sampled-anchor path: m above group sizes is bit-identical to exact; m=20 still mixes") {
-    // r11 verdict item 5 prerequisite: the 4M-barcode soak's
-    // "sampled-anchor variant". Above-group-size m must not perturb a
-    // single double (the sampler returns the input frame itself)...
-    val exact = Integration.integrateEmbeddings(pca, groups,
-      kAnchor = 8, kWeight = 8)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val big = Integration.integrateEmbeddings(pca, groups,
-      kAnchor = 8, kWeight = 8, maxAnchorCells = 1000)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    assert(big == exact)
-    // ...and a genuinely thinned anchor set (m=20 of 40 per group) must
-    // still move the mixing metric well off full separation: the
-    // correction stage weights EVERY cell against the sampled anchors
-    val sampled = Integration.integrateEmbeddings(pca, groups,
-      kAnchor = 8, kWeight = 8, maxAnchorCells = 20)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    assert(sampled.size == 80)
-    // reference batch untouched, every query cell still corrected
-    (0 until 40).foreach(i => assert(sampled(i.toLong) == exact(i.toLong)))
-    val after = mixing(sampled)
-    assert(after < 0.85, s"sampled-anchor mixing $after (exact: ~0.6975)")
-  }
-
   test("every query cell's kWeight nearest anchors equal a brute-force scan") {
     // the correction's search: batch 2 against anchors in only one of
     // its populations, so the other population's cells must reach ~28
     // units for theirs; an anchor cell counts itself at distance 0
     val kWeight = 4
-    val qry = pca.filter(col("cells_id") >= 100)
-    val anchors = qry.filter(col("cells_id") < 120 && col("cells_id") % 3 === 0)
-    val got = Integration.nearestAnchors(qry, anchors, kWeight).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).groupBy(_._1)
-      .view.mapValues(_.map(r => (r._3, r._2)).sorted.take(kWeight).toSeq).toMap
-    val pts = pca.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val anchorIds = anchors.collect().map(_.getLong(0))
-    assert(got.size == 40)
-    got.foreach { case (c, nearest) =>
-      val scan = anchorIds.map { a =>
-        (pts(c).indices.foldLeft(0.0) { (s, d) => val x = pts(c)(d) - pts(a)(d); s + x * x }, a)
+    val qry = pca.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .filter(_._1 >= 100).sortBy(_._1)
+    val (ids, pts) = (qry.map(_._1), qry.map(_._2))
+    assert(ids.length == 40)
+    val anchors = ids.indices.filter(i => ids(i) < 120 && ids(i) % 3 == 0).toArray
+    val got = Integration.nearestAnchors(pts, ids, anchors, kWeight)
+    pts.indices.foreach { c =>
+      val nearest = got(c).map { case (a, d) => (d, ids(a)) }.sorted.take(kWeight)
+      val scan = anchors.map { a =>
+        (pts(c).indices.foldLeft(0.0) { (s, d) => val x = pts(c)(d) - pts(a)(d); s + x * x }, ids(a))
       }.sorted.take(kWeight).map { case (s, a) => (math.sqrt(s), a) }.toSeq
-      assert(nearest == scan, s"cell $c")
+      assert(nearest == scan, s"cell ${ids(c)}")
     }
   }
 
@@ -227,5 +205,145 @@ class IntegrationSpec extends SparkSpec {
     val out = Integration.integrateEmbeddings(
       pca.join(single, Seq("cells_id"), "left_semi"), single)
     assert(out.count() == 40)
+  }
+
+  /** Three groups of 200 cells in 8-D, ids interleaved across groups:
+    * four populations shared by every group and a fifth only in g2,
+    * each group shifted by its own vector, spread shrinking by
+    * dimension so the covariances' spectra are well separated. With
+    * dims = 4, kFilter = 10 (< 200 reference cells) and kScore = 20,
+    * every stage of the kernel changes the result. */
+  private lazy val (seeded, seededGroups) = {
+    val rnd = new scala.util.Random(14)
+    val centres = Array.fill(5, 8)(rnd.nextGaussian() * 10)
+    val shifts = Array.fill(8)(0.0) +: Array.fill(2, 8)(rnd.nextGaussian())
+    val cells = for (g <- 0 until 3; i <- 0 until 200) yield {
+      val pop = if (g == 2) i % 5 else i % 4
+      (3L * i + g, Array.tabulate(8)(d =>
+        centres(pop)(d) + shifts(g)(d) + rnd.nextGaussian() * 2.0 / (d + 1)), s"g$g")
+    }
+    (cells.map(c => (c._1, c._2)).toDF("cells_id", "pc").persist(),
+      cells.map(c => (c._1, c._3)).toDF("cells_id", "group").persist())
+  }
+
+  private def seededRun(pca: DataFrame = seeded, groups: DataFrame = seededGroups,
+                        kScore: Int = 20, kFilter: Int = 10, dims: Int = 4) =
+    points(Integration.integrateEmbeddings(pca, groups, kAnchor = 5, kWeight = 10,
+      dims = dims, kScore = kScore, kFilter = kFilter))
+
+  private def points(df: DataFrame): Map[Long, Seq[Double]] =
+    df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+
+  /** The kernel's output against [[IntegrationReference]]'s: the same
+    * cells, each coordinate within 1e-9. */
+  private def assertReference(pca: DataFrame, groups: DataFrame, kAnchor: Int = 5,
+                              kWeight: Int = 5, dims: Int = 30, kScore: Int = 30,
+                              kFilter: Int = 200): Map[Long, Seq[Double]] = {
+    val got = points(Integration.integrateEmbeddings(pca, groups, kAnchor, kWeight, dims,
+      kScore, kFilter))
+    val want = points(IntegrationReference.integrateEmbeddings(pca, groups, kAnchor, kWeight,
+      dims, kScore, kFilter))
+    assert(got.keySet == want.keySet)
+    want.foreach { case (id, w) =>
+      assert(got(id).length == w.length &&
+        w.indices.forall(d => math.abs(got(id)(d) - w(d)) <= 1e-9), s"cell $id: ${got(id)} vs $w")
+    }
+    got
+  }
+
+  test("the kernel equals the distributed reference on every fixture") {
+    assertReference(pca, groups, kAnchor = 8, kWeight = 8)
+    assertReference(mixPca, mixGroups, dims = 3, kScore = 0)
+    assertReference(mixPca, mixGroups, dims = 1, kScore = 20)
+    assertReference(handFixture._1, handFixture._2, kAnchor = 1, kWeight = 2, dims = 3, kScore = 0)
+    val single = groups.filter(col("group") === "batch1")
+    assertReference(pca, single)
+    assertReference(seeded, seededGroups, kWeight = 10, dims = 4, kScore = 20, kFilter = 10)
+  }
+
+  test("on the seeded fixture every stage changes the result") {
+    val out = seededRun()
+    val in = points(seeded)
+    assert(out.count { case (id, p) => p != in(id) } > 300)
+    assert(seededRun(kFilter = 200) != out, "kFilter")
+    assert(seededRun(kScore = 0) != out, "kScore")
+    assert(seededRun(dims = 8) != out, "dims")
+  }
+
+  test("the kernel runs two Spark jobs: the count and the collect") {
+    val (out, jobs) = jobsDuring(Integration.integrateEmbeddings(seeded, seededGroups))
+    assert(jobs == 2)
+    val (n, consumed) = jobsDuring(out.collect().length)
+    assert(n == 600 && consumed == 0)
+  }
+
+  test("output is bit-identical across input and shuffle partitionings") {
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val runs = try {
+      for (parts <- Seq(1, 7); shuffleParts <- Seq("1", "7")) yield {
+        spark.conf.set("spark.sql.shuffle.partitions", shuffleParts)
+        seededRun(seeded.repartition(parts), seededGroups.repartition(parts))
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    assert(runs.forall(_ == runs.head))
+  }
+
+  test("an input past the driver bound is refused before the collect") {
+    val (refused, jobs) = jobsDuring(scala.util.Try(Integration.integrateEmbeddings(
+      seeded, seededGroups, 5, 5, 30, 30, 200, limitBytes = 1000)))
+    assert(refused.failed.get.isInstanceOf[Snn.CorpusTooLargeException])
+    assert(refused.failed.get.getMessage.contains("1200 rows of 8 dims"))
+    assert(jobs == 1)
+  }
+
+  test("a one-cell query group is corrected against the reference") {
+    val one = groups.filter(col("cells_id") < 40 || col("cells_id") === 100)
+    val out = assertReference(pca.join(one, Seq("cells_id"), "left_semi"), one)
+    val orig = points(pca)
+    assert(out.size == 41)
+    (0 until 40).foreach(i => assert(out(i.toLong) == orig(i.toLong)))
+    // cell 100 is P1 shifted by (8,-6,4): it lands back among P1
+    assert(dist(out(100L), orig(0L)) < 1.0, s"${out(100L)}")
+  }
+
+  test("a query group with no mutual pair passes through unchanged") {
+    // dims = 1: q→r on the reference axis sends 10, 11, 12, 13 to
+    // 0, 1, 3, 0, and r→q on the query axis sends 0, 1, 2, 3 to
+    // 11, 13, 13, 13, so no pair is mutual
+    val pcaDf = Seq(
+      (0L, Array(10.0, 6.0)), (1L, Array(7.0, 0.0)), (2L, Array(0.0, 10.0)),
+      (3L, Array(3.0, 7.0)), (10L, Array(9.0, 5.0)), (11L, Array(10.0, 4.0)),
+      (12L, Array(0.0, 1.0)), (13L, Array(4.0, 0.0))).toDF("cells_id", "pc")
+    val grpDf = Seq(0L, 1L, 2L, 3L, 10L, 11L, 12L, 13L)
+      .map(id => id -> (if (id < 10) "a" else "b")).toDF("cells_id", "group")
+    val out = assertReference(pcaDf, grpDf, kAnchor = 1, dims = 1)
+    assert(out == points(pcaDf))
+    // the same cells on the joint axes do find anchors
+    assert(assertReference(pcaDf, grpDf, kAnchor = 1, dims = 2) != out)
+  }
+
+  test("a group of identical points (zero covariance, all distances tied)") {
+    val flat = (100L until 120L).map(id => (id, Array(3.0, -2.0, 1.0)))
+    val pcaDf = (pca.filter(col("cells_id") < 40).as[(Long, Array[Double])].collect().toSeq ++ flat)
+      .toDF("cells_id", "pc")
+    val out = assertReference(pcaDf, groups, dims = 2)
+    // ties go to the lower id in every search, so every cell selects
+    // the same anchor pairs and lands on the same point
+    val moved = (100L until 120L).map(out)
+    assert(moved.distinct.size == 1 && moved.head != Seq(3.0, -2.0, 1.0), s"${moved.head}")
+  }
+
+  test("three groups: the first is untouched, the others each corrected against it") {
+    val out = seededRun()
+    val in = points(seeded)
+    def pair(g: String) = seededRun(groups = seededGroups.filter(col("group").isin("g0", g)))
+    val (g1, g2) = (pair("g1"), pair("g2"))
+    out.foreach { case (id, p) =>
+      id % 3 match {
+        case 0 => assert(p == in(id))
+        case 1 => assert(p == g1(id))
+        case _ => assert(p == g2(id))
+      }
+    }
   }
 }
