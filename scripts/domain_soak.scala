@@ -88,7 +88,12 @@ if (stages("doublets")) {
     f"recall=${r.getLong(3).toDouble / math.max(r.getLong(2), 1L)}%.3f")
 }
 if (stages("integration")) {
+  // persisted: the stage reads it twice (the rows' semi-join and the
+  // kernel's cells), and re-running its distinct would make each run's
+  // shuffle differ
   val cellsBase = graft.operators.MergeSamples.withCellsId(pre.select("sample", "barcode").distinct())
+    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  cellsBase.count()
   val red = measured("integration") {
     val r = graft.qc.DataIntegration.runIntegrated(
       expr.join(cellsBase.select("sample", "barcode"), Seq("sample", "barcode"), "left_semi"),

@@ -22,12 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     `xxhash64(barcode, lit(seed ^ sample.hashCode))` (ties by
   *     barcode), and consecutive ranks pair up into `__art_%06d` cells
   *     (⌊real/2⌋ of them) whose counts are the pair's sums;
-  *  2. LogNormalize (scale factor 1e4), vst HVG selection of `numHvg`
-  *     genes (the [[Loess]] mean-variance trend, [[Hvg]]'s score),
-  *     [[Scale]]'s clipped z-scores, with implicit zeros kept implicit;
-  *  3. PCA: the covariance is accumulated from each cell's nonzero
-  *     entries, [[Pca.principalAxes]] takes its top `numPcs` axes, and
-  *     every cell is projected onto them;
+  *  2-3. LogNormalize, vst HVG selection of `numHvg` genes, ScaleData
+  *     and PCA onto the top `numPcs` axes: the reduction kernel
+  *     [[Pca.reduce]], the one [[graft.qc.DataIntegration.run]] runs on
+  *     the merged experiment; only its embedding is used here;
   *  4. EXACT kNN over all cells ([[KdTree.nearest]]): the k other
   *     cells with the smallest elementwise Σ(p−q)², ties by `cells_id`
   *     — scDblFinder's own neighbourhoods;
@@ -64,7 +62,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 7 + k)) values — its rows, the HVG covariance and the per-cell
   * embedding, features and neighbours; [[taskBytes]] bounds the bytes.
   * The task counts that bound, as its row buffer grows, against the
-  * heap Spark leaves to user code, shared by every doublet task of the
+  * heap Spark leaves to user code, shared by every kernel task of the
   * executor ([[SampleMatrix]]), and refuses the sample with
   * [[SampleTooLargeException]] before it could run the executor out of
   * memory. The kNN's k-d tree answers a query in far fewer than the
@@ -114,27 +112,32 @@ object Doublets {
 
   /** The kernel's parameters, and the share of the heap Spark's own
     * memory manager claims (`spark.memory.fraction`). */
-  private[ml] final case class Sizing(k: Int, numHvg: Int, numPcs: Int,
-                                      memoryFraction: Double) {
+  private[graft] final case class Sizing(k: Int, numHvg: Int, numPcs: Int,
+                                         memoryFraction: Double) {
     /** The heap Spark leaves to user code on this JVM: (heap − 300 MiB,
       * Spark's reserved memory) · (1 − `spark.memory.fraction`). */
     def budget: Long =
       ((Runtime.getRuntime.maxMemory - 300L * 1024 * 1024) * (1 - memoryFraction)).toLong
   }
 
-  /** Bytes the running doublet tasks of this JVM have counted. */
+  /** Bytes the running kernel tasks of this JVM have counted. */
   private[ml] val heldBytes = new AtomicLong
 
   /** One sample's `(barcode, gene, count)` rows, barcodes and genes
-    * interned as they arrive (16 bytes per row). Row order is free:
-    * [[drain]] fixes every order the kernel sums in.
+    * interned as they arrive (16 bytes per row); a row with a null gene
+    * only adds its barcode, a cell without entries. Row order is free:
+    * [[drain]] fixes every order the kernel sums in. `step` names the
+    * kernel in a refusal ([[graft.qc.DataIntegration.run]] gathers the
+    * merged experiment's cells into one matrix too).
     *
     * Inside a task, each growth of the row buffer counts the
-    * [[taskBytes]] of the sample at the new capacity against the
-    * [[Sizing.budget]], less what the executor's other doublet tasks
+    * [[taskBytes]] of the rows held, and 16 bytes per empty slot of the
+    * new capacity, against the [[Sizing.budget]], less what the
+    * executor's other kernel tasks
     * have counted, and [[checkMemory]] refuses the sample past it; the
     * task gives its count back when it ends. */
-  private[ml] final class SampleMatrix(val sample: String, sizing: Sizing)
+  private[graft] final class SampleMatrix(val sample: String, sizing: Sizing,
+                                          step: String = "doublet scoring")
     extends Serializable {
     private val barcodeIds = scala.collection.mutable.HashMap.empty[String, Int]
     private val geneIds = scala.collection.mutable.HashMap.empty[String, Int]
@@ -153,12 +156,16 @@ object Doublets {
     def barcodes: Seq[String] = barcodeNames.toSeq
 
     def add(row: (String, String, String, Long)): SampleMatrix = {
-      if (n == cellOf.length) grow(math.max(16, 2 * n))
-      append(row._2, row._3, row._4)
+      if (row._3 == null) cellId(row._2)
+      else {
+        if (n == cellOf.length) grow(math.max(16, 2 * n))
+        append(row._2, row._3, row._4)
+      }
       this
     }
 
     def merge(o: SampleMatrix): SampleMatrix = {
+      o.barcodeNames.foreach(cellId)
       if (n + o.n > cellOf.length) grow(math.max(n + o.n, cellOf.length + cellOf.length / 2))
       var i = 0
       while (i < o.n) {
@@ -168,9 +175,11 @@ object Doublets {
       this
     }
 
+    private def cellId(barcode: String): Int =
+      barcodeIds.getOrElseUpdate(barcode, { barcodeNames += barcode; barcodeNames.length - 1 })
+
     private def append(barcode: String, gene: String, count: Long): Unit = {
-      cellOf(n) = barcodeIds.getOrElseUpdate(barcode,
-        { barcodeNames += barcode; barcodeNames.length - 1 })
+      cellOf(n) = cellId(barcode)
       geneOf(n) = geneIds.getOrElseUpdate(gene,
         { geneNames += gene; geneNames.length - 1 })
       countOf(n) = count
@@ -184,8 +193,11 @@ object Doublets {
       countOf = java.util.Arrays.copyOf(countOf, capacity)
     }
 
-    private def reserve(rows: Long): Unit = {
-      val need = taskBytes(cells, geneNames.length, rows, sizing.numHvg, sizing.numPcs, sizing.k)
+    private def reserve(capacity: Long): Unit = {
+      // the rows held will cost the kernel taskBytes; an empty slot of
+      // the buffer costs its 16 bytes
+      val need = taskBytes(cells, geneNames.length, n, sizing.numHvg, sizing.numPcs, sizing.k) +
+        16 * (capacity - n)
       val others = Option(TaskContext.get()).fold(0L) { ctx =>
         if (!releasing) {
           ctx.addTaskCompletionListener[Unit] { _ => heldBytes.addAndGet(-counted); counted = 0 }
@@ -195,13 +207,13 @@ object Doublets {
         counted = need
         held - need
       }
-      checkMemory(sample, cells, rows, need, math.max(0L, sizing.budget - others))
+      checkMemory(sample, cells, n, need, math.max(0L, sizing.budget - others), step)
     }
 
-    /** Barcodes in binary order and, per cell, its entries as (gene rank
-      * in binary gene order, count), sorted by (gene, count). Counts the
-      * sample's exact size first, and frees the row buffer. */
-    def drain(): (Array[String], Array[Array[Int]], Array[Array[Long]]) = {
+    /** Barcodes in binary order, genes in binary order and, per cell,
+      * its entries as (gene rank, count), sorted by (gene, count).
+      * Counts the sample's exact size first, and frees the row buffer. */
+    def drain(): (Array[String], Array[String], Array[Array[Int]], Array[Array[Long]]) = {
       reserve(n)
       val cellRank = ranks(barcodeNames.toArray)
       val geneRank = ranks(geneNames.toArray)
@@ -227,7 +239,9 @@ object Doublets {
       }
       val names = new Array[String](cells)
       barcodeNames.indices.foreach(b => names(cellRank(b)) = barcodeNames(b))
-      (names, genes, counts)
+      val geneNamesByRank = new Array[String](geneNames.length)
+      geneNames.indices.foreach(g => geneNamesByRank(geneRank(g)) = geneNames(g))
+      (names, geneNamesByRank, genes, counts)
     }
   }
 
@@ -265,7 +279,7 @@ object Doublets {
     * artificial class (one cell). Drains `m`. */
   private[ml] def featurize(m: SampleMatrix, k: Int, numHvg: Int, numPcs: Int,
                             seed: Long): Option[Array[Cell]] = {
-    val (realBc, realGenes, realCounts) = m.drain()
+    val (realBc, _, realGenes, realCounts) = m.drain()
     val nReal = realBc.length
     val nArt = nReal / 2
     if (nArt == 0) return None
@@ -292,14 +306,9 @@ object Doublets {
       genes(i) = artCells(j)._1; counts(i) = artCells(j)._2
     }
     val lib = counts.map(_.sum)
-    // LogNormalize; each cell's counts are dropped once normalized
-    val norm = Array.tabulate(n) { i =>
-      val x = counts(i).map(c => math.log1p(c.toDouble / lib(i).toDouble * 1e4))
-      counts(i) = null
-      x
-    }
+    val norm = Pca.logNormalize(counts)
 
-    val emb = embed(genes, norm, numHvg, numPcs)
+    val emb = Pca.reduce(genes, norm, numHvg, numPcs).embedding
     val (nbr, dist) = KdTree.nearest(emb, k)
     val isArt = barcode.map(_.startsWith("__art_"))
     val kInner = math.max(1, k / 2)
@@ -332,88 +341,6 @@ object Doublets {
     })
   }
 
-  /** The PCA embedding of the normalized cells (entries `(gene, norm)`
-    * per cell, genes numbered in binary order), one row per cell:
-    * vst HVG selection, clipped z-scores with implicit zeros at the
-    * gene's z0, and the projection onto the top `numPcs` axes. */
-  private def embed(genes: Array[Array[Int]], norm: Array[Array[Double]],
-                    numHvg: Int, numPcs: Int): Array[Array[Double]] = {
-    val n = genes.length
-    val nd = n.toDouble
-    val numGenes = genes.iterator.flatMap(_.iterator).maxOption.fold(0)(_ + 1)
-    val s = new Array[Double](numGenes)
-    val ss = new Array[Double](numGenes)
-    val nz = new Array[Long](numGenes)
-    for (i <- 0 until n; e <- genes(i).indices) {
-      val (g, x) = (genes(i)(e), norm(i)(e))
-      s(g) += x; ss(g) += x * x; nz(g) += 1
-    }
-    def variance(g: Int) = (ss(g) - s(g) * s(g) / nd) / (nd - 1)
-    // vst: loess of log10(variance) ~ log10(mean) over the genes that vary
-    val varying = (0 until numGenes).filter(variance(_) > 0).toArray
-    val expSd = new Array[Double](numGenes)
-    if (varying.nonEmpty) {
-      val fitted = Loess.fit(varying.map(g => math.log10(s(g) / nd)),
-        varying.map(g => math.log10(variance(g))), 0.3)
-      varying.indices.foreach(v => expSd(varying(v)) = Hvg.expectedSd(fitted(v)))
-    }
-    val clipMax = Hvg.clipMax(n)
-    val znnz = new Array[Double](numGenes)
-    for (i <- 0 until n; e <- genes(i).indices) {
-      val g = genes(i)(e)
-      if (expSd(g) > 0) {
-        val z = Scale.z(norm(i)(e), s(g) / nd, expSd(g), clipMax)
-        znnz(g) += z * z
-      }
-    }
-    val hvg = varying.sortBy { g =>
-      (-Hvg.standardizedVariance(znnz(g), nz(g), n, s(g) / nd, expSd(g)), g)
-    }.take(numHvg)
-    val d = hvg.length
-    val ord = Array.fill(numGenes)(-1)
-    hvg.indices.foreach(o => ord(hvg(o)) = o)
-    // ScaleData: z clipped at 10; an implicit zero sits at z0
-    val sigma = hvg.map(g => Scale.sigma(variance(g)))
-    val z0 = hvg.indices.map(o => Scale.z(0.0, s(hvg(o)) / nd, sigma(o), Scale.ScaleMax)).toArray
-    // each cell's HVG entries as (ord, z − z0), ords ascending and the
-    // last of a repeated gene kept: the dense row is z0 + δ
-    val deltas = Array.tabulate(n) { i =>
-      val es = genes(i).indices.filter(e => ord(genes(i)(e)) >= 0).map { e =>
-        val o = ord(genes(i)(e))
-        o -> (Scale.z(norm(i)(e), s(hvg(o)) / nd, sigma(o), Scale.ScaleMax) - z0(o))
-      }.toMap.toArray.sortBy(_._1)
-      (es.map(_._1), es.map(_._2))
-    }
-    if (d == 0) return Array.fill(n)(Array.empty[Double])
-    // covariance of the dense rows: (Σ δδᵀ − n·δ̄δ̄ᵀ) / (n − 1)
-    val mean = new Array[Double](d)
-    val cov = new Array[Double](d * d)
-    for ((os, ds) <- deltas) {
-      var a = 0
-      while (a < os.length) {
-        mean(os(a)) += ds(a)
-        var b = a
-        while (b < os.length) { cov(os(a) * d + os(b)) += ds(a) * ds(b); b += 1 }
-        a += 1
-      }
-    }
-    for (a <- 0 until d) mean(a) /= nd
-    for (a <- 0 until d; b <- a until d) {
-      val c = (cov(a * d + b) - nd * mean(a) * mean(b)) / (nd - 1)
-      cov(a * d + b) = c; cov(b * d + a) = c
-    }
-    val (axes, _) = Pca.principalAxes(new breeze.linalg.DenseMatrix(d, d, cov), numPcs)
-    val kEff = axes.length / d
-    val base = Array.tabulate(kEff)(j => (0 until d).map(o => z0(o) * axes(j * d + o)).sum)
-    deltas.map { case (os, ds) =>
-      Array.tabulate(kEff) { j =>
-        var x = base(j); var e = 0
-        while (e < os.length) { x += ds(e) * axes(j * d + os(e)); e += 1 }
-        x
-      }
-    }
-  }
-
   /** A task past this many bytes is refused: the sample is too large
     * to score in one task. */
   final class SampleTooLargeException(msg: String) extends IllegalStateException(msg)
@@ -426,19 +353,19 @@ object Doublets {
     * eigen-decomposition); and per real or artificial cell 128 of array
     * headers and tree nodes plus its embedding, features and
     * neighbours' rows and distances. */
-  private[ml] def taskBytes(cells: Long, genes: Long, nnz: Long, numHvg: Int,
+  private[graft] def taskBytes(cells: Long, genes: Long, nnz: Long, numHvg: Int,
                             numPcs: Int, k: Int): Long =
     100 * (cells + genes) + 72 * nnz + 24L * numHvg * numHvg +
       (cells + cells / 2) * (128 + 8L * (numPcs + 7 + 2 * k))
 
-  /** Throw [[SampleTooLargeException]] when scoring `sample` (`cells`
-    * cells, `nnz` rows), estimated at `estimate` bytes, would hold more
-    * than `limitBytes`. */
+  /** Throw [[SampleTooLargeException]] when running `step` on `sample`
+    * (`cells` cells, `nnz` rows), estimated at `estimate` bytes, would
+    * hold more than `limitBytes`. */
   private[ml] def checkMemory(sample: String, cells: Long, nnz: Long, estimate: Long,
-                              limitBytes: Long): Unit =
+                              limitBytes: Long, step: String = "doublet scoring"): Unit =
     if (estimate > limitBytes)
       throw new SampleTooLargeException(
-        s"doublet scoring of sample $sample ($cells cells, $nnz nonzeros) needs " +
+        s"$step of sample $sample ($cells cells, $nnz nonzeros) needs " +
           s"~$estimate bytes in one task, over its $limitBytes-byte share of the heap")
 
   // ---- the classifier --------------------------------------------------

@@ -1,6 +1,7 @@
 package graft.qc
 
-import graft.ml.{Hvg, Normalize, Pca, Scale}
+import graft.ml.{Doublets, Pca}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,30 +24,62 @@ object DataIntegration {
       varianceExplained: Array[Double],
       hvg: DataFrame) // (gene, mean, variance, variance_standardized, hvg_rank)
 
+  /** The label of the one matrix [[run]] gathers: every sample's cells. */
+  private val Merged = "merged"
+
+  /** LogNormalize → vst HVG → ScaleData → PCA over every cell of
+    * `cells` (`(sample, barcode, cells_id)`) with its `expr` rows
+    * (`(sample, barcode, gene, count)`), in ONE Spark task: the kernel
+    * [[Pca.reduce]] that [[Doublets]] runs per sample. `cells` is read
+    * once, joined to the rows; the task gathers them into a
+    * [[Doublets.SampleMatrix]] (a cell named by its `cells_id`), which
+    * refuses an experiment past the task's share of the heap with
+    * [[Doublets.SampleTooLargeException]], and the result comes back in
+    * one collect. Every cell of `cells` gets one `pc` row, a cell with
+    * no HVG entry the projection of the all-z0 row; the moments count
+    * `|cells|` cells. The outputs are local frames, rows in `cells_id`
+    * order. */
   def run(expr: DataFrame, cells: DataFrame,
           numHvg: Int = 2000, numPcs: Int = 50): Reductions = {
-    val keyed = expr.join(
-      cells.select("sample", "barcode", "cells_id"),
-      Seq("sample", "barcode"), "left_semi")
-    val nCells = cells.count()
-    val norm = Normalize.logNormalize(keyed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hvg = Hvg.selectHvg(norm, nCells, numHvg, valueCol = "norm")
-    val ords = Hvg.ordinals(hvg)
-    val normHvg = norm.join(broadcast(ords), "gene")
-    val moments = Scale.geneMoments(normHvg, nCells)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scaled = Scale.scaleData(normHvg, moments)
-    val zeroZ = Scale.zeroZ(moments).join(broadcast(ords), "gene")
-      .select("gene_ord", "z0").collect()
-      .sortBy(_.getInt(0)).map(_.getDouble(1))
-    val pcaIn = scaled
-      .join(cells.select("sample", "barcode", "cells_id"), Seq("sample", "barcode"))
-      .select("cells_id", "gene_ord", "z")
-    val (emb, varExp) = Pca.fit(pcaIn, zeroZ, numPcs,
-      allCells = Some(cells.select("cells_id")))
-    norm.unpersist(); moments.unpersist()
-    Reductions(emb, varExp, hvg)
+    val spark = expr.sparkSession
+    import spark.implicits._
+    val sizing = Doublets.Sizing(0, numHvg, numPcs,
+      spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6))
+    // a cell without rows comes through the join as one gene-less row
+    val rows = cells.select("sample", "barcode", "cells_id")
+      .join(expr.select("sample", "barcode", "gene", "count"), Seq("sample", "barcode"), "left")
+      .select(col("cells_id").cast("string"), col("gene"),
+        coalesce(col("count").cast("long"), lit(0L)))
+      .as[(String, String, Long)].rdd
+      .map { case (id, gene, count) => (Merged, (Merged, id, gene, count)) }
+    val reduced = rows
+      .combineByKey[Doublets.SampleMatrix](
+        row => new Doublets.SampleMatrix(Merged, sizing, "dataIntegration").add(row),
+        _ add _, _ merge _, new HashPartitioner(1))
+      .map { case (_, m) => reduce(m, numHvg, numPcs) }
+      .collect()
+    val (ids, hvg, varExp, emb) = reduced.headOption.getOrElse(
+      (Array.empty[Long], Array.empty[(String, Double, Double, Double)],
+        Array.empty[Double], Array.empty[Array[Double]]))
+    Reductions(
+      ids.indices.sortBy(ids(_)).map(i => (ids(i), emb(i))).toDF("cells_id", "pc"),
+      varExp,
+      hvg.toSeq.zipWithIndex.map { case ((g, m, v, sv), r) => (g, m, v, sv, r + 1) }
+        .toDF("gene", "mean", "variance", "variance_standardized", "hvg_rank"))
+  }
+
+  /** The task of [[run]]: LogNormalize each cell, then the kernel.
+    * Returns the cells' ids, the HVG rows `(gene, mean, variance,
+    * variance_standardized)` in rank order, the variance explained and
+    * the cells' embedding rows. */
+  private def reduce(m: Doublets.SampleMatrix, numHvg: Int, numPcs: Int)
+      : (Array[Long], Array[(String, Double, Double, Double)], Array[Double],
+        Array[Array[Double]]) = {
+    val (ids, geneNames, genes, counts) = m.drain()
+    val r = Pca.reduce(genes, Pca.logNormalize(counts), numHvg, numPcs)
+    (ids.map(_.toLong),
+      r.hvg.map(h => (geneNames(h.gene), h.mean, h.variance, h.varianceStandardized)),
+      r.varianceExplained, r.embedding)
   }
 
   /** Multi-group path (`dataIntegration.r:90-97`): the uncorrected

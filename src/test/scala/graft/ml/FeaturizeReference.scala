@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
   * scDblFinder chain built from Spark stages — a seeded-hash pairing
   * turned into a permutation by a two-pass dense id, the artificial
   * doublets as a join + grouped sum, the LogNormalize → vst HVG →
-  * Scale → [[Pca.fit]] pipeline, and [[Snn.knnJoin]] for the
+  * Scale → PCA chain of [[ReductionsReference]], and [[Snn.knnJoin]] for the
   * neighbours. It launches ~78 Spark jobs per sample, where the local
   * kernel runs inside one task. */
 object FeaturizeReference {
@@ -47,22 +47,22 @@ object FeaturizeReference {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val nCells = nReal + nArt
-    val norm = Normalize.logNormalize(combined)
-    val hvg = Hvg.selectHvg(norm, nCells, numGenes = numHvg, valueCol = "norm")
-    val ords = Hvg.ordinals(hvg)
+    val norm = ReductionsReference.logNormalize(combined)
+    val hvg = ReductionsReference.selectHvg(norm, nCells, numGenes = numHvg, valueCol = "norm")
+    val ords = ReductionsReference.ordinals(hvg)
     val normHvg = norm.join(ords, "gene")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val moments = Scale.geneMoments(normHvg, nCells)
-    val scaled = Scale.scaleData(normHvg, moments)
+    val moments = ReductionsReference.geneMoments(normHvg, nCells)
+    val scaled = ReductionsReference.scaleData(normHvg, moments)
     val ids = graft.operators.DenseId.withDenseId(
       combined.select("sample", "barcode").distinct(),
       Seq(col("sample"), col("barcode")), "cells_id")
-    val zeroZ = Scale.zeroZ(moments).join(ords, "gene")
+    val zeroZ = ReductionsReference.zeroZ(moments).join(ords, "gene")
       .select("gene_ord", "z0").collect()
       .sortBy(_.getInt(0)).map(_.getDouble(1))
     val pcaIn = scaled.join(ids, Seq("sample", "barcode"))
       .select("cells_id", "gene_ord", "z")
-    val (emb, _) = Pca.fit(pcaIn, zeroZ, k = numPcs,
+    val (emb, _) = ReductionsReference.fit(pcaIn, zeroZ, k = numPcs,
       allCells = Some(ids.select("cells_id")))
 
     val tagged = emb.join(ids, "cells_id")

@@ -9,14 +9,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val (expr, cells) = {
-    // 24 cells, two expression programs of 8 genes each + 4 shared genes
-    val rows = (0 until 24).flatMap { c =>
-      val program = if (c < 12) "gA" else "gB"
-      val own = (0 until 8).map(g => (s"s1", f"c$c%02d", s"$program$g", 30L + (c % 4) * 2))
-      val shared = (0 until 4).map(g => (s"s1", f"c$c%02d", s"gS$g", 5L + c % 3))
-      own ++ shared
-    }
-    val e = rows.toDF("sample", "barcode", "gene", "count")
+    val e = PipelineSpec.rows.toDF("sample", "barcode", "gene", "count")
     val c = graft.operators.MergeSamples.withCellsId(
       e.select("sample", "barcode").distinct())
     (e, c)
@@ -105,5 +98,16 @@ class PipelineSpec extends SparkSpec {
     assert(differ == 0, s"$differ cells differ: ${got.values.toSet.size} clusters, " +
       s"louvain gives ${want.values.toSet.size}")
     trimmed.unpersist(); pca.unpersist()
+  }
+}
+
+object PipelineSpec {
+  /** 24 cells of sample s1, two expression programs of 8 genes each + 4
+    * shared genes: `(sample, barcode, gene, count)`. */
+  val rows: Seq[(String, String, String, Long)] = (0 until 24).flatMap { c =>
+    val program = if (c < 12) "gA" else "gB"
+    val own = (0 until 8).map(g => ("s1", f"c$c%02d", s"$program$g", 30L + (c % 4) * 2))
+    val shared = (0 until 4).map(g => ("s1", f"c$c%02d", s"gS$g", 5L + c % 3))
+    own ++ shared
   }
 }
