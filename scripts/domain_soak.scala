@@ -7,6 +7,7 @@
 // spark-shell -I (see SOAK_domain.md); lines of interest start with
 // "SOAK".
 //   SOAK_AMBIENT / SOAK_REAL: ambient barcodes / real cells per sample
+//   SOAK_GENES: nonzero genes per real cell (default 200)
 //   SOAK_STAGES: the stages to run (default
 //     "emptyDrops,doublets,integration,embedding"; embedding needs
 //     integration)
@@ -16,7 +17,7 @@ import spark.implicits._
 val nAmbient = sys.env.getOrElse("SOAK_AMBIENT", "45000").toLong
 val nReal    = sys.env.getOrElse("SOAK_REAL", "5000").toLong
 val nGenes   = 20000L
-val realGenes = 200L // nnz per real cell
+val realGenes = sys.env.getOrElse("SOAK_GENES", "200").toLong // nnz per real cell
 // every 25th real cell (4%) is a planted doublet: it also carries the
 // counts of the real cell half a sample away, whose genes lie elsewhere
 val plantEvery = 25L
@@ -30,7 +31,7 @@ spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener
 })
 
 // distributed synthetic 10x-shaped COO (nothing driver-side): ambient
-// barcodes of 3 genes @ 1-2 counts; real cells of 200 genes @ 5-24
+// barcodes of 3 genes @ 1-2 counts; real cells of realGenes genes @ 5-24
 // with near-unique id-local gene neighbourhoods (id*37 mod 7919 gene
 // base), so kNN/cluster structure exists without coincident cells
 def gen(name: String, off: Int) = {

@@ -2,7 +2,7 @@ package graft.ml
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
@@ -61,9 +61,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Cost: the task of a sample holds O(nnz + numHvg² + cells·(numPcs +
   * 7 + k)) values — its rows, the HVG covariance and the per-cell
   * embedding, features and neighbours; [[taskBytes]] bounds the bytes.
-  * The task counts that bound, as its row buffer grows, against the
-  * heap Spark leaves to user code, shared by every kernel task of the
-  * executor ([[SampleMatrix]]), and refuses the sample with
+  * The sample's rows are gathered by [[Gather.byKey]], which counts that
+  * bound against the heap Spark leaves to user code, shared by every
+  * kernel task of the executor, and refuses the sample with
   * [[SampleTooLargeException]] before it could run the executor out of
   * memory. The kNN's k-d tree answers a query in far fewer than the
   * O(cells·numPcs) steps of a scan on clustered data, but its worst
@@ -84,13 +84,11 @@ object Doublets {
     // RDD persist + count: ONE job, the grouping shuffle included (a
     // persisted DataFrame would cost more: adaptive execution runs each
     // shuffle and the cache as jobs of their own)
-    val scored = expr
+    val rows = expr
       .select(col("sample"), col("barcode"), col("gene"), col("count").cast("long"))
       .as[(String, String, String, Long)].rdd
-      .map(row => (row._1, row))
-      .combineByKey[SampleMatrix](row => new SampleMatrix(row._1, sizing).add(row),
-        _ add _, _ merge _, new HashPartitioner(sc.defaultParallelism))
-      .flatMap { case (_, m) => scoreSample(m, k, numHvg, numPcs, seed, probabilityThreshold) }
+    val scored = Gather.byKey(rows, new HashPartitioner(sc.defaultParallelism), sizing)(
+      scoreSample(_, k, numHvg, numPcs, seed, probabilityThreshold))
       .persist(StorageLevel.MEMORY_AND_DISK)
     scored.count()
     scored.toDF("sample", "barcode", "doublet_scores", "doublet_class")
@@ -102,157 +100,29 @@ object Doublets {
     featurize(m, k, numHvg, numPcs, seed) match {
       // a 1-cell sample cannot host a doublet: pass through as singlet
       // (no artificial class exists, so there is nothing to train on)
-      case None => m.barcodes.iterator.map(b => (m.sample, b, 0.0, "singlet"))
+      case None => m.barcodes.iterator.map(b => (m.key, b, 0.0, "singlet"))
       case Some(cells) => twoRound(cells).map { case (b, p) =>
-        (m.sample, b, p, if (p >= probabilityThreshold) "doublet" else "singlet")
+        (m.key, b, p, if (p >= probabilityThreshold) "doublet" else "singlet")
       }
     }
 
   // ---- the per-sample kernel -------------------------------------------
 
-  /** The kernel's parameters, and the share of the heap Spark's own
-    * memory manager claims (`spark.memory.fraction`). */
-  private[graft] final case class Sizing(k: Int, numHvg: Int, numPcs: Int,
-                                         memoryFraction: Double) {
-    /** The heap Spark leaves to user code on this JVM: (heap − 300 MiB,
-      * Spark's reserved memory) · (1 − `spark.memory.fraction`). */
-    def budget: Long =
-      ((Runtime.getRuntime.maxMemory - 300L * 1024 * 1024) * (1 - memoryFraction)).toLong
+  /** The kernel's parameters and its memory estimate ([[taskBytes]])
+    * for the gather. */
+  private[ml] final case class Sizing(k: Int, numHvg: Int, numPcs: Int,
+                                      memoryFraction: Double) extends Gather.Cost {
+    def step: String = "doublet scoring"
+    def rowBytes: Long = RowBytes
+    def taskBytes(cells: Long, genes: Long, nnz: Long): Long =
+      Doublets.taskBytes(cells, genes, nnz, numHvg, numPcs, k)
   }
+
+  /** A sample's gathered rows. */
+  private[ml] type SampleMatrix = Gather.Matrix
 
   /** Bytes the running kernel tasks of this JVM have counted. */
-  private[ml] val heldBytes = new AtomicLong
-
-  /** One sample's `(barcode, gene, count)` rows, barcodes and genes
-    * interned as they arrive (16 bytes per row); a row with a null gene
-    * only adds its barcode, a cell without entries. Row order is free:
-    * [[drain]] fixes every order the kernel sums in. `step` names the
-    * kernel in a refusal ([[graft.qc.DataIntegration.run]] gathers the
-    * merged experiment's cells into one matrix too).
-    *
-    * Inside a task, each growth of the row buffer counts the
-    * [[taskBytes]] of the rows held, and 16 bytes per empty slot of the
-    * new capacity, against the [[Sizing.budget]], less what the
-    * executor's other kernel tasks
-    * have counted, and [[checkMemory]] refuses the sample past it; the
-    * task gives its count back when it ends. */
-  private[graft] final class SampleMatrix(val sample: String, sizing: Sizing,
-                                          step: String = "doublet scoring")
-    extends Serializable {
-    private val barcodeIds = scala.collection.mutable.HashMap.empty[String, Int]
-    private val geneIds = scala.collection.mutable.HashMap.empty[String, Int]
-    private val barcodeNames = scala.collection.mutable.ArrayBuffer.empty[String]
-    private val geneNames = scala.collection.mutable.ArrayBuffer.empty[String]
-    private var cellOf = new Array[Int](16)
-    private var geneOf = new Array[Int](16)
-    private var countOf = new Array[Long](16)
-    private var n = 0
-    // the bytes this matrix has counted in `heldBytes` (a copy shipped
-    // through the shuffle starts from none)
-    @transient private var counted = 0L
-    @transient private var releasing = false
-
-    def cells: Int = barcodeNames.length
-    def barcodes: Seq[String] = barcodeNames.toSeq
-
-    def add(row: (String, String, String, Long)): SampleMatrix = {
-      if (row._3 == null) cellId(row._2)
-      else {
-        if (n == cellOf.length) grow(math.max(16, 2 * n))
-        append(row._2, row._3, row._4)
-      }
-      this
-    }
-
-    def merge(o: SampleMatrix): SampleMatrix = {
-      o.barcodeNames.foreach(cellId)
-      if (n + o.n > cellOf.length) grow(math.max(n + o.n, cellOf.length + cellOf.length / 2))
-      var i = 0
-      while (i < o.n) {
-        append(o.barcodeNames(o.cellOf(i)), o.geneNames(o.geneOf(i)), o.countOf(i))
-        i += 1
-      }
-      this
-    }
-
-    private def cellId(barcode: String): Int =
-      barcodeIds.getOrElseUpdate(barcode, { barcodeNames += barcode; barcodeNames.length - 1 })
-
-    private def append(barcode: String, gene: String, count: Long): Unit = {
-      cellOf(n) = cellId(barcode)
-      geneOf(n) = geneIds.getOrElseUpdate(gene,
-        { geneNames += gene; geneNames.length - 1 })
-      countOf(n) = count
-      n += 1
-    }
-
-    private def grow(capacity: Int): Unit = {
-      reserve(capacity)
-      cellOf = java.util.Arrays.copyOf(cellOf, capacity)
-      geneOf = java.util.Arrays.copyOf(geneOf, capacity)
-      countOf = java.util.Arrays.copyOf(countOf, capacity)
-    }
-
-    private def reserve(capacity: Long): Unit = {
-      // the rows held will cost the kernel taskBytes; an empty slot of
-      // the buffer costs its 16 bytes
-      val need = taskBytes(cells, geneNames.length, n, sizing.numHvg, sizing.numPcs, sizing.k) +
-        16 * (capacity - n)
-      val others = Option(TaskContext.get()).fold(0L) { ctx =>
-        if (!releasing) {
-          ctx.addTaskCompletionListener[Unit] { _ => heldBytes.addAndGet(-counted); counted = 0 }
-          releasing = true
-        }
-        val held = heldBytes.addAndGet(need - counted)
-        counted = need
-        held - need
-      }
-      checkMemory(sample, cells, n, need, math.max(0L, sizing.budget - others), step)
-    }
-
-    /** Barcodes in binary order, genes in binary order and, per cell,
-      * its entries as (gene rank, count), sorted by (gene, count).
-      * Counts the sample's exact size first, and frees the row buffer. */
-    def drain(): (Array[String], Array[String], Array[Array[Int]], Array[Array[Long]]) = {
-      reserve(n)
-      val cellRank = ranks(barcodeNames.toArray)
-      val geneRank = ranks(geneNames.toArray)
-      val sizes = new Array[Int](cells)
-      var i = 0
-      while (i < n) { sizes(cellRank(cellOf(i))) += 1; i += 1 }
-      val genes = sizes.map(new Array[Int](_))
-      val counts = sizes.map(new Array[Long](_))
-      val fill = new Array[Int](cells)
-      i = 0
-      while (i < n) {
-        val c = cellRank(cellOf(i))
-        genes(c)(fill(c)) = geneRank(geneOf(i)); counts(c)(fill(c)) = countOf(i)
-        fill(c) += 1; i += 1
-      }
-      cellOf = Array.emptyIntArray; geneOf = Array.emptyIntArray
-      countOf = Array.emptyLongArray; n = 0
-      barcodeIds.clear(); geneIds.clear()
-      for (c <- 0 until cells) {
-        val order = genes(c).indices.sortBy(e => (genes(c)(e), counts(c)(e)))
-        genes(c) = order.map(genes(c)).toArray
-        counts(c) = order.map(counts(c)).toArray
-      }
-      val names = new Array[String](cells)
-      barcodeNames.indices.foreach(b => names(cellRank(b)) = barcodeNames(b))
-      val geneNamesByRank = new Array[String](geneNames.length)
-      geneNames.indices.foreach(g => geneNamesByRank(geneRank(g)) = geneNames(g))
-      (names, geneNamesByRank, genes, counts)
-    }
-  }
-
-  /** The position of each string in binary UTF-8 order. */
-  private def ranks(xs: Array[String]): Array[Int] = {
-    val utf8 = xs.map(UTF8String.fromString)
-    val order = xs.indices.sortWith((a, b) => utf8(a).binaryCompare(utf8(b)) < 0)
-    val rank = new Array[Int](xs.length)
-    order.zipWithIndex.foreach { case (x, r) => rank(x) = r }
-    rank
-  }
+  private[ml] def heldBytes: AtomicLong = Gather.heldBytes
 
   /** Spark's `xxhash64(s, lit(v))`: `v` is hashed as a second column,
     * chained from the string's hash under Spark's seed 42. */
@@ -285,14 +155,14 @@ object Doublets {
     if (nArt == 0) return None
 
     // pairing: hash rank, ties by barcode (cells are in barcode order)
-    val key = realBc.map(xxhash64(_, seed ^ m.sample.hashCode.toLong))
+    val key = realBc.map(xxhash64(_, seed ^ m.key.hashCode.toLong))
     val perm = (0 until nReal).sortBy(c => (key(c), c))
     val artCells = Array.tabulate(nArt) { j =>
       val (a, b) = (perm(2 * j), perm(2 * j + 1))
       pairSum(realGenes(a), realCounts(a), realGenes(b), realCounts(b))
     }
     val n = nReal + nArt
-    val ids = ranks(realBc ++ Array.tabulate(nArt)(j =>
+    val ids = Gather.ranks(realBc ++ Array.tabulate(nArt)(j =>
       String.format(java.util.Locale.ROOT, "__art_%06d", Int.box(j))))
     val barcode = new Array[String](n)
     val genes = new Array[Array[Int]](n)
@@ -341,32 +211,33 @@ object Doublets {
     })
   }
 
-  /** A task past this many bytes is refused: the sample is too large
-    * to score in one task. */
-  final class SampleTooLargeException(msg: String) extends IllegalStateException(msg)
+  /** The refusal of a sample too large to score in one task. */
+  type SampleTooLargeException = Gather.SampleTooLargeException
+
+  /** The per-row term of [[taskBytes]]. */
+  private val RowBytes = 72L
 
   /** An upper bound on the bytes one sample's task holds: 100 per
     * interned barcode or gene name; per row, 24 in the row buffer (16,
     * and the old half of a doubling copy), 12 sorted, at most 12 more
     * for the artificial cells' entries and 24 for the scaled HVG
-    * entries; three numHvg² matrices (the covariance and its
-    * eigen-decomposition); and per real or artificial cell 128 of array
-    * headers and tree nodes plus its embedding, features and
-    * neighbours' rows and distances. */
-  private[graft] def taskBytes(cells: Long, genes: Long, nnz: Long, numHvg: Int,
-                            numPcs: Int, k: Int): Long =
-    100 * (cells + genes) + 72 * nnz + 24L * numHvg * numHvg +
+    * entries; three d² matrices (the covariance and its
+    * eigen-decomposition) for d = min(numHvg, genes) selected genes; and
+    * per real or artificial cell 128 of array headers and tree nodes
+    * plus its embedding, features and neighbours' rows and distances. */
+  private[ml] def taskBytes(cells: Long, genes: Long, nnz: Long, numHvg: Int,
+                            numPcs: Int, k: Int): Long = {
+    val d = math.min(numHvg.toLong, genes)
+    100 * (cells + genes) + RowBytes * nnz + 24 * d * d +
       (cells + cells / 2) * (128 + 8L * (numPcs + 7 + 2 * k))
+  }
 
-  /** Throw [[SampleTooLargeException]] when running `step` on `sample`
-    * (`cells` cells, `nnz` rows), estimated at `estimate` bytes, would
-    * hold more than `limitBytes`. */
+  /** Throw [[SampleTooLargeException]] when scoring `sample` (`cells`
+    * cells, `nnz` rows), estimated at `estimate` bytes, would hold more
+    * than `limitBytes`. */
   private[ml] def checkMemory(sample: String, cells: Long, nnz: Long, estimate: Long,
-                              limitBytes: Long, step: String = "doublet scoring"): Unit =
-    if (estimate > limitBytes)
-      throw new SampleTooLargeException(
-        s"$step of sample $sample ($cells cells, $nnz nonzeros) needs " +
-          s"~$estimate bytes in one task, over its $limitBytes-byte share of the heap")
+                              limitBytes: Long): Unit =
+    Gather.checkMemory("doublet scoring", sample, cells, nnz, estimate, limitBytes)
 
   // ---- the classifier --------------------------------------------------
 

@@ -172,6 +172,23 @@ object Pca {
     })
   }
 
+  /** An upper bound on the bytes a task holds that gathers `nnz` rows of
+    * `cells` cells and `genes` genes into a [[Gather.Matrix]] and runs
+    * [[reduce]] on them: 100 per interned barcode or gene name; per row,
+    * 24 in the row buffer (16, and the old half of a doubling copy), 12
+    * sorted (gene and count, then gene and normalized value) and 24 for
+    * its scaled HVG entry; three d² matrices (the covariance and its
+    * eigen-decomposition) for d = min(numHvg, genes) selected genes; and
+    * per cell 128 of array headers plus its embedding row. */
+  private[graft] def taskBytes(cells: Long, genes: Long, nnz: Long, numHvg: Int,
+                               numPcs: Int): Long = {
+    val d = math.min(numHvg.toLong, genes)
+    100 * (cells + genes) + RowBytes * nnz + 24 * d * d + cells * (128 + 8L * numPcs)
+  }
+
+  /** The per-row term of [[taskBytes]]. */
+  private[graft] val RowBytes = 60L
+
   /** The top `min(k, d)` principal axes of a d×d covariance, as a
     * column-major d×kEff array, and each axis's share of the trace.
     *

@@ -1,6 +1,6 @@
 package graft.qc
 
-import graft.ml.{Doublets, Pca}
+import graft.ml.{Gather, Pca}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -24,40 +24,49 @@ object DataIntegration {
       varianceExplained: Array[Double],
       hvg: DataFrame) // (gene, mean, variance, variance_standardized, hvg_rank)
 
-  /** The label of the one matrix [[run]] gathers: every sample's cells. */
+  /** The key of the one matrix [[run]] gathers: every sample's cells. */
   private val Merged = "merged"
+
+  /** [[run]]'s task: the gather and [[Pca.reduce]] ([[Pca.taskBytes]]). */
+  private final case class Sizing(numHvg: Int, numPcs: Int, memoryFraction: Double)
+    extends Gather.Cost {
+    def step: String = "dataIntegration"
+    def rowBytes: Long = Pca.RowBytes
+    def taskBytes(cells: Long, genes: Long, nnz: Long): Long =
+      Pca.taskBytes(cells, genes, nnz, numHvg, numPcs)
+  }
 
   /** LogNormalize → vst HVG → ScaleData → PCA over every cell of
     * `cells` (`(sample, barcode, cells_id)`) with its `expr` rows
     * (`(sample, barcode, gene, count)`), in ONE Spark task: the kernel
-    * [[Pca.reduce]] that [[Doublets]] runs per sample. `cells` is read
-    * once, joined to the rows; the task gathers them into a
-    * [[Doublets.SampleMatrix]] (a cell named by its `cells_id`), which
-    * refuses an experiment past the task's share of the heap with
-    * [[Doublets.SampleTooLargeException]], and the result comes back in
-    * one collect. Every cell of `cells` gets one `pc` row, a cell with
-    * no HVG entry the projection of the all-z0 row; the moments count
-    * `|cells|` cells. The outputs are local frames, rows in `cells_id`
-    * order. */
+    * [[Pca.reduce]] that [[graft.ml.Doublets]] runs per sample. `cells`
+    * is read once, joined to the rows; [[Gather.byKey]] gathers them
+    * into one matrix (a cell named by its `cells_id`) and refuses an
+    * experiment past the task's share of the heap with
+    * [[Gather.SampleTooLargeException]] (at the default `numHvg`, past
+    * about (share − 96 MB) / (60 B) nonzeros: [[Pca.taskBytes]]). The
+    * result comes back in one collect. Every cell of `cells` gets one
+    * `pc` row, a cell with no HVG entry the projection of the all-z0
+    * row; the moments count `|cells|` cells. The outputs are local
+    * frames, rows in `cells_id` order. */
   def run(expr: DataFrame, cells: DataFrame,
           numHvg: Int = 2000, numPcs: Int = 50): Reductions = {
     val spark = expr.sparkSession
     import spark.implicits._
-    val sizing = Doublets.Sizing(0, numHvg, numPcs,
+    val sizing = Sizing(numHvg, numPcs,
       spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6))
-    // a cell without rows comes through the join as one gene-less row
-    val rows = cells.select("sample", "barcode", "cells_id")
+    // a cell without rows comes through the join as one gene-less row.
+    // The hash table is built from the cells: a left join could only
+    // broadcast the rows, and a generated frame's size estimate can be a
+    // fraction of its size, so the planner would broadcast the matrix
+    val rows = cells.select("sample", "barcode", "cells_id").hint("shuffle_hash")
       .join(expr.select("sample", "barcode", "gene", "count"), Seq("sample", "barcode"), "left")
       .select(col("cells_id").cast("string"), col("gene"),
         coalesce(col("count").cast("long"), lit(0L)))
       .as[(String, String, Long)].rdd
-      .map { case (id, gene, count) => (Merged, (Merged, id, gene, count)) }
-    val reduced = rows
-      .combineByKey[Doublets.SampleMatrix](
-        row => new Doublets.SampleMatrix(Merged, sizing, "dataIntegration").add(row),
-        _ add _, _ merge _, new HashPartitioner(1))
-      .map { case (_, m) => reduce(m, numHvg, numPcs) }
-      .collect()
+      .map { case (id, gene, count) => (Merged, id, gene, count) }
+    val reduced = Gather.byKey(rows, new HashPartitioner(1), sizing)(
+      m => Iterator(reduce(m, numHvg, numPcs))).collect()
     val (ids, hvg, varExp, emb) = reduced.headOption.getOrElse(
       (Array.empty[Long], Array.empty[(String, Double, Double, Double)],
         Array.empty[Double], Array.empty[Array[Double]]))
@@ -72,7 +81,7 @@ object DataIntegration {
     * Returns the cells' ids, the HVG rows `(gene, mean, variance,
     * variance_standardized)` in rank order, the variance explained and
     * the cells' embedding rows. */
-  private def reduce(m: Doublets.SampleMatrix, numHvg: Int, numPcs: Int)
+  private def reduce(m: Gather.Matrix, numHvg: Int, numPcs: Int)
       : (Array[Long], Array[(String, Double, Double, Double)], Array[Double],
         Array[Array[Double]]) = {
     val (ids, geneNames, genes, counts) = m.drain()

@@ -212,28 +212,103 @@ class ReductionsSpec extends SparkSpec {
     assert(runs.forall(_ == runs.head))
   }
 
-  test("run launches two Spark jobs, the join's shuffle and the kernel's, and its frames none") {
+  test("run launches three Spark jobs, the join's two shuffles and the kernel's, and its frames none") {
     val cells = cellsOf(twoBatches).persist()
     cells.count()
     val (red, jobs) = jobsDuring(DataIntegration.run(twoBatches, cells, numHvg = 20, numPcs = 5))
-    assert(jobs == 2, s"$jobs jobs")
+    assert(jobs == 3, s"$jobs jobs")
     val (n, consumed) = jobsDuring(red.pca.collect().length + red.hvg.collect().length)
     assert(n == 48 + 20 && consumed == 0)
     cells.unpersist()
   }
 
+  test("run builds its join's hash table from the cells: the rows are never broadcast") {
+    // generated rows: the planner's size estimate is that of 40 ids
+    import org.apache.spark.sql.functions._
+    val generated = spark.range(40)
+      .select(format_string("c%02d", col("id")).as("barcode"), col("id"),
+        explode(sequence(lit(0L), lit(29L))).as("g"))
+      .select(lit("s1").as("sample"), col("barcode"), format_string("g%02d", col("g")).as("gene"),
+        ((col("id") * 7 + col("g") * 3) % 11 + 1).as("count"))
+    val cells = cellsOf(generated).persist()
+    cells.count()
+    val (red, starts) = jobStartsDuring(DataIntegration.run(generated, cells, numHvg = 20, numPcs = 5))
+    val scopes = starts.map(js => Option(js.properties).map(_.getProperty("spark.rdd.scope")).orNull)
+    assert(!scopes.exists(s => s != null && s.contains("BroadcastExchange")), scopes)
+    assert(red.pca.count() == 40)
+    cells.unpersist()
+  }
+
   test("an experiment past the task's share of the heap is refused by name") {
-    val sizing = Doublets.Sizing(0, 20, 5, spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6))
     // the executor's other kernel tasks hold all but 10 kB of the budget
-    val others = sizing.budget - 10000L
-    Doublets.heldBytes.addAndGet(others)
+    val others = budget - 10000L
+    Gather.heldBytes.addAndGet(others)
     val refused = try scala.util.Try(DataIntegration.run(pipeline, cellsOf(pipeline), 20, 5))
-      finally Doublets.heldBytes.addAndGet(-others)
+      finally Gather.heldBytes.addAndGet(-others)
     val msg = refused.failed.get.getMessage
     assert(msg.contains("SampleTooLargeException") && msg.contains("dataIntegration of sample merged"), msg)
     // every task gives its count back when it ends
+    awaitReleased()
+  }
+
+  private def awaitReleased(): Unit = {
     val deadline = System.nanoTime() + 10000000000L
-    while (Doublets.heldBytes.get != 0 && System.nanoTime() < deadline) Thread.sleep(10)
-    assert(Doublets.heldBytes.get == 0)
+    while (Gather.heldBytes.get != 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(Gather.heldBytes.get == 0)
+  }
+
+  /** The user-memory budget of this JVM at the session's
+    * `spark.memory.fraction`. */
+  private def budget: Long =
+    Gather.budget(spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6))
+
+  test("a matrix counts its kernel's fixed cost only when drained") {
+    // 3,000 genes, default numHvg: the covariance term alone is
+    // 24·2000² = 96 MB, and the task may hold 20 MB
+    val out = spark.sparkContext.parallelize(Seq(1), 1).map { _ =>
+      val cost = new Gather.Cost {
+        def step = "reduction"; def rowBytes = Pca.RowBytes; def memoryFraction = 0.6
+        def taskBytes(c: Long, g: Long, n: Long) = Pca.taskBytes(c, g, n, 2000, 50)
+      }
+      val others = cost.budget - 20L * 1024 * 1024
+      Gather.heldBytes.addAndGet(others)
+      try {
+        val m = new Gather.Matrix("m", cost)
+        (0 until 30000).foreach(i => m.add(("m", s"c${i % 100}", s"g${i % 3000}", 1L)))
+        val buffered = Gather.heldBytes.get - others
+        (buffered, scala.util.Try(m.drain()).failed.toOption.map(_.getMessage))
+      } finally Gather.heldBytes.addAndGet(-others)
+    }.collect().head
+    val (buffered, refusal) = out
+    assert(buffered < 100L * 3100 + Pca.RowBytes * 30000 + 16L * 32768, s"$buffered bytes buffered")
+    assert(refusal.exists(_.contains("reduction of sample m (100 cells, 30000 nonzeros)")), refusal)
+    assert(refusal.exists(_.contains(s"~${Pca.taskBytes(100, 3000, 30000, 2000, 50)} bytes")), refusal)
+    // the covariance term counts the genes there are, not numHvg
+    assert(Pca.taskBytes(100, 3000, 30000, 100000, 50) == Pca.taskBytes(100, 3000, 30000, 3000, 50))
+    awaitReleased()
+  }
+
+  test("run at the default 2,000 HVGs over 4 partitions fits where the final kernel fits") {
+    // the join's 4 output partitions each build a partial matrix; the
+    // other kernel tasks leave room for the drained matrix's estimate
+    // and no more
+    val expr = soakShaped(60)
+    val cells = cellsOf(expr).persist()
+    val (nCells, nGenes, nnz) = (cells.count(), expr.select("gene").distinct().count(), expr.count())
+    assert(nGenes > 2000, s"$nGenes genes")
+    val need = Pca.taskBytes(nCells, nGenes, nnz, 2000, 50)
+    val others = budget - need
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = conf.map(spark.conf.get)
+    spark.conf.set(conf(0), "4"); spark.conf.set(conf(1), "false")
+    Gather.heldBytes.addAndGet(others)
+    val red = try DataIntegration.run(expr, cells)
+      finally {
+        Gather.heldBytes.addAndGet(-others)
+        conf.zip(saved).foreach { case (k, v) => spark.conf.set(k, v) }
+      }
+    assert(red.pca.count() == nCells && red.hvg.count() == 2000)
+    cells.unpersist()
+    awaitReleased()
   }
 }
